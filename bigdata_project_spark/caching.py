@@ -7,17 +7,20 @@ caller finally materializes the result. Persisting without a release
 path leaks executor memory when many queries run in one long-lived
 session (exactly the 1000-executor service shape).
 
-Contract: builders persist through `tracked_persist` (and register
-checkpoint block ids through `track_rdd_ids`); whoever materializes
-the result calls `release_cached(spark)` afterwards (bench.py does
-this between headline queries; tests assert the persistent-RDD map is
-empty after release). Release only touches what the framework
-registered for the calling session — a caller's own persisted
-DataFrames, or another consumer's in-flight caches in the same
-process, are never swept (localCheckpoint truncates lineage, so
-unpersisting someone else's checkpoint blocks would make their
-DataFrame unrecomputable). The old whole-session sweep remains
-available behind sweep_all=True for teardown paths.
+Contract: builders persist through `tracked_persist` and truncate
+lineage through `barrier` (localCheckpoint plus registration of its
+blocks, which DataFrame.unpersist cannot reach); an iterative loop
+frees the barrier it replaces with `free_barrier` once the
+replacement is materialized. Whoever materializes the result calls
+`release_cached(spark)` afterwards (bench.py does this between
+headline queries; tests assert the persistent-RDD map is empty after
+release). Release only touches what the framework registered for the
+calling session — a caller's own persisted DataFrames, or another
+consumer's in-flight caches in the same process, are never swept
+(a barrier truncates lineage, so unpersisting someone else's
+checkpoint blocks would make their DataFrame unrecomputable). The old
+whole-session sweep remains available behind sweep_all=True for
+teardown paths.
 """
 
 from __future__ import annotations
@@ -42,6 +45,8 @@ _LOCK = threading.Lock()
 # localCheckpoint blocks, making their DataFrames unrecomputable).
 _TRACKED: dict[int, list[DataFrame]] = {}
 _TRACKED_RDD_IDS: dict[int, tuple[weakref.ref, set[int]]] = {}
+# the block ids each live barrier registered, for free_barrier
+_BARRIER_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -52,9 +57,14 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def track_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Register framework-created persistent RDD ids (localCheckpoint
-    blocks, which DataFrame.unpersist cannot reach) for release."""
+def barrier(df: DataFrame, eager: bool) -> DataFrame:
+    """localCheckpoint `df` and register its blocks for release_cached.
+    Spark persists the checkpoint RDD when localCheckpoint is called,
+    lazy or eager, so the new ids are known at once."""
+    spark = df.sparkSession
+    before = persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=eager)
+    ids = persistent_rdd_ids(spark) - before
     with _LOCK:
         entry = _TRACKED_RDD_IDS.get(id(spark))
         if entry is None or entry[0]() is not spark:
@@ -63,6 +73,21 @@ def track_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
             _TRACKED_RDD_IDS[id(spark)] = (weakref.ref(spark), set(ids))
         else:
             entry[1].update(ids)
+        _BARRIER_IDS[out] = ids
+    return out
+
+
+def free_barrier(df: DataFrame) -> None:
+    """Free the blocks of a barrier that a later one replaced (no-op for
+    any other DataFrame). The blocks are `df`'s only copy: call this
+    only after the replacement has been materialized."""
+    spark = df.sparkSession
+    with _LOCK:
+        ids = _BARRIER_IDS.pop(df, set())
+        entry = _TRACKED_RDD_IDS.get(id(spark))
+        if entry is not None and entry[0]() is spark:
+            entry[1].difference_update(ids)
+    free_rdd_ids(spark, ids)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.dedup import (
     pigeonhole_hamming_pairs,
     sql_pigeonhole_ctes,
@@ -182,38 +183,33 @@ _SQL_AFP_SIGS = f"""
     )"""
 
 
-def _afp_payloads_df(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
+def _afp_payloads_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, payload): genuine 16-bit PCM RIFF/WAVE bytes per
     document — base clips memoized per group, variants transformed
-    per `_afp_samples`. Pass a pre-filtered `docs` (doc_id) relation
-    to synthesize a subset: doc_id predicates cannot push through
-    mapInPandas, so the filter must land BEFORE the Arrow stage."""
-    if docs is None:
-        docs = load(spark, sf_dir, "documents").select("doc_id")
+    per `_afp_samples`. The payload is a scalar pandas UDF column, so
+    doc_id filters push below it and a doc_id-only read (the stream's
+    key bounds) never synthesizes a clip."""
 
-    def synthesize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf("binary")
+    def synthesize(doc_ids: pd.Series) -> pd.Series:
         import io
         import struct
         import wave as wave_mod
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                samples = _afp_samples(did)
-                buf = io.BytesIO()
-                w = wave_mod.open(buf, "wb")
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(8000)
-                w.writeframes(struct.pack(f"<{_AFP_N}h", *samples))
-                w.close()
-                rows.append((did, buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+        out = []
+        for doc_id in doc_ids:
+            buf = io.BytesIO()
+            w = wave_mod.open(buf, "wb")
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(struct.pack(f"<{_AFP_N}h", *_afp_samples(int(doc_id))))
+            w.close()
+            out.append(buf.getvalue())
+        return pd.Series(out, dtype=object)
 
-    return docs.mapInPandas(synthesize, "doc_id long, payload binary")
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    return docs.select("doc_id", synthesize("doc_id").alias("payload"))
 
 
 def _afp_decode(payloads: DataFrame) -> DataFrame:
@@ -291,8 +287,6 @@ def multimodal_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     energies). Blocking is the shared exact pigeonhole equi-join
     (SimHash text / dHash image / this), never all-pairs; at 100 TB
     only (doc_id, 16-char) rows reach the shuffle."""
-    from bigdata_project_spark.caching import tracked_persist
-
     sigs = tracked_persist(_afp_sigs_df(spark, sf_dir))
     return pigeonhole_hamming_pairs(sigs, "afp64")
 
@@ -339,7 +333,6 @@ def multimodal_audio_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the pair stage is the bounded pigeonhole block join; CC
     iterates over edge endpoints only (sparse graph), never the audio
     corpus; the rejoin is one equi-join."""
-    from bigdata_project_spark.caching import tracked_persist
     from bigdata_project_spark.operators.clustering import connected_components_auto
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
@@ -456,40 +449,16 @@ def run_afp_ingest_stream(
     CONTENT, never re-fingerprints old media, and in production is an
     indexed upsert surface keyed by the same 16-bit blocks."""
     import os
-    import shutil
     import tempfile
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    work = tempfile.mkdtemp(prefix="afp_stream_")
-    src_dir = os.path.join(work, "src")
-    seen_store = os.path.join(work, "seen")
-    out_store = os.path.join(work, "out")
-    try:
-        # bounds from the cheap doc_id scan, and each chunk filters
-        # doc_ids BEFORE the synthesize Arrow stage — the corpus is
-        # encoded exactly once across the staged chunks (a filter
-        # after mapInPandas would re-synthesize everything per chunk
-        # and discard (n_chunks-1)/n_chunks of it)
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None:
-            lo, hi = 0, 0
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        # one-pass staging (r15): the probe's emitted pair set is
-        # delivery-order-invariant (a cross-batch pair is emitted by
-        # whichever batch arrives second; the final reader unions all
-        # committed versions), so ALL chunks stage in ONE synthesize
-        # pass + partitionBy write instead of n_chunks filtered
-        # passes — see operators/staging.py. The corpus is still
-        # encoded exactly once.
-        from bigdata_project_spark.operators.staging import stage_chunks_one_pass
+    from bigdata_project_spark.operators.staging import run_chunk_stream
 
-        stage_chunks_one_pass(
-            _afp_payloads_df(spark, sf_dir, docs=docs), "doc_id", int(lo), step, src_dir
-        )
+    payloads = _afp_payloads_df(spark, sf_dir)
+    with tempfile.TemporaryDirectory(prefix="afp_stream_") as work:
+        seen_store = os.path.join(work, "seen")
+        out_store = os.path.join(work, "out")
         # schema-only inits so the final readers work on empty input
-        empty_sigs = docs.limit(0).select(
-            F.col("doc_id"), F.lit("").alias("afp64")
-        )
+        empty_sigs = payloads.limit(0).select("doc_id", F.lit("").alias("afp64"))
         empty_sigs.write.parquet(os.path.join(seen_store, "b_init"))
         empty_sigs.select(
             F.col("doc_id").alias("doc_a"),
@@ -500,37 +469,13 @@ def run_afp_ingest_stream(
         def probe(bdf: DataFrame, bid: int) -> None:
             _afp_probe_batch(spark, bdf, bid, seen_store, out_store)
 
-        stream = (
-            spark.readStream.schema("doc_id long, payload binary")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        sq = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        # register the checkpoint blocks for the framework's release
-        # path: localCheckpoint blocks are invisible to
-        # DataFrame.unpersist, so an unregistered one leaks until a
-        # sweep_all (caching.py contract — the materializing caller's
-        # release_cached(spark) frees these)
-        from bigdata_project_spark.caching import persistent_rdd_ids, track_rdd_ids
-
-        before = persistent_rdd_ids(spark)
-        res = (
+        n_batches = run_chunk_stream(payloads, "doc_id", n_chunks, probe, work, ordered=False)
+        res = barrier(
             spark.read.option("recursiveFileLookup", "true")
             .schema("doc_a long, doc_b long, hamming int")
-            .parquet(out_store)
-            .localCheckpoint(eager=True)
+            .parquet(out_store),
+            eager=True,
         )
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return res.orderBy("doc_a", "doc_b"), n_batches
 
 

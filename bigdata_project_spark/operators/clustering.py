@@ -9,7 +9,7 @@ the iterative min-label-propagation algorithm on DataFrames:
     label(v) <- min(label(v), min label of v's neighbors)   until fixpoint
 
 Each iteration is one join + aggregation (all distributed); lineage
-is truncated per iteration with localCheckpoint so plans don't grow
+is truncated per iteration with caching.barrier so plans don't grow
 unboundedly. Iterations ~ graph diameter (tiny for near-dup
 clusters). At 100 TB the same loop runs with the pair list on disk
 and alternating large-star/small-star optimization; the fixpoint
@@ -28,12 +28,7 @@ from pyspark.sql import functions as F
 
 import os
 
-from bigdata_project_spark.caching import (
-    free_rdd_ids,
-    persistent_rdd_ids,
-    track_rdd_ids,
-    tracked_persist,
-)
+from bigdata_project_spark.caching import barrier, free_barrier, tracked_persist
 from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES,
     _SQL_SHINGLES_CAPPED,
@@ -132,14 +127,12 @@ def connected_components_star(
     minima."""
     if max_iter is None:
         max_iter = _default_max_iter()
-    spark = nodes.sparkSession
     # canonical directed form (big -> small), self-loops dropped
     e = (
         edges.selectExpr("greatest(doc_a, doc_b) AS u", "least(doc_a, doc_b) AS v")
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    prev_ckpt_ids: set[int] = set()
     converged = False
     for _ in range(max_iter):
         und = e.selectExpr("u AS a", "v AS b").unionByName(
@@ -172,8 +165,7 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        before = persistent_rdd_ids(spark)
-        new_e = new_e.localCheckpoint(eager=False)
+        new_e = barrier(new_e, eager=False)
         # stable iff same canonical edge multiset (both are distinct
         # sets, so two anti-join emptiness checks in ONE union job)
         n_diff = (
@@ -181,14 +173,13 @@ def connected_components_star(
             .unionByName(e.exceptAll(new_e).selectExpr("1 AS one"))
             .count()
         )
-        free_rdd_ids(spark, prev_ckpt_ids)
-        prev_ckpt_ids = persistent_rdd_ids(spark) - (before - prev_ckpt_ids)
+        free_barrier(e)
         e = new_e
         if n_diff == 0:
             converged = True
             break
     if not converged:
-        free_rdd_ids(spark, prev_ckpt_ids)
+        free_barrier(e)
         raise CCNotConverged(
             f"connected_components_star did not converge in {max_iter} rounds; "
             "raise max_iter (env SPARK_GRAFT_CC_MAX_ITER)"
@@ -201,7 +192,6 @@ def connected_components_star(
     labels = nodes.join(roots, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
-    track_rdd_ids(spark, prev_ckpt_ids)
     return labels
 
 
@@ -220,10 +210,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int | Non
     undirected = edges.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         edges.selectExpr("doc_b AS src", "doc_a AS dst")
     )
-    labels = nodes.select(F.col("id"), F.col("id").alias("component"))
-    spark = nodes.sparkSession
+    labels = ckpt = nodes.select(F.col("id"), F.col("id").alias("component"))
     n_changed = 0
-    prev_ckpt_ids: set[int] = set()
     for _ in range(max_iter):
         neighbor_min = (
             undirected.join(labels, undirected.src == labels.id)
@@ -238,41 +226,35 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int | Non
                 (F.coalesce("nbr_component", F.col("component")) < F.col("component")).cast("int").alias("_changed"),
             )
         )
-        before = persistent_rdd_ids(spark)
-        # LAZY checkpoint (round 8): the convergence count below is
+        # LAZY barrier (round 8): the convergence count below is
         # the action that materializes it, so each iteration runs ONE
         # Spark job instead of two (eager-materialize + count). The
         # loop was measured as the dominant cost of every clustering
         # query, and the cost is job overhead, not data.
-        new_labels = new_labels.localCheckpoint(eager=False)  # truncate lineage per iteration
-        n_changed = new_labels.agg(F.sum("_changed")).first()[0] or 0
-        # the new checkpoint (materialized by the count above) no
-        # longer reads the previous one — free the superseded
-        # iteration's blocks (at scale labels are |V| rows; keeping
-        # every iteration cached would hold diameter × |V|)
-        free_rdd_ids(spark, prev_ckpt_ids)
-        prev_ckpt_ids = persistent_rdd_ids(spark) - (before - prev_ckpt_ids)
-        labels = new_labels.drop("_changed")
+        new_ckpt = barrier(new_labels, eager=False)
+        n_changed = new_ckpt.agg(F.sum("_changed")).first()[0] or 0
+        # the new barrier (materialized by the count above) no longer
+        # reads the previous one (at scale labels are |V| rows;
+        # keeping every iteration would hold diameter × |V|)
+        free_barrier(ckpt)
+        ckpt = new_ckpt
+        labels = ckpt.drop("_changed")
         if n_changed == 0:
             break
     if n_changed:
         # min-label propagation converges in <= graph-diameter iterations;
         # returning silently here would hand back wrong (unconverged)
         # component labels on adversarial chain-shaped clusters.
-        # Free the abandoned iteration's checkpoint blocks first — the
-        # caller (connected_components_auto) may retry with the star
+        # Free the abandoned iteration's blocks first — the caller
+        # (connected_components_auto) may retry with the star
         # algorithm, and |V|-row blocks from a dead loop must not
         # outlive the raise.
-        free_rdd_ids(spark, prev_ckpt_ids)
+        free_barrier(ckpt)
         raise CCNotConverged(
             f"connected_components did not converge in {max_iter} iterations "
             f"({n_changed} labels still changing); raise max_iter "
             f"(env SPARK_GRAFT_CC_MAX_ITER)"
         )
-    # the surviving checkpoint blocks back the returned labels; register
-    # them so release_cached(spark) can free them after the caller
-    # materializes — without sweeping unrelated caches in the session
-    track_rdd_ids(spark, prev_ckpt_ids)
     return labels
 
 

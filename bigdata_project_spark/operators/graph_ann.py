@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.pq import _recall_join
 from bigdata_project_spark.operators.similarity import (
     _QUERY_IDS,
@@ -193,8 +194,6 @@ def _banked_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scanned and re-normed the corpus behind its own persist.
     Sharing the scan changes no values (the extra bank columns never
     reach any output)."""
-    from bigdata_project_spark.caching import tracked_persist
-
     return tracked_persist(
         with_norm(load(spark, sf_dir, "embeddings")).select(
             "vec_id",
@@ -210,8 +209,6 @@ def _build_graph(emb: DataFrame) -> DataFrame:
     """The k-NN-graph build over a persisted banked relation — the
     body of sim_graph_knn_build, shared with the beam/recall queries
     so the whole family trains from one materialized corpus pass."""
-    from bigdata_project_spark.caching import tracked_persist
-
     left_a = emb.select(F.col("vec_id").alias("src"), F.col("b_a").alias("ka"))
     right_a = emb.select(F.col("vec_id").alias("dst"), F.col("b_a").alias("ka"))
     left_b = emb.select(F.col("vec_id").alias("src"), F.col("b_b").alias("kb"))
@@ -366,35 +363,18 @@ def sim_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     list — search cost independent of corpus size given the graph
     (module docstring)."""
     emb = _banked_emb(spark, sf_dir)
-    g = _ckpt(spark, _build_graph(emb).select(F.col("vec_id").alias("g_src"), "nbr_id"))
-    return _beam_walk(spark, emb, g)
+    return _beam_walk(emb, _beam_graph(emb))
 
 
-def _ckpt(spark: SparkSession, df: DataFrame) -> DataFrame:
-    # truncate lineage (the clustering.py discipline): the beam plan
-    # doubles per unrolled hop (union + join both reference the
-    # previous beam) and each copy carries 64-term cosine folds —
-    # 6 barrier-free hops of that OOM'd the driver during plan
-    # canonicalization. EAGER is deliberate (re-measured r14):
-    # every hop consumes the previous beam through F.broadcast
-    # exchanges, and a broadcast collects its child on the spot —
-    # with a LAZY checkpoint the unmaterialized chain is recomputed
-    # by each broadcast that races ahead of the block write
-    # (measured +25% on sim_recall_graph_at_k). localCheckpoint
-    # blocks are invisible to DataFrame.unpersist, so register
-    # them for release_cached.
-    from bigdata_project_spark.caching import persistent_rdd_ids, track_rdd_ids
-
-    before = persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
-    return out
+def _beam_graph(emb: DataFrame) -> DataFrame:
+    """The built k-NN graph as (g_src, nbr_id), behind an eager barrier."""
+    return barrier(_build_graph(emb).select(F.col("vec_id").alias("g_src"), "nbr_id"), eager=True)
 
 
 _CKPT_EVERY = 2  # beam hops per lineage barrier (r15: was 1)
 
 
-def _beam_walk(spark: SparkSession, emb: DataFrame, g: DataFrame) -> DataFrame:
+def _beam_walk(emb: DataFrame, g: DataFrame) -> DataFrame:
     """The greedy beam walk over a built graph `g` (g_src, nbr_id)
     and a persisted normed corpus `emb` — the body of
     sim_graph_beam_search.
@@ -411,7 +391,15 @@ def _beam_walk(spark: SparkSession, emb: DataFrame, g: DataFrame) -> DataFrame:
       only consumed inside the NEXT barrier's one job, where AQE
       exchange reuse dedupes the doubled references — so half the
       eager checkpoint jobs at the same plan-size order of magnitude.
-      Checkpoints stay EAGER (see _ckpt)."""
+
+    Without barriers the beam plan doubles per unrolled hop (union +
+    join both reference the previous beam), each copy carrying 64-term
+    cosine folds — 6 barrier-free hops OOM'd the driver during plan
+    canonicalization. The barriers are EAGER (re-measured r14): every
+    hop consumes the previous beam through F.broadcast exchanges, and a
+    broadcast collects its child on the spot — with a lazy barrier the
+    unmaterialized chain is recomputed by each broadcast that races
+    ahead of the block write (measured +25% on sim_recall_graph_at_k)."""
     qv = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -453,7 +441,7 @@ def _beam_walk(spark: SparkSession, emb: DataFrame, g: DataFrame) -> DataFrame:
             .select("query_id", "q_emb", "q_n", "vec_id", "cosine")
         )
         if (t + 1) % _CKPT_EVERY == 0 or t == _HOPS - 1:
-            beam = _ckpt(spark, beam)
+            beam = barrier(beam, eager=True)
     return (
         beam.select("*", F.row_number().over(wb).alias("rn"))
         .filter(F.col("rn") <= _TOP_K)
@@ -493,9 +481,9 @@ def sim_recall_graph_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_project_spark.operators.similarity import _bruteforce_from
 
     emb = _banked_emb(spark, sf_dir)
-    g = _ckpt(spark, _build_graph(emb).select(F.col("vec_id").alias("g_src"), "nbr_id"))
+    g = _beam_graph(emb)
     bf = _bruteforce_from(emb).select("query_id", "vec_id")
-    bm = _beam_walk(spark, emb, g).select(
+    bm = _beam_walk(emb, g).select(
         F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
     )
     return _recall_join(bf, bm)

@@ -40,9 +40,9 @@ the value domain, not the row count) and runs one single-partition
 window over that compressed table; the decile probe joins a 9-row
 broadcast. The streaming form (`run_quantile_stream`) maintains the
 counter store across micro-batches with batch-id-keyed idempotent
-versions (the hardened `run_cms_stream` harness): per-batch deltas
-SUM into the consolidated store, which never exceeds the fixed
-bucket count.
+versions (`staging.run_counter_stream`, shared with the count-min
+stream): per-batch deltas SUM into the consolidated store, which
+never exceeds the fixed bucket count.
 
 Reference scope: [ext] — BASELINE north star; completes the sketch
 family (Bloom FP audit, CMS overestimate audit, HLL tolerance,
@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigdata_project_spark.operators.staging import stage_chunks_one_pass
+from bigdata_project_spark.operators.staging import run_counter_stream
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
@@ -289,78 +289,27 @@ def run_quantile_stream(
     streamed store reproduces `agg_quantile_sketch_audit`'s answer
     bit for bit and the streaming query shares its oracle.
 
-    Mechanics: the hardened `run_cms_stream` harness — `n_chunks`
-    l_orderkey-ranged file micro-batches (availableNow +
-    maxFilesPerTrigger=1); each foreachBatch merges the batch's
-    (idx, cnt) delta into a consolidated store version KEYED BY
-    BATCH ID (an at-least-once redelivery finds its completed
-    version's _SUCCESS marker and skips — idempotent merge). The
-    final audit probes only the last version, so its correctness is
-    reachable only through the restored cross-batch state. The
+    Mechanics: `staging.run_counter_stream`, the count-min stream's
+    harness — `n_chunks` l_orderkey-ranged micro-batches, each merging
+    the batch's (idx, cnt) delta into a batch-id-keyed store version.
+    The final audit probes only the last version, so its correctness
+    is reachable only through the restored cross-batch state. The
     store stays <= 976 rows at every version."""
-    import os
-    import shutil
     import tempfile
 
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    work = tempfile.mkdtemp(prefix="quantile_stream_")
-    src_dir = os.path.join(work, "src")
-    try:
-        lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
-        if lo is None:
-            lo, hi = 0, 0
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        # one-pass staging (r15): bucket addition commutes across
-        # micro-batches (this stream's whole point), so file delivery
-        # order is not part of the contract and the chunks can be
-        # written in ONE partitionBy job instead of n_chunks filtered
-        # scans — see operators/staging.py for the order-free rule.
-        stage_chunks_one_pass(li, "l_orderkey", int(lo), step, src_dir)
-
-        # [path, last merged batch id]: see run_cms_stream — a stale
-        # redelivery must not roll the cumulative-version pointer
-        # back; pointer is single availableNow-run scope.
-        latest: list = [os.path.join(work, "hist_v_init"), -1]
-        li.limit(0).select(
-            F.lit(0).cast("long").alias("idx"), F.lit(0).cast("long").alias("cnt")
-        ).write.parquet(latest[0])
-
-        def merge_batch(bdf: DataFrame, bid: int) -> None:
-            nxt = os.path.join(work, f"hist_b{bid}")
-            if os.path.exists(os.path.join(nxt, "_SUCCESS")):
-                if bid >= latest[1]:  # retry of the newest completed batch
-                    latest[0], latest[1] = nxt, bid
-                return
-            cents_b = bdf.filter(F.col("l_extendedprice").isNotNull()).select(
+    def delta(bdf: DataFrame) -> DataFrame:
+        return _hist_counts(
+            bdf.filter(F.col("l_extendedprice").isNotNull()).select(
                 F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("v")
             )
-            delta = _hist_counts(cents_b)
-            prev = spark.read.parquet(latest[0])
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("idx")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-            merged.write.mode("overwrite").parquet(nxt)
-            latest[0], latest[1] = nxt, bid
+        )
 
-        stream = (
-            spark.readStream.schema(li.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        sq = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        store = spark.read.parquet(latest[0]).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+    init = li.limit(0).select(
+        F.lit(0).cast("long").alias("idx"), F.lit(0).cast("long").alias("cnt")
+    )
+    with tempfile.TemporaryDirectory(prefix="quantile_stream_") as work:
+        store, n_batches = run_counter_stream(li, "l_orderkey", n_chunks, work, init, delta)
     return _audit(spark, _with_bounds(store), _cents(spark, sf_dir)), n_batches
 
 

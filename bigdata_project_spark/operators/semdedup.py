@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from bigdata_project_spark.caching import tracked_persist
+from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.clustering import connected_components_auto
 from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.operators.similarity import (
@@ -508,10 +508,10 @@ def run_semantic_ingest_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> tuple[DataFrame, int]:
     """Incremental SemDeDup as a STREAMING ingest pipeline: the batch
-    increment (every 10th vec_id) arrives as a file-source stream in
-    `n_chunks` vec_id-ordered micro-batches (availableNow +
-    maxFilesPerTrigger=1); a foreachBatch stage probes each
-    micro-batch against the STANDING index — centroids + derived Q +
+    increment (every 10th vec_id) arrives as a stream of `n_chunks`
+    vec_id-ordered micro-batches (`staging.run_chunk_stream`,
+    ordered); a foreachBatch stage probes each micro-batch against
+    the STANDING index — centroids + derived Q +
     cell-keyed corpus cells, built once from the corpus before the
     stream starts — and against the cross-batch SEEN store (batch
     members from earlier micro-batches, persisted cell-keyed parquet,
@@ -534,9 +534,9 @@ def run_semantic_ingest_stream(
     for the Kafka source and the seen store for the index's upsert
     surface; the foreachBatch body is unchanged."""
     import os
-    import shutil
     import tempfile
-    import time
+
+    from bigdata_project_spark.operators.staging import run_chunk_stream
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
@@ -545,50 +545,11 @@ def run_semantic_ingest_stream(
     cent = tracked_persist(_sem_centroids(corpus))
     ccells = tracked_persist(_sem_assign(corpus, cent, q))
     ccells.count()  # materialize the standing index before the stream
+    batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
 
-    work = tempfile.mkdtemp(prefix="sem_ingest_")
-    src_dir = os.path.join(work, "src")
-    seen_store = os.path.join(work, "seen")
-    out_store = os.path.join(work, "out")
-    try:
-        # stage the increment as vec_id-ordered chunks; the file
-        # source orders by mtime with UNSPECIFIED tie order, so pin
-        # delivery order with explicitly increasing mtimes per chunk
-        # (advisor r9) rather than relying on path-order ties
-        batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
-        lo, hi = batch_members.agg(F.min("vec_id"), F.max("vec_id")).first()
-        empty_increment = lo is None
-        if empty_increment:  # empty increment: stage a schema-only chunk so
-            lo, hi = 0, 0  # the stream still runs and the result store exists
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        base_mtime = int(time.time()) - 3600 * n_chunks
-        # one-pass staging (r15): ONE partitionBy job writes every
-        # chunk (operators/staging.py), then the SAME explicit-mtime
-        # discipline as before pins delivery order — this stream's
-        # in-order contract lives in the mtimes (set below) and the
-        # loud out-of-order guard in probe(), not in write order.
-        # An entirely empty increment still stages one empty chunk
-        # file the old way so the stream has a file to trigger on
-        # and the result store exists (the empty-twin sweep path).
-        if empty_increment:
-            batch_members.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(src_dir, "chunk=0")
-            )
-        else:
-            from bigdata_project_spark.operators.staging import (
-                stage_chunks_one_pass,
-            )
-
-            stage_chunks_one_pass(batch_members, "vec_id", int(lo), step, src_dir)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(src_dir, f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # empty range: no file, no micro-batch (same
-                # final stores — an empty batch merged nothing)
-            t = base_mtime + i * 3600  # one hour apart: coarse-mtime-FS-proof
-            for root, _dirs, files in os.walk(chunk_dir):
-                for fn in files:
-                    os.utime(os.path.join(root, fn), (t, t))
+    with tempfile.TemporaryDirectory(prefix="sem_ingest_") as work:
+        seen_store = os.path.join(work, "seen")
+        out_store = os.path.join(work, "out")
         ccells.limit(0).write.parquet(seen_store)  # schema-only init
 
         def cos(x: str, y: str):
@@ -663,25 +624,12 @@ def run_semantic_ingest_stream(
             bcells.write.mode("append").parquet(seen_store)
             bcells.unpersist()
 
-        stream = (
-            spark.readStream.schema(batch_members.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
+        n_batches = run_chunk_stream(
+            batch_members, "vec_id", n_chunks, probe, work, ordered=True
         )
-        sq = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        res = spark.read.parquet(out_store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        ccells.unpersist()
-        cent.unpersist()
+        res = barrier(spark.read.parquet(out_store), eager=True)
+    ccells.unpersist()
+    cent.unpersist()
     return res, n_batches
 
 

@@ -186,102 +186,31 @@ def run_cms_stream(
     must reproduce `agg_countmin_audit`'s answer bit for bit, and
     the streaming query shares its oracle.
 
-    Mechanics (the `run_frontier_stream` harness): `n_chunks`
-    doc_id-ranged file micro-batches (availableNow +
-    maxFilesPerTrigger=1); each foreachBatch computes the batch's
-    (r, col) counter deltas and merges them into a CONSOLIDATED
-    store version read back from the previous batch's write — the
-    final audit probes only the last version, so its correctness is
-    reachable only through the restored cross-batch state (a real
-    state-carry check, not a union replay). The store stays <=
-    d x w rows at every version. Unlike the frontier (first-writer-
-    wins needs order), NO delivery-order assertion exists here —
-    counter addition commutes, and that is exactly the property
-    being demonstrated.
-
-    Store versions are KEYED BY BATCH ID and a completed version is
-    never re-merged (the `_SUCCESS` marker gates a skip), so an
-    at-least-once redelivery of a micro-batch — foreachBatch's
-    contract under a real Kafka source — merges each delta exactly
-    once instead of double-counting it.
+    Mechanics (`staging.run_counter_stream`): `n_chunks` doc_id-ranged
+    micro-batches; each merges the batch's (r, col) counter deltas
+    into a consolidated, batch-id-keyed store version, and the final
+    audit probes only the last version — a real state-carry check, not
+    a union replay. The store stays <= d x w rows at every version.
+    Unlike the frontier (first-writer-wins needs order), NO
+    delivery-order assertion exists here — counter addition commutes,
+    and that is exactly the property being demonstrated.
 
     Scale: per micro-batch work is one token count + a <= 4096-group
     delta aggregate + a <= 4096-row merge; the store never grows
-    with the corpus. The foreachBatch body is unchanged under a
-    Kafka source."""
-    import os
-    import shutil
+    with the corpus."""
     import tempfile
 
+    from bigdata_project_spark.operators.staging import run_counter_stream
     from bigdata_project_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="cms_stream_")
-    src_dir = os.path.join(work, "src")
-    try:
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None:
-            lo, hi = 0, 0
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        # one-pass staging (r15): counter addition commutes across
-        # micro-batches (this stream's documented property), so the
-        # chunks stage in ONE partitionBy job instead of n_chunks
-        # filtered scans — see operators/staging.py.
-        from bigdata_project_spark.operators.staging import stage_chunks_one_pass
-
-        stage_chunks_one_pass(docs, "doc_id", int(lo), step, src_dir)
-
-        # consolidated store versions: v_init is the empty counter
-        # table; later versions are keyed by BATCH ID so an
-        # at-least-once redelivery finds its completed version and
-        # skips the merge (idempotent under foreachBatch retries)
-        # [path, last merged batch id]: versions are cumulative, so a
-        # redelivery of an OLDER completed batch must not roll the
-        # pointer back to a version missing later merges. The pointer
-        # lives in driver memory — single availableNow run scope; a
-        # restartable deployment would persist it (e.g. a _LATEST
-        # file) next to the versions.
-        latest: list = [os.path.join(work, "sketch_v_init"), -1]
-        docs.limit(0).select(
-            F.lit(0).alias("r"), F.lit(0).alias("col"),
-            F.lit(0).cast("long").alias("c"),
-        ).write.parquet(latest[0])
-
-        def merge_batch(bdf: DataFrame, bid: int) -> None:
-            nxt = os.path.join(work, f"sketch_b{bid}")
-            if os.path.exists(os.path.join(nxt, "_SUCCESS")):
-                if bid >= latest[1]:  # retry of the newest completed batch
-                    latest[0], latest[1] = nxt, bid
-                return
-            delta = _cms_sketch(_cms_tf(bdf))
-            prev = spark.read.parquet(latest[0])
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("r", "col")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-            # overwrite clears a half-written version from a crashed
-            # attempt; the _SUCCESS marker commits it
-            merged.write.mode("overwrite").parquet(nxt)
-            latest[0], latest[1] = nxt, bid
-
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
+    init = docs.limit(0).select(
+        F.lit(0).alias("r"), F.lit(0).alias("col"), F.lit(0).cast("long").alias("c")
+    )
+    with tempfile.TemporaryDirectory(prefix="cms_stream_") as work:
+        sketch, n_batches = run_counter_stream(
+            docs, "doc_id", n_chunks, work, init, lambda b: _cms_sketch(_cms_tf(b))
         )
-        sq = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        sketch = spark.read.parquet(latest[0]).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     tf = _cms_tf(load_spread(spark, sf_dir, "documents"))
     return _cms_audit(tf, sketch), n_batches
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.caching import barrier
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
@@ -312,10 +313,9 @@ def run_frontier_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> tuple[DataFrame, int]:
     """The crawl frontier as it actually exists in production: a
-    STREAM of raw URLs. Staged as `n_chunks` doc_id-ordered file
-    micro-batches (availableNow + maxFilesPerTrigger=1); a
-    foreachBatch stage canonicalizes the batch, resolves each URL's
-    keeper against (1) the cross-batch SEEN store — canonical-key ->
+    STREAM of raw URLs, replayed as `n_chunks` doc_id-ordered
+    micro-batches (`staging.run_chunk_stream`); a foreachBatch stage
+    canonicalizes the batch, resolves each URL's keeper against (1) the cross-batch SEEN store — canonical-key ->
     keeper rows persisted from earlier micro-batches — and (2) the
     batch's own first-seen MIN, then appends only NEW keys to the
     store. Returns (per-URL verdicts, n_micro_batches).
@@ -326,8 +326,8 @@ def run_frontier_stream(
     batch answer, and the streaming form shares its oracle (the
     cross-batch dup verdicts are only reachable through the restored
     seen store, so the oracle equality is a real state-carry check).
-    Delivery order is pinned with explicitly increasing mtimes AND
-    asserted per batch (the semdedup-stream discipline).
+    The stream is ordered: the harness pins delivery order and
+    probe() asserts it per batch (the semdedup-stream discipline).
 
     Scale: per micro-batch work is a pure canonicalize map + one
     equi-join against the seen store on the canonical key — the
@@ -335,50 +335,16 @@ def run_frontier_stream(
     and in production is the frontier table's upsert surface (the
     foreachBatch body is unchanged under a Kafka source)."""
     import os
-    import shutil
     import tempfile
-    import time
+
+    from bigdata_project_spark.operators.staging import run_chunk_stream
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     raw = docs.select("doc_id", _raw_url_col().alias("url"))
 
-    work = tempfile.mkdtemp(prefix="frontier_stream_")
-    src_dir = os.path.join(work, "src")
-    seen_store = os.path.join(work, "seen")
-    out_store = os.path.join(work, "out")
-    try:
-        lo, hi = raw.agg(F.min("doc_id"), F.max("doc_id")).first()
-        empty_frontier = lo is None
-        if empty_frontier:
-            lo, hi = 0, 0
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        base_mtime = int(time.time()) - 3600 * n_chunks
-        # one-pass staging (r15): ONE partitionBy job writes every
-        # chunk (operators/staging.py); the first-writer-wins ORDER
-        # contract lives in the explicit mtimes set below (advisor r9)
-        # plus probe()'s loud out-of-order guard, exactly as before —
-        # only the n_chunks filtered write jobs are gone. An empty
-        # frontier still stages one schema-only file so the stream
-        # runs and the stores exist (empty-twin sweep path).
-        if empty_frontier:
-            raw.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(src_dir, "chunk=0")
-            )
-        else:
-            from bigdata_project_spark.operators.staging import (
-                stage_chunks_one_pass,
-            )
-
-            stage_chunks_one_pass(raw, "doc_id", int(lo), step, src_dir)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(src_dir, f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # empty range: no file, no micro-batch
-            t = base_mtime + i * 3600
-            for root, _dirs, files in os.walk(chunk_dir):
-                for fn in files:
-                    os.utime(os.path.join(root, fn), (t, t))
-
+    with tempfile.TemporaryDirectory(prefix="frontier_stream_") as work:
+        seen_store = os.path.join(work, "seen")
+        out_store = os.path.join(work, "out")
         # schema-only seen-store init: (key, keeper_doc)
         raw.limit(0).select(
             F.md5(canonicalize_url(F.col("url"))).alias("key"),
@@ -430,27 +396,13 @@ def run_frontier_stream(
             new_keys.write.mode("append").parquet(seen_store)
             canon.unpersist()
 
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
+        n_batches = run_chunk_stream(raw, "doc_id", n_chunks, probe, work, ordered=True)
+        res = barrier(
+            spark.read.parquet(out_store).select(
+                "doc_id", "url", "canonical", "keeper_doc", "is_dup"
+            ),
+            eager=True,
         )
-        sq = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        res = (
-            spark.read.parquet(out_store)
-            .select("doc_id", "url", "canonical", "keeper_doc", "is_dup")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return res, n_batches
 
 

@@ -30,11 +30,13 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.caching import barrier
 from bigdata_project_spark.exact import SQL_DSUM, dcast, dsum
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
@@ -45,7 +47,6 @@ def _stream_dir(sf_dir: str) -> str:
     a single parquet file. Stage a symlink dir under /tmp (read-only
     view of the source — nothing is copied)."""
     import hashlib
-    import os
 
     d = os.path.join(
         tempfile.gettempdir(),
@@ -107,15 +108,18 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str) -> Data
     return the materialized result as a batch DataFrame."""
     spark = stream_df.sparkSession
     spark.catalog.dropTempView(name) if name in [t.name for t in spark.catalog.listTables()] else None
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # the memory-sink table does not read the checkpoint once the
+    # query has terminated
+    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_", ignore_cleanup_errors=True) as ckpt:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.table(name)
 
 
@@ -419,9 +423,6 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup (max_by on batch_id per key) and day rollup run over the
     hourly store, which is orders of magnitude smaller than the
     stream."""
-    import shutil
-
-    store = tempfile.mkdtemp(prefix="rollup_store_")
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     hourly = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -443,37 +444,37 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # JDBC sink would MERGE here with identical semantics.
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(store)
 
-    q = (
-        hourly.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rollup_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="rollup_", ignore_cleanup_errors=True) as work:
+        store = os.path.join(work, "store")
+        q = (
+            hourly.writeStream.foreachBatch(upsert)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-    raw = spark.read.parquet(store)
-    latest = raw.groupBy("hour_start_us", "event_type").agg(
-        F.max_by("n_events", "batch_id").alias("n_events"),
-        F.max_by("sv", "batch_id").alias("sv"),
-    )
-    day = (
-        latest.groupBy(
-            F.date_trunc("day", F.timestamp_micros("hour_start_us")).alias("d"),
-            "event_type",
+        raw = spark.read.parquet(store)
+        latest = raw.groupBy("hour_start_us", "event_type").agg(
+            F.max_by("n_events", "batch_id").alias("n_events"),
+            F.max_by("sv", "batch_id").alias("sv"),
         )
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv"))
-        .select(
-            F.unix_micros("d").alias("day_start_us"),
-            "event_type",
-            "n_events",
-            F.col("sv").cast("double").alias("total_value"),
+        day = (
+            latest.groupBy(
+                F.date_trunc("day", F.timestamp_micros("hour_start_us")).alias("d"),
+                "event_type",
+            )
+            .agg(F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv"))
+            .select(
+                F.unix_micros("d").alias("day_start_us"),
+                "event_type",
+                "n_events",
+                F.col("sv").cast("double").alias("total_value"),
+            )
         )
-    )
-    # materialize before the temp store is removed
-    out = day.localCheckpoint(eager=True)
-    shutil.rmtree(store, ignore_errors=True)
-    return out
+        # materialize before the store and the checkpoint are removed
+        return barrier(day, eager=True)
 
 
 @query(

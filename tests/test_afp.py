@@ -116,15 +116,13 @@ def test_probe_batch_idempotent_under_redelivery(spark, sf_dir, tmp_path):
         _afp_probe_batch,
     )
 
-    from bigdata_project_spark.caching import persistent_rdd_ids, track_rdd_ids
+    from bigdata_project_spark.caching import barrier
 
     payloads = _afp_payloads_df(spark, sf_dir).filter(F.col("doc_id") < 16)
-    before = persistent_rdd_ids(spark)
-    b0 = payloads.filter(F.col("doc_id") < 8).localCheckpoint(eager=True)
-    b1 = payloads.filter(F.col("doc_id") >= 8).localCheckpoint(eager=True)
-    # register the test's own checkpoint blocks so the suite's
-    # no-leaked-RDDs invariants stay true after the next release
-    track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+    # barriers register their blocks, so the suite's no-leaked-RDDs
+    # invariants stay true after the next release
+    b0 = barrier(payloads.filter(F.col("doc_id") < 8), eager=True)
+    b1 = barrier(payloads.filter(F.col("doc_id") >= 8), eager=True)
     seen_store, out_store = str(tmp_path / "seen"), str(tmp_path / "out")
     empty = payloads.limit(0).select("doc_id", F.lit("").alias("afp64"))
     empty.write.parquet(seen_store + "/b_init")

@@ -13,7 +13,18 @@ from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
 _ensure_loaded()
 
 # the queries that persist / localCheckpoint during build or execution
-_CACHING_QUERIES = ["dedup_minhash_lsh", "dedup_cluster_components", "corpus_clean_pipeline"]
+# (the incremental streams read their final store back behind a barrier)
+_CACHING_QUERIES = [
+    "dedup_minhash_lsh",
+    "dedup_cluster_components",
+    "corpus_clean_pipeline",
+    "stream_countmin_incremental",
+    "stream_quantile_incremental",
+    "stream_url_frontier_dedup",
+    "stream_semantic_incremental_dedup",
+    "stream_incremental_rollup",
+    "stream_audio_incremental_neardup",
+]
 
 
 @pytest.mark.parametrize("name", _CACHING_QUERIES)

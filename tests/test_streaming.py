@@ -4,6 +4,9 @@ dedup, exactly-once parquet sink with checkpoint, foreachBatch."""
 
 from __future__ import annotations
 
+import tempfile
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,11 +20,16 @@ def test_stream_is_streaming(spark, sf_dir):
 def test_tumbling_agg_matches_batch(spark, sf_dir):
     from bigdata_project_spark.tables import load
 
+    def ckpt_dirs() -> set:
+        return set(Path(tempfile.gettempdir()).glob("ckpt_*"))
+
+    ckpts_before = ckpt_dirs()
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w")).agg(F.count("*").alias("n"))
     result = run_available_now(
         agg.select(F.col("w.start").alias("ws"), "n"), "t_tumbling", "complete"
     )
+    assert ckpt_dirs() <= ckpts_before, "run_available_now left its checkpoint dir behind"
     batch = (
         load(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"))
