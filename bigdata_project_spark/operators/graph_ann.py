@@ -62,13 +62,13 @@ from pyspark.sql.window import Window as W
 from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.pq import _recall_join
 from bigdata_project_spark.operators.similarity import (
+    DIM,
     _QUERY_IDS,
     _TOP_K,
-    _dot_col,
-    _sql_dot,
     sim_knn_bruteforce,
     with_norm,
 )
+from bigdata_project_spark.operators.vecmath import dot, sql_dot
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
@@ -106,7 +106,7 @@ def _bank_col(dims: tuple[int, ...]):
 _SQL_GBUCK = f"""
     gbuck AS MATERIALIZED (
         SELECT vec_id, embedding,
-               {_sql_dot('embedding', 'embedding')} AS norm_sq,
+               {sql_dot('embedding', 'embedding', DIM)} AS norm_sq,
                {_sql_bank(_BANKS[0])} AS b_a,
                {_sql_bank(_BANKS[1])} AS b_b
         FROM embeddings
@@ -117,7 +117,7 @@ def _sql_gscore(cand: str, out: str) -> str:
     return f"""
     {out} AS (
         SELECT c.src, c.dst,
-               ({_sql_dot('a.embedding', 'b.embedding')})
+               ({sql_dot('a.embedding', 'b.embedding', DIM)})
                  / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) AS cosine
         FROM {cand} c
         JOIN gbuck a ON a.vec_id = c.src
@@ -235,7 +235,7 @@ def _build_graph(emb: DataFrame) -> DataFrame:
             F.col("embedding").alias("d_emb"),
             F.col("norm_sq").alias("d_n"),
         )
-        cos = _dot_col("s_emb", "d_emb") / (F.sqrt("s_n") * F.sqrt("d_n"))
+        cos = dot("s_emb", "d_emb") / (F.sqrt("s_n") * F.sqrt("d_n"))
         return (
             cand.join(a, "src").join(b, "dst").select("src", "dst", cos.alias("cosine"))
         )
@@ -299,7 +299,7 @@ def _sql_beam_hops() -> str:
         f"""
     bnormed AS MATERIALIZED (
         SELECT vec_id, embedding,
-               {_sql_dot('embedding', 'embedding')} AS norm_sq
+               {sql_dot('embedding', 'embedding', DIM)} AS norm_sq
         FROM embeddings
     ),
     bq AS (
@@ -308,7 +308,7 @@ def _sql_beam_hops() -> str:
     ),
     bm0 AS (
         SELECT q.query_id, e.vec_id,
-               ({_sql_dot('q.q_emb', 'e.embedding')})
+               ({sql_dot('q.q_emb', 'e.embedding', DIM)})
                  / (SQRT(q.q_n) * SQRT(e.norm_sq)) AS cosine
         FROM bq q JOIN bnormed e ON e.vec_id IN {_ENTRIES}
         WHERE e.vec_id <> q.query_id
@@ -324,7 +324,7 @@ def _sql_beam_hops() -> str:
     ),
     bs{t + 1} AS (
         SELECT c.query_id, c.vec_id,
-               ({_sql_dot('q.q_emb', 'n.embedding')})
+               ({sql_dot('q.q_emb', 'n.embedding', DIM)})
                  / (SQRT(q.q_n) * SQRT(n.norm_sq)) AS cosine
         FROM bc{t + 1} c
         JOIN bnormed n ON n.vec_id = c.vec_id
@@ -405,7 +405,7 @@ def _beam_walk(emb: DataFrame, g: DataFrame) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("norm_sq").alias("q_n"),
     )
-    cos = _dot_col("q_emb", "embedding") / (F.sqrt("q_n") * F.sqrt("norm_sq"))
+    cos = dot("q_emb", "embedding") / (F.sqrt("q_n") * F.sqrt("norm_sq"))
     entries = emb.filter(F.col("vec_id").isin(*_ENTRIES)).select(
         "vec_id", "embedding", "norm_sq"
     )

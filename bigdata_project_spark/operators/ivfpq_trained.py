@@ -37,23 +37,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from bigdata_project_spark.operators.kmeans import (
     _ITERS,
+    _NPROBE,
     _km_assign,
+    _km_qprobe,
     _km_trained,
-    _sql_d64,
     _sql_kmeans_prelude,
 )
-from bigdata_project_spark.operators.pq import (
-    _pq_codebook,
-    _recall_join,
-)
+from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode, _recall_join
 from bigdata_project_spark.operators.pq_residual import (
     _SQL_RLUT,
     _SQL_RSUBS,
-    _res_encode,
     _res_search_tail,
     _res_subs,
 )
@@ -63,9 +59,8 @@ from bigdata_project_spark.operators.similarity import (
     _TOP_K,
     sim_knn_bruteforce,
 )
+from bigdata_project_spark.operators.vecmath import sql_sqdist
 from bigdata_project_spark.registry import REGISTRY, query
-
-_TRES_NPROBE = 2
 
 
 # SQL: kmeans prelude (unit, cent{_ITERS}, afin) -> ucent/resid in the
@@ -88,10 +83,10 @@ _SQL_TRES_PROBE = f"""
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                          ORDER BY dist, cid) AS arn
             FROM (SELECT un.vec_id AS query_id, c.cid,
-                         ({_sql_d64("un.u", "c.c_arr")}) AS dist
+                         ({sql_sqdist("un.u", "c.c_arr", DIM)}) AS dist
                   FROM unit un, cent{_ITERS} c
                   WHERE un.vec_id IN {_QUERY_IDS})
-        ) WHERE arn <= {_TRES_NPROBE}
+        ) WHERE arn <= {_NPROBE}
     )
 """
 
@@ -114,28 +109,8 @@ def _trained_res_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     subs = tracked_persist(_res_subs(unitl, ucent))
     cb = tracked_persist(_pq_codebook(subs))
-    codes = _res_encode(subs, cb)
-
-    qp = (
-        unit.filter(F.col("vec_id").isin(*_QUERY_IDS))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cid",
-            F.aggregate(
-                F.zip_with("u", "c_arr", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy("dist", "cid")
-    probe = (
-        qp.select("*", F.row_number().over(wq).alias("arn"))
-        .filter(F.col("arn") <= _TRES_NPROBE)
-        .select("query_id", F.col("cid").alias("cell"))
-    )
-
+    codes = _pq_encode(subs, cb, ["vec_id", "label"])
+    probe = _km_qprobe(unit, cent)
     qu = unit.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("q_u")
     )

@@ -16,15 +16,11 @@ Determinism (the registry's cross-engine contract):
   md5(CAST(vec_id AS STRING)) hex digest (vec_id tiebreak) — a
   deterministic stand-in for random init that both engines compute
   identically; cid 0..k-1 follows the same hash order.
-- assignment: squared-L2 in unit space as an explicit left-associated
-  64-term chain (identical term order in the Spark fold and the SQL
-  `+` chain — the `_dist16_col` discipline at full width); ties break
-  on cid.
-- update: the quantized-BIGINT mean of `pq.py` — exact FLOOR(u * 2^20)
-  integer sums, one correctly-rounded double division per dimension —
-  so both engines derive bit-identical centroids. A cell that loses
-  every member keeps its previous centroid (COALESCE), keeping k
-  stable.
+- assignment: squared-L2 in unit space (`vecmath.sqdist`); ties
+  break on cid.
+- update: the FLOOR quantized mean (`vecmath.centroids`), so both
+  engines derive bit-identical centroids. A cell that loses every
+  member keeps its previous centroid (COALESCE), keeping k stable.
 - iterations are UNROLLED (fixed 2), not convergence-looped: the
   fixpoint is data-dependent and a `while` over `.count()` would put
   the driver in the loop (`clustering.py` documents the same
@@ -49,31 +45,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from bigdata_project_spark.operators.pq import (
-    _PQ_Q,
-    _pq_unit,
-    _recall_join,
-    _sql_dot_u,
-    _sql_unit,
-)
+from bigdata_project_spark.operators.pq import _pq_unit, _recall_join, _sql_unit
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
     _TOP_K,
     sim_knn_bruteforce,
 )
+from bigdata_project_spark.operators.vecmath import (
+    FLOOR,
+    SQL_QN,
+    argmin_encode,
+    centroids,
+    dot,
+    sql_dot,
+    sql_qsum,
+    sql_sqdist,
+    sqdist,
+)
 from bigdata_project_spark.registry import REGISTRY, query
 
 _K = 10  # same cell count as the label-derived IVF for a fair eval
 _ITERS = 2  # unrolled Lloyd iterations (see module docstring)
-
-
-def _sql_d64(u: str, c: str) -> str:
-    """Left-associated 64-term squared-L2 chain between two DOUBLE
-    lists — `_sql_dist16` at full vector width."""
-    return " + ".join(
-        f"({u}[{i}] - {c}[{i}]) * ({u}[{i}] - {c}[{i}])" for i in range(1, DIM + 1)
-    )
+_NPROBE = 2  # trained cells each query searches
 
 
 def _sql_assign(name: str, cent: str, keep_dist: bool = False) -> str:
@@ -85,7 +79,7 @@ def _sql_assign(name: str, cent: str, keep_dist: bool = False) -> str:
             SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                          ORDER BY dist, cid) AS arn
             FROM (SELECT un.vec_id, c.cid,
-                         ({_sql_d64("un.u", "c.c_arr")}) AS dist
+                         ({sql_sqdist("un.u", "c.c_arr", DIM)}) AS dist
                   FROM unit un, {cent} c)
         ) WHERE arn = 1
     )"""
@@ -97,8 +91,8 @@ def _sql_update(asg: str, prev: str, new: str) -> str:
     return f"""
     {new}_m AS MATERIALIZED (
         SELECT a.cid, d.d AS d,
-               CAST(SUM(CAST(FLOOR(un.u[d.d + 1] * {_PQ_Q}) AS BIGINT)) AS DOUBLE)
-                 / ({_PQ_Q}.0 * COUNT(*)) AS m
+               {sql_qsum('un.u[d.d + 1]', FLOOR)}
+                 / {SQL_QN} AS m
         FROM {asg} a JOIN unit un USING (vec_id),
              LATERAL (SELECT unnest(range({DIM})) AS d) d
         GROUP BY a.cid, d.d
@@ -146,14 +140,14 @@ _SQL_KM_SEARCH = f"""
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                          ORDER BY dist, cid) AS arn
             FROM (SELECT un.vec_id AS query_id, c.cid,
-                         ({_sql_d64("un.u", "c.c_arr")}) AS dist
+                         ({sql_sqdist("un.u", "c.c_arr", DIM)}) AS dist
                   FROM unit un, cent{_ITERS} c
                   WHERE un.vec_id IN {_QUERY_IDS})
-        ) WHERE arn <= 2
+        ) WHERE arn <= {_NPROBE}
     ),
     kcand AS (
         SELECT p.query_id, a.vec_id,
-               ({_sql_dot_u("qu.u", "nu.u")}) AS cosine
+               ({sql_dot("qu.u", "nu.u", DIM)}) AS cosine
         FROM qp p
         JOIN afin a ON a.cid = p.cell AND a.vec_id <> p.query_id
         JOIN unit qu ON qu.vec_id = p.query_id
@@ -162,55 +156,42 @@ _SQL_KM_SEARCH = f"""
 """
 
 
-def _dist64_col(a: str, b: str):
-    """Spark twin of _sql_d64: zip_with squared diffs + left fold."""
-    sq = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _km_assign(unit: DataFrame, cent: DataFrame, keep_dist: bool = False) -> DataFrame:
     """(vec_id, cid[, dist]): argmin cell against the broadcast
-    centroid table — map-side over the corpus scan.
-
-    r15 (guide §2.3 "aggregate before you shuffle"): the argmin is a
-    map-side-combinable min(struct(dist, cid)) aggregate instead of a
-    window rn=1 — the partial aggregation collapses the k-way fan-out
-    to one row per vector BEFORE the exchange and drops the window's
-    per-partition sort. Selection is identical: struct min is
-    lexicographic (dist, then cid), exactly the window's ORDER BY
-    dist, cid tie-break, and Spark's min and window sort share one
-    double ordering (NaN greatest, so a NaN distance loses in both
-    forms). The oracle keeps the didactic window SQL."""
+    centroid table — map-side over the corpus scan, one
+    partial-aggregated argmin instead of a window (the oracle keeps
+    the window SQL)."""
     scored = unit.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cid", _dist64_col("u", "c_arr").alias("dist")
+        "vec_id", "cid", sqdist("u", "c_arr").alias("dist")
     )
-    best = scored.groupBy("vec_id").agg(F.min(F.struct("dist", "cid")).alias("m"))
-    return best.select(
-        "vec_id",
-        F.col("m.cid").alias("cid"),
-        *([F.col("m.dist").alias("dist")] if keep_dist else []),
+    best = argmin_encode(scored, ["vec_id"], "cid")
+    return best if keep_dist else best.select("vec_id", "cid")
+
+
+def _km_qprobe(unit: DataFrame, cent: DataFrame) -> DataFrame:
+    """(query_id, cell): each query's _NPROBE nearest trained
+    centroids by unit-space squared L2 (cid tiebreak)."""
+    qp = (
+        unit.filter(F.col("vec_id").isin(*_QUERY_IDS))
+        .crossJoin(F.broadcast(cent))
+        .select(F.col("vec_id").alias("query_id"), "cid", sqdist("u", "c_arr").alias("dist"))
+    )
+    wq = W.partitionBy("query_id").orderBy("dist", "cid")
+    return (
+        qp.select("*", F.row_number().over(wq).alias("arn"))
+        .filter(F.col("arn") <= _NPROBE)
+        .select("query_id", F.col("cid").alias("cell"))
     )
 
 
 def _km_update(unit: DataFrame, asg: DataFrame, prev: DataFrame) -> DataFrame:
     """(cid, c_arr): quantized-BIGINT mean per assigned cell,
     coalesced over the previous centroids (empty cells persist)."""
-    dims = asg.join(unit, "vec_id").select("cid", F.posexplode("u").alias("d", "v"))
-    mdim = dims.groupBy("cid", "d").agg(
-        (
-            F.sum(F.floor(F.col("v") * _PQ_Q).cast("long")).cast("double")
-            / (float(_PQ_Q) * F.count("*"))
-        ).alias("m")
-    )
-    means = mdim.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
-        ).alias("m_arr")
-    )
+    means = centroids(asg.join(unit, "vec_id"), ["cid"], "u", FLOOR)
     return (
         prev.withColumnRenamed("c_arr", "old_arr")
         .join(means, "cid", "left_outer")
-        .select("cid", F.coalesce("m_arr", "old_arr").alias("c_arr"))
+        .select("cid", F.coalesce("c_arr", "old_arr").alias("c_arr"))
     )
 
 
@@ -279,34 +260,15 @@ def sim_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells at identical k and probe budget."""
     cent, unit = _km_trained(spark, sf_dir)
     asg = _km_assign(unit, cent)
-    qp = (
-        unit.filter(F.col("vec_id").isin(*_QUERY_IDS))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cid",
-            _dist64_col("u", "c_arr").alias("dist"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy("dist", "cid")
-    probe = (
-        qp.select("*", F.row_number().over(wq).alias("arn"))
-        .filter(F.col("arn") <= 2)
-        .select("query_id", F.col("cid").alias("cell"))
-    )
+    probe = _km_qprobe(unit, cent)
     qu = unit.select(F.col("vec_id").alias("q_vid"), F.col("u").alias("q_u"))
     nu = unit.select(F.col("vec_id").alias("n_vid"), F.col("u").alias("n_u"))
-    dot = F.aggregate(
-        F.zip_with("q_u", "n_u", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     cand = (
         asg.join(F.broadcast(probe), F.col("cid") == F.col("cell"))
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(qu), F.col("query_id") == F.col("q_vid"))
         .join(nu, F.col("vec_id") == F.col("n_vid"))
-        .select("query_id", "vec_id", dot.alias("cosine"))
+        .select("query_id", "vec_id", dot("q_u", "n_u").alias("cosine"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return cand.select("*", F.row_number().over(w).alias("rank")).filter(

@@ -41,7 +41,7 @@ public model).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -50,35 +50,19 @@ from bigdata_project_spark.operators.similarity import (
     _TOP_K,
     sim_knn_bruteforce,
 )
+from bigdata_project_spark.operators.vecmath import dot, sql_dot
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
 _DIMS = (16, 32, 64)
 
 
-def _dot_prefix_col(a: str, b: str, d: int) -> Column:
-    """Left-fold dot product over the first `d` components — the
-    similarity.py chain restricted to a prefix slice."""
-    products = F.zip_with(
-        F.slice(a, 1, d), F.slice(b, 1, d),
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sql_dot_prefix(a: str, b: str, d: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, d + 1)
-    )
-
-
 _SQL_PREFIX_NORMED = f"""
     pnormed AS (
         SELECT vec_id, embedding,
-               {_sql_dot_prefix('embedding', 'embedding', 16)} AS n16,
-               {_sql_dot_prefix('embedding', 'embedding', 32)} AS n32,
-               {_sql_dot_prefix('embedding', 'embedding', 64)} AS n64
+               {sql_dot('embedding', 'embedding', 16)} AS n16,
+               {sql_dot('embedding', 'embedding', 32)} AS n32,
+               {sql_dot('embedding', 'embedding', 64)} AS n64
         FROM embeddings
     )
 """
@@ -100,13 +84,13 @@ _SQL_DIM_RANKED = " UNION ALL ".join(
     ppairs AS (
         SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
                CASE WHEN q.n16 > 0 AND c.n16 > 0 THEN
-                    ({_sql_dot_prefix('q.embedding', 'c.embedding', 16)})
+                    ({sql_dot('q.embedding', 'c.embedding', 16)})
                       / (SQRT(q.n16) * SQRT(c.n16)) ELSE 0.0 END AS cos16,
                CASE WHEN q.n32 > 0 AND c.n32 > 0 THEN
-                    ({_sql_dot_prefix('q.embedding', 'c.embedding', 32)})
+                    ({sql_dot('q.embedding', 'c.embedding', 32)})
                       / (SQRT(q.n32) * SQRT(c.n32)) ELSE 0.0 END AS cos32,
                CASE WHEN q.n64 > 0 AND c.n64 > 0 THEN
-                    ({_sql_dot_prefix('q.embedding', 'c.embedding', 64)})
+                    ({sql_dot('q.embedding', 'c.embedding', 64)})
                       / (SQRT(q.n64) * SQRT(c.n64)) ELSE 0.0 END AS cos64
         FROM pnormed q JOIN pnormed c ON c.vec_id <> q.vec_id
         WHERE q.vec_id IN {_QUERY_IDS}
@@ -138,7 +122,7 @@ def sim_recall_dim_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         *[
-            _dot_prefix_col("embedding", "embedding", d).alias(f"n{d}")
+            dot(F.slice("embedding", 1, d), F.slice("embedding", 1, d)).alias(f"n{d}")
             for d in _DIMS
         ],
     )
@@ -158,7 +142,7 @@ def sim_recall_dim_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(d).alias("dim"),
                 F.when(
                     (F.col(f"qn{d}") > 0) & (F.col(f"n{d}") > 0),
-                    _dot_prefix_col("q_embedding", "embedding", d)
+                    dot(F.slice("q_embedding", 1, d), F.slice("embedding", 1, d))
                     / (F.sqrt(f"qn{d}") * F.sqrt(f"n{d}")),
                 )
                 .otherwise(F.lit(0.0))

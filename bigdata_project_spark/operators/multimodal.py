@@ -299,11 +299,11 @@ def multimodal_feature_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny query set, scan the corpus in place. The consumer that keeps
     the vector-form decode output in sync with the flat driver query it
     derives from."""
-    from bigdata_project_spark.operators.similarity import _dot_col
+    from bigdata_project_spark.operators.vecmath import dot
 
     feats = decode_feature_vector(spark, sf_dir).filter(F.col("n_bytes") > 0)
     normed = feats.select("doc_id", "features").withColumn(
-        "norm_sq", _dot_col("features", "features")
+        "norm_sq", dot("features", "features")
     )
     q = normed.filter(F.col("doc_id").isin(*_KNN_QUERY_IDS)).select(
         F.col("doc_id").alias("query_id"),
@@ -311,7 +311,7 @@ def multimodal_feature_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm_sq").alias("q_norm_sq"),
     )
     pairs = normed.join(F.broadcast(q), F.col("doc_id") != F.col("query_id"))
-    cosine = _dot_col("q_features", "features") / (F.sqrt("q_norm_sq") * F.sqrt("norm_sq"))
+    cosine = dot("q_features", "features") / (F.sqrt("q_norm_sq") * F.sqrt("norm_sq"))
     scored = pairs.select("query_id", "doc_id", cosine.alias("cosine"))
     from pyspark.sql.window import Window as W
 

@@ -52,16 +52,28 @@ from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
     _TOP_K,
-    _sql_dot,
     sim_knn_bruteforce,
     with_norm,
+)
+from bigdata_project_spark.operators.vecmath import (
+    FLOOR,
+    ROUND,
+    SQL_QN,
+    argmin_encode,
+    centroids,
+    dot,
+    nearest_cells,
+    sql_cell_score,
+    sql_dot,
+    sql_qsum,
+    sql_sqdist,
+    sqdist,
 )
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
 _PQ_M = 4  # subspaces
 _PQ_SUB = DIM // _PQ_M  # dims per subspace
-_PQ_Q = 1048576  # 2^20 quantizer (exponent shift: exact on doubles)
 
 
 def _sql_unit(with_label: bool = False) -> str:
@@ -72,7 +84,7 @@ def _sql_unit(with_label: bool = False) -> str:
     return f"""
     normed AS (
         SELECT vec_id, embedding{lab},
-               {_sql_dot("embedding", "embedding")} AS norm_sq
+               {sql_dot("embedding", "embedding", DIM)} AS norm_sq
         FROM embeddings
     ),
     unit AS (
@@ -95,14 +107,6 @@ def _sql_bucket(j: int) -> str:
     )
 
 
-def _sql_dist16(a: str, b: str) -> str:
-    """Left-associated 16-term squared-L2 chain between two
-    16-element DOUBLE lists."""
-    return " + ".join(
-        f"({a}[{d}] - {b}[{d}]) * ({a}[{d}] - {b}[{d}])" for d in range(1, _PQ_SUB + 1)
-    )
-
-
 # subvectors of every vector, one row per (vec_id, j): the shared
 # front half of training, encoding, and the query LUT
 _SQL_SUBS = f"""
@@ -115,8 +119,8 @@ _SQL_SUBS = f"""
     ),
     cdim AS (
         SELECT j, b, d.d AS d,
-               CAST(SUM(CAST(FLOOR(u_sub[d.d + 1] * {_PQ_Q}) AS BIGINT)) AS DOUBLE)
-                 / ({_PQ_Q}.0 * COUNT(*)) AS m
+               {sql_qsum('u_sub[d.d + 1]', FLOOR)}
+                 / {SQL_QN} AS m
         FROM subs, LATERAL (SELECT unnest(range({_PQ_SUB})) AS d) d
         GROUP BY j, b, d.d
     ),
@@ -130,7 +134,7 @@ _SQL_CODES = f"""
         SELECT s.vec_id, s.j, cb.b,
                ROW_NUMBER() OVER (
                    PARTITION BY s.vec_id, s.j
-                   ORDER BY ({_sql_dist16("s.u_sub", "cb.m_arr")}), cb.b) AS rn
+                   ORDER BY ({sql_sqdist("s.u_sub", "cb.m_arr", _PQ_SUB)}), cb.b) AS rn
         FROM subs s JOIN codebook cb ON cb.j = s.j
     ),
     codes AS (
@@ -161,13 +165,6 @@ def _bucket_col(j: int):
         ).cast("int")
         out = term if out is None else out + term
     return out
-
-
-def _dist16_col(a: str, b: str):
-    """The Spark twin of _sql_dist16: zip_with squared diffs, then a
-    left fold from 0.0 — term-for-term the SQL chain."""
-    sq = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _lut_pivot(lut: DataFrame, keys: tuple[str, ...]) -> DataFrame:
@@ -227,47 +224,31 @@ def _pq_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_codebook(subs: DataFrame) -> DataFrame:
-    """(j, b, m_arr[16]): quantized-mean codeword per training bin —
-    exact BIGINT sums, one division per dimension."""
-    dims = subs.select(
-        "j", "b", F.posexplode("u_sub").alias("d", "v")
-    ).select(
-        "j", "b", "d", F.floor(F.col("v") * _PQ_Q).cast("long").alias("qv")
-    )
-    cdim = dims.groupBy("j", "b", "d").agg(
-        (F.sum("qv").cast("double") / (float(_PQ_Q) * F.count("*"))).alias("m")
-    )
-    return cdim.groupBy("j", "b").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
-        ).alias("m_arr")
-    )
+    """(j, b, c_arr[16]): quantized-mean codeword per training bin."""
+    return centroids(subs, ["j", "b"], "u_sub", FLOOR)
 
 
-def _pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, c0..c3): every vector encoded to M codeword ids by
+def _pq_encode(subs: DataFrame, cb: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., c0..c3): every vector encoded to M codeword ids by
     broadcast-codebook argmin (ties -> smallest codeword id). The
     training bin (subs.b) is dropped — encoding considers EVERY
     codeword, so a vector may encode to a different bin than it
-    trained in (standard PQ)."""
+    trained in (standard PQ). `keys` are the subs columns the codes
+    keep (the residual search also needs the cell label)."""
     scored = subs.drop("b").join(F.broadcast(cb), "j").select(
-        "vec_id",
-        "j",
-        "b",
-        _dist16_col("u_sub", "m_arr").alias("dist"),
+        *keys, "j", "b", sqdist("u_sub", "c_arr").alias("dist")
     )
-    # r15 (guide §2.3): argmin-per-(vec_id, j) + code pivot fused into
-    # ONE map-side-combinable aggregate — min(struct(dist, b)) is
-    # lexicographic, exactly the former window's ORDER BY dist, b
-    # tie-break (shared double ordering, NaN greatest in both forms);
-    # the when(j = ...) masks make each subspace's min independent.
-    # Replaces a window exchange+sort AND a second pivot exchange with
-    # one partial-aggregated exchange. Oracle keeps the window SQL.
-    return scored.groupBy("vec_id").agg(
-        *[
-            F.min(F.when(F.col("j") == j, F.struct("dist", "b")))["b"].alias(f"c{j}")
-            for j in range(_PQ_M)
-        ]
+    return argmin_encode(scored, keys, "b", _PQ_M)
+
+
+def _pq_lut(subs: DataFrame, cb: DataFrame) -> DataFrame:
+    """(query_id, j, b, pd): each query subvector's squared-L2 to
+    every codeword of its subspace — the ADC lookup table."""
+    return (
+        subs.filter(F.col("vec_id").isin(*_QUERY_IDS))
+        .select(F.col("vec_id").alias("query_id"), "j", F.col("u_sub").alias("q_sub"))
+        .join(F.broadcast(cb), "j")
+        .select("query_id", "j", "b", sqdist("q_sub", "c_arr").alias("pd"))
     )
 
 
@@ -297,7 +278,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_project_spark.caching import tracked_persist
 
     subs = tracked_persist(_pq_subs(spark, sf_dir))
-    c = _pq_encode(subs, _pq_codebook(subs))
+    c = _pq_encode(subs, _pq_codebook(subs), ["vec_id"])
     return c.select(
         "vec_id", *[F.col(f"c{j}").cast("int").alias(f"c{j}") for j in range(_PQ_M)]
     )
@@ -313,7 +294,7 @@ _SQL_LUT = f"""
     ),
     lut AS (
         SELECT s.query_id, s.j, cb.b,
-               ({_sql_dist16("s.q_sub", "cb.m_arr")}) AS pd
+               ({sql_sqdist("s.q_sub", "cb.m_arr", _PQ_SUB)}) AS pd
         FROM qsubs s JOIN codebook cb ON cb.j = s.j
     )
 """
@@ -351,13 +332,8 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     subs = tracked_persist(_pq_subs(spark, sf_dir))
     cb = tracked_persist(_pq_codebook(subs))
-    codes = _pq_encode(subs, cb)
-    lut = (
-        subs.filter(F.col("vec_id").isin(*_QUERY_IDS))
-        .select(F.col("vec_id").alias("query_id"), "j", F.col("u_sub").alias("q_sub"))
-        .join(F.broadcast(cb), "j")
-        .select("query_id", "j", "b", _dist16_col("q_sub", "m_arr").alias("pd"))
-    )
+    codes = _pq_encode(subs, cb, ["vec_id"])
+    lut = _pq_lut(subs, cb)
     cand = codes.crossJoin(F.broadcast(_lut_pivot(lut, ("query_id",))))
     scored_q = cand.filter(F.col("vec_id") != F.col("query_id")).select(
         "query_id", F.col("vec_id").alias("neighbor_id"), _adc_from_map().alias("adc")
@@ -394,12 +370,6 @@ def sim_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_SHORTLIST = 100
 
 
-def _sql_dot_u(a: str, b: str) -> str:
-    """Left-associated 64-term dot chain over two unit (DOUBLE)
-    vectors."""
-    return " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(1, DIM + 1))
-
-
 @query(
     "sim_knn_pq_rerank",
     oracle=f"""
@@ -410,7 +380,7 @@ def _sql_dot_u(a: str, b: str) -> str:
     ),
     rr AS (
         SELECT s.query_id, s.neighbor_id,
-               ({_sql_dot_u("uq.u", "un.u")}) AS cosine
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
         FROM short s
         JOIN unit uq ON uq.vec_id = s.query_id
         JOIN unit un ON un.vec_id = s.neighbor_id
@@ -434,21 +404,23 @@ def sim_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup into the vector store). Recall vs brute force roughly
     triples the raw-ADC figure on the testbed; both are measured, not
     assumed."""
-    short = _pq_adc_ranked(spark, sf_dir).filter(
+    return _rerank_from(spark, sf_dir, _pq_adc_ranked(spark, sf_dir))
+
+
+def _rerank_from(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFrame:
+    """The refine stage shared by every PQ family: the top-100 rows
+    of an ADC-ranked relation (query_id, neighbor_id, rnk) exactly
+    rescored against the raw unit vectors, top-10 per query."""
+    short = ranked.filter(
         F.col("rnk") <= _PQ_SHORTLIST
     ).select("query_id", "neighbor_id")
     unit = _pq_unit(spark, sf_dir).select("vec_id", "u")
     uq = unit.select(F.col("vec_id").alias("q_vid"), F.col("u").alias("u_q"))
     un = unit.select(F.col("vec_id").alias("n_vid"), F.col("u").alias("u_n"))
-    dot = F.aggregate(
-        F.zip_with("u_q", "u_n", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rr = (
         short.join(F.broadcast(uq), F.col("query_id") == F.col("q_vid"))
         .join(un, F.col("neighbor_id") == F.col("n_vid"))
-        .select("query_id", "neighbor_id", dot.alias("cosine"))
+        .select("query_id", "neighbor_id", dot("u_q", "u_n").alias("cosine"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return rr.select("*", F.row_number().over(w).alias("rnk")).filter(
@@ -540,11 +512,6 @@ _REG["sim_recall_pq_rerank_at_k"].oracle = _REG["sim_recall_pq_rerank_at_k"].ora
 # only that cell's code bytes. At 100 TB both pruning axes multiply:
 # the scan touches cell_fraction x 4 bytes per vector.
 
-from bigdata_project_spark.operators.similarity import (  # noqa: E402
-    _SQL_CNORM,
-    _SQL_DOT_QC,
-)
-
 def _sql_ivf_cells(nprobe: int = 1, keep_arn: bool = False) -> str:
     """Coarse-stage CTEs: quantized-mean centroid per label cell and
     the query -> probed-cell assignment, keeping the `nprobe` nearest
@@ -557,8 +524,8 @@ def _sql_ivf_cells(nprobe: int = 1, keep_arn: bool = False) -> str:
     return f"""
     ivf_cdim AS (
         SELECT label, i.r AS pos,
-               CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-                 / (1048576.0 * COUNT(*)) AS c
+               {sql_qsum('embedding[i.r + 1]', ROUND)}
+                 / {SQL_QN} AS c
         FROM embeddings, LATERAL (SELECT unnest(range({DIM})) AS r) i
         GROUP BY label, i.r
     ),
@@ -568,7 +535,7 @@ def _sql_ivf_cells(nprobe: int = 1, keep_arn: bool = False) -> str:
     qassign AS (
         SELECT query_id, label,
                ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY ({_SQL_DOT_QC}) / SQRT({_SQL_CNORM}) DESC, label) AS arn
+                                  ORDER BY {sql_cell_score('q_emb', DIM)} DESC, label) AS arn
         FROM qv, ivf_cent
     ),
     qprobe AS (SELECT query_id, label AS cell{arn} FROM qassign WHERE arn <= {nprobe})
@@ -604,43 +571,18 @@ _SQL_IVFPQ_PRELUDE = (
 )
 
 
-def _ivf_qprobe(emb: DataFrame, nprobe: int, keep_arn: bool = False) -> DataFrame:
-    """(query_id, cell[, arn]): the coarse stage — quantized-mean
+def _ivf_qprobe(emb: DataFrame, nprobe: int, keep_rn: bool = False) -> DataFrame:
+    """(query_id, cell[, rn]): the coarse stage — quantized-mean
     centroid per label cell, broadcast assign of the 3 queries, top
     `nprobe` cells per query by cosine (sim_ann_ivf_probe's
-    construction; the Spark twin of _sql_ivf_cells). keep_arn carries
+    construction; the Spark twin of _sql_ivf_cells). keep_rn carries
     the assignment rank for nested-nprobe consumers."""
-    exploded = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-    qvq = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("label", "pos").agg(
-        (F.sum(qvq).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    cent = cdim.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    )
+    cent = centroids(emb, ["label"], "embedding", ROUND)
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm_sq").alias("q_norm"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    dot_qc = F.aggregate(
-        F.zip_with("q_emb", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    qassign = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "label", (dot_qc / F.sqrt(c_norm)).alias("score")
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("score"), "label")
-    return (
-        qassign.select("*", F.row_number().over(wq).alias("arn"))
-        .filter(F.col("arn") <= nprobe)
-        .select("query_id", F.col("label").alias("cell"), *(["arn"] if keep_arn else []))
+    return nearest_cells(q, cent, "q_emb", "query_id", "label", nprobe).select(
+        "query_id", F.col("label").alias("cell"), *(["rn"] if keep_rn else [])
     )
 
 
@@ -655,13 +597,8 @@ def _ivfpq_adc_ranked(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> Data
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     subs = tracked_persist(_pq_subs(spark, sf_dir))
     cb = tracked_persist(_pq_codebook(subs))
-    codes = _pq_encode(subs, cb)
-    lut = (
-        subs.filter(F.col("vec_id").isin(*_QUERY_IDS))
-        .select(F.col("vec_id").alias("query_id"), "j", F.col("u_sub").alias("q_sub"))
-        .join(F.broadcast(cb), "j")
-        .select("query_id", "j", "b", _dist16_col("q_sub", "m_arr").alias("pd"))
-    )
+    codes = _pq_encode(subs, cb, ["vec_id"])
+    lut = _pq_lut(subs, cb)
     probe = _ivf_qprobe(emb, nprobe)
     # fine stage: ADC over the probed cell's codes only
     labeled = codes.join(emb.select("vec_id", "label"), "vec_id")
@@ -711,7 +648,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     rr AS (
         SELECT s.query_id, s.neighbor_id,
-               ({_sql_dot_u("uq.u", "un.u")}) AS cosine
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
         FROM short s
         JOIN unit uq ON uq.vec_id = s.query_id
         JOIN unit un ON un.vec_id = s.neighbor_id
@@ -741,26 +678,7 @@ def _ivfpq_reranked(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """Shared refine stage: the ADC shortlist (top rows across the
     probed cells) exact-rescored against the raw unit vectors — the
     only thing the nprobe dial changes is the candidate pool."""
-    short = _ivfpq_adc_ranked(spark, sf_dir, nprobe=nprobe).filter(
-        F.col("rnk") <= _PQ_SHORTLIST
-    ).select("query_id", "neighbor_id")
-    unit = _pq_unit(spark, sf_dir).select("vec_id", "u")
-    uq = unit.select(F.col("vec_id").alias("q_vid"), F.col("u").alias("u_q"))
-    un = unit.select(F.col("vec_id").alias("n_vid"), F.col("u").alias("u_n"))
-    dot = F.aggregate(
-        F.zip_with("u_q", "u_n", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    rr = (
-        short.join(F.broadcast(uq), F.col("query_id") == F.col("q_vid"))
-        .join(un, F.col("neighbor_id") == F.col("n_vid"))
-        .select("query_id", "neighbor_id", dot.alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return rr.select("*", F.row_number().over(w).alias("rnk")).filter(
-        F.col("rnk") <= _TOP_K
-    )
+    return _rerank_from(spark, sf_dir, _ivfpq_adc_ranked(spark, sf_dir, nprobe=nprobe))
 
 
 @query(
@@ -849,7 +767,7 @@ _SQL_IVFPQ2_PRELUDE = (
     ),
     rr AS (
         SELECT s.query_id, s.neighbor_id,
-               ({_sql_dot_u("uq.u", "un.u")}) AS cosine
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
         FROM short s
         JOIN unit uq ON uq.vec_id = s.query_id
         JOIN unit un ON un.vec_id = s.neighbor_id

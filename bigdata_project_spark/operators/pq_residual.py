@@ -58,23 +58,21 @@ from pyspark.sql.window import Window as W
 
 from bigdata_project_spark.operators.pq import (
     _PQ_M,
-    _PQ_Q,
     _PQ_SHORTLIST,
     _PQ_SUB,
     _SQL_CODES,
     _SQL_LUT,
     _SQL_SUBS,
     _adc_from_map,
-    _dist16_col,
     _ivf_qprobe,
     _lut_pivot,
     _pq_codebook,
     _pq_encode,
+    _pq_lut,
     _pq_subs,
     _pq_unit,
     _recall_join,
-    _sql_dist16,
-    _sql_dot_u,
+    _rerank_from,
     _sql_ivf_cells,
     _sql_unit,
 )
@@ -84,6 +82,16 @@ from bigdata_project_spark.operators.similarity import (
     _TOP_K,
     sim_knn_bruteforce,
     with_norm,
+)
+from bigdata_project_spark.operators.vecmath import (
+    FLOOR,
+    SQL_QN,
+    centroids,
+    dot,
+    sql_dot,
+    sql_qsum,
+    sql_sqdist,
+    sqdist,
 )
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
@@ -99,8 +107,8 @@ _RES_NPROBE = 2  # the registered residual search probes 2 cells
 _SQL_UCENT = f"""
     ucdim AS MATERIALIZED (
         SELECT label, d.d AS d,
-               CAST(SUM(CAST(FLOOR(u[d.d + 1] * {_PQ_Q}) AS BIGINT)) AS DOUBLE)
-                 / ({_PQ_Q}.0 * COUNT(*)) AS c
+               {sql_qsum('u[d.d + 1]', FLOOR)}
+                 / {SQL_QN} AS c
         FROM unit, LATERAL (SELECT unnest(range({DIM})) AS d) d
         GROUP BY label, d.d
     ),
@@ -132,8 +140,8 @@ _SQL_RSUBS = f"""
     ),
     rcdim AS MATERIALIZED (
         SELECT j, b, d.d AS d,
-               CAST(SUM(CAST(FLOOR(r_sub[d.d + 1] * {_PQ_Q}) AS BIGINT)) AS DOUBLE)
-                 / ({_PQ_Q}.0 * COUNT(*)) AS m
+               {sql_qsum('r_sub[d.d + 1]', FLOOR)}
+                 / {SQL_QN} AS m
         FROM rsubs, LATERAL (SELECT unnest(range({_PQ_SUB})) AS d) d
         GROUP BY j, b, d.d
     ),
@@ -142,7 +150,7 @@ _SQL_RSUBS = f"""
         SELECT s.vec_id, s.label, s.j, cb.b,
                ROW_NUMBER() OVER (
                    PARTITION BY s.vec_id, s.j
-                   ORDER BY ({_sql_dist16("s.r_sub", "cb.m_arr")}), cb.b) AS rn
+                   ORDER BY ({sql_sqdist("s.r_sub", "cb.m_arr", _PQ_SUB)}), cb.b) AS rn
         FROM rsubs s JOIN rcodebook cb ON cb.j = s.j
     ),
     rcodes AS MATERIALIZED (
@@ -167,7 +175,7 @@ _SQL_RLUT = f"""
     ),
     rlut AS MATERIALIZED (
         SELECT s.query_id, s.cell, s.j, cb.b,
-               ({_sql_dist16("s.q_sub", "cb.m_arr")}) AS pd
+               ({sql_sqdist("s.q_sub", "cb.m_arr", _PQ_SUB)}) AS pd
         FROM qrsubs s JOIN rcodebook cb ON cb.j = s.j
     ),
     rranked AS MATERIALIZED (
@@ -209,23 +217,6 @@ def _res_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", "label", unit.alias("u"))
 
 
-def _res_ucent(unit: DataFrame) -> DataFrame:
-    """(label, c_arr): unit-space quantized-mean centroid per cell —
-    exact BIGINT sums, one division per dimension (10 rows)."""
-    dims = unit.select("label", F.posexplode("u").alias("d", "v"))
-    ucdim = dims.groupBy("label", "d").agg(
-        (
-            F.sum(F.floor(F.col("v") * _PQ_Q).cast("long")).cast("double")
-            / (float(_PQ_Q) * F.count("*"))
-        ).alias("c")
-    )
-    return ucdim.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    )
-
-
 def _res_subs(unit: DataFrame, ucent: DataFrame) -> DataFrame:
     """(vec_id, label, j, u_sub, b): residual subvectors — one exact
     subtraction per component against the broadcast cell centroid,
@@ -260,24 +251,6 @@ def _res_subs(unit: DataFrame, ucent: DataFrame) -> DataFrame:
         F.col("o.j").alias("j"),
         F.col("o.u_sub").alias("u_sub"),
         F.col("o.b").alias("b"),
-    )
-
-
-def _res_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, label, c0..c3): argmin encode keeping the cell label
-    (the search needs it — a residual code only means something
-    inside its own cell)."""
-    scored = subs.drop("b").join(F.broadcast(cb), "j").select(
-        "vec_id", "label", "j", "b", _dist16_col("u_sub", "m_arr").alias("dist")
-    )
-    # r15: same fused min(struct(dist, b)) argmin + pivot as
-    # _pq_encode (see there) — one partial-aggregated exchange
-    # replaces the window exchange+sort and the pivot exchange.
-    return scored.groupBy("vec_id", "label").agg(
-        *[
-            F.min(F.when(F.col("j") == j, F.struct("dist", "b")))["b"].alias(f"c{j}")
-            for j in range(_PQ_M)
-        ]
     )
 
 
@@ -316,7 +289,7 @@ def _res_search_tail(
         "query_id", "cell", F.col("o.j").alias("j"), F.col("o.q_sub").alias("q_sub")
     )
     rlut = qrsubs.join(F.broadcast(cb), "j").select(
-        "query_id", "cell", "j", "b", _dist16_col("q_sub", "m_arr").alias("pd")
+        "query_id", "cell", "j", "b", sqdist("q_sub", "c_arr").alias("pd")
     )
     cand = (
         codes.join(F.broadcast(probe), F.col("label") == F.col("cell"))
@@ -338,10 +311,10 @@ def _res_ranked(spark: SparkSession, sf_dir: str, nprobe: int = _RES_NPROBE) -> 
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     unit = _res_unit(spark, sf_dir)
-    ucent = tracked_persist(_res_ucent(unit))
+    ucent = tracked_persist(centroids(unit, ["label"], "u", FLOOR))
     subs = tracked_persist(_res_subs(unit, ucent))
     cb = tracked_persist(_pq_codebook(subs))
-    codes = _res_encode(subs, cb)
+    codes = _pq_encode(subs, cb, ["vec_id", "label"])
     probe = _ivf_qprobe(emb, nprobe)
     qu = unit.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("q_u")
@@ -416,7 +389,7 @@ REGISTRY["sim_recall_ivfpq_residual_at_k"].oracle = REGISTRY[
     ),
     rr AS MATERIALIZED (
         SELECT s.query_id, s.neighbor_id,
-               ({_sql_dot_u("uq.u", "un.u")}) AS cosine
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
         FROM short s
         JOIN unit uq ON uq.vec_id = s.query_id
         JOIN unit un ON un.vec_id = s.neighbor_id
@@ -438,34 +411,7 @@ def sim_ivfpq_residual_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever quantization loss the residual codes still carry, so
     the recall eval below reads as the residual stack's shipped
     number."""
-    return _res_rerank_from(spark, sf_dir, _res_ranked(spark, sf_dir))
-
-
-def _res_rerank_from(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFrame:
-    """The exact-rescoring tail of sim_ivfpq_residual_rerank over an
-    already-ranked ADC relation — split out (r15) so the nDCG eval
-    can feed ONE persisted ranked relation to both residual systems
-    instead of rebuilding the training chain per system."""
-    short = ranked.filter(
-        F.col("rnk") <= _PQ_SHORTLIST
-    ).select("query_id", "neighbor_id")
-    unit = _pq_unit(spark, sf_dir).select("vec_id", "u")
-    uq = unit.select(F.col("vec_id").alias("q_vid"), F.col("u").alias("u_q"))
-    un = unit.select(F.col("vec_id").alias("n_vid"), F.col("u").alias("u_n"))
-    dot = F.aggregate(
-        F.zip_with("u_q", "u_n", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    rr = (
-        short.join(F.broadcast(uq), F.col("query_id") == F.col("q_vid"))
-        .join(un, F.col("neighbor_id") == F.col("n_vid"))
-        .select("query_id", "neighbor_id", dot.alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return rr.select("*", F.row_number().over(w).alias("rnk")).filter(
-        F.col("rnk") <= _TOP_K
-    )
+    return _rerank_from(spark, sf_dir, _res_ranked(spark, sf_dir))
 
 
 @query(
@@ -548,7 +494,7 @@ _SQL_NPS = "[" + ", ".join(str(n) for n in _CURVE_NPS) + "]"
     ),
     rr AS MATERIALIZED (
         SELECT s.np, s.query_id, s.neighbor_id,
-               ({_sql_dot_u("uq.u", "un.u")}) AS cosine
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
         FROM short s
         JOIN unit uq ON uq.vec_id = s.query_id
         JOIN unit un ON un.vec_id = s.neighbor_id
@@ -591,21 +537,16 @@ def sim_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     subs = tracked_persist(_pq_subs(spark, sf_dir))
     cb = tracked_persist(_pq_codebook(subs))
-    codes = _pq_encode(subs, cb)
-    lut = (
-        subs.filter(F.col("vec_id").isin(*_QUERY_IDS))
-        .select(F.col("vec_id").alias("query_id"), "j", F.col("u_sub").alias("q_sub"))
-        .join(F.broadcast(cb), "j")
-        .select("query_id", "j", "b", _dist16_col("q_sub", "m_arr").alias("pd"))
-    )
-    probe = _ivf_qprobe(emb, max(_CURVE_NPS), keep_arn=True)
+    codes = _pq_encode(subs, cb, ["vec_id"])
+    lut = _pq_lut(subs, cb)
+    probe = _ivf_qprobe(emb, max(_CURVE_NPS), keep_rn=True)
     nps = spark.range(1).select(
         F.explode(F.array(*[F.lit(n) for n in _CURVE_NPS])).alias("np")
     )
     labeled = codes.join(emb.select("vec_id", "label"), "vec_id")
     cand = (
         labeled.join(F.broadcast(probe), F.col("label") == F.col("cell"))
-        .join(F.broadcast(nps), F.col("np") >= F.col("arn"))
+        .join(F.broadcast(nps), F.col("np") >= F.col("rn"))
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(_lut_pivot(lut, ("query_id",))), "query_id")
     )
@@ -625,15 +566,10 @@ def sim_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit = _pq_unit(spark, sf_dir).select("vec_id", "u")
     uq = unit.select(F.col("vec_id").alias("q_vid"), F.col("u").alias("u_q"))
     un = unit.select(F.col("vec_id").alias("n_vid"), F.col("u").alias("u_n"))
-    dot = F.aggregate(
-        F.zip_with("u_q", "u_n", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rr = (
         short.join(F.broadcast(uq), F.col("query_id") == F.col("q_vid"))
         .join(un, F.col("neighbor_id") == F.col("n_vid"))
-        .select("np", "query_id", "neighbor_id", dot.alias("cosine"))
+        .select("np", "query_id", "neighbor_id", dot("u_q", "u_n").alias("cosine"))
     )
     wk = W.partitionBy("np", "query_id").orderBy(F.desc("cosine"), "neighbor_id")
     topk = (

@@ -30,12 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from bigdata_project_spark.operators.similarity import (
-    DIM,
-    _SQL_CNORM,
-    _sql_dot,
-    with_norm,
-)
+from bigdata_project_spark.operators.similarity import DIM, with_norm
 from bigdata_project_spark.operators.text import (
     _BM25_SCORE,
     _BM25_TERMS,
@@ -43,15 +38,19 @@ from bigdata_project_spark.operators.text import (
     _SQL_TF,
     _tf_col,
 )
+from bigdata_project_spark.operators.vecmath import (
+    ROUND,
+    SQL_QN,
+    centroids,
+    dot,
+    sql_dot,
+    sql_qsum,
+)
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
 _RRF_K = 60  # Cormack et al.'s constant; rank damping, not a tunable here
 _LIST_R = 50  # per-leg candidate list depth feeding the fusion
-
-_SQL_DOT_Q = " + ".join(
-    f"CAST(embedding[{i}] AS DOUBLE) * c_arr[{i}]" for i in range(1, DIM + 1)
-)
 
 
 @query(
@@ -83,20 +82,20 @@ _SQL_DOT_Q = " + ".join(
     ),
     cdim AS (
         SELECT i.r AS pos,
-               CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-                 / (1048576.0 * COUNT(*)) AS c
+               {sql_qsum('embedding[i.r + 1]', ROUND)}
+                 / {SQL_QN} AS c
         FROM embeddings, LATERAL (SELECT unnest(range({DIM})) AS r) i
         GROUP BY i.r
     ),
     qvec AS (SELECT list(c ORDER BY pos) AS c_arr FROM cdim),
     normed AS (
         SELECT vec_id, embedding,
-               {_sql_dot('embedding', 'embedding')} AS norm_sq
+               {sql_dot('embedding', 'embedding', DIM)} AS norm_sq
         FROM embeddings
     ),
     dense AS (
         SELECT vec_id,
-               ({_SQL_DOT_Q}) / (SQRT(norm_sq) * SQRT({_SQL_CNORM})) AS dcos
+               ({sql_dot('embedding', 'c_arr', DIM)}) / (SQRT(norm_sq) * SQRT({sql_dot('c_arr', 'c_arr', DIM)})) AS dcos
         FROM normed, qvec
     ),
     drank AS (
@@ -159,28 +158,9 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    exploded = emb.select(F.posexplode("embedding").alias("pos", "val"))
-    qv = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("pos").agg(
-        (F.sum(qv).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    qvec = cdim.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    )
-    dot_q = F.aggregate(
-        F.zip_with("embedding", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    dense = emb.crossJoin(F.broadcast(qvec)).select(
-        "vec_id",
-        (dot_q / (F.sqrt("norm_sq") * F.sqrt(c_norm))).alias("dcos"),
-    )
+    qvec = centroids(emb, [], "embedding", ROUND)
+    dcos = dot("embedding", "c_arr") / (F.sqrt("norm_sq") * F.sqrt(dot("c_arr", "c_arr")))
+    dense = emb.crossJoin(F.broadcast(qvec)).select("vec_id", dcos.alias("dcos"))
     dense_top = dense.orderBy(F.desc("dcos"), "vec_id").limit(_LIST_R)
     drank = dense_top.select(
         "vec_id",
@@ -277,10 +257,8 @@ def retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     list; the eval is a constant-size join — index probes at 100 TB
     change the inputs' cost, not this query's."""
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.pq_residual import (
-        _res_ranked,
-        _res_rerank_from,
-    )
+    from bigdata_project_spark.operators.pq import _rerank_from
+    from bigdata_project_spark.operators.pq_residual import _res_ranked
     from bigdata_project_spark.operators.similarity import _TOP_K
     from bigdata_project_spark.registry import REGISTRY as _R
 
@@ -303,7 +281,7 @@ def retrieval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     sys_dfs = {
         "pq_adc": _R["sim_knn_pq_adc"].fn(spark, sf_dir),
         "ivfpq_residual": ranked.filter(F.col("rnk") <= _TOP_K),
-        "ivfpq_residual_rerank": _res_rerank_from(spark, sf_dir, ranked),
+        "ivfpq_residual_rerank": _rerank_from(spark, sf_dir, ranked),
     }
     sys_frames = []
     for name, _qname in _NDCG_SYSTEMS:

@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.clustering import connected_components_auto
@@ -46,13 +45,22 @@ from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _band_signs,
-    _dot_col,
     _N_BANDS,
+    _sign_bit,
+    _sign_row,
     _sql_band_bucket,
-    _sql_dot,
-    _SQL_CNORM,
     _SQL_NORMED,
     with_norm,
+)
+from bigdata_project_spark.operators.vecmath import (
+    ROUND,
+    SQL_QN,
+    centroids,
+    dot,
+    nearest_cells,
+    sql_cell_score,
+    sql_dot,
+    sql_qsum,
 )
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
@@ -78,10 +86,6 @@ _CELL_LOAD_LOG2 = 9
 from bigdata_project_spark.operators.similarity import _MAX_PLANES_PER_BAND
 
 _MAX_SUBCELL_PLANES = min(16, _MAX_PLANES_PER_BAND)
-
-_SQL_DOT_NC = " + ".join(
-    f"CAST(embedding[{i}] AS DOUBLE) * c_arr[{i}]" for i in range(1, DIM + 1)
-)
 
 
 def subcell_planes(n_vectors: int) -> int:
@@ -113,16 +117,8 @@ def _subcell_col(q: int):
     bucket builder; '' when q = 0 so small corpora keep label cells)."""
     if q == 0:
         return F.lit("")
-    signs2d = F.array(
-        *[F.array(*[F.lit(float(s)) for s in row]) for row in _band_signs(_SEM_BAND)[:q]]
-    )
-
-    def _bit(row):
-        products = F.zip_with("embedding", row, lambda x, s: x.cast("double") * s)
-        proj = F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-        return (proj >= 0).cast("int").cast("string")
-
-    return F.array_join(F.transform(signs2d, _bit), "")
+    signs2d = F.array(*[_sign_row(row) for row in _band_signs(_SEM_BAND)[:q]])
+    return F.array_join(F.transform(signs2d, _sign_bit), "")
 
 
 # the cell-assignment fragment, reusable (tools/scaling_probe.py
@@ -136,8 +132,8 @@ _SQL_SEM_CELLS = f"""
     {_SQL_SEM_PARAMS},
     cdim AS (
         SELECT label, i.r AS pos,
-               CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-                 / (1048576.0 * COUNT(*)) AS c
+               {sql_qsum('embedding[i.r + 1]', ROUND)}
+                 / {SQL_QN} AS c
         FROM embeddings, LATERAL (SELECT unnest(range({DIM})) AS r) i
         GROUP BY label, i.r
     ),
@@ -145,7 +141,7 @@ _SQL_SEM_CELLS = f"""
     assign AS (
         SELECT vec_id, embedding, norm_sq, c_label,
                ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY ({_SQL_DOT_NC}) / SQRT({_SQL_CNORM}) DESC,
+                                  ORDER BY {sql_cell_score('embedding', DIM)} DESC,
                                            c_label) AS rn
         FROM normed, cent
     ),
@@ -166,7 +162,7 @@ _SQL_SEM_CELLS = f"""
     edges AS (
         SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
         FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ({_sql_dot('a.embedding', 'b.embedding')})
+        WHERE ({sql_dot('a.embedding', 'b.embedding', DIM)})
                 / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) >= {SEMDEDUP_TAU}
     ),
     und AS (
@@ -217,48 +213,10 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan-build sizing count — derives the same Q the oracle's params
     # CTE computes from COUNT(*) (the banded-LSH cheap-count pattern)
     q = subcell_planes(emb.count())
-
-    # quantized per-label mean centroids — identical construction to
-    # sim_ann_ivf_probe (cross-engine exact by integer quantization)
-    exploded = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-    qv = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("label", "pos").agg(
-        (F.sum(qv).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    cent = cdim.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    ).select(F.col("label").alias("c_label"), "c_arr")
-
-    dot_nc = F.aggregate(
-        F.zip_with("embedding", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    assign = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "norm_sq", "c_label",
-        (dot_nc / F.sqrt(c_norm)).alias("score"),
-    )
-    wv = W.partitionBy("vec_id").orderBy(F.desc("score"), "c_label")
-    cells = tracked_persist(
-        assign.select("*", F.row_number().over(wv).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "norm_sq",
-            F.concat(F.col("c_label").cast("string"), F.lit(":"), _subcell_col(q)).alias(
-                "cell"
-            ),
-        )
-    )
+    cells = tracked_persist(_sem_assign(emb, _sem_centroids(emb), q))
 
     a, b = cells.alias("a"), cells.alias("b")
-    cosine = _dot_col("a.embedding", "b.embedding") / (
+    cosine = dot("a.embedding", "b.embedding") / (
         F.sqrt(F.col("a.norm_sq")) * F.sqrt(F.col("b.norm_sq"))
     )
     edges = (
@@ -321,20 +279,8 @@ def _sem_centroids(corpus: DataFrame) -> DataFrame:
     """Quantized per-label mean centroids (c_label, c_arr) — the
     standing-index state an ingest pipeline refreshes in its batch
     job, exact cross-engine (integer-quantized sums)."""
-    exploded = corpus.select("label", F.posexplode("embedding").alias("pos", "val"))
-    qv = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("label", "pos").agg(
-        (F.sum(qv).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    return (
-        cdim.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("c_arr")
-        )
-        .select(F.col("label").alias("c_label"), "c_arr")
-    )
+    cent = centroids(corpus, ["label"], "embedding", ROUND)
+    return cent.select(F.col("label").alias("c_label"), "c_arr")
 
 
 def _sem_assign(emb: DataFrame, cent: DataFrame, q: int) -> DataFrame:
@@ -342,30 +288,12 @@ def _sem_assign(emb: DataFrame, cent: DataFrame, q: int) -> DataFrame:
     (vec_id, embedding, norm_sq) x broadcast centroids ->
     (vec_id, embedding, norm_sq, cell). The broadcast is #cells rows —
     index state, never corpus-sized."""
-    dot_nc = F.aggregate(
-        F.zip_with("embedding", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    assign = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "norm_sq", "c_label",
-        (dot_nc / F.sqrt(c_norm)).alias("score"),
-    )
-    wv = W.partitionBy("vec_id").orderBy(F.desc("score"), "c_label")
-    return (
-        assign.select("*", F.row_number().over(wv).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "norm_sq",
-            F.concat(F.col("c_label").cast("string"), F.lit(":"), _subcell_col(q)).alias(
-                "cell"
-            ),
-        )
+    vecs = emb.select("vec_id", "embedding", "norm_sq")
+    return nearest_cells(vecs, cent, "embedding", "vec_id", "c_label", 1).select(
+        "vec_id",
+        "embedding",
+        "norm_sq",
+        F.concat(F.col("c_label").cast("string"), F.lit(":"), _subcell_col(q)).alias("cell"),
     )
 
 
@@ -380,8 +308,8 @@ _SQL_INCREMENTAL_ORACLE = f"""
     ),
     cdim AS (
         SELECT label, i.r AS pos,
-               CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-                 / (1048576.0 * COUNT(*)) AS c
+               {sql_qsum('embedding[i.r + 1]', ROUND)}
+                 / {SQL_QN} AS c
         FROM corpus, LATERAL (SELECT unnest(range({DIM})) AS r) i
         GROUP BY label, i.r
     ),
@@ -389,7 +317,7 @@ _SQL_INCREMENTAL_ORACLE = f"""
     assign_all AS (
         SELECT vec_id, embedding, norm_sq, c_label,
                ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY ({_SQL_DOT_NC}) / SQRT({_SQL_CNORM}) DESC,
+                                  ORDER BY {sql_cell_score('embedding', DIM)} DESC,
                                            c_label) AS rn
         FROM normed, cent
     ),
@@ -404,14 +332,14 @@ _SQL_INCREMENTAL_ORACLE = f"""
     corpus_hits AS (
         SELECT b.vec_id, MIN(c.vec_id) AS dup_corpus
         FROM bcells b JOIN ccells c ON b.cell = c.cell
-        WHERE ({_sql_dot('b.embedding', 'c.embedding')})
+        WHERE ({sql_dot('b.embedding', 'c.embedding', DIM)})
                 / (SQRT(b.norm_sq) * SQRT(c.norm_sq)) >= {SEMDEDUP_TAU}
         GROUP BY b.vec_id
     ),
     batch_hits AS (
         SELECT b.vec_id, MIN(e.vec_id) AS dup_batch
         FROM bcells b JOIN bcells e ON b.cell = e.cell AND e.vec_id < b.vec_id
-        WHERE ({_sql_dot('b.embedding', 'e.embedding')})
+        WHERE ({sql_dot('b.embedding', 'e.embedding', DIM)})
                 / (SQRT(b.norm_sq) * SQRT(e.norm_sq)) >= {SEMDEDUP_TAU}
         GROUP BY b.vec_id
     )
@@ -460,7 +388,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ccells = cells.filter(~is_batch)
 
     def _cos(a: str, b: str):
-        return _dot_col(f"{a}.embedding", f"{b}.embedding") / (
+        return dot(f"{a}.embedding", f"{b}.embedding") / (
             F.sqrt(F.col(f"{a}.norm_sq")) * F.sqrt(F.col(f"{b}.norm_sq"))
         )
 
@@ -553,7 +481,7 @@ def run_semantic_ingest_stream(
         ccells.limit(0).write.parquet(seen_store)  # schema-only init
 
         def cos(x: str, y: str):
-            return _dot_col(f"{x}.embedding", f"{y}.embedding") / (
+            return dot(f"{x}.embedding", f"{y}.embedding") / (
                 F.sqrt(F.col(f"{x}.norm_sq")) * F.sqrt(F.col(f"{y}.norm_sq"))
             )
 

@@ -4,13 +4,10 @@ Brute-force cosine top-k (the correctness baseline) and an
 LSH-bucketed approximate variant (the 100 TB path: random-hyperplane
 signatures turn the O(n^2) cross join into an equi-join on bucket).
 
-Determinism: cosine terms are generated as explicit left-associated
-64-term expression chains, identically in the Spark plan and the
-DuckDB oracle. float32*float32 is exact in double (24+24 <= 53
-mantissa bits), and a fixed association order makes the sum IEEE-
-reproducible across engines — no decimal casts needed. Hyperplane
-signs come from Python hashlib md5 (hard-coded constants at plan
-build, not RNG state).
+Determinism: every dot product and centroid is a `vecmath.py`
+kernel (the exactness contract is stated there), identical in the
+Spark plan and the DuckDB oracle. Hyperplane signs come from Python
+hashlib md5 (hard-coded constants at plan build, not RNG state).
 """
 
 from __future__ import annotations
@@ -21,6 +18,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.vecmath import (
+    ROUND,
+    centroids,
+    dot,
+    nearest_cells,
+    qmean,
+    sql_cell_score,
+    sql_dot,
+    sql_qsum,
+    SQL_QN,
+)
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
@@ -29,34 +37,15 @@ _QUERY_IDS = (0, 1, 2)
 _TOP_K = 10
 
 
-def _dot_col(a: str, b: str) -> Column:
-    """Dot product as zip_with + left-fold aggregate.
-
-    Exactly the oracle's left-associated 64-term chain: float*float is
-    exact in double, aggregate folds sequentially from 0.0, and
-    0.0 + t1 == t1 — so the sum order matches the SQL chain term for
-    term. The higher-order form keeps the generated code small (an
-    unrolled 64-term expression takes seconds of janino compilation
-    per plan)."""
-    products = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sql_dot(a: str, b: str) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
-    )
-
-
 def with_norm(df: DataFrame) -> DataFrame:
     """Attach the L2 norm-squared (exact double chain) to each vector."""
-    return df.withColumn("norm_sq", _dot_col("embedding", "embedding"))
+    return df.withColumn("norm_sq", dot("embedding", "embedding"))
 
 
 _SQL_NORMED = f"""
     normed AS (
         SELECT vec_id, embedding, label,
-               {_sql_dot('embedding', 'embedding')} AS norm_sq
+               {sql_dot('embedding', 'embedding', DIM)} AS norm_sq
         FROM embeddings
     )
 """
@@ -68,7 +57,7 @@ _SQL_NORMED = f"""
     WITH {_SQL_NORMED},
     pairs AS (
         SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ({_sql_dot('q.embedding', 'c.embedding')})
+               ({sql_dot('q.embedding', 'c.embedding', DIM)})
                  / (SQRT(q.norm_sq) * SQRT(c.norm_sq)) AS cosine
         FROM normed q JOIN normed c ON c.vec_id <> q.vec_id
         WHERE q.vec_id IN {_QUERY_IDS}
@@ -103,7 +92,7 @@ def _bruteforce_from(emb: DataFrame) -> DataFrame:
         F.col("norm_sq").alias("q_norm_sq"),
     )
     pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    cosine = _dot_col("q_embedding", "embedding") / (F.sqrt("q_norm_sq") * F.sqrt("norm_sq"))
+    cosine = dot("q_embedding", "embedding") / (F.sqrt("q_norm_sq") * F.sqrt("norm_sq"))
     scored = pairs.select("query_id", "vec_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= _TOP_K)
@@ -128,21 +117,25 @@ def _plane_signs() -> list[list[int]]:
 _SIGNS = _plane_signs()
 
 
-def _proj_col(j: int) -> Column:
-    signs = F.array(*[F.lit(float(s)) for s in _SIGNS[j]])
-    products = F.zip_with("embedding", signs, lambda x, s: x.cast("double") * s)
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
+def _sign_row(signs: list[int]) -> Column:
+    """One hyperplane's signs as a literal double array."""
+    return F.array(*[F.lit(float(s)) for s in signs])
 
 
-def _sql_proj(j: int) -> str:
-    return " + ".join(
-        f"CAST(embedding[{i + 1}] AS DOUBLE) * ({float(_SIGNS[j][i])})" for i in range(DIM)
+def _sign_bit(signs: Column) -> Column:
+    """'1' if the embedding projects non-negatively onto the
+    hyperplane with this literal sign row, else '0'."""
+    return (dot("embedding", signs) >= 0).cast("int").cast("string")
+
+
+def _sql_sign_bit(signs: list[int]) -> str:
+    proj = " + ".join(
+        f"CAST(embedding[{i + 1}] AS DOUBLE) * ({float(signs[i])})" for i in range(DIM)
     )
+    return f"CAST(CAST({proj} >= 0 AS INT) AS VARCHAR)"
 
 
-_SQL_BUCKET = " || ".join(
-    f"CAST(CAST({_sql_proj(j)} >= 0 AS INT) AS VARCHAR)" for j in range(_N_PLANES)
-)
+_SQL_BUCKET = " || ".join(_sql_sign_bit(_SIGNS[j]) for j in range(_N_PLANES))
 
 
 # Retired from the product registry in round 4 (judge ask #3): the
@@ -159,7 +152,7 @@ BUCKETED_LSH_ORACLE_SQL = f"""
     ),
     pairs AS (
         SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-               ({_sql_dot('a.embedding', 'b.embedding')})
+               ({sql_dot('a.embedding', 'b.embedding', DIM)})
                  / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) AS cosine
         FROM bucketed a JOIN bucketed b
           ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
@@ -187,7 +180,7 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR-amplified, plan-asserted no-cartesian, scales with n via bucket
     granularity) and `sim_ann_ivf_probe` (cell-partitioned)."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    bucket = F.concat_ws("", *[(_proj_col(j) >= 0).cast("int").cast("string") for j in range(_N_PLANES)])
+    bucket = F.concat_ws("", *[_sign_bit(_sign_row(_SIGNS[j])) for j in range(_N_PLANES)])
     bucketed = emb.withColumn("bucket", bucket)
     a = bucketed.alias("a")
     b = bucketed.alias("b")
@@ -197,7 +190,7 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.vec_id").alias("vec_id"),
         F.col("b.vec_id").alias("neighbor_id"),
         (
-            _dot_col("a.embedding", "b.embedding")
+            dot("a.embedding", "b.embedding")
             / (F.sqrt(F.col("a.norm_sq")) * F.sqrt(F.col("b.norm_sq")))
         ).alias("cosine"),
     )
@@ -214,11 +207,11 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM normed
     )
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           ({_sql_dot('a.embedding', 'b.embedding')})
+           ({sql_dot('a.embedding', 'b.embedding', DIM)})
              / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) AS cosine
     FROM bucketed a JOIN bucketed b
       ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE ({_sql_dot('a.embedding', 'b.embedding')})
+    WHERE ({sql_dot('a.embedding', 'b.embedding', DIM)})
              / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) >= 0.35
     """,
     tags=("dedup", "similarity", "llm"),
@@ -234,14 +227,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_project_spark.caching import tracked_persist
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    bucket = F.concat_ws("", *[(_proj_col(j) >= 0).cast("int").cast("string") for j in range(_N_PLANES)])
+    bucket = F.concat_ws("", *[_sign_bit(_sign_row(_SIGNS[j])) for j in range(_N_PLANES)])
     # persisted for the same reason as the banded variant: the
     # self-join gets no ReusedExchange under AQE, so both sides would
     # recompute the projections and norms
     bucketed = tracked_persist(emb.withColumn("bucket", bucket))
     a = bucketed.alias("a")
     b = bucketed.alias("b")
-    cosine = _dot_col("a.embedding", "b.embedding") / (
+    cosine = dot("a.embedding", "b.embedding") / (
         F.sqrt(F.col("a.norm_sq")) * F.sqrt(F.col("b.norm_sq"))
     )
     return (
@@ -336,22 +329,12 @@ def _all_band_buckets_col(planes: int) -> Column:
     left-fold as before, so results are bit-identical to the oracle's
     substr() over its max-width explicit chains."""
     signs2d = F.array(
-        *[
-            F.array(*[F.lit(float(s)) for s in row])
-            for b in range(_N_BANDS)
-            for row in _band_signs(b)[:planes]
-        ]
+        *[_sign_row(row) for b in range(_N_BANDS) for row in _band_signs(b)[:planes]]
     )
-
-    def _bit(row: Column) -> Column:
-        products = F.zip_with("embedding", row, lambda x, s: x.cast("double") * s)
-        proj = F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-        return (proj >= 0).cast("int").cast("string")
-
     return F.transform(
         F.sequence(F.lit(0), F.lit(_N_BANDS - 1)),
         lambda b: F.array_join(
-            F.transform(F.slice(signs2d, b * planes + 1, planes), _bit), ""
+            F.transform(F.slice(signs2d, b * planes + 1, planes), _sign_bit), ""
         ),
     )
 
@@ -359,13 +342,7 @@ def _all_band_buckets_col(planes: int) -> Column:
 def _sql_band_bucket(band: int) -> str:
     """Max-width ({_MAX_PLANES_PER_BAND}-plane) bucket string for one
     band; the bands CTE substr()s it down to the derived P."""
-    parts = []
-    for row in _band_signs(band):
-        proj = " + ".join(
-            f"CAST(embedding[{i + 1}] AS DOUBLE) * ({float(row[i])})" for i in range(DIM)
-        )
-        parts.append(f"CAST(CAST({proj} >= 0 AS INT) AS VARCHAR)")
-    return " || ".join(parts)
+    return " || ".join(_sql_sign_bit(row) for row in _band_signs(band))
 
 
 _SQL_BANDS = "\nUNION ALL\n".join(
@@ -385,7 +362,7 @@ _SQL_BANDS = "\nUNION ALL\n".join(
     ),
     cand AS (
         SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-               MAX(({_sql_dot('a.embedding', 'b.embedding')})
+               MAX(({sql_dot('a.embedding', 'b.embedding', DIM)})
                      / (SQRT(a.norm_sq) * SQRT(b.norm_sq))) AS cosine
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
@@ -461,16 +438,12 @@ def sim_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("b_emb"),
         F.col("norm_sq").alias("b_norm"),
     )
-    cosine = _dot_col("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
+    cosine = dot("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
     scored = cand.join(qa, "vec_id").join(qb, "neighbor_id").select(
         "vec_id", "neighbor_id", cosine.alias("cosine")
     )
     w = W.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
     return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
-
-
-_SQL_DOT_QC = " + ".join(f"CAST(q_emb[{i}] AS DOUBLE) * c_arr[{i}]" for i in range(1, DIM + 1))
-_SQL_CNORM = " + ".join(f"c_arr[{i}] * c_arr[{i}]" for i in range(1, DIM + 1))
 
 
 @query(
@@ -479,8 +452,8 @@ _SQL_CNORM = " + ".join(f"c_arr[{i}] * c_arr[{i}]" for i in range(1, DIM + 1))
     WITH {_SQL_NORMED},
     cdim AS (
         SELECT label, i.r AS pos,
-               CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-                 / (1048576.0 * COUNT(*)) AS c
+               {sql_qsum('embedding[i.r + 1]', ROUND)}
+                 / {SQL_QN} AS c
         FROM embeddings, LATERAL (SELECT unnest(range({DIM})) AS r) i
         GROUP BY label, i.r
     ),
@@ -490,13 +463,13 @@ _SQL_CNORM = " + ".join(f"c_arr[{i}] * c_arr[{i}]" for i in range(1, DIM + 1))
     assign AS (
         SELECT query_id, q_emb, q_norm, label,
                ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY ({_SQL_DOT_QC}) / SQRT({_SQL_CNORM}) DESC, label) AS rn
+                                  ORDER BY {sql_cell_score('q_emb', DIM)} DESC, label) AS rn
         FROM q, cent
     ),
     probe AS (SELECT query_id, q_emb, q_norm, label FROM assign WHERE rn = 1),
     cand AS (
         SELECT p.query_id, n.vec_id,
-               ({_sql_dot('p.q_emb', 'n.embedding')})
+               ({sql_dot('p.q_emb', 'n.embedding', DIM)})
                  / (SQRT(p.q_norm) * SQRT(n.norm_sq)) AS cosine
         FROM probe p JOIN normed n ON n.label = p.label AND n.vec_id <> p.query_id
     )
@@ -523,43 +496,26 @@ def sim_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe touches one partition instead of the whole corpus. Recall
     tunes with nprobe (here 1) and #cells; centroid refresh is a
     periodic batch job, not per-query work."""
+    return _ivf_probe(spark, sf_dir, nprobe=1)
+
+
+def _ivf_probe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """Label-cell IVF search: each query's `nprobe` nearest quantized
+    label centroids, exact top-5 within those cells."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    exploded = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-    qv = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("label", "pos").agg(
-        (F.sum(qv).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    cent = cdim.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    )
+    cent = centroids(emb, ["label"], "embedding", ROUND)
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm_sq").alias("q_norm"),
     )
-    dot_qc = F.aggregate(
-        F.zip_with("q_emb", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    assign = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "q_emb", "q_norm", "label", (dot_qc / F.sqrt(c_norm)).alias("score")
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("score"), "label")
-    probe = (
-        assign.select("*", F.row_number().over(wq).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "q_emb", "q_norm", F.col("label").alias("cell"))
+    probe = nearest_cells(q, cent, "q_emb", "query_id", "label", nprobe).select(
+        "query_id", "q_emb", "q_norm", F.col("label").alias("cell")
     )
     cand = probe.join(
         emb, (F.col("label") == F.col("cell")) & (F.col("vec_id") != F.col("query_id"))
     )
-    cosine = _dot_col("q_emb", "embedding") / (F.sqrt("q_norm") * F.sqrt("norm_sq"))
+    cosine = dot("q_emb", "embedding") / (F.sqrt("q_norm") * F.sqrt("norm_sq"))
     scored = cand.select("query_id", "vec_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
@@ -569,8 +525,8 @@ def sim_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_centroid_per_label",
     oracle=f"""
     SELECT label, i.r AS pos,
-           CAST(SUM(CAST(ROUND(CAST(embedding[i.r + 1] AS DOUBLE) * 1048576, 0) AS BIGINT)) AS DOUBLE)
-             / (1048576.0 * COUNT(*)) AS centroid,
+           {sql_qsum('embedding[i.r + 1]', ROUND)}
+             / {SQL_QN} AS centroid,
            COUNT(*) AS n_vectors
     FROM embeddings, LATERAL (SELECT unnest(range({DIM})) AS r) i
     GROUP BY label, i.r
@@ -583,18 +539,14 @@ def sim_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, vectors are assigned to the nearest centroid and ANN
     search probes only matching cells.
 
-    Exactness: elements are quantized to 2^-20 via ROUND(x * 2^20)
-    (power-of-two multiply is exact, so both engines round the same
-    double — even on exact .5 ties both round away from zero), summed
-    as exact int64, divided once in double. Decimal-cast sums of raw
-    floats are NOT portable: a float whose binary expansion
-    terminates at the rounding digit creates a true decimal tie,
-    which surfaced as real mismatches at sf0.1."""
+    Exactness: the ROUND quantized mean of `vecmath.py`.
+    Decimal-cast sums of raw floats are NOT portable: a float whose
+    binary expansion terminates at the rounding digit creates a true
+    decimal tie, which surfaced as real mismatches at sf0.1."""
     emb = load(spark, sf_dir, "embeddings")
     exploded = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-    q = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
     return exploded.groupBy("label", "pos").agg(
-        (F.sum(q).cast("double") / (1048576.0 * F.count("*"))).alias("centroid"),
+        qmean(F.col("val"), ROUND).alias("centroid"),
         F.count("*").alias("n_vectors"),
     )
 
@@ -673,46 +625,7 @@ def sim_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     each corpus vector still belongs to exactly one cell, so the
     probe join fans out to at most nprobe rows per query with no
     duplicate candidates."""
-    emb = with_norm(load(spark, sf_dir, "embeddings"))
-    exploded = emb.select("label", F.posexplode("embedding").alias("pos", "val"))
-    qv = F.round(F.col("val").cast("double") * 1048576, 0).cast("long")
-    cdim = exploded.groupBy("label", "pos").agg(
-        (F.sum(qv).cast("double") / (1048576.0 * F.count("*"))).alias("c")
-    )
-    cent = cdim.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("c_arr")
-    )
-    q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm_sq").alias("q_norm"),
-    )
-    dot_qc = F.aggregate(
-        F.zip_with("q_emb", "c_arr", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    c_norm = F.aggregate(
-        F.transform("c_arr", lambda y: y * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    assign = q.crossJoin(F.broadcast(cent)).select(
-        "query_id", "q_emb", "q_norm", "label", (dot_qc / F.sqrt(c_norm)).alias("score")
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("score"), "label")
-    probe = (
-        assign.select("*", F.row_number().over(wq).alias("rn"))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", "q_emb", "q_norm", F.col("label").alias("cell"))
-    )
-    cand = probe.join(
-        emb, (F.col("label") == F.col("cell")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    cosine = _dot_col("q_emb", "embedding") / (F.sqrt("q_norm") * F.sqrt("norm_sq"))
-    scored = cand.select("query_id", "vec_id", cosine.alias("cosine"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
+    return _ivf_probe(spark, sf_dir, nprobe=2)
 
 
 @query(
@@ -759,12 +672,6 @@ _REG["sim_recall_ivf2_at_k"].oracle = _REG["sim_recall_ivf2_at_k"].oracle.format
 _TRUNC_DIM = 16
 
 
-def _sql_dot_prefix(a: str, b: str, d: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, d + 1)
-    )
-
-
 @query(
     "sim_truncated_dim_recall",
     oracle=f"""
@@ -775,13 +682,13 @@ def _sql_dot_prefix(a: str, b: str, d: int) -> str:
     LEFT JOIN (
         WITH pnormed AS (
             SELECT vec_id, embedding,
-                   {_sql_dot_prefix('embedding', 'embedding', _TRUNC_DIM)} AS p_norm_sq
+                   {sql_dot('embedding', 'embedding', _TRUNC_DIM)} AS p_norm_sq
             FROM embeddings
         ),
         ppairs AS (
             SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
                    CASE WHEN q.p_norm_sq > 0 AND c.p_norm_sq > 0 THEN
-                        ({_sql_dot_prefix('q.embedding', 'c.embedding', _TRUNC_DIM)})
+                        ({sql_dot('q.embedding', 'c.embedding', _TRUNC_DIM)})
                           / (SQRT(q.p_norm_sq) * SQRT(c.p_norm_sq))
                         ELSE 0.0 END AS cosine
             FROM pnormed q JOIN pnormed c ON c.vec_id <> q.vec_id
@@ -821,7 +728,7 @@ def sim_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "p_emb", F.slice("embedding", 1, _TRUNC_DIM)
     )
-    emb = emb.withColumn("p_norm_sq", _dot_col("p_emb", "p_emb"))
+    emb = emb.withColumn("p_norm_sq", dot("p_emb", "p_emb"))
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("p_emb").alias("q_p_emb"),
@@ -834,7 +741,7 @@ def sim_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same CASE form as the MaxSim sub-vector guard below
     cosine = F.when(
         (F.col("q_p_norm_sq") > 0) & (F.col("p_norm_sq") > 0),
-        _dot_col("q_p_emb", "p_emb") / (F.sqrt("q_p_norm_sq") * F.sqrt("p_norm_sq")),
+        dot("q_p_emb", "p_emb") / (F.sqrt("q_p_norm_sq") * F.sqrt("p_norm_sq")),
     ).otherwise(F.lit(0.0))
     scored = pairs.select("query_id", "vec_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
@@ -871,20 +778,13 @@ _MS_SUB = 4
 _MS_SUBDIM = 16
 
 
-def _sub_dot_col(a: str, b: str, i: int, j: int) -> Column:
-    """Dot of a's i-th sub-vector with b's j-th sub-vector — the same
-    left-folded chain discipline as _dot_col, over a 16-dim slice."""
-    sa = F.slice(F.col(a), i * _MS_SUBDIM + 1, _MS_SUBDIM)
-    sb = F.slice(F.col(b), j * _MS_SUBDIM + 1, _MS_SUBDIM)
-    products = F.zip_with(sa, sb, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
+def _sub(vec: str, i: int) -> Column:
+    """The i-th sub-vector of `vec`."""
+    return F.slice(vec, i * _MS_SUBDIM + 1, _MS_SUBDIM)
 
 
 def _sql_sub_dot(a: str, b: str, i: int, j: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i * _MS_SUBDIM + k}] AS DOUBLE) * CAST({b}[{j * _MS_SUBDIM + k}] AS DOUBLE)"
-        for k in range(1, _MS_SUBDIM + 1)
-    )
+    return sql_dot(a, b, _MS_SUBDIM, i * _MS_SUBDIM, j * _MS_SUBDIM)
 
 
 _SQL_SUBNORMS = ",\n".join(
@@ -958,7 +858,7 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sim_ann_lsh_banded`) exactly as for single-vector search."""
     emb = load(spark, sf_dir, "embeddings")
     for i in range(_MS_SUB):
-        emb = emb.withColumn(f"sn{i}", _sub_dot_col("embedding", "embedding", i, i))
+        emb = emb.withColumn(f"sn{i}", dot(_sub("embedding", i), _sub("embedding", i)))
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_embedding"),
@@ -970,7 +870,7 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[
                 F.when(
                     (F.col(f"q_sn{i}") > 0) & (F.col(f"sn{j}") > 0),
-                    _sub_dot_col("q_embedding", "embedding", i, j)
+                    dot(_sub("q_embedding", i), _sub("embedding", j))
                     / (F.sqrt(F.col(f"q_sn{i}")) * F.sqrt(F.col(f"sn{j}"))),
                 ).otherwise(F.lit(0.0))
                 for j in range(_MS_SUB)
@@ -1024,7 +924,7 @@ _SQL_PROBES = """
     ),
     scored AS (
         SELECT c.vec_id, c.neighbor_id,
-               ({_sql_dot('qa.embedding', 'qb.embedding')})
+               ({sql_dot('qa.embedding', 'qb.embedding', DIM)})
                  / (SQRT(qa.norm_sq) * SQRT(qb.norm_sq)) AS cosine
         FROM cand c
         JOIN normed qa ON qa.vec_id = c.vec_id
@@ -1104,7 +1004,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("b_emb"),
         F.col("norm_sq").alias("b_norm"),
     )
-    cosine = _dot_col("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
+    cosine = dot("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
     scored = cand.join(qa, "vec_id").join(qb, "neighbor_id").select(
         "vec_id", "neighbor_id", cosine.alias("cosine")
     )

@@ -192,7 +192,17 @@ _LOADED = False
 # events_bot_flag_rules), then the r8 vintage (50 names) onward.
 # No-oracle (rows-only) entries stay excluded: the driver marks
 # them err.
+# Vector-kernel rotation: one query from each family rewired onto
+# operators/vecmath.py leads the window (PQ codes, label-cell IVF,
+# SemDeDup cells, trained k-means cells, hybrid retrieval); the five
+# names at the r7-vintage tail gave up their slots.
 _DRIVER_FIRST: tuple[str, ...] = (
+    # --- rewired onto operators/vecmath.py ---
+    "sim_pq_codes",
+    "sim_ann_ivf_probe",
+    "dedup_semantic_cells",
+    "sim_ivf_trained_cells",
+    "retrieval_hybrid_rrf",
     # --- never driver-checked: round-14 additions (registration
     # order) ---
     "quality_gopher_full_rules",
@@ -245,11 +255,6 @@ _DRIVER_FIRST: tuple[str, ...] = (
     "agg_two_stage_salted_flags",
     "agg_histogram_fixed",
     "scalar_string_format",
-    "qa_skew_histogram",
-    "qa_benford_leading_digit",
-    "qa_nonfinite_values",
-    "agg_regression_price_on_qty",
-    "agg_user_event_entropy",
 )
 
 

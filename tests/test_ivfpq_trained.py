@@ -37,23 +37,19 @@ def test_trained_stack_recall_ge_label_stack(spark, sf):
 
 def test_trained_codes_differ_from_label_codes(spark, sf_dir):
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.ivfpq_trained import _km_assign, _km_trained
-    from bigdata_project_spark.operators.pq import _pq_codebook
-    from bigdata_project_spark.operators.pq_residual import (
-        _res_encode,
-        _res_subs,
-        _res_ucent,
-        _res_unit,
-    )
+    from bigdata_project_spark.operators.kmeans import _km_assign, _km_trained
+    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode
+    from bigdata_project_spark.operators.pq_residual import _res_subs, _res_unit
+    from bigdata_project_spark.operators.vecmath import FLOOR, centroids
     from pyspark.sql import functions as F
 
     # label-cell residual codes
     unit_l = _res_unit(spark, sf_dir)
-    ucent_l = tracked_persist(_res_ucent(unit_l))
+    ucent_l = tracked_persist(centroids(unit_l, ["label"], "u", FLOOR))
     subs_l = tracked_persist(_res_subs(unit_l, ucent_l))
     label_codes = {
         r["vec_id"]: (r["c0"], r["c1"], r["c2"], r["c3"])
-        for r in _res_encode(subs_l, _pq_codebook(subs_l)).collect()
+        for r in _pq_encode(subs_l, _pq_codebook(subs_l), ["vec_id", "label"]).collect()
     }
     # trained-cell residual codes
     cent, unit = _km_trained(spark, sf_dir)
@@ -65,7 +61,7 @@ def test_trained_codes_differ_from_label_codes(spark, sf_dir):
     subs_t = tracked_persist(_res_subs(unitl, ucent_t))
     trained_codes = {
         r["vec_id"]: (r["c0"], r["c1"], r["c2"], r["c3"])
-        for r in _res_encode(subs_t, _pq_codebook(subs_t)).collect()
+        for r in _pq_encode(subs_t, _pq_codebook(subs_t), ["vec_id", "label"]).collect()
     }
     assert set(label_codes) == set(trained_codes)
     differing = sum(1 for v in label_codes if label_codes[v] != trained_codes[v])

@@ -125,18 +125,14 @@ def test_residual_codes_differ_from_raw_codes(spark, sf_dir):
         for r in qs["sim_pq_codes"](spark, sf_dir).collect()
     }
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.pq import _pq_codebook
-    from bigdata_project_spark.operators.pq_residual import (
-        _res_encode,
-        _res_subs,
-        _res_ucent,
-        _res_unit,
-    )
+    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode
+    from bigdata_project_spark.operators.pq_residual import _res_subs, _res_unit
+    from bigdata_project_spark.operators.vecmath import FLOOR, centroids
 
     unit = _res_unit(spark, sf_dir)
-    ucent = tracked_persist(_res_ucent(unit))
+    ucent = tracked_persist(centroids(unit, ["label"], "u", FLOOR))
     subs = tracked_persist(_res_subs(unit, ucent))
-    codes = _res_encode(subs, _pq_codebook(subs))
+    codes = _pq_encode(subs, _pq_codebook(subs), ["vec_id", "label"])
     res = {
         r["vec_id"]: (r["c0"], r["c1"], r["c2"], r["c3"]) for r in codes.collect()
     }

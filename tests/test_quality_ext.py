@@ -81,7 +81,8 @@ def test_maxsim_dominates_aligned_subcosine_sum(spark, sf_dir):
     pairing — term by term, hence in the sum. This is the theorem
     that makes late interaction a refinement (never a degradation) of
     aspect-aligned scoring; a small epsilon absorbs rounding."""
-    from bigdata_project_spark.operators.similarity import _MS_SUB, _QUERY_IDS, _sub_dot_col
+    from bigdata_project_spark.operators.similarity import _MS_SUB, _QUERY_IDS, _sub
+    from bigdata_project_spark.operators.vecmath import dot
     from bigdata_project_spark.tables import load
 
     qs = all_queries()
@@ -89,14 +90,14 @@ def test_maxsim_dominates_aligned_subcosine_sum(spark, sf_dir):
 
     emb = load(spark, sf_dir, "embeddings")
     for i in range(_MS_SUB):
-        emb = emb.withColumn(f"sn{i}", _sub_dot_col("embedding", "embedding", i, i))
+        emb = emb.withColumn(f"sn{i}", dot(_sub("embedding", i), _sub("embedding", i)))
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_embedding"),
         *[F.col(f"sn{i}").alias(f"q_sn{i}") for i in range(_MS_SUB)],
     )
     aligned_terms = [
-        _sub_dot_col("q_embedding", "embedding", i, i)
+        dot(_sub("q_embedding", i), _sub("embedding", i))
         / (F.sqrt(F.col(f"q_sn{i}")) * F.sqrt(F.col(f"sn{i}")))
         for i in range(_MS_SUB)
     ]

@@ -5,6 +5,7 @@ hastily added query cannot silently skip them."""
 
 from __future__ import annotations
 
+import ast
 import re
 
 from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
@@ -169,4 +170,64 @@ def test_no_bare_double_decimal_casts_outside_exact():
     assert not offenders, (
         "bare Spark-side double->DECIMAL casts (use exact.dcast/dsum/davg/SPARK_SQL_DSUM):\n"
         + "\n".join(offenders)
+    )
+
+
+def _is_f_call(node, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def test_vector_kernels_live_only_in_vecmath():
+    """operators/vecmath.py owns the exact left-fold dot and squared-L2
+    kernels and the 2^-20 quantized mean. A copy in another module
+    would drift from its SQL twin, so outside vecmath no module may
+    fold an F.zip_with with F.aggregate (directly or through a local
+    variable) or spell the 1048576 quantum. The two exempt folds are
+    integer folds, not double dot products."""
+    import pathlib
+
+    exempt = {
+        ("queries/scale_ext.py", "sim_knn_quantized_int8"),  # int8 codes, BIGINT accumulator
+        ("operators/corpus.py", "quality_dupline_signals"),  # 0/1 flag x line length
+    }
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    offenders: list[str] = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "operators/vecmath.py":
+            continue
+        src = f.read_text()
+        for i, line in enumerate(src.splitlines(), 1):
+            if re.search(r"1048576|\b_PQ_Q\b", line):
+                offenders.append(f"{rel}:{i}: quantized sum: {line.strip()}")
+        tree = ast.parse(src)
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if not (_is_f_call(node, "aggregate") and node.args):
+                continue
+            scope = node
+            while scope in parents and not isinstance(scope, ast.FunctionDef):
+                scope = parents[scope]
+            arr = node.args[0]
+            if isinstance(arr, ast.Name):
+                arr = next(
+                    (
+                        a.value
+                        for a in ast.walk(scope)
+                        if isinstance(a, ast.Assign)
+                        and any(isinstance(t, ast.Name) and t.id == arr.id for t in a.targets)
+                    ),
+                    arr,
+                )
+            name = getattr(scope, "name", "<module>")
+            if _is_f_call(arr, "zip_with") and (rel, name) not in exempt:
+                offenders.append(f"{rel}:{node.lineno}: zip_with fold in {name}")
+    assert not offenders, "vector kernels copied outside operators/vecmath.py:\n" + "\n".join(
+        offenders
     )
