@@ -464,7 +464,7 @@ def run_semantic_ingest_stream(
     import os
     import tempfile
 
-    from bigdata_project_spark.operators.staging import run_chunk_stream
+    from bigdata_project_spark.operators.staging import AppendStore, run_chunk_stream
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
@@ -476,9 +476,9 @@ def run_semantic_ingest_stream(
     batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
 
     with tempfile.TemporaryDirectory(prefix="sem_ingest_") as work:
-        seen_store = os.path.join(work, "seen")
-        out_store = os.path.join(work, "out")
-        ccells.limit(0).write.parquet(seen_store)  # schema-only init
+        seen_store = AppendStore(os.path.join(work, "seen"))
+        out_store = AppendStore(os.path.join(work, "out"))
+        seen_store.append(ccells.limit(0))  # schema-only init
 
         def cos(x: str, y: str):
             return dot(f"{x}.embedding", f"{y}.embedding") / (
@@ -508,7 +508,7 @@ def run_semantic_ingest_stream(
             # guide §2.4): corpus index and seen-store-plus-batch
             # union with an is_corpus flag, min split in the aggregate
             b = bcells.alias("b")
-            prior = spark.read.parquet(seen_store).unionByName(bcells)
+            prior = seen_store.read(spark).unionByName(bcells)
             o = (
                 ccells.withColumn("is_corpus", F.lit(True))
                 .unionByName(prior.withColumn("is_corpus", F.lit(False)))
@@ -546,16 +546,16 @@ def run_semantic_ingest_stream(
                     .alias("is_new_unique"),
                 )
             )
-            out.write.mode("append").parquet(out_store)
+            out_store.append(out)
             # the seen-store upsert: this micro-batch's members become
             # visible to every later one (bounded by increment size)
-            bcells.write.mode("append").parquet(seen_store)
+            seen_store.append(bcells)
             bcells.unpersist()
 
         n_batches = run_chunk_stream(
             batch_members, "vec_id", n_chunks, probe, work, ordered=True
         )
-        res = barrier(spark.read.parquet(out_store), eager=True)
+        res = barrier(out_store.read(spark), eager=True)
     ccells.unpersist()
     cent.unpersist()
     return res, n_batches

@@ -80,13 +80,18 @@ def _cms_tf(df: DataFrame) -> DataFrame:
     )
 
 
+def _cms_entries(tf: DataFrame) -> DataFrame:
+    """(exact_count, r, col): one weighted counter increment per
+    (token, hash row)."""
+    return tf.select(
+        "exact_count", F.posexplode(F.expr(_CMS_POS_ARRAY)).alias("r", "col")
+    )
+
+
 def _cms_sketch(tf: DataFrame) -> DataFrame:
     """(r, col, c): the counter table from a term-frequency relation
     — weighted build, identical to streaming the occurrences."""
-    entries = tf.select(
-        "exact_count", F.posexplode(F.expr(_CMS_POS_ARRAY)).alias("r", "col")
-    )
-    return entries.groupBy("r", "col").agg(
+    return _cms_entries(tf).groupBy("r", "col").agg(
         F.sum("exact_count").cast("long").alias("c")
     )
 
@@ -187,17 +192,18 @@ def run_cms_stream(
     the streaming query shares its oracle.
 
     Mechanics (`staging.run_counter_stream`): `n_chunks` doc_id-ranged
-    micro-batches; each merges the batch's (r, col) counter deltas
-    into a consolidated, batch-id-keyed store version, and the final
-    audit probes only the last version — a real state-carry check, not
-    a union replay. The store stays <= d x w rows at every version.
+    micro-batches; each sums the batch's unsummed (r, col, c)
+    increments together with the previous store version in ONE
+    (r, col) aggregate (integer sums over a union are order-free, so
+    this equals sketch-then-merge) into a batch-id-keyed store
+    version, and the final audit probes only the last version — a real
+    state-carry check, not a union replay. The store stays <= d x w rows at every version.
     Unlike the frontier (first-writer-wins needs order), NO
     delivery-order assertion exists here — counter addition commutes,
     and that is exactly the property being demonstrated.
 
-    Scale: per micro-batch work is one token count + a <= 4096-group
-    delta aggregate + a <= 4096-row merge; the store never grows
-    with the corpus."""
+    Scale: per micro-batch work is one token count + one <= 4096-group
+    merge aggregate; the store never grows with the corpus."""
     import tempfile
 
     from bigdata_project_spark.operators.staging import run_counter_stream
@@ -209,7 +215,12 @@ def run_cms_stream(
     )
     with tempfile.TemporaryDirectory(prefix="cms_stream_") as work:
         sketch, n_batches = run_counter_stream(
-            docs, "doc_id", n_chunks, work, init, lambda b: _cms_sketch(_cms_tf(b))
+            docs,
+            "doc_id",
+            n_chunks,
+            work,
+            init,
+            lambda b: _cms_entries(_cms_tf(b)).withColumnRenamed("exact_count", "c"),
         )
     tf = _cms_tf(load_spread(spark, sf_dir, "documents"))
     return _cms_audit(tf, sketch), n_batches

@@ -37,10 +37,27 @@ import os
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bigdata_project_spark.caching import barrier
+
+
+class AppendStore:
+    """A parquet store that grows by appends and is read back with the
+    schema of the last frame appended (no schema-inference job)."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self.schema: StructType | None = None
+
+    def append(self, df: DataFrame) -> None:
+        self.schema = df.schema
+        df.write.mode("append").parquet(self.path)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(self.schema).parquet(self.path)
 
 
 def stage_chunks_one_pass(
@@ -116,7 +133,14 @@ def run_counter_stream(
     """An order-free `run_chunk_stream` that sums each micro-batch's
     counter `delta(batch)` into a consolidated store. `init` is the
     empty store; its last column is the count, the others the counter
-    key. Returns (final store behind a barrier, micro-batch count).
+    key. `delta` may return unsummed increments: the merge's one
+    groupBy sums them together with the store. Returns (final store
+    behind a barrier, micro-batch count).
+
+    There is no initial version on disk: batch 0 merges into `init`
+    itself, and on empty input (no micro-batch) the result is `init`
+    behind the barrier. Every store read is pinned to `init.schema`,
+    so no read pays a parquet schema-inference job.
 
     Store versions are KEYED BY BATCH ID and a completed version is
     never re-merged (its `_SUCCESS` marker gates a skip), so an
@@ -129,11 +153,16 @@ def run_counter_stream(
     to the versions."""
     spark = df.sparkSession
     *group, count = init.columns
-    # [path, last merged batch id]: versions are cumulative, so a
-    # redelivery of an OLDER completed batch must not roll the pointer
-    # back to a version missing later merges
-    latest: list = [os.path.join(work, "v_init"), -1]
-    init.write.parquet(latest[0])
+    # [path, last merged batch id], no path before the first merge:
+    # versions are cumulative, so a redelivery of an OLDER completed
+    # batch must not roll the pointer back to a version missing later
+    # merges
+    latest: list = [None, -1]
+
+    def store() -> DataFrame:
+        if latest[0] is None:
+            return init
+        return spark.read.schema(init.schema).parquet(latest[0])
 
     def merge_batch(bdf: DataFrame, bid: int) -> None:
         nxt = os.path.join(work, f"v_b{bid}")
@@ -142,7 +171,7 @@ def run_counter_stream(
                 latest[0], latest[1] = nxt, bid
             return
         merged = (
-            spark.read.parquet(latest[0])
+            store()
             .unionByName(delta(bdf))
             .groupBy(*group)
             .agg(F.sum(count).cast("long").alias(count))
@@ -153,4 +182,4 @@ def run_counter_stream(
         latest[0], latest[1] = nxt, bid
 
     n_batches = run_chunk_stream(df, key, n_chunks, merge_batch, work, ordered=False)
-    return barrier(spark.read.parquet(latest[0]), eager=True), n_batches
+    return barrier(store(), eager=True), n_batches

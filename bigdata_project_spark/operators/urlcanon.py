@@ -337,19 +337,21 @@ def run_frontier_stream(
     import os
     import tempfile
 
-    from bigdata_project_spark.operators.staging import run_chunk_stream
+    from bigdata_project_spark.operators.staging import AppendStore, run_chunk_stream
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     raw = docs.select("doc_id", _raw_url_col().alias("url"))
 
     with tempfile.TemporaryDirectory(prefix="frontier_stream_") as work:
-        seen_store = os.path.join(work, "seen")
-        out_store = os.path.join(work, "out")
+        seen_store = AppendStore(os.path.join(work, "seen"))
+        out_store = AppendStore(os.path.join(work, "out"))
         # schema-only seen-store init: (key, keeper_doc)
-        raw.limit(0).select(
-            F.md5(canonicalize_url(F.col("url"))).alias("key"),
-            F.col("doc_id").alias("keeper_doc"),
-        ).write.parquet(seen_store)
+        seen_store.append(
+            raw.limit(0).select(
+                F.md5(canonicalize_url(F.col("url"))).alias("key"),
+                F.col("doc_id").alias("keeper_doc"),
+            )
+        )
 
         max_seen_doc = [-1]  # foreachBatch runs driver-side
 
@@ -365,7 +367,7 @@ def run_frontier_stream(
                         f"doc_id {b_lo} <= max already seen {max_seen_doc[0]}"
                     )
                 max_seen_doc[0] = int(b_hi)
-            seen = spark.read.parquet(seen_store)
+            seen = seen_store.read(spark)
             batch_min = canon.groupBy("key").agg(
                 F.min("doc_id").alias("batch_keeper")
             )
@@ -387,18 +389,18 @@ def run_frontier_stream(
                 "keeper_doc",
                 (F.col("doc_id") != F.col("keeper_doc")).cast("int").alias("is_dup"),
             )
-            out.write.mode("append").parquet(out_store)
+            out_store.append(out)
             # first-writer-wins upsert: append only the keys this batch
             # introduced (anti-join the store)
             new_keys = batch_min.join(seen, "key", "left_anti").select(
                 "key", F.col("batch_keeper").alias("keeper_doc")
             )
-            new_keys.write.mode("append").parquet(seen_store)
+            seen_store.append(new_keys)
             canon.unpersist()
 
         n_batches = run_chunk_stream(raw, "doc_id", n_chunks, probe, work, ordered=True)
         res = barrier(
-            spark.read.parquet(out_store).select(
+            out_store.read(spark).select(
                 "doc_id", "url", "canonical", "keeper_doc", "is_dup"
             ),
             eager=True,

@@ -38,8 +38,9 @@ from pyspark.sql import functions as F
 
 from bigdata_project_spark.caching import barrier
 from bigdata_project_spark.exact import SQL_DSUM, dcast, dsum
+from bigdata_project_spark.operators.staging import AppendStore
 from bigdata_project_spark.registry import query
-from bigdata_project_spark.tables import load
+from bigdata_project_spark.tables import load, parquet_schema
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -68,7 +69,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this streaming query is the first thing it runs
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(raw_schema).parquet(_stream_dir(sf_dir))
     ts_type = dict(stream.dtypes)["ts"]
     if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long
@@ -107,7 +108,7 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str) -> Data
     """Run a streaming DataFrame to completion into a memory sink and
     return the materialized result as a batch DataFrame."""
     spark = stream_df.sparkSession
-    spark.catalog.dropTempView(name) if name in [t.name for t in spark.catalog.listTables()] else None
+    spark.catalog.dropTempView(name)  # False when there is none; no catalog scan
     # the memory-sink table does not read the checkpoint once the
     # query has terminated
     with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_", ignore_cleanup_errors=True) as ckpt:
@@ -442,10 +443,10 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # idempotent upsert stand-in: append with the batch id; readers
         # resolve each (hour, type) key to its LAST writer. A Delta /
         # JDBC sink would MERGE here with identical semantics.
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(store)
+        store.append(batch_df.withColumn("batch_id", F.lit(batch_id)))
 
     with tempfile.TemporaryDirectory(prefix="rollup_", ignore_cleanup_errors=True) as work:
-        store = os.path.join(work, "store")
+        store = AppendStore(os.path.join(work, "store"))
         q = (
             hourly.writeStream.foreachBatch(upsert)
             .outputMode("update")
@@ -455,7 +456,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-        raw = spark.read.parquet(store)
+        raw = store.read(spark)
         latest = raw.groupBy("hour_start_us", "event_type").agg(
             F.max_by("n_events", "batch_id").alias("n_events"),
             F.max_by("sv", "batch_id").alias("sv"),

@@ -1,13 +1,30 @@
 """Testbed table loading (driver contract: /root/testdata/sf*/<name>.parquet).
 
 `load` is the single scan entry point for the relational queries, so
-partitioning/caching policy lives in one place. All reads are plain
+partitioning/caching policy lives in one place. Reads are
 `spark.read.parquet` — Catalyst's vectorized parquet reader gives us
 column pruning + predicate pushdown for free; at 100 TB the same call
 reads a partitioned lake directory and prunes partitions.
+
+Schema cache. Without a schema, `spark.read.parquet` infers one by
+reading the file footer in a Spark job (one job and ~0.1 s on a warm
+session). `parquet_schema` keeps the inferred `StructType` for the
+life of the process, one entry per absolute path, valid while the
+file's size and `st_mtime_ns` and the session confs that change what
+inference returns (`_SCHEMA_CONFS`: nanos-as-long, timestamp-NTZ
+inference, binary-as-string, INT96-as-timestamp) stay the same. The
+key is safe because the footer is a function of the file bytes: a
+rewrite at the same path changes the mtime (and, for a different
+column set, the size), so it misses the cache, and a read of the same
+bytes under other confs misses it too. Only regular files are cached;
+a directory (a lake) can change beneath an unchanged directory mtime,
+so it is inferred on every read as before. A schema given to the
+reader adds no operator, so plans are unchanged.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +54,31 @@ BROADCAST_DIMS = {"region", "nation", "supplier"}
 # `div`, no double round-trip — epoch-nanos exceed 2^53).
 _NANOS_TS_COLS = {"events": ("ts",)}
 
+# session confs that change the schema parquet inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# path -> (file version and inference confs, schema): one slot per
+# path, so rewrites replace their entry instead of growing the cache
+_schemas: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema `spark.read.parquet(path)` infers, cached per file
+    version and inference confs (module docstring)."""
+    path = os.path.abspath(path)
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    version = (st.st_size, st.st_mtime_ns, *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    hit = _schemas.get(path)
+    if hit is None or hit[0] != version:
+        hit = _schemas[path] = (version, spark.read.parquet(path).schema)
+    return hit[1]
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -45,7 +87,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # nanos-timestamp reads and UTC semantics must hold regardless
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     for c in _NANOS_TS_COLS.get(name, ()):
         if isinstance(df.schema[c].dataType, T.LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
