@@ -20,6 +20,7 @@ Exact-parity notes (SURVEY §7 hard parts):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -132,8 +133,28 @@ def write_lake_with_quarantine(df: DataFrame, path: str, quarantine_path: str,
                                mode: str = "append") -> None:
     """Gold sink with the quarantine side output: clean rows land in
     the date-partitioned lake, flagged rows (with quarantine_reason)
-    in a flat side table for triage/restore. Both sinks read the same
-    shuffle-free silver plan — the gate adds no exchange."""
-    clean, quarantined = silver_split(df)
-    write_lake(clean, path, mode=mode)
-    quarantined.write.mode(mode).parquet(quarantine_path)
+    in a flat side table for triage/restore.
+
+    The two sinks are two writes, and each would otherwise re-scan the
+    landing zone and re-parse every file. So the bronze frame `df` is
+    persisted (memory, spilling to local disk) for the two writes: the
+    landing zone is read once, and each sink runs only its own dedup
+    shuffle over the cached rows. The frame is persisted and released
+    here only when its plan is not cached already; `storageLevel` asks
+    the cache manager, so it also sees a cache the caller made through
+    another DataFrame over the same plan, and a caller's cache is left
+    as it was. Bronze, not silver, is the frame to cache: a cached plan
+    keeps its output partitioning, so a cached silver frame would pin
+    the dedup shuffle's partition count that AQE otherwise coalesces,
+    and the lake would get one file per shuffle partition and date
+    instead of one per date."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        clean, quarantined = silver_split(df)
+        write_lake(clean, path, mode=mode)
+        quarantined.write.mode(mode).parquet(quarantine_path)
+    finally:
+        if owned:
+            df.unpersist()

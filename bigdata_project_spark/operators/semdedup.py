@@ -476,9 +476,8 @@ def run_semantic_ingest_stream(
     batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
 
     with tempfile.TemporaryDirectory(prefix="sem_ingest_") as work:
-        seen_store = AppendStore(os.path.join(work, "seen"))
+        seen_store = AppendStore(os.path.join(work, "seen"), ccells.schema)
         out_store = AppendStore(os.path.join(work, "out"))
-        seen_store.append(ccells.limit(0))  # schema-only init
 
         def cos(x: str, y: str):
             return dot(f"{x}.embedding", f"{y}.embedding") / (

@@ -46,17 +46,26 @@ from bigdata_project_spark.caching import barrier
 
 class AppendStore:
     """A parquet store that grows by appends and is read back with the
-    schema of the last frame appended (no schema-inference job)."""
+    schema of the last frame appended (no schema-inference job).
 
-    def __init__(self, path: str) -> None:
+    A store given its schema at construction can be read before the
+    first append: it is then empty, with no file written for it."""
+
+    def __init__(self, path: str, schema: StructType | None = None) -> None:
         self.path = path
-        self.schema: StructType | None = None
+        self.schema = schema
+        self._appended = False
 
     def append(self, df: DataFrame) -> None:
         self.schema = df.schema
+        self._appended = True
         df.write.mode("append").parquet(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
+        if not self._appended:
+            # limit(0) folds to an empty local relation, so the
+            # optimizer removes a join or union against it
+            return spark.createDataFrame([], self.schema).limit(0)
         return spark.read.schema(self.schema).parquet(self.path)
 
 

@@ -343,15 +343,15 @@ def run_frontier_stream(
     raw = docs.select("doc_id", _raw_url_col().alias("url"))
 
     with tempfile.TemporaryDirectory(prefix="frontier_stream_") as work:
-        seen_store = AppendStore(os.path.join(work, "seen"))
-        out_store = AppendStore(os.path.join(work, "out"))
-        # schema-only seen-store init: (key, keeper_doc)
-        seen_store.append(
-            raw.limit(0).select(
+        # seen store: (key, keeper_doc)
+        seen_store = AppendStore(
+            os.path.join(work, "seen"),
+            raw.select(
                 F.md5(canonicalize_url(F.col("url"))).alias("key"),
                 F.col("doc_id").alias("keeper_doc"),
-            )
+            ).schema,
         )
+        out_store = AppendStore(os.path.join(work, "out"))
 
         max_seen_doc = [-1]  # foreachBatch runs driver-side
 

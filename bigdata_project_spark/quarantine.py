@@ -22,8 +22,12 @@ Contract (mirrors the audits exactly):
   order within measures); clean rows get NULL reason.
 
 Scale: the reason column is a single CASE chain inside whole-stage
-codegen; the split is two filters over one scan (Spark computes both
-sinks from the same shuffle-free plan), so the gate adds no exchange.
+codegen, and the split is two filters over the same frame, so the gate
+adds no exchange of its own. Each filter feeds its own write, and each
+write evaluates the frame's plan again (the listing pipeline's dedup
+window included); `listings.ingest.write_lake_with_quarantine`
+therefore persists the bronze input for the two writes, so the landing
+zone is read once.
 """
 
 from __future__ import annotations

@@ -7,6 +7,17 @@ location-independent, and shuffle partitions sized to the local core
 count instead of the 200 default (on a 1000-executor cluster this
 would instead be ~2-3x total cores, or left to AQE's
 coalescePartitions with a high initial value).
+
+File scans are capped at one split per core
+(`spark.sql.files.maxPartitionNum`). The file source packs small
+files into a split until it reaches `openCostInBytes` (4 MB), which
+assumes HDFS-sized files: a landing zone of thousands of 1 KB JSON
+files would otherwise plan one task per ~32 files, and pay per-task
+overhead for each. The cap only binds when a read would plan more
+splits than cores; a single-file table still plans one split. On a
+cluster, leave the cap unset, or size it so that it binds only on
+small-file inputs (a multiple of the total cores well below a large
+table's natural split count).
 """
 
 from __future__ import annotations
@@ -25,6 +36,7 @@ def get_spark(app_name: str = "bigdata_project_spark", cpus: str | None = None) 
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.files.maxPartitionNum", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -9,34 +9,65 @@ from __future__ import annotations
 
 import pytest
 
+from bigdata_project_spark.listings.ingest import read_listings_json, write_lake_with_quarantine
 from bigdata_project_spark.registry import all_queries
 from bigdata_project_spark.tables import load
+from tests.landing import write_landing
 
 BUDGETS = {
     "stream_countmin_incremental": 18,
     "stream_tumbling_hourly": 2,
+    "stream_url_frontier_dedup": 34,
+    "stream_semantic_incremental_dedup": 46,
 }
 # tables whose schemas a query reads; loaded once first so that a
 # budget does not depend on which test ran before it
 _INPUTS = {
     "stream_countmin_incremental": ("documents",),
     "stream_tumbling_hourly": ("events",),
+    "stream_url_frontier_dedup": ("documents",),
+    "stream_semantic_incremental_dedup": ("embeddings",),
 }
+
+
+def _status_store(spark):
+    sc = spark.sparkContext._jsc.sc()
+    # the status store is fed asynchronously by the listener bus
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
 
 
 def _jobs(spark, action) -> int:
     """Spark jobs started while `action()` ran."""
-    sc = spark.sparkContext._jsc.sc()
 
     def newest() -> int:
-        # the status store is fed asynchronously by the listener bus
-        sc.listenerBus().waitUntilEmpty()
-        jobs = sc.statusStore().jobsList(None)  # newest first
+        jobs = _status_store(spark).jobsList(None)  # newest first
         return jobs.apply(0).jobId() if jobs.size() else -1
 
     before = newest()
     action()
     return newest() - before
+
+
+def _stages(spark, action) -> list[tuple[int, int]]:
+    """(tasks, input records) of each stage that ran while `action()`
+    ran; a skipped stage, whose output was reused, did not run."""
+    al = spark._jvm.java.util.ArrayList
+    no_quantiles = spark.sparkContext._gateway.new_array(spark._jvm.double, 0)
+
+    def newest_first():
+        # the 5-argument Spark 4.1 form: Scala default arguments do not
+        # cross Py4J
+        st = _status_store(spark).stageList(al(), False, False, no_quantiles, al())
+        return [st.apply(i) for i in range(st.size())]
+
+    seen = {s.stageId() for s in newest_first()}
+    action()
+    return [
+        (s.numTasks(), s.inputRecords())
+        for s in newest_first()
+        if s.stageId() not in seen and s.status().toString() != "SKIPPED"
+    ]
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
@@ -52,3 +83,27 @@ def test_second_load_launches_no_job(spark, sf_dir):
     load of the same table plans its scan without a job."""
     load(spark, sf_dir, "orders")
     assert _jobs(spark, lambda: load(spark, sf_dir, "orders")) == 0
+
+
+def test_listings_etl_scans_landing_once_in_core_count_tasks(spark, tmp_path):
+    """Both sinks of write_lake_with_quarantine come from one read of
+    the landing zone, and that read packs its small files into at most
+    one task per core. A landing-scan stage reads many records per
+    task; a stage that reads the cached bronze frame reads one columnar
+    batch per task."""
+    cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # at the file source's 4 MB open cost about 32 tiny files share a
+    # split, so 40 files per core plan more splits than cores; the half
+    # file per core over that keeps the capped, evenly sized splits
+    # from spilling into one more
+    n_files = 40 * cores + cores // 2
+    bronze = read_listings_json(spark, write_landing(tmp_path / "landing", n_files))
+    stages = _stages(
+        spark,
+        lambda: write_lake_with_quarantine(
+            bronze, str(tmp_path / "lake"), str(tmp_path / "quarantine"), mode="overwrite"
+        ),
+    )
+    scans = [(tasks, rows) for tasks, rows in stages if rows > tasks]
+    assert sum(rows for _, rows in scans) == n_files, scans
+    assert sum(tasks for tasks, _ in scans) <= cores, scans

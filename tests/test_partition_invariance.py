@@ -19,10 +19,13 @@ exactly the bug class the DECIMAL discipline exists to prevent.
 from __future__ import annotations
 
 from collections import Counter
+from itertools import product
 
 import pytest
 
+from bigdata_project_spark.listings.ingest import read_listings_json, write_lake_with_quarantine
 from bigdata_project_spark.registry import REGISTRY, _ensure_loaded, all_queries
+from tests.landing import write_landing
 from tests.oracle import _canon
 
 _ensure_loaded()
@@ -64,6 +67,46 @@ def test_result_invariant_under_shuffle_partition_count(spark, sf_dir, name):
         f"{name}: results differ across shuffle-partition counts; "
         f"sample diffs: {list(diff.items())[:3]}"
     )
+
+
+def test_listings_etl_invariant_under_split_and_shuffle_partition_count(spark, tmp_path):
+    """The listings ETL (cached bronze read, dedup window, quarantine
+    gate, date-partitioned lake) writes the same lake and quarantine
+    rows whether the landing scan's file splits are capped at the
+    cores or left to the open-cost packing, and under 32 or 3 shuffle
+    partitions."""
+    cores = spark.conf.get("spark.sql.shuffle.partitions")
+    # enough tiny files that the uncapped scan plans more splits than
+    # cores (about 32 files share a split at the 4 MB open cost)
+    glob = write_landing(tmp_path / "landing", 40 * int(cores))
+    split_key, shuffle_key = "spark.sql.files.maxPartitionNum", "spark.sql.shuffle.partitions"
+
+    def set_conf(key, value):
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+    orig = {k: spark.conf.get(k, None) for k in (split_key, shuffle_key)}
+    results = {}
+    try:
+        for split_cap, shuffle in product((None, cores), ("32", "3")):
+            set_conf(split_key, split_cap)
+            set_conf(shuffle_key, shuffle)
+            out = tmp_path / f"cap{split_cap}_sp{shuffle}"
+            write_lake_with_quarantine(
+                read_listings_json(spark, glob), str(out / "lake"), str(out / "q"), mode="overwrite"
+            )
+            results[(split_cap, shuffle)] = tuple(
+                _rows(spark.read.parquet(str(out / sink))) for sink in ("lake", "q")
+            )
+    finally:
+        for k, v in orig.items():
+            set_conf(k, v)
+    (first, lake_q), *rest = results.items()
+    assert lake_q[0] and lake_q[1]
+    for setting, other in rest:
+        assert other == lake_q, f"{setting} differs from {first}"
 
 
 def test_full_registry_oracle_matches_under_narrow_partitioning(spark, sf_dir):

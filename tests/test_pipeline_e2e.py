@@ -6,12 +6,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.caching import persistent_rdd_ids
 from bigdata_project_spark.listings.crawl import crawl_to_dataframe
 from bigdata_project_spark.listings.ingest import (
+    read_listings_json,
     silver_transform,
     write_lake,
     write_lake_with_quarantine,
 )
+from tests.landing import write_landing
 from tests.test_crawl import make_fake_api
 
 
@@ -98,3 +101,34 @@ def test_silver_quarantine_side_output(spark, tmp_path):
     # nothing else was dropped: clean + quarantined partitions the input
     silver_n = silver_transform(bronze).count()
     assert back.count() + len(quarantined) == silver_n
+
+
+def test_quarantine_sinks_leave_caller_cache_alone(spark, tmp_path):
+    """write_lake_with_quarantine caches the bronze frame for its two
+    writes only when the caller has not: a caller's cache survives the
+    call at its own level, also when the call gets another DataFrame
+    over the same plan, and a call on an uncached frame leaves the
+    persisted RDDs as they were."""
+    glob = write_landing(tmp_path / "landing", 30)
+
+    def run(df, name):
+        write_lake_with_quarantine(
+            df, str(tmp_path / name / "lake"), str(tmp_path / name / "q"), mode="overwrite"
+        )
+
+    before = persistent_rdd_ids(spark)
+    run(read_listings_json(spark, glob), "uncached")
+    assert persistent_rdd_ids(spark) == before
+
+    cached = read_listings_json(spark, glob).cache()
+    try:
+        level = cached.storageLevel
+        run(cached, "cached")
+        assert cached.is_cached and cached.storageLevel == level
+        run(read_listings_json(spark, glob), "same_plan")
+        assert cached.storageLevel == level
+    finally:
+        cached.unpersist()
+    assert spark.read.parquet(str(tmp_path / "cached" / "lake")).count() == (
+        spark.read.parquet(str(tmp_path / "uncached" / "lake")).count()
+    )
