@@ -159,7 +159,13 @@ def run_counter_stream(
     checks the cross-batch state carry. The pointer to the newest
     version lives in driver memory, which scopes it to one
     availableNow run; a restartable deployment would persist it next
-    to the versions."""
+    to the versions.
+
+    The stream's checkpoint sits under `work`, which every caller makes
+    a temporary directory. So a replay's orphan temporary files (the
+    session's FileSystem checkpoint manager keeps an existing file and
+    leaves the rewrite's temp file beside it; see `session`) are
+    removed with it."""
     spark = df.sparkSession
     *group, count = init.columns
     # [path, last merged batch id], no path before the first merge:

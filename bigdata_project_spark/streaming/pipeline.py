@@ -106,7 +106,13 @@ def read_kafka_stream(spark: SparkSession, brokers: str, topic: str, schema) -> 
 
 def run_available_now(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink and
-    return the materialized result as a batch DataFrame."""
+    return the materialized result as a batch DataFrame.
+
+    The checkpoint is a temporary directory, removed once the query
+    terminates, so a replay's orphan temporary state-store files (the
+    session's FileSystem checkpoint manager keeps an existing file and
+    leaves the rewrite's temp file beside it; see `session`) go with
+    it."""
     spark = stream_df.sparkSession
     spark.catalog.dropTempView(name)  # False when there is none; no catalog scan
     # the memory-sink table does not read the checkpoint once the

@@ -3,7 +3,12 @@ launches, read from the status store. At this scale a query's cost is
 its jobs, not its rows, so a budget catches a driver-side job that
 creeps back in — a parquet schema inference, a catalog scan, an empty
 store write — before a timing run would. A budget is the measured
-count; lower it when a change removes jobs."""
+count; lower it when a change removes jobs.
+
+The stream harnesses also get a budget of OS processes started per
+run. Without the native `libhadoop`, Hadoop's local file system runs
+a shell command (`chmod`, `readlink`) for file operations, so every
+checkpoint-log entry and state-store file can cost several forks."""
 
 from __future__ import annotations
 
@@ -19,6 +24,14 @@ BUDGETS = {
     "stream_tumbling_hourly": 2,
     "stream_url_frontier_dedup": 34,
     "stream_semantic_incremental_dedup": 46,
+}
+# processes started per warm run, as (fixed, per shuffle partition):
+# the measured count plus about 25%. The tumbling window's state store
+# writes its files per shuffle partition; the count-min harness's
+# writes do not grow with it.
+PROCESS_BUDGETS = {
+    "stream_countmin_incremental": (213, 0),
+    "stream_tumbling_hourly": (51, 19),
 }
 # tables whose schemas a query reads; loaded once first so that a
 # budget does not depend on which test ran before it
@@ -49,6 +62,24 @@ def _jobs(spark, action) -> int:
     return newest() - before
 
 
+def _processes(spark, action) -> int:
+    """Processes started while `action()` ran, from the `processes`
+    line of /proc/stat. The counter is machine-wide: it counts every
+    fork and thread creation on the machine, by any program, so the
+    JVM's new pool threads and Spark's Python workers count too."""
+
+    def forks() -> int:
+        try:
+            with open("/proc/stat") as f:
+                return next(int(line.split()[1]) for line in f if line.startswith("processes "))
+        except (OSError, StopIteration):
+            pytest.skip("/proc/stat has no readable processes counter")
+
+    before = forks()
+    action()
+    return forks() - before
+
+
 def _stages(spark, action) -> list[tuple[int, int]]:
     """(tasks, input records) of each stage that ran while `action()`
     ran; a skipped stage, whose output was reused, did not run."""
@@ -76,6 +107,20 @@ def test_query_within_job_budget(spark, sf_dir, name):
         load(spark, sf_dir, t)
     n = _jobs(spark, lambda: all_queries()[name](spark, sf_dir).collect())
     assert n <= BUDGETS[name], f"{name} ran {n} jobs, budget {BUDGETS[name]}"
+
+
+@pytest.mark.parametrize("name", sorted(PROCESS_BUDGETS))
+def test_stream_within_process_budget(spark, sf_dir, name):
+    def run():
+        all_queries()[name](spark, sf_dir).collect()
+
+    fixed, per_partition = PROCESS_BUDGETS[name]
+    budget = fixed + per_partition * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    run()  # warm: Python workers, schema cache, first-use classes
+    # the best of three runs: a burst of block removals can grow the
+    # block manager's thread pools by dozens of threads in one run
+    n = min(_processes(spark, run) for _ in range(3))
+    assert n <= budget, f"{name} started {n} processes, budget {budget}"
 
 
 def test_second_load_launches_no_job(spark, sf_dir):

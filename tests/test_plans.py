@@ -10,6 +10,7 @@ import io
 import re
 
 from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
+from tools.dump_plans import normalize
 
 _ensure_loaded()
 
@@ -598,3 +599,35 @@ def test_skipping_audit_is_two_rollups(spark, sf_dir):
     assert "Join" not in plan
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_normalized_plan_ignores_broadcast_build_side(spark, sf_dir):
+    """AQE may build a broadcast join on either side from one run to
+    the next; the normalized final plan reads the same for both."""
+    from pyspark.sql import functions as F
+
+    a = spark.range(10).withColumnRenamed("id", "k")
+    b = spark.range(10).withColumnRenamed("id", "k2")
+    plans = []
+    for df in (F.broadcast(a).join(b, a.k == b.k2), a.join(F.broadcast(b), a.k == b.k2)):
+        df.collect()
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+    assert "BuildLeft" in plans[0] and "BuildRight" in plans[1]
+    assert normalize(plans[0], sf_dir) == normalize(plans[1], sf_dir)
+
+
+def test_normalized_plan_orders_expand_groups():
+    """The distinct groups of an Expand, and the gid each gets, follow
+    expression-id hashes; the normalized plan puts them in one order."""
+    first = (
+        "Aggregate [count(a#1) FILTER (WHERE (gid#5 = 1)) AS na#7L, count(b#2) FILTER (WHERE (gid#5 = 2)) AS nb#8L]\n"
+        "+- Aggregate [a#3, b#4, gid#5], [a#3, b#4, gid#5]\n"
+        "   +- Expand [[a#1, null, 1], [null, b#2, 2]], [a#3, b#4, gid#5]"
+    )
+    swapped = (
+        "Aggregate [count(a#1) FILTER (WHERE (gid#5 = 2)) AS na#7L, count(b#2) FILTER (WHERE (gid#5 = 1)) AS nb#8L]\n"
+        "+- Aggregate [b#4, a#3, gid#5], [b#4, a#3, gid#5]\n"
+        "   +- Expand [[b#2, null, 1], [null, a#1, 2]], [b#4, a#3, gid#5]"
+    )
+    assert normalize(first, "/data") == normalize(swapped, "/data")
+    assert normalize(first, "/data") != normalize(first.replace("count(b#2)", "sum(b#2)"), "/data")

@@ -4,6 +4,8 @@ dedup, exactly-once parquet sink with checkpoint, foreachBatch."""
 
 from __future__ import annotations
 
+import os
+import re
 import tempfile
 from pathlib import Path
 
@@ -313,3 +315,95 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     # the 12:30 on-time event's window is not finalized in append mode
     # (final watermark 12:20 < its 13:00 end) — pending, not lost
     assert (base + 2 * H) * us not in got
+
+
+@pytest.fixture(scope="module")
+def lost_commit_replay(spark, tmp_path_factory):
+    """A complete-mode count over three one-file micro-batches, run
+    twice on one checkpoint: the second run follows the loss of the
+    last commit-log entry (a crash after the state commit, before the
+    commit log), so it replays that batch against state version 3,
+    which already exists."""
+    import glob
+    import shutil
+
+    tmp = tmp_path_factory.mktemp("lost_commit")
+    src = tmp / "landing"
+    src.mkdir()
+    for i in range(3):
+        staged = str(tmp / f"st{i}")
+        spark.range(10 * i, 10 * i + 25).select((F.col("id") % 7).alias("k")).coalesce(1).write.parquet(staged)
+        shutil.copy(glob.glob(f"{staged}/part-*.parquet")[0], str(src / f"b{i}.parquet"))
+    schema = spark.read.parquet(str(src / "b0.parquet")).schema
+    ckpt = tmp / "ckpt"
+
+    def run(name):
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(src))
+            .groupBy("k")
+            .count()
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return len(q.recentProgress), sorted(map(tuple, spark.table(name).collect()))
+
+    def state():
+        return sorted(map(tuple, spark.read.format("statestore").load(str(ckpt)).collect()))
+
+    def last_deltas():
+        # inode of each state partition's version-3 delta file
+        return {str(p): os.stat(p).st_ino for p in ckpt.glob("state/0/*/3.delta")}
+
+    first = run("t_replay_first")
+    state_first, deltas_first = state(), last_deltas()
+    last = max(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit())
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink()
+    replay = run("t_replay_again")
+    return {
+        "first": first,
+        "replay": replay,
+        "batch": sorted(map(tuple, spark.read.parquet(str(src)).groupBy("k").count().collect())),
+        "state": (state_first, state()),
+        "deltas": (deltas_first, last_deltas()),
+        "orphans": [
+            p for p in ckpt.glob("state/0/*/.3.delta.*.tmp")
+            if re.fullmatch(r"\.3\.delta\.[0-9a-f-]{36}\.tmp", p.name)
+        ],
+        "ckpt": str(ckpt),
+    }
+
+
+def test_stateful_replay_after_lost_commit(lost_commit_replay):
+    """A batch whose commit-log entry was lost replays once, and the
+    replay leaves the result and the operator state unchanged."""
+    r = lost_commit_replay
+    (n_first, result_first), (n_replay, result_replay) = r["first"], r["replay"]
+    assert n_first == 3 and n_replay == 1
+    assert result_replay == result_first == r["batch"]
+    state_first, state_replay = r["state"]
+    assert state_first and state_replay == state_first
+
+
+def test_session_checkpoint_manager_keeps_first_state_file_on_replay(spark, lost_commit_replay):
+    """The session routes checkpoint I/O through the FileSystem
+    checkpoint manager. Its one difference from Spark's default
+    FileContext manager shows on a replay: the state-store version
+    that already exists is kept (same inode), and the rewrite's
+    temporary file stays beside it."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(lost_commit_replay["ckpt"]),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    deltas_first, deltas_replay = lost_commit_replay["deltas"]
+    assert deltas_first and deltas_replay == deltas_first
+    assert len(lost_commit_replay["orphans"]) == len(deltas_first)

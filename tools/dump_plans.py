@@ -3,14 +3,23 @@
 plan shape IS the scale argument. Run from the repo root:
 
     python tools/dump_plans.py [sf_dir]
+    python tools/dump_plans.py sf_dir --normalized DIR
 
 Each section pairs the executed plan (AQE final) with the one-line
 claim tests/test_plans.py asserts about it, so the document cannot
 drift silently from the code: re-running the script re-reads both.
+
+`--normalized DIR` writes, instead of PLANS.md, each showcase query's
+optimized logical plan (`<query>.optimized.txt`) and AQE-final plan
+(`<query>.final.txt`) through `normalize`, which removes what moves
+between runs of the same code. Two commits' directories are then
+compared with `diff -r`.
 """
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 from pathlib import Path
 
@@ -72,8 +81,109 @@ SHOWCASE = [
 ]
 
 
+# (pattern, replacement) applied in order to every plan line
+_NORMALIZE = [
+    (re.compile(r"#\d+"), "#"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\blambda (\w+?)_\d+"), r"lambda \1"),  # PySpark's lambda-name counter
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@HASH"),  # Java identity hash codes
+    (re.compile(r"Statistics\([^)]*\)"), "Statistics(...)"),
+    (re.compile(r"\b(\w*QueryStage) \d+"), r"\1 N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),  # whole-stage codegen ids
+    # AQE builds a broadcast join on whichever side's shuffle stage
+    # finished first; the broadcast nodes are dropped (_BROADCAST)
+    (re.compile(r"\bBuild(Left|Right)\b"), "BuildSide"),
+]
+_FILE = re.compile(r"file:[^\s,\]]*")
+_TREE = re.compile(r"^[ :+-]*")  # the tree-string indentation of a node
+_BROADCAST = re.compile(r"BroadcastQueryStage N$|BroadcastExchange ")
+_EXPAND = re.compile(r"^(.*\bExpand )(\[\[.*\]\]), (\[[^\[\]]*\])$")
+
+
+def _canonical_expand(lines: list[str]) -> list[str]:
+    """Put a distinct-aggregate Expand into one order. Its distinct
+    groups follow expression-id hashes, so their order, and the `gid`
+    number each gets, move with how many expressions the session
+    created before. The group columns are sorted by name and the groups
+    renumbered in sorted order, in the Expand and in every `gid = N`
+    and key list that refers to them; the projection lists are then
+    sorted. A plan whose Expands differ is left as is."""
+    expands = {i: m for i, m in ((i, _EXPAND.match(line)) for i, line in enumerate(lines)) if m}
+    if len({m.group(2, 3) for m in expands.values()}) != 1:
+        return lines
+    m = next(iter(expands.values()))
+    projections = [p.split(", ") for p in re.findall(r"\[([^\[\]]*)\]", m.group(2))]
+    output = m.group(3)[1:-1].split(", ")
+    k = next((j for j, c in enumerate(output) if c.startswith("gid#")), None)
+    if k is None or any(len(p) != len(output) for p in projections):
+        return lines
+    order = sorted(range(k), key=lambda j: output[j])
+    groups = sorted([p[j] for j in order] for p in projections if p[k] != "0")
+    renumber = {p[k]: str(groups.index([p[j] for j in order]) + 1) for p in projections if p[k] != "0"}
+
+    def permute(p: list[str]) -> str:
+        return ", ".join([p[j] for j in order] + [renumber.get(p[k], p[k])] + p[k + 1:])
+
+    expand = f"[{', '.join(sorted(f'[{permute(p)}]' for p in projections))}], [{permute(output)}]"
+    # a key list that starts with the group columns, each maybe under an
+    # alias (a partial aggregate normalizes a double key)
+    keys = re.compile(
+        r"(?<=[\[(])" + ", ".join(rf"((?:[^,\[\]]* AS )?{re.escape(c)})" for c in output[:k]) + r"(?=[,\])])"
+    )
+    gid = re.compile(r"\bgid# = (\d+)")
+
+    def rewrite(line: str) -> str:
+        line = keys.sub(lambda m: ", ".join(m.group(j + 1) for j in order), line)
+        return gid.sub(lambda m: "gid# = " + renumber.get(m.group(1), m.group(1)), line)
+
+    return [expands[i].group(1) + expand if i in expands else rewrite(line) for i, line in enumerate(lines)]
+
+
+def normalize(plan: str, sf_dir: str) -> str:
+    """A plan string with run-dependent detail removed: expression,
+    plan, query-stage and codegen-stage ids, lambda-name suffixes,
+    identity hash codes, statistics, paths (a file under `sf_dir`
+    keeps its name), the build side of broadcast joins together with
+    the broadcast nodes, and the order of a distinct-aggregate
+    Expand's groups. The result lists the plan's nodes one per line in
+    tree order, without the tree's indentation: a broadcast node moves
+    its subtree one level down, and AQE indents the plans nested in a
+    cached relation by the depth of the stage that reads it."""
+    sf = os.path.abspath(sf_dir).rstrip("/") + "/"
+
+    def path(m: re.Match) -> str:
+        p = m.group(0)[len("file:"):]
+        return "file:<sf>/" + p[len(sf):] if p.startswith(sf) else "file:<path>"
+
+    lines = []
+    for line in plan.rstrip().split("\n"):
+        line = _TREE.sub("", _FILE.sub(path, line))
+        for pattern, repl in _NORMALIZE:
+            line = pattern.sub(repl, line)
+        if not _BROADCAST.match(line):
+            lines.append(line)
+    return "\n".join(_canonical_expand(lines)) + "\n"
+
+
+def dump_normalized(spark, sf_dir: str, out_dir: str) -> None:
+    from bigdata_project_spark.caching import release_cached
+    from bigdata_project_spark.registry import REGISTRY
+
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    for name, _claim in SHOWCASE:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        df.collect()  # AQE finalizes the executed plan
+        qe = df._jdf.queryExecution()
+        for kind, plan in (("optimized", qe.optimizedPlan()), ("final", qe.executedPlan())):
+            (out / f"{name}.{kind}.txt").write_text(normalize(plan.toString(), sf_dir))
+        release_cached(spark, sweep_all=True)
+    print(f"{out_dir}: {len(SHOWCASE)} queries, optimized and final plans")
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    normalized = sys.argv[3] if sys.argv[2:3] == ["--normalized"] and len(sys.argv) == 4 else None
     from bigdata_project_spark.caching import release_cached
     from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
     from bigdata_project_spark.session import get_spark
@@ -81,6 +191,10 @@ def main() -> None:
     _ensure_loaded()
     spark = get_spark("plans", cpus="8")
     spark.sparkContext.setLogLevel("ERROR")
+    if normalized:
+        dump_normalized(spark, sf_dir, normalized)
+        spark.stop()
+        return
 
     out = [
         "# PLANS — physical-plan evidence for the scale claims",
