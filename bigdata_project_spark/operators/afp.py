@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.caching import barrier, tracked_persist
+from bigdata_project_spark.operators.clustering import components, sql_components, with_reach
 from bigdata_project_spark.operators.dedup import (
     pigeonhole_hamming_pairs,
     sql_pigeonhole_ctes,
@@ -299,20 +300,7 @@ def multimodal_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_SQL_AFP_SIGS},
     {sql_pigeonhole_ctes("afp64")},
     edges AS ({sql_pigeonhole_verify()}),
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (
-        SELECT root AS doc_id, MIN(node) AS component,
-               COUNT(DISTINCT node) AS component_reach
-        FROM reach GROUP BY root
-    )
+    {sql_components("documents", "doc_id")}
     SELECT doc_id, component, component_reach,
            CAST(doc_id <> component AS INT) AS is_dup
     FROM comp
@@ -324,34 +312,16 @@ def multimodal_audio_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame
     multimodal_audio_neardup, completing the fingerprint family the
     same way multimodal_dhash_dedup_keeper completes the image one:
     near-dup pairs become transitive clusters via the shared
-    production CC substrate (connected_components_auto over edge
-    endpoints only), each clip inherits its component keeper (min
-    doc_id), and is_dup marks the re-gained/re-encoded copies a
-    training manifest drops. Singleton clips take their own id via
-    the left join — every clip gets a verdict row.
+    `clustering.components`, each clip inherits its component keeper
+    (min doc_id), and is_dup marks the re-gained/re-encoded copies a
+    training manifest drops. Every clip gets a verdict row.
 
-    Scale: the pair stage is the bounded pigeonhole block join; CC
-    iterates over edge endpoints only (sparse graph), never the audio
-    corpus; the rejoin is one equi-join."""
-    from bigdata_project_spark.operators.clustering import connected_components_auto
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    Scale: the pair stage is the bounded pigeonhole block join."""
+    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     sigs = tracked_persist(_afp_sigs_df(spark, sf_dir))
-    edges = tracked_persist(pigeonhole_hamming_pairs(sigs, "afp64"))
-    endpoints = (
-        edges.select(F.col("doc_a").alias("id"))
-        .unionByName(edges.select(F.col("doc_b").alias("id")))
-        .distinct()
-    )
-    comp_conn = connected_components_auto(endpoints, edges.select("doc_a", "doc_b"))
-    ids = docs.select(F.col("doc_id").alias("id"))
-    comp = ids.join(comp_conn, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    edges.unpersist()
+    comp = components(docs, pigeonhole_hamming_pairs(sigs, "afp64"))
     sigs.unpersist()
-    sizes = comp.groupBy("component").agg(F.count("*").alias("component_reach"))
-    return comp.join(sizes, "component").select(
+    return with_reach(comp).select(
         F.col("id").alias("doc_id"),
         "component",
         "component_reach",

@@ -11,14 +11,15 @@ the iterative min-label-propagation algorithm on DataFrames:
 Each iteration is one join + aggregation (all distributed); lineage
 is truncated per iteration with caching.barrier so plans don't grow
 unboundedly. Iterations ~ graph diameter (tiny for near-dup
-clusters). At 100 TB the same loop runs with the pair list on disk
-and alternating large-star/small-star optimization; the fixpoint
-check is a 1-row count.
+clusters); chain-shaped graphs fall back to large-star/small-star
+contraction. The fixpoint check is a 1-row count.
 
-The oracle is a DuckDB recursive CTE computing min-reachable-id —
-same components, declaratively. (This is the 'iterative algorithm'
-class the driver supports; here it IS SQL-expressible via recursion,
-so it still gets the full value-hash gate.)
+`components` (near-dup edges -> per-node component) is the one Spark
+substrate every near-dup consumer calls — text, semantic, image and
+audio dedup alike — and `sql_components` is its one DuckDB twin, a
+recursive CTE computing min-reachable-id: same components,
+declaratively, so every consumer still gets the full value-hash gate.
+`keep_best` is the shared keep-most-tokens keeper election.
 """
 
 from __future__ import annotations
@@ -26,13 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-
 from bigdata_project_spark.caching import barrier, free_barrier, tracked_persist
 from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES,
     _SQL_SHINGLES_CAPPED,
     shingle_df_capped,
+    words_col,
 )
 from bigdata_project_spark.operators.corpus import _SQL_SPLIT_CTE_BODY
 from bigdata_project_spark.registry import query
@@ -95,19 +95,17 @@ class CCNotConverged(RuntimeError):
     star-contraction rerun (advisor r9)."""
 
 
-def _default_max_iter() -> int:
-    """Iteration cap for label propagation. Convergence needs about
-    graph-diameter iterations — tiny for near-dup clusters, but a
-    legitimately chain-shaped component can exceed any fixed cap, so
-    the bound is raisable without code edits via the environment
-    (SPARK_GRAFT_CC_MAX_ITER); hitting it still raises rather than
-    returning unconverged labels."""
-    return int(os.environ.get("SPARK_GRAFT_CC_MAX_ITER", "20"))
+# Round cap of both loops. Min-label propagation needs about
+# graph-diameter rounds; hitting the cap raises rather than returning
+# unconverged labels.
+_MAX_ITER = 20
+# Min-label rounds connected_components_auto spends before concluding
+# the graph is chain-shaped. Genuine near-dup clusters are shallow
+# (diameter ~2-4: dense clone groups), so 8 rounds is generous.
+_PROBE_ITERS = 8
 
 
-def connected_components_star(
-    nodes: DataFrame, edges: DataFrame, max_iter: int | None = None
-) -> DataFrame:
+def connected_components_star(nodes: DataFrame, edges: DataFrame, max_iter: int = _MAX_ITER) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et
     al. 2014, "Connected Components in MapReduce and Beyond"):
     converges in O(log^2 n) rounds REGARDLESS of component diameter —
@@ -125,8 +123,6 @@ def connected_components_star(
     which SHRINKS as components contract. Fixpoint when the edge set
     is stable; at fixpoint edges form stars rooted at component
     minima."""
-    if max_iter is None:
-        max_iter = _default_max_iter()
     # canonical directed form (big -> small), self-loops dropped
     e = (
         edges.selectExpr("greatest(doc_a, doc_b) AS u", "least(doc_a, doc_b) AS v")
@@ -181,8 +177,7 @@ def connected_components_star(
     if not converged:
         free_barrier(e)
         raise CCNotConverged(
-            f"connected_components_star did not converge in {max_iter} rounds; "
-            "raise max_iter (env SPARK_GRAFT_CC_MAX_ITER)"
+            f"connected_components_star did not converge in {max_iter} rounds; raise max_iter"
         )
     # at fixpoint e is a star forest (child -> root); singletons get
     # their own id via the left join
@@ -195,18 +190,15 @@ def connected_components_star(
     return labels
 
 
-def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int | None = None) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = _MAX_ITER) -> DataFrame:
     """Min-label propagation to fixpoint.
 
     nodes: (id); edges: (doc_a, doc_b) undirected. Returns
     (id, component) where component = min id in the component.
-    max_iter defaults to $SPARK_GRAFT_CC_MAX_ITER (20).
 
     Iterations ~ component diameter: right for near-dup graphs (tiny
     dense clusters). For adversarial chain-shaped components use
     `connected_components_star` (O(log^2 n) rounds, any diameter)."""
-    if max_iter is None:
-        max_iter = _default_max_iter()
     undirected = edges.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         edges.selectExpr("doc_b AS src", "doc_a AS dst")
     )
@@ -252,27 +244,15 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int | Non
         free_barrier(ckpt)
         raise CCNotConverged(
             f"connected_components did not converge in {max_iter} iterations "
-            f"({n_changed} labels still changing); raise max_iter "
-            f"(env SPARK_GRAFT_CC_MAX_ITER)"
+            f"({n_changed} labels still changing); raise max_iter"
         )
     return labels
 
 
-def _probe_iters() -> int:
-    """Min-label rounds connected_components_auto spends before
-    concluding the graph is chain-shaped. Genuine near-dup clusters
-    are shallow (diameter ~2-4: dense clone groups), so 8 rounds is
-    generous; clamped to >= 1 because a 0-round min-label loop would
-    RETURN its unconverged initial labels instead of raising."""
-    return max(1, int(os.environ.get("SPARK_GRAFT_CC_PROBE_ITERS", "8")))
-
-
-def connected_components_auto(
-    nodes: DataFrame, edges: DataFrame, max_iter: int | None = None
-) -> DataFrame:
-    """The production connected-components entry point (round 9):
-    min-label propagation probed for $SPARK_GRAFT_CC_PROBE_ITERS
-    rounds (default 8 — fewest Spark jobs on the shallow components
+def connected_components_auto(nodes: DataFrame, edges: DataFrame, max_iter: int = _MAX_ITER) -> DataFrame:
+    """The production connected-components algorithm (round 9):
+    min-label propagation probed for _PROBE_ITERS rounds (8 — the
+    fewest Spark jobs on the shallow components
     near-dup graphs actually have), falling back to alternating-star
     contraction (O(log^2 n) rounds at ANY diameter, Kiveris et al.
     2014) when the probe cap is hit. Both algorithms return identical
@@ -287,12 +267,76 @@ def connected_components_auto(
         # clamp the explicit path too: max_iter=0 would make the probe
         # RETURN its unconverged identity labels (n_changed stays 0)
         # instead of raising (advisor r9)
-        probe = (
-            _probe_iters() if max_iter is None else max(1, min(max_iter, _probe_iters()))
-        )
-        return connected_components(nodes, edges, max_iter=probe)
+        return connected_components(nodes, edges, max_iter=max(1, min(max_iter, _PROBE_ITERS)))
     except CCNotConverged:
         return connected_components_star(nodes, edges, max_iter=max_iter)
+
+
+def components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Near-dup edges -> per-node component: (id, component = min id
+    in the node's component) for every row of `nodes` (id), given
+    undirected `edges` (doc_a, doc_b, ...). Every near-dup consumer
+    clusters through here.
+
+    Labels propagate over the edges' distinct ENDPOINTS only: the
+    near-dup graph is sparse, so the fixpoint loop checkpoints ~2|E|
+    ids per round instead of the corpus. A node with no edge never
+    changes its label in the full loop, so the left join giving it
+    its own id yields the same labels. The (doc_a, doc_b) projection
+    is cached for the loop's rounds and released before returning;
+    the min-label result is a barrier and no longer reads it."""
+    edges = edges.select("doc_a", "doc_b").persist()
+    try:
+        endpoints = (
+            edges.select(F.col("doc_a").alias("id"))
+            .unionByName(edges.select(F.col("doc_b").alias("id")))
+            .distinct()
+        )
+        labels = connected_components_auto(endpoints, edges)
+    finally:
+        edges.unpersist()
+    return nodes.join(labels, "id", "left").select(
+        "id", F.coalesce("component", F.col("id")).alias("component")
+    )
+
+
+def with_reach(comp: DataFrame) -> DataFrame:
+    """`comp` (id, component) plus component_reach, the size of each
+    row's component."""
+    sizes = comp.groupBy("component").agg(F.count("*").alias("component_reach"))
+    return comp.join(sizes, "component")
+
+
+def sql_components(table: str, id_col: str) -> str:
+    """The DuckDB twin of `components` + `with_reach`, as CTEs over an
+    `edges` (doc_a, doc_b) CTE: `comp` ({id_col}, component,
+    component_reach) for every row of `table`, by a recursive
+    min-reachable-id closure. Needs `WITH RECURSIVE`."""
+    return f"""
+    und AS (
+        SELECT doc_a AS src, doc_b AS dst FROM edges
+        UNION ALL SELECT doc_b, doc_a FROM edges
+    ),
+    reach(root, node) AS (
+        SELECT {id_col}, {id_col} FROM {table}
+        UNION
+        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
+    ),
+    comp AS (
+        SELECT root AS {id_col}, MIN(node) AS component,
+               COUNT(DISTINCT node) AS component_reach
+        FROM reach GROUP BY root
+    )"""
+
+
+def keep_best(j: DataFrame, id_col: str) -> DataFrame:
+    """(component, keeper_{id_col}): per component of `j` (component,
+    n_tokens, {id_col}), the member with the most tokens, lowest id on
+    a tie. One max(struct(n_tokens, -id)) aggregate holds a 2-field
+    running max per component: no window sort, no member list."""
+    return j.groupBy("component").agg(
+        F.max(F.struct(F.col("n_tokens"), (-F.col(id_col)).alias("neg_id"))).alias("best")
+    ).select("component", (-F.col("best.neg_id")).alias(f"keeper_{id_col}"))
 
 
 @query(
@@ -301,20 +345,8 @@ def connected_components_auto(
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
     {_SQL_EDGES},
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    )
-    SELECT root AS doc_id,
-           MIN(node) AS component,
-           COUNT(DISTINCT node) AS component_reach
-    FROM reach
-    GROUP BY root
+    {sql_components("documents", "doc_id")}
+    SELECT doc_id, component, component_reach FROM comp
     """,
     tags=("dedup", "llm", "clustering", "iterative"),
 )
@@ -324,30 +356,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     component = min doc_id reachable (the canonical keeper id);
     component_reach = cluster size seen from each doc."""
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    edges_lazy, sh = _edges_df(spark, sf_dir)
-    edges = edges_lazy.persist()
-    # propagate labels over edge ENDPOINTS only (round 8, mirrors
-    # dedup_semantic_cells): the near-dup graph is sparse, so the
-    # fixpoint loop checkpoints ~2|E| ids per iteration instead of the
-    # corpus; edgeless docs take component = own id via the left join
-    # — definitionally the same labels the full loop would assign.
-    endpoints = (
-        edges.select(F.col("doc_a").alias("id"))
-        .unionByName(edges.select(F.col("doc_b").alias("id")))
-        .distinct()
-    )
-    comp_conn = connected_components_auto(endpoints, edges)
-    comp = docs.join(comp_conn, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    # comp_conn is localCheckpointed — it no longer reads edges or
-    # shingles, so the loop-only caches are released here, not leaked
-    edges.unpersist()
+    edges, sh = _edges_df(spark, sf_dir)
+    comp = components(docs, edges)
+    # the shingle cache only feeds the edge build
     sh.unpersist()
-    sizes = comp.groupBy("component").agg(F.count("*").alias("component_reach"))
-    return comp.join(sizes, "component").select(
-        F.col("id").alias("doc_id"), "component", "component_reach"
-    )
+    return with_reach(comp).select(F.col("id").alias("doc_id"), "component", "component_reach")
 
 
 @query(
@@ -356,16 +369,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
     {_SQL_EDGES},
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (SELECT root AS doc_id, MIN(node) AS component FROM reach GROUP BY root),
+    {sql_components("documents", "doc_id")},
     quality AS (
         SELECT doc_id,
                len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS n_tokens
@@ -389,7 +393,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenization. in_clean_corpus is the final keep bit."""
     docs = load(spark, sf_dir, "documents")
     comp = dedup_cluster_components(spark, sf_dir).select("doc_id", "component")
-    n_tokens = F.size(F.array_remove(F.split(F.lower("text"), r"\s+"), ""))
+    n_tokens = F.size(words_col(F.col("text")))
     quality = docs.select("doc_id", (n_tokens >= 20).cast("int").alias("passes_quality"))
     return (
         docs.select("doc_id")
@@ -589,16 +593,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
     {_SQL_EDGES},
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (SELECT root AS doc_id, MIN(node) AS component FROM reach GROUP BY root),
+    {sql_components("documents", "doc_id")},
     sp AS ({_SQL_SPLIT_CTE_BODY})
     SELECT c.doc_id, c.component,
            sd.split AS split_doc,
@@ -621,25 +616,15 @@ def split_cluster_aware_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     it actually gets, and a moved bit (the documents a naive split
     would have leaked).
 
-    Scale: one near-dup component build (the shared
-    `connected_components_auto` substrate — (id, label) pairs only)
+    Scale: one near-dup component build (the shared `components`
+    substrate — (id, label) pairs only)
     plus one scan-side split expression evaluated on the component
     label; no join wider than the component build itself."""
     from bigdata_project_spark.operators.corpus import _split_bucket, _TRAIN_LT, _VAL_LT
 
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    edges_lazy, sh = _edges_df(spark, sf_dir)
-    edges = edges_lazy.persist()
-    endpoints = (
-        edges.select(F.col("doc_a").alias("id"))
-        .unionByName(edges.select(F.col("doc_b").alias("id")))
-        .distinct()
-    )
-    comp_conn = connected_components_auto(endpoints, edges)
-    comp = docs.join(comp_conn, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    edges.unpersist()
+    edges, sh = _edges_df(spark, sf_dir)
+    comp = components(docs, edges)
     sh.unpersist()
 
     def split_expr(col: str):

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.exact import dcast
+from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
@@ -76,7 +77,7 @@ def mixture_source_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; the decimal-summed scaled total keeps the normalizer
     order-free."""
     docs = load(spark, sf_dir, "documents")
-    ntok = F.size(F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), ""))
+    ntok = F.size(words_col(F.col("text")))
     per_source = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(dcast(ntok)).cast("double").alias("n_tokens"),
@@ -154,7 +155,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay in the Java/RE2-common subset (explicit classes, no
     lookaround)."""
     docs = load(spark, sf_dir, "documents")
-    n_words = F.size(F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), ""))
+    n_words = F.size(words_col(F.col("text")))
     n_nonspace = F.length(F.regexp_replace("text", r"\s+", ""))
     n_symbols = F.regexp_count("text", F.lit(_SYMBOL_RE))
     n_bullets = F.regexp_count("text", F.lit(_BULLET_RE))
@@ -281,7 +282,7 @@ def quality_gopher_full_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three legs co-partition on doc_id so AQE plans them as one
     exchange reuse."""
     docs = load(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "")
+    words = words_col(F.col("text"))
     lines = F.split(F.col("text"), r"\n")
     n_words = F.size(words)
     n_alpha = F.size(F.filter(words, lambda x: x.rlike("[a-z]")))

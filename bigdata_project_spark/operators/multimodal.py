@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdata_project_spark.operators.clustering import components, sql_components, with_reach
 from bigdata_project_spark.operators.dedup import (
     sql_pigeonhole_ctes,
     sql_pigeonhole_hamming,
@@ -1062,20 +1063,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_SQL_DHASH_SIGS},
     {sql_pigeonhole_ctes("dhash64")},
     edges AS ({sql_pigeonhole_verify()}),
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (
-        SELECT root AS doc_id, MIN(node) AS component,
-               COUNT(DISTINCT node) AS component_reach
-        FROM reach GROUP BY root
-    )
+    {sql_components("documents", "doc_id")}
     SELECT doc_id, component, component_reach,
            CAST(doc_id <> component AS INT) AS is_dup
     FROM comp
@@ -1087,36 +1075,19 @@ def multimodal_dhash_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame
     multimodal_dhash_neardup, closing the same audit->enforce pattern
     as qa_split_leakage -> split_cluster_aware_assign: perceptual
     near-dup pairs become transitive clusters via the shared
-    production CC substrate (connected_components_auto over edge
-    endpoints only, star fallback at any diameter), each image
-    inherits its component keeper (min doc_id), and is_dup marks the
-    copies a training manifest drops. Singleton images take their own
-    id via the left join — every image gets a verdict row.
+    `clustering.components`, each image inherits its component keeper
+    (min doc_id), and is_dup marks the copies a training manifest
+    drops. Every image gets a verdict row.
 
-    Scale: the pair stage is the bounded pigeonhole block join; CC
-    iterates over edge endpoints only (sparse graph), never the image
-    corpus; the rejoin is one equi-join."""
+    Scale: the pair stage is the bounded pigeonhole block join."""
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.clustering import connected_components_auto
     from bigdata_project_spark.operators.dedup import pigeonhole_hamming_pairs
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
     sigs = tracked_persist(_dhash_sigs_df(spark, sf_dir))
-    edges = tracked_persist(pigeonhole_hamming_pairs(sigs, "dhash64"))
-    endpoints = (
-        edges.select(F.col("doc_a").alias("id"))
-        .unionByName(edges.select(F.col("doc_b").alias("id")))
-        .distinct()
-    )
-    comp_conn = connected_components_auto(endpoints, edges.select("doc_a", "doc_b"))
-    ids = docs.select(F.col("doc_id").alias("id"))
-    comp = ids.join(comp_conn, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    edges.unpersist()
+    comp = components(docs, pigeonhole_hamming_pairs(sigs, "dhash64"))
     sigs.unpersist()
-    sizes = comp.groupBy("component").agg(F.count("*").alias("component_reach"))
-    return comp.join(sizes, "component").select(
+    return with_reach(comp).select(
         F.col("id").alias("doc_id"),
         "component",
         "component_reach",

@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigdata_project_spark.operators.clustering import _SQL_EDGES
+from bigdata_project_spark.operators.clustering import (
+    _SQL_EDGES,
+    dedup_cluster_components,
+    keep_best,
+    sql_components,
+)
 from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES,
     _SQL_SHINGLES_CAPPED,
@@ -347,16 +352,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
     {_SQL_EDGES},
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (SELECT root AS doc_id, MIN(node) AS component FROM reach GROUP BY root),
+    {sql_components("documents", "doc_id")},
     quality AS (
         SELECT doc_id,
                CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))
@@ -391,18 +387,13 @@ def corpus_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     component exchange (groupBy key = join key, AQE reuses it). The
     struct-max avoids a window sort: per component only the 2-field
     running max is held, not the member list."""
-    from bigdata_project_spark.operators.clustering import dedup_cluster_components
-
     comp = dedup_cluster_components(spark, sf_dir).select("doc_id", "component")
     quality = load(spark, sf_dir, "documents").select(
         "doc_id", F.size(words_col(F.col("text"))).cast("long").alias("n_tokens")
     )
     j = tracked_persist(comp.join(quality, "doc_id"))
-    keeper = j.groupBy("component").agg(
-        F.max(F.struct(F.col("n_tokens"), (-F.col("doc_id")).alias("neg_id"))).alias("best")
-    ).select("component", (-F.col("best.neg_id")).alias("keeper_doc_id"))
     return (
-        j.join(keeper, "component")
+        j.join(keep_best(j, "doc_id"), "component")
         .select(
             "doc_id",
             "component",

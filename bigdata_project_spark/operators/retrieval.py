@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.operators.similarity import DIM, with_norm
 from bigdata_project_spark.operators.text import (
     _BM25_SCORE,
@@ -129,7 +130,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine scores, so the fusion is value-exact —
     no calibration, no floats that depend on list membership."""
     docs = load(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.col("text"))
     per_doc = docs.select(
         "doc_id",
         F.size(words).alias("dl"),

@@ -21,8 +21,7 @@ already-verified substrates into that operator:
    bounded — the equi-join on cell IS the partitioning key, so each
    cell's pairs compute inside one shuffle partition.
 3. **Canonicalization** — connected components over the edge set
-   (min-label propagation with star-contraction fallback,
-   `clustering.connected_components_auto`), then
+   (`clustering.components`), then
    `corpus_keep_best_per_cluster`'s keeper policy: most tokens wins,
    id tiebreak (embeddings join documents on vec_id = doc_id, the
    testbed's alignment contract).
@@ -40,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.caching import barrier, tracked_persist
-from bigdata_project_spark.operators.clustering import connected_components_auto
+from bigdata_project_spark.operators.clustering import components, keep_best, sql_components
 from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.operators.similarity import (
     DIM,
@@ -165,16 +164,7 @@ _SQL_SEM_CELLS = f"""
         WHERE ({sql_dot('a.embedding', 'b.embedding', DIM)})
                 / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) >= {SEMDEDUP_TAU}
     ),
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM edges
-        UNION ALL SELECT doc_b, doc_a FROM edges
-    ),
-    reach(root, node) AS (
-        SELECT vec_id, vec_id FROM embeddings
-        UNION
-        SELECT r.root, u.dst FROM reach r JOIN und u ON u.src = r.node
-    ),
-    comp AS (SELECT root AS vec_id, MIN(node) AS component FROM reach GROUP BY root),
+    {sql_components("embeddings", "vec_id")},
     quality AS (
         SELECT doc_id,
                CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))
@@ -223,27 +213,8 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .filter(cosine >= SEMDEDUP_TAU)
         .select(F.col("a.vec_id").alias("doc_a"), F.col("b.vec_id").alias("doc_b"))
-    ).persist()
-    # run label propagation over edge ENDPOINTS only: the near-dup
-    # graph is sparse (most vectors are singletons at any sane TAU),
-    # so the fixpoint loop iterates over ~2|E| ids instead of the
-    # whole corpus — singletons get component = own id by the left
-    # join below, definitionally identical to running them through
-    # the loop (a node with no edges never changes its label).
-    # Measured: the loop's per-iteration localCheckpoint + count was
-    # the whole query's dominant cost at every scale.
-    endpoints = (
-        edges.select(F.col("doc_a").alias("id"))
-        .unionByName(edges.select(F.col("doc_b").alias("id")))
-        .distinct()
     )
-    comp_conn = connected_components_auto(endpoints, edges)
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    comp = nodes.join(comp_conn, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-    # comp_conn is localCheckpointed — the edge cache only feeds the loop
-    edges.unpersist()
+    comp = components(emb.select(F.col("vec_id").alias("id")), edges)
 
     quality = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"),
@@ -254,11 +225,8 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cells.select("vec_id", "cell"), "vec_id")
         .join(quality, "vec_id")
     )
-    keeper = j.groupBy("component").agg(
-        F.max(F.struct(F.col("n_tokens"), (-F.col("vec_id")).alias("neg_id"))).alias("best")
-    ).select("component", (-F.col("best.neg_id")).alias("keeper_vec_id"))
     return (
-        j.join(keeper, "component")
+        j.join(keep_best(j, "vec_id"), "component")
         .select(
             "vec_id",
             "cell",

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load, load_spread
 
@@ -55,7 +56,7 @@ def text_stats_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; an unguarded divide hard-errors under ANSI on the first
     empty document (found by the round-7 edge-strings twin)."""
     docs = load(spark, sf_dir, "documents")
-    tokens = F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "")
+    tokens = words_col(F.col("text"))
     n_tokens = F.size(tokens)
     n_nonspace = F.length(F.regexp_replace("text", r"\s+", ""))
     return docs.select(
@@ -197,7 +198,7 @@ def text_quality_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return 0.5 * t + 0.5 * c
 
     docs = load(spark, sf_dir, "documents")
-    n_tokens = F.size(F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), ""))
+    n_tokens = F.size(words_col(F.col("text")))
     return docs.select(
         "doc_id",
         quality(n_tokens, F.length("text")).alias("quality"),
@@ -282,7 +283,7 @@ def text_tfidf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_spread(spark, sf_dir, "documents")
     toks = (
         docs
-        .select("doc_id", F.explode(F.array_remove(F.split(F.lower("text"), r"\s+"), "")).alias("token"))
+        .select("doc_id", F.explode(words_col(F.col("text"))).alias("token"))
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     df_ = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
@@ -422,7 +423,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its IDF is the log-free rational form, so scores are
     bit-identical across engines."""
     docs = load(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.col("text"))
     per_doc = docs.select(
         "doc_id",
         F.size(words).alias("dl"),

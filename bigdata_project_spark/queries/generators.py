@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.operators.dedup import words_col
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
@@ -51,7 +52,7 @@ def generator_explode_outer_empty(spark: SparkSession, sf_dir: str) -> DataFrame
     the outer variant the plain explode silently drops."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     toks = F.when(F.col("doc_id") % 10 == 0, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(F.array_remove(F.split(F.lower("text"), r"\s+"), ""))
+        F.array_distinct(words_col(F.col("text")))
     )
     return d.select("doc_id", F.explode_outer(toks).alias("token"))
 

@@ -131,7 +131,18 @@ def test_auto_equals_bruteforce(spark, edges):
     assert _labels(connected_components_auto(nodes, edf)) == want
 
 
-@pytest.mark.parametrize("name", ["dedup_cluster_components", "dedup_semantic_cells"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_cluster_components",
+        "corpus_clean_pipeline",
+        "split_cluster_aware_assign",
+        "corpus_keep_best_per_cluster",
+        "dedup_semantic_cells",
+        "multimodal_dhash_dedup_keeper",
+        "multimodal_audio_dedup_keeper",
+    ],
+)
 def test_consumers_stay_green_through_star_fallback(spark, sf_dir, name, monkeypatch):
     """Force every min-label probe to refuse (as a chain-shaped edge
     set would) and run the production consumers end-to-end against

@@ -47,7 +47,7 @@ def empty_sf_dir(tmp_path_factory, sf_dir) -> str:
     sf_dir), built by the same code as the standalone auditor so the
     gate and the tool cannot drift."""
     dst = tmp_path_factory.mktemp("empty_sf")
-    _tools_module("empty_sweep").build_empty_testbed(src=sf_dir, dst=str(dst))
+    _tools_module("verify_all").build_empty_testbed(src=sf_dir, dst=str(dst))
     return str(dst)
 
 
@@ -94,9 +94,9 @@ def test_every_query_agrees_with_oracle_on_empty_input(spark, empty_sf_dir):
 def null_sf_dir(tmp_path_factory, sf_dir) -> str:
     """Twin of the suite's sf_dir with deterministic NULLs in payload
     columns (never keys / ordering columns / event-time — see
-    tools/null_sweep.py for the injection map and rationale)."""
+    tools/verify_all.py for the injection map and rationale)."""
     dst = tmp_path_factory.mktemp("null_sf")
-    _tools_module("null_sweep").build_null_testbed(src=sf_dir, dst=str(dst))
+    _tools_module("verify_all").build_null_testbed(src=sf_dir, dst=str(dst))
     return str(dst)
 
 

@@ -20,6 +20,14 @@ from bigdata_project_spark.tables import load
 from tests.landing import write_landing
 
 BUDGETS = {
+    # the near-dup clustering consumers: each min-label round is a job
+    "corpus_clean_pipeline": 38,
+    "corpus_keep_best_per_cluster": 41,
+    "dedup_cluster_components": 35,
+    "dedup_semantic_cells": 50,
+    "multimodal_audio_dedup_keeper": 32,
+    "multimodal_dhash_dedup_keeper": 32,
+    "split_cluster_aware_assign": 33,
     "stream_countmin_incremental": 18,
     "stream_tumbling_hourly": 2,
     "stream_url_frontier_dedup": 34,
@@ -36,6 +44,13 @@ PROCESS_BUDGETS = {
 # tables whose schemas a query reads; loaded once first so that a
 # budget does not depend on which test ran before it
 _INPUTS = {
+    "corpus_clean_pipeline": ("documents",),
+    "corpus_keep_best_per_cluster": ("documents",),
+    "dedup_cluster_components": ("documents",),
+    "dedup_semantic_cells": ("documents", "embeddings"),
+    "multimodal_audio_dedup_keeper": ("documents",),
+    "multimodal_dhash_dedup_keeper": ("documents",),
+    "split_cluster_aware_assign": ("documents",),
     "stream_countmin_incremental": ("documents",),
     "stream_tumbling_hourly": ("events",),
     "stream_url_frontier_dedup": ("documents",),

@@ -231,3 +231,24 @@ def test_vector_kernels_live_only_in_vecmath():
     assert not offenders, "vector kernels copied outside operators/vecmath.py:\n" + "\n".join(
         offenders
     )
+
+
+def test_components_live_only_in_clustering():
+    """operators/clustering.py owns near-dup clustering: `components`
+    and its DuckDB twin `sql_components`. A consumer that calls the
+    connected-components algorithm itself, or spells the recursive
+    reach CTE, is a copy that can drift from the twin it is checked
+    against."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    offenders = [
+        f"{f.relative_to(pkg).as_posix()}:{i}: {line.strip()}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f.relative_to(pkg).as_posix() != "operators/clustering.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if "connected_components_auto(" in line or "reach(root, node)" in line
+    ]
+    assert not offenders, "near-dup clustering copied outside operators/clustering.py:\n" + "\n".join(
+        offenders
+    )
