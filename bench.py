@@ -338,10 +338,20 @@ def main() -> None:
 # its timing loop are untouched.
 
 
+def _swap_modules(mods: dict) -> dict:
+    """Install `mods` as the package's modules in sys.modules; returns
+    the ones they replace."""
+    out = {k: sys.modules.pop(k) for k in [m for m in sys.modules if m.startswith("bigdata_project_spark")]}
+    sys.modules.update(mods)
+    return out
+
+
 def _load_ref_registry(ref: str):
     """Materialize REF (git archive -> temp dir) and import its
     registry and caching modules under an isolated sys.modules
-    snapshot. Returns (registry dict, release_cached, checkout dir)."""
+    snapshot. Returns (registry dict, release_cached, REF's modules).
+    A REF query runs with REF's modules installed (`_swap_modules`), so
+    an import inside a REF function resolves to REF's code."""
     import subprocess
     import tempfile
 
@@ -351,9 +361,7 @@ def _load_ref_registry(ref: str):
         ["git", "archive", ref], cwd=repo, check=True, stdout=subprocess.PIPE
     ).stdout
     subprocess.run(["tar", "-x", "-C", tmp], input=tar, check=True)
-    saved = {k: v for k, v in sys.modules.items() if k.startswith("bigdata_project_spark")}
-    for k in saved:
-        del sys.modules[k]
+    saved = _swap_modules({})
     sys.path.insert(0, tmp)
     try:
         import bigdata_project_spark.caching as ref_caching
@@ -364,15 +372,13 @@ def _load_ref_registry(ref: str):
         release = ref_caching.release_cached
     finally:
         sys.path.remove(tmp)
-        for k in [m for m in sys.modules if m.startswith("bigdata_project_spark")]:
-            del sys.modules[k]
-        sys.modules.update(saved)
-    return registry, release, tmp
+        ref_modules = _swap_modules(saved)
+    return registry, release, ref_modules
 
 
 def main_ab(ref: str, names: list[str] | None, repeats: int) -> None:
     _ensure_loaded()
-    ref_registry, ref_release, ref_dir = _load_ref_registry(ref)
+    ref_registry, ref_release, ref_modules = _load_ref_registry(ref)
     spark = get_spark("bench-ab")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -380,10 +386,15 @@ def main_ab(ref: str, names: list[str] | None, repeats: int) -> None:
         release_cached(spark, sweep_all=True)
         ref_release(spark, sweep_all=True)
 
-    def run(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+    def run(fn, modules: dict | None = None) -> float:
+        saved = _swap_modules(modules) if modules is not None else None
+        try:
+            t0 = time.perf_counter()
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            dt = time.perf_counter() - t0
+        finally:
+            if saved is not None:
+                modules.update(_swap_modules(saved))
         releases()
         return dt
 
@@ -396,11 +407,11 @@ def main_ab(ref: str, names: list[str] | None, repeats: int) -> None:
         new_fn, old_fn = REGISTRY[name].fn, ref_registry[name].fn
         spark.sparkContext.setJobDescription(f"ab:{name}")
         run(new_fn)  # warm both sides' codegen/footers before timing
-        run(old_fn)
+        run(old_fn, ref_modules)
         new_ts, old_ts = [], []
         for _ in range(repeats):  # alternate so drift hits both sides
             new_ts.append(run(new_fn))
-            old_ts.append(run(old_fn))
+            old_ts.append(run(old_fn, ref_modules))
         new_m = statistics.median(new_ts)
         old_m = statistics.median(old_ts)
         results[name] = {

@@ -145,7 +145,9 @@ _SQL_CODES = f"""
 """
 
 
-def _pq_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_unit(spark: SparkSession, sf_dir: str, keep=("vec_id", "embedding")) -> DataFrame:
+    """(*keep, u): embeddings columns `keep` and the unit vector u
+    (zero vector -> all-zero unit)."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     unit = F.transform(
         "embedding",
@@ -153,7 +155,7 @@ def _pq_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
             x.cast("double") / F.sqrt("norm_sq")
         ),
     )
-    return emb.select("vec_id", "embedding", unit.alias("u"))
+    return emb.select(*keep, unit.alias("u"))
 
 
 def _bucket_col(j: int):

@@ -204,19 +204,6 @@ _SQL_RES_PRELUDE = (
 # Spark side
 
 
-def _res_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, u): unit-normalized vectors with their IVF
-    cell label (zero vector -> all-zero unit; _pq_unit's transform)."""
-    emb = with_norm(load(spark, sf_dir, "embeddings"))
-    unit = F.transform(
-        "embedding",
-        lambda x: F.when(F.col("norm_sq") == 0, F.lit(0.0)).otherwise(
-            x.cast("double") / F.sqrt("norm_sq")
-        ),
-    )
-    return emb.select("vec_id", "label", unit.alias("u"))
-
-
 def _res_subs(unit: DataFrame, ucent: DataFrame) -> DataFrame:
     """(vec_id, label, j, u_sub, b): residual subvectors — one exact
     subtraction per component against the broadcast cell centroid,
@@ -310,7 +297,7 @@ def _res_ranked(spark: SparkSession, sf_dir: str, nprobe: int = _RES_NPROBE) -> 
     from bigdata_project_spark.caching import tracked_persist
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    unit = _res_unit(spark, sf_dir)
+    unit = _pq_unit(spark, sf_dir, keep=("vec_id", "label"))
     ucent = tracked_persist(centroids(unit, ["label"], "u", FLOOR))
     subs = tracked_persist(_res_subs(unit, ucent))
     cb = tracked_persist(_pq_codebook(subs))

@@ -38,11 +38,9 @@ Scale: the build is one map-side-combinable groupBy on <= 976 keys;
 the audit's exact side aggregates per distinct VALUE (bounded by
 the value domain, not the row count) and runs one single-partition
 window over that compressed table; the decile probe joins a 9-row
-broadcast. The streaming form (`run_quantile_stream`) maintains the
-counter store across micro-batches with batch-id-keyed idempotent
-versions (`staging.run_counter_stream`, shared with the count-min
-stream): per-batch deltas SUM into the consolidated store, which
-never exceeds the fixed bucket count.
+broadcast. The streaming form (`run_quantile_stream`) sums per-batch
+increments into bucket counts kept in Spark's state store, never more
+than the fixed bucket count.
 
 Reference scope: [ext] — BASELINE north star; completes the sketch
 family (Bloom FP audit, CMS overestimate audit, HLL tolerance,
@@ -55,11 +53,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigdata_project_spark.operators.staging import run_counter_stream
+from bigdata_project_spark.operators.staging import count_chunk_stream
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
 _N_DECILES = 10
+_MAX_BUCKETS = 16 * 60 + 16  # buckets of any BIGINT input (module docstring)
 
 # cents -> bucket index (Spark SQL spelling; DuckDB twin below uses
 # >> and // but identical arithmetic)
@@ -143,8 +142,8 @@ _SQL_AUDIT_TAIL = f"""
 """
 
 
-def _cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
+def _cents(li: DataFrame) -> DataFrame:
+    """(v): the non-null extended prices of lineitem rows in cents."""
     return li.filter(F.col("l_extendedprice").isNotNull()).select(
         F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("v")
     )
@@ -251,7 +250,7 @@ def agg_quantile_sketch_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= 976 rows for any BIGINT input (111 on the testbed domain),
     mergeable by adding counts per idx, bit-deterministic on both
     engines (module docstring has the layout and bounds)."""
-    return _with_bounds(_hist_counts(_cents(spark, sf_dir)))
+    return _with_bounds(_hist_counts(_cents(load(spark, sf_dir, "lineitem"))))
 
 
 @query(
@@ -271,7 +270,7 @@ def agg_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<= 6.25% by construction; the audit MEASURES it per decile).
     The exact side is computed sort-free over the distinct-value
     relation, so grading the sketch never sorts the fact table."""
-    cents = _cents(spark, sf_dir)
+    cents = _cents(load(spark, sf_dir, "lineitem"))
     hist = _with_bounds(_hist_counts(cents))
     return _audit(spark, hist, cents)
 
@@ -283,48 +282,44 @@ def run_quantile_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> tuple[DataFrame, int]:
     """The quantile sketch in its production home: a STREAM of
-    lineitem rows, the bucket store maintained incrementally across
-    micro-batches. Per-batch bucket deltas SUM to exactly the
+    lineitem rows, the bucket counts maintained incrementally across
+    micro-batches. Per-batch bucket increments SUM to exactly the
     batch-build counters (integer addition, order-free), so the
-    streamed store reproduces `agg_quantile_sketch_audit`'s answer
+    streamed table reproduces `agg_quantile_sketch_audit`'s answer
     bit for bit and the streaming query shares its oracle.
 
-    Mechanics: `staging.run_counter_stream`, the count-min stream's
-    harness — `n_chunks` l_orderkey-ranged micro-batches, each merging
-    the batch's (idx, cnt) delta into a batch-id-keyed store version.
-    The final audit probes only the last version, so its correctness
-    is reachable only through the restored cross-batch state. The
-    store stays <= 976 rows at every version."""
+    Mechanics: `staging.count_chunk_stream`, the count-min stream's
+    harness — `n_chunks` l_orderkey-ranged micro-batches, each mapped
+    to one bucket index per non-null price; a streaming idx count keeps
+    the <= 976 bucket counts in Spark's state store. The audit probes
+    the last batch's complete-mode output, reachable only through the
+    state carried across batches. Exactly once: a rerun on the stream's
+    checkpoint replays only uncommitted batches, on the last committed
+    state."""
     import tempfile
 
-    def delta(bdf: DataFrame) -> DataFrame:
-        return _hist_counts(
-            bdf.filter(F.col("l_extendedprice").isNotNull()).select(
-                F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("v")
-            )
-        )
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    init = li.limit(0).select(
-        F.lit(0).cast("long").alias("idx"), F.lit(0).cast("long").alias("cnt")
-    )
+    li = load(spark, sf_dir, "lineitem")
     with tempfile.TemporaryDirectory(prefix="quantile_stream_") as work:
-        store, n_batches = run_counter_stream(li, "l_orderkey", n_chunks, work, init, delta)
-    return _audit(spark, _with_bounds(store), _cents(spark, sf_dir)), n_batches
+        store, n_batches = count_chunk_stream(
+            li.select("l_orderkey", "l_extendedprice"), "l_orderkey", n_chunks, work,
+            lambda s: _cents(s).select(F.expr(_IDX_SPARK).alias("idx")),
+            "cnt", _MAX_BUCKETS, "quantile_stream",
+        )
+    return _audit(spark, _with_bounds(store), _cents(li)), n_batches
 
 
 @query(
     "stream_quantile_incremental",
     oracle=None,  # set below: shares agg_quantile_sketch_audit's oracle
-    tags=("streaming", "sketch", "quantile", "foreachBatch", "incremental"),
+    tags=("streaming", "sketch", "quantile", "state-store", "incremental"),
 )
 def stream_quantile_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`agg_quantile_sketch_audit` with the bucket store built
+    """`agg_quantile_sketch_audit` with the bucket counts built
     INCREMENTALLY over three l_orderkey-ranged micro-batches (see
     run_quantile_stream). Shares the batch oracle because per-batch
-    bucket deltas sum to exactly the batch-build counters — the
-    located buckets are only reachable through the consolidated
-    cross-batch store, so the value match is a genuine state-carry
+    bucket increments sum to exactly the batch-build counters — the
+    located buckets are only reachable through the state carried
+    across batches, so the value match is a genuine state-carry
     check of sketch mergeability."""
     res, _ = run_quantile_stream(spark, sf_dir, n_chunks=3)
     return res

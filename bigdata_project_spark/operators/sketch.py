@@ -12,8 +12,7 @@ the deterministic form the engine's correctness contract wants:
 - d = 4 rows, w = 1024 counters; row r's position is hex chars
   3r+1..3r+3 of md5(token), decoded nibble-wise, mod 1024 (4096 is a
   multiple of 1024, so the fold is exactly uniform — no modulo
-  bias). Same lambda-bound decode discipline as `bloom.py` (md5
-  evaluated once per row).
+  bias). md5 is evaluated once per row (`_cms_positions`).
 - Build: ONE aggregate keyed by (row, col) — at most 4096 groups no
   matter the corpus size, perfectly map-side-combinable; counters
   are weighted by term frequency, which is identical to streaming
@@ -37,12 +36,15 @@ HLL rows (approx distinct) and Misra-Gries (exact heavy hitters).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.operators.dedup import words_col
+from bigdata_project_spark.operators.staging import count_chunk_stream
 from bigdata_project_spark.registry import REGISTRY, query
-from bigdata_project_spark.tables import load_spread
+from bigdata_project_spark.tables import load, load_spread
 
 _CMS_D = 4  # hash rows
 _CMS_W = 1024  # counters per row
@@ -59,39 +61,36 @@ def _cms_pos_sql(r: int) -> str:
     return "((" + " + ".join(terms) + f") % {_CMS_W})"
 
 
-# Spark-side: all 4 positions from ONE md5 evaluation (lambda-bound,
-# the bloom.py discipline)
-_CMS_POS_ARRAY = f"""
-    transform(array(md5(token)), h ->
-      transform(sequence(0, {_CMS_D - 1}), r ->
-        ((instr('0123456789abcdef', substring(h, r * 3 + 1, 1)) - 1) * 256
-         + (instr('0123456789abcdef', substring(h, r * 3 + 2, 1)) - 1) * 16
-         + (instr('0123456789abcdef', substring(h, r * 3 + 3, 1)) - 1))
-        % {_CMS_W}))[0]
-"""
+# Spark side, md5 once per row: h = its first 12 hex chars as one integer,
+# row r's 3 chars are h's 12 bits at 36 - 12r (`_cms_pos_sql`'s decode).
+# Plain expressions compile to code; a higher-order lambda would not.
+_CMS_H = f"cast(conv(substring(md5(token), 1, {3 * _CMS_D}), 16, 10) as bigint)"
+_CMS_POS_ARRAY = "array(" + ", ".join(
+    f"cast((shiftright(h, {12 * (_CMS_D - 1 - r)}) & 4095) % {_CMS_W} as int)" for r in range(_CMS_D)
+) + ")"
+
+
+def _cms_positions(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, r, col): the d hash positions of each row's `token`."""
+    return df.select(*keep, F.expr(_CMS_H).alias("h")).select(
+        *keep, F.posexplode(F.expr(_CMS_POS_ARRAY)).alias("r", "col")
+    )
+
+
+def _tokens(df: DataFrame) -> DataFrame:
+    """(token): one row per token occurrence of a (.., text) relation."""
+    return df.select(F.explode(words_col(F.col("text"))).alias("token"))
 
 
 def _cms_tf(df: DataFrame) -> DataFrame:
     """(token, exact_count) over a (.., text) relation."""
-    return (
-        df.select(F.explode(words_col(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("exact_count"))
-    )
-
-
-def _cms_entries(tf: DataFrame) -> DataFrame:
-    """(exact_count, r, col): one weighted counter increment per
-    (token, hash row)."""
-    return tf.select(
-        "exact_count", F.posexplode(F.expr(_CMS_POS_ARRAY)).alias("r", "col")
-    )
+    return _tokens(df).groupBy("token").agg(F.count("*").cast("long").alias("exact_count"))
 
 
 def _cms_sketch(tf: DataFrame) -> DataFrame:
     """(r, col, c): the counter table from a term-frequency relation
     — weighted build, identical to streaming the occurrences."""
-    return _cms_entries(tf).groupBy("r", "col").agg(
+    return _cms_positions(tf, "exact_count").groupBy("r", "col").agg(
         F.sum("exact_count").cast("long").alias("c")
     )
 
@@ -100,9 +99,7 @@ def _cms_audit(tf: DataFrame, sketch: DataFrame) -> DataFrame:
     """Top-20 heavy tokens probed against a counter table: exact,
     min-over-rows estimate, overestimate."""
     top = tf.orderBy(F.desc("exact_count"), F.desc("token")).limit(_TOP)
-    probe = top.select(
-        "token", "exact_count", F.posexplode(F.expr(_CMS_POS_ARRAY)).alias("r", "col")
-    )
+    probe = _cms_positions(top, "token", "exact_count")
     return (
         probe.join(F.broadcast(sketch), ["r", "col"])
         .groupBy("token", "exact_count")
@@ -180,47 +177,38 @@ def agg_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- streaming incremental CMS
 
 
+def _cms_increments(docs: DataFrame) -> DataFrame:
+    """(r, col): one counter increment per token occurrence and hash row."""
+    return _cms_positions(_tokens(docs))
+
+
 def run_cms_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> tuple[DataFrame, int]:
     """The count-min sketch in its production home: a STREAM of
     documents, the counter table maintained incrementally across
     micro-batches. Mergeability is THE reason sketches exist at
-    scale — per-batch counter deltas SUM to exactly the batch-build
-    counters (integer addition, order-free) — so the streamed store
-    must reproduce `agg_countmin_audit`'s answer bit for bit, and
-    the streaming query shares its oracle.
+    scale — per-batch counter increments SUM to exactly the
+    batch-build counters (integer addition, order-free) — so the
+    streamed table must reproduce `agg_countmin_audit`'s answer bit
+    for bit, and the streaming query shares its oracle.
 
-    Mechanics (`staging.run_counter_stream`): `n_chunks` doc_id-ranged
-    micro-batches; each sums the batch's unsummed (r, col, c)
-    increments together with the previous store version in ONE
-    (r, col) aggregate (integer sums over a union are order-free, so
-    this equals sketch-then-merge) into a batch-id-keyed store
-    version, and the final audit probes only the last version — a real
-    state-carry check, not a union replay. The store stays <= d x w rows at every version.
-    Unlike the frontier (first-writer-wins needs order), NO
-    delivery-order assertion exists here — counter addition commutes,
-    and that is exactly the property being demonstrated.
+    Mechanics (`staging.count_chunk_stream`): `n_chunks` doc_id-ranged
+    micro-batches, each exploded to one (r, col) row per token and hash
+    row; a streaming (r, col) count keeps the <= d x w counters in
+    Spark's state store, on one state partition. The audit probes the
+    last batch's complete-mode output, reachable only through the state
+    carried across batches. Counter addition commutes, so no delivery
+    order is asserted. Exactly once: a rerun on the stream's checkpoint
+    replays only the batches its commit log lacks, on the last
+    committed state (tests/test_sketch.py kills and restarts one).
 
-    Scale: per micro-batch work is one token count + one <= 4096-group
-    merge aggregate; the store never grows with the corpus."""
-    import tempfile
-
-    from bigdata_project_spark.operators.staging import run_counter_stream
-    from bigdata_project_spark.tables import load
-
+    Scale: per micro-batch work is one token explode + one <= 4096-group
+    state update; the state never grows with the corpus."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    init = docs.limit(0).select(
-        F.lit(0).alias("r"), F.lit(0).alias("col"), F.lit(0).cast("long").alias("c")
-    )
     with tempfile.TemporaryDirectory(prefix="cms_stream_") as work:
-        sketch, n_batches = run_counter_stream(
-            docs,
-            "doc_id",
-            n_chunks,
-            work,
-            init,
-            lambda b: _cms_entries(_cms_tf(b)).withColumnRenamed("exact_count", "c"),
+        sketch, n_batches = count_chunk_stream(
+            docs, "doc_id", n_chunks, work, _cms_increments, "c", _CMS_D * _CMS_W, "cms_stream"
         )
     tf = _cms_tf(load_spread(spark, sf_dir, "documents"))
     return _cms_audit(tf, sketch), n_batches
@@ -229,16 +217,15 @@ def run_cms_stream(
 @query(
     "stream_countmin_incremental",
     oracle=None,  # set below: shares agg_countmin_audit's oracle
-    tags=("streaming", "sketch", "countmin", "foreachBatch", "incremental"),
+    tags=("streaming", "sketch", "countmin", "state-store", "incremental"),
 )
 def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`agg_countmin_audit` with the counter table built INCREMENTALLY
     over three doc_id-ranged micro-batches (see run_cms_stream).
-    Shares the batch oracle because per-batch counter deltas sum to
-    exactly the batch-build counters — the estimates are only
-    reachable through the consolidated cross-batch store, so the
-    value match is a genuine state-carry check of sketch
-    mergeability."""
+    Shares the batch oracle because per-batch counter increments sum
+    to exactly the batch-build counters — the estimates are only
+    reachable through the state carried across batches, so the value
+    match is a genuine state-carry check of sketch mergeability."""
     res, _ = run_cms_stream(spark, sf_dir, n_chunks=3)
     return res
 

@@ -1,27 +1,29 @@
 """Chunk-replay streams: the one harness of the five incremental
-foreachBatch streams (count-min, quantile, URL frontier, semantic
-dedup, audio fingerprint).
+streams over a staged batch relation (count-min, quantile, URL
+frontier, semantic dedup, audio fingerprint).
 
-`run_chunk_stream` stages a batch relation as `n_chunks` key-ranged
+`chunk_source` stages a batch relation as `n_chunks` key-ranged
 parquet chunks and replays them as a file stream, one chunk per
-micro-batch (availableNow, maxFilesPerTrigger=1), through the
-caller's foreachBatch body. A production deployment swaps the staged
-chunks for a Kafka source; the body is unchanged.
+micro-batch (availableNow, maxFilesPerTrigger=1); a production
+deployment swaps in a Kafka source. The count-min and quantile
+counters consume it as a streaming groupBy(keys).count() whose counts
+live in Spark's state store and restart exactly once from the
+stream's checkpoint (`count_chunk_stream`); only the three dedup
+streams run a foreachBatch body (`run_chunk_stream`).
 
 Staging is ONE job (`stage_chunks_one_pass`): a derived chunk id,
 repartition("chunk") so each chunk's rows hash to a single task, and
-a partitionBy("chunk") write. Each chunk directory holds exactly one
-data file, so the micro-batch count and per-batch contents equal the
-old one-filtered-write-per-chunk staging; only the files' write order
-is lost, since they all commit together.
+a partitionBy("chunk") write, so each chunk directory holds exactly
+one data file. The files' write order is lost, since they all commit
+together.
 
 Delivery order is the one thing the caller declares:
 - ORDER-FREE streams (`ordered=False`) merge commutatively across
-  micro-batches: counter addition (the count-min and quantile stores,
-  `run_counter_stream`) and pair-set union (the audio-fingerprint
-  probe emits a cross-batch pair from whichever batch arrives second,
-  and its reader unions every committed version). Any delivery order
-  gives the same answer.
+  micro-batches: counter addition (the count-min and quantile
+  counts) and pair-set union (the audio-fingerprint probe emits a
+  cross-batch pair from whichever batch arrives second, and its
+  reader unions every committed version). Any delivery order gives
+  the same answer.
 - ORDERED streams (`ordered=True`: URL frontier first-writer-wins,
   in-order semantic dedup) need ascending key order. The file source
   orders by mtime with unspecified tie order, so the harness pins
@@ -40,8 +42,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from bigdata_project_spark.caching import barrier
 
 
 class AppendStore:
@@ -87,19 +87,12 @@ def stage_chunks_one_pass(
     )
 
 
-def run_chunk_stream(
-    df: DataFrame,
-    key: str,
-    n_chunks: int,
-    body: Callable[[DataFrame, int], None],
-    work: str,
-    ordered: bool,
-) -> int:
-    """Replay `df` through foreachBatch `body` as `n_chunks`
-    `key`-ranged micro-batches staged under `work`; returns the
-    micro-batch count. The key bounds read only the `key` column, so
-    columns that are costly to compute (the synthesized audio
-    payloads) are computed once, by the staging job."""
+def chunk_source(df: DataFrame, key: str, n_chunks: int, work: str, ordered: bool) -> DataFrame:
+    """Stage `df` under `work` as `n_chunks` `key`-ranged chunks and
+    return the file stream that replays them, one chunk per
+    micro-batch. The key bounds read only the `key` column, so columns
+    that are costly to compute (the synthesized audio payloads) are
+    computed once, by the staging job."""
     src_dir = os.path.join(work, "src")
     lo, hi = df.agg(F.min(key), F.max(key)).first()
     empty = lo is None
@@ -117,11 +110,27 @@ def run_chunk_stream(
             for root, _dirs, files in os.walk(os.path.join(src_dir, f"chunk={i}")):
                 for fn in files:
                     os.utime(os.path.join(root, fn), (t, t))
-    sq = (
+    return (
         df.sparkSession.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(src_dir)
+    )
+
+
+def run_chunk_stream(
+    df: DataFrame,
+    key: str,
+    n_chunks: int,
+    body: Callable[[DataFrame, int], None],
+    work: str,
+    ordered: bool,
+) -> int:
+    """Replay `df` through foreachBatch `body` as `n_chunks`
+    `key`-ranged micro-batches staged under `work` (`chunk_source`);
+    returns the micro-batch count."""
+    sq = (
+        chunk_source(df, key, n_chunks, work, ordered)
         .writeStream.foreachBatch(body)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
@@ -131,70 +140,18 @@ def run_chunk_stream(
     return len(sq.recentProgress)
 
 
-def run_counter_stream(
-    df: DataFrame,
-    key: str,
-    n_chunks: int,
-    work: str,
-    init: DataFrame,
-    delta: Callable[[DataFrame], DataFrame],
+def count_chunk_stream(
+    df: DataFrame, key: str, n_chunks: int, work: str,
+    increments: Callable[[DataFrame], DataFrame], count: str, state_rows: int, name: str,
 ) -> tuple[DataFrame, int]:
-    """An order-free `run_chunk_stream` that sums each micro-batch's
-    counter `delta(batch)` into a consolidated store. `init` is the
-    empty store; its last column is the count, the others the counter
-    key. `delta` may return unsummed increments: the merge's one
-    groupBy sums them together with the store. Returns (final store
-    behind a barrier, micro-batch count).
+    """Count `increments` (one row per increment, every column a
+    counter key) over `n_chunks` `key`-ranged micro-batches of `df`:
+    a complete-mode streaming groupBy-count into the memory-sink table
+    `name`, at most `state_rows` counters, checkpointed under
+    `work/ckpt`. Returns (the counter table, micro-batch count)."""
+    from bigdata_project_spark.streaming.pipeline import run_to_memory  # imports this module
 
-    There is no initial version on disk: batch 0 merges into `init`
-    itself, and on empty input (no micro-batch) the result is `init`
-    behind the barrier. Every store read is pinned to `init.schema`,
-    so no read pays a parquet schema-inference job.
-
-    Store versions are KEYED BY BATCH ID and a completed version is
-    never re-merged (its `_SUCCESS` marker gates a skip), so an
-    at-least-once redelivery — foreachBatch's contract under a real
-    Kafka source — merges each delta exactly once. The final store is
-    reachable only through every earlier version, so reading it back
-    checks the cross-batch state carry. The pointer to the newest
-    version lives in driver memory, which scopes it to one
-    availableNow run; a restartable deployment would persist it next
-    to the versions.
-
-    The stream's checkpoint sits under `work`, which every caller makes
-    a temporary directory. So a replay's orphan temporary files (the
-    session's FileSystem checkpoint manager keeps an existing file and
-    leaves the rewrite's temp file beside it; see `session`) are
-    removed with it."""
-    spark = df.sparkSession
-    *group, count = init.columns
-    # [path, last merged batch id], no path before the first merge:
-    # versions are cumulative, so a redelivery of an OLDER completed
-    # batch must not roll the pointer back to a version missing later
-    # merges
-    latest: list = [None, -1]
-
-    def store() -> DataFrame:
-        if latest[0] is None:
-            return init
-        return spark.read.schema(init.schema).parquet(latest[0])
-
-    def merge_batch(bdf: DataFrame, bid: int) -> None:
-        nxt = os.path.join(work, f"v_b{bid}")
-        if os.path.exists(os.path.join(nxt, "_SUCCESS")):
-            if bid >= latest[1]:  # retry of the newest completed batch
-                latest[0], latest[1] = nxt, bid
-            return
-        merged = (
-            store()
-            .unionByName(delta(bdf))
-            .groupBy(*group)
-            .agg(F.sum(count).cast("long").alias(count))
-        )
-        # overwrite clears a half-written version from a crashed
-        # attempt; the _SUCCESS marker commits it
-        merged.write.mode("overwrite").parquet(nxt)
-        latest[0], latest[1] = nxt, bid
-
-    n_batches = run_chunk_stream(df, key, n_chunks, merge_batch, work, ordered=False)
-    return barrier(store(), eager=True), n_batches
+    inc = increments(chunk_source(df, key, n_chunks, work, ordered=False))
+    counts = inc.groupBy(*inc.columns).agg(F.count("*").alias(count))
+    n_batches = run_to_memory(counts, name, "complete", state_rows, os.path.join(work, "ckpt"))
+    return df.sparkSession.table(name), n_batches

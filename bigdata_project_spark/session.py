@@ -41,11 +41,19 @@ target: the manager keeps the first file and leaves the rewrite's
 `.N.delta.<uuid>.tmp` (and the temp of its checksum file) next to
 it. Both files hold the same replayed state, so the result is the
 same (tests/test_streaming.py pins it); the package's stream
-checkpoints are temporary directories, so the orphans go with them. This factory builds `local[...]` sessions
-only. A cluster session keeps Spark's default manager: on HDFS or an
-object store, FileContext's rename-with-overwrite is the atomic
-commit, and the per-file shell-out does not arise where `libhadoop`
-is installed.
+checkpoints are temporary directories, so the orphans go with them.
+
+A stateful stream keeps one state-store partition per shuffle
+partition, each writing a delta file and checksum per micro-batch,
+fixed at its first checkpoint. So every stream in the package starts
+inside `streaming.pipeline.sized_state`: one partition per
+`_STATE_ROWS_PER_PARTITION` rows of its state bound, at least one and
+at most the session's value, which the session's own queries keep.
+
+This factory builds `local[...]` sessions only. A cluster session
+keeps Spark's default manager: on HDFS or an object store,
+FileContext's rename-with-overwrite is the atomic commit, and the
+per-file shell-out does not arise where `libhadoop` is installed.
 """
 
 from __future__ import annotations

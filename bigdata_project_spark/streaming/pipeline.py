@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +42,7 @@ from bigdata_project_spark.caching import barrier
 from bigdata_project_spark.exact import SQL_DSUM, dcast, dsum
 from bigdata_project_spark.operators.staging import AppendStore
 from bigdata_project_spark.registry import query
-from bigdata_project_spark.tables import load, parquet_schema
+from bigdata_project_spark.tables import load, parquet_row_count, parquet_schema
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -104,30 +106,69 @@ def read_kafka_stream(spark: SparkSession, brokers: str, topic: str, schema) -> 
     return decode_kafka_value(raw, schema)
 
 
-def run_available_now(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink and
-    return the materialized result as a batch DataFrame.
+# A state partition costs each batch about 9 ms (delta file, checksum,
+# their shell-outs) on a 4-vCPU host, but a per-row stateful operator
+# runs only as parallel as its partitions: at 100,000 events one
+# partition made stream_stateful_max_jump 2.8x slower than four.
+_STATE_ROWS_PER_PARTITION = 25_000
 
-    The checkpoint is a temporary directory, removed once the query
-    terminates, so a replay's orphan temporary state-store files (the
-    session's FileSystem checkpoint manager keeps an existing file and
-    leaves the rewrite's temp file beside it; see `session`) go with
-    it."""
+
+def state_partitions(state_rows: int, shuffle_partitions: int) -> int:
+    """State partitions for at most `state_rows` rows of state: one per
+    `_STATE_ROWS_PER_PARTITION`, at least 1, at most `shuffle_partitions`."""
+    return max(1, min(shuffle_partitions, -(-state_rows // _STATE_ROWS_PER_PARTITION)))
+
+
+@contextmanager
+def sized_state(spark: SparkSession, state_rows: int) -> Iterator[None]:
+    """Around a stream's `start()`: its shuffle (so state) partitions
+    are `state_partitions(state_rows, <session's>)`. The query clones
+    the session conf at start and batch 0 records the value in the
+    offset log, where a restart reads it; the session's own value is
+    restored on exit."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, str(state_partitions(state_rows, int(session_value))))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, session_value)
+
+
+def run_to_memory(
+    stream_df: DataFrame, name: str, output_mode: str, state_rows: int, checkpoint: str
+) -> int:
+    """Run a streaming DataFrame to completion into the memory-sink
+    table `name`, holding at most `state_rows` rows of state; returns
+    the micro-batch count."""
     spark = stream_df.sparkSession
     spark.catalog.dropTempView(name)  # False when there is none; no catalog scan
-    # the memory-sink table does not read the checkpoint once the
-    # query has terminated
-    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_", ignore_cleanup_errors=True) as ckpt:
+    with sized_state(spark, state_rows):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    return spark.table(name)
+    q.awaitTermination()
+    return len(q.recentProgress)
+
+
+def run_available_now(stream_df: DataFrame, name: str, output_mode: str, state_rows: int) -> DataFrame:
+    """`run_to_memory` on a temporary checkpoint; returns the result
+    as a batch DataFrame. The memory-sink table does not read the
+    checkpoint once the query has terminated, and removing it removes
+    a replay's orphan temporary state-store files too (`session`)."""
+    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_", ignore_cleanup_errors=True) as ckpt:
+        run_to_memory(stream_df, name, output_mode, state_rows, ckpt)
+    return stream_df.sparkSession.table(name)
+
+
+def _events_rows(sf_dir: str) -> int:
+    """No aggregation, dedup or join buffer holds more state rows."""
+    return parquet_row_count(f"{sf_dir}/events.parquet")
 
 
 @query(
@@ -158,7 +199,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return run_available_now(agg, "stream_tumbling_hourly", "complete")
+    return run_available_now(agg, "stream_tumbling_hourly", "complete", _events_rows(sf_dir))
 
 
 @query(
@@ -175,7 +216,7 @@ def stream_dedup_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent)."""
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     dedup = ev.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
-    return run_available_now(dedup, "stream_dedup_user_type", "append")
+    return run_available_now(dedup, "stream_dedup_user_type", "append", _events_rows(sf_dir))
 
 
 @query(
@@ -215,7 +256,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = purchases.join(clicks, cond).select(
         "purchase_id", "click_id", F.col("p_user").alias("user_id")
     )
-    return run_available_now(joined, "stream_stream_interval_join", "append")
+    return run_available_now(joined, "stream_stream_interval_join", "append", _events_rows(sf_dir))
 
 
 @query(
@@ -245,7 +286,8 @@ def stream_sliding_30m_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.unix_micros(F.col("w.start")).alias("window_start_us"), "n_events")
     )
-    return run_available_now(agg, "stream_sliding_30m_10m", "complete")
+    # each event opens up to 3 windows
+    return run_available_now(agg, "stream_sliding_30m_10m", "complete", 3 * _events_rows(sf_dir))
 
 
 @query(
@@ -289,7 +331,7 @@ def stream_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-    return run_available_now(agg, "stream_session_30m", "complete")
+    return run_available_now(agg, "stream_session_30m", "complete", _events_rows(sf_dir))
 
 
 @query(
@@ -323,7 +365,7 @@ def stream_static_join_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.unix_micros(F.col("w.start")).alias("window_start_us"), "n_events", "weighted_value")
     )
-    return run_available_now(agg, "stream_static_join_weighted", "complete")
+    return run_available_now(agg, "stream_static_join_weighted", "complete", _events_rows(sf_dir))
 
 
 def _max_jump_fn(key, pdf_iter, state):
@@ -396,7 +438,7 @@ def stream_stateful_max_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_available_now(out, "stream_stateful_max_jump", "update")
+    return run_available_now(out, "stream_stateful_max_jump", "update", _events_rows(sf_dir))
 
 
 @query(
@@ -453,13 +495,14 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with tempfile.TemporaryDirectory(prefix="rollup_", ignore_cleanup_errors=True) as work:
         store = AppendStore(os.path.join(work, "store"))
-        q = (
-            hourly.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
+        with sized_state(spark, _events_rows(sf_dir)):
+            q = (
+                hourly.writeStream.foreachBatch(upsert)
+                .outputMode("update")
+                .option("checkpointLocation", os.path.join(work, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
         q.awaitTermination()
 
         raw = store.read(spark)
@@ -514,7 +557,7 @@ def stream_daily_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_users"))
         .select(F.unix_micros("day").alias("day_start_us"), "n_users")
     )
-    return run_available_now(daily, "stream_daily_distinct_users", "complete")
+    return run_available_now(daily, "stream_daily_distinct_users", "complete", _events_rows(sf_dir))
 
 
 @query(
@@ -550,7 +593,7 @@ def stream_exactly_once_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled = a.unionAll(b).withWatermark("ts", "1 hour")
     once = doubled.dropDuplicatesWithinWatermark(["event_id"])
     counts = once.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    return run_available_now(counts, "stream_exactly_once_dedup", "complete")
+    return run_available_now(counts, "stream_exactly_once_dedup", "complete", _events_rows(sf_dir))
 
 
 @query(
@@ -629,7 +672,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     joined = purchases.join(clicks, cond, "left_outer").select(
         "purchase_id", "click_id", F.col("p_user").alias("user_id")
     )
-    return run_available_now(joined, "stream_stream_left_outer_join", "append")
+    return run_available_now(joined, "stream_stream_left_outer_join", "append", _events_rows(sf_dir))
 
 
 @query(
@@ -673,7 +716,7 @@ def stream_topk_types_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.unix_micros("w.start").alias("day_start_us"), "event_type", "n_events")
     )
-    agg = run_available_now(daily, "stream_topk_types_daily", "complete")
+    agg = run_available_now(daily, "stream_topk_types_daily", "complete", _events_rows(sf_dir))
     w = Window.partitionBy("day_start_us").orderBy(F.desc("n_events"), "event_type")
     return agg.select("*", F.row_number().over(w).alias("rnk")).filter(F.col("rnk") <= 3)
 
@@ -755,6 +798,6 @@ def stream_quarantine_gated_daily(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_rows",
         )
     )
-    a = run_available_now(clean_daily, "stream_quarantine_clean_daily", "complete")
-    b = run_available_now(quarantined, "stream_quarantine_flagged", "complete")
+    a = run_available_now(clean_daily, "stream_quarantine_clean_daily", "complete", _events_rows(sf_dir))
+    b = run_available_now(quarantined, "stream_quarantine_flagged", "complete", _events_rows(sf_dir))
     return a.unionByName(b)

@@ -20,12 +20,17 @@ bytes under other confs misses it too. Only regular files are cached;
 a directory (a lake) can change beneath an unchanged directory mtime,
 so it is inferred on every read as before. A schema given to the
 reader adds no operator, so plans are unchanged.
+
+`parquet_row_count` reads a file's footer row count with pyarrow, no
+Spark job, cached under the file-version key (confs do not change a
+count); the streaming queries bound their state with it.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,9 +66,10 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
 )
-# path -> (file version and inference confs, schema): one slot per
-# path, so rewrites replace their entry instead of growing the cache
+# path -> (file version [and inference confs], schema | footer row count):
+# one slot per path, so rewrites replace their entry, not grow the cache
 _schemas: dict[str, tuple[tuple, T.StructType]] = {}
+_row_counts: dict[str, tuple[tuple, int]] = {}
 
 
 def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -77,6 +83,18 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     hit = _schemas.get(path)
     if hit is None or hit[0] != version:
         hit = _schemas[path] = (version, spark.read.parquet(path).schema)
+    return hit[1]
+
+
+def parquet_row_count(path: str) -> int:
+    """The row count the footer of the parquet file at `path` records
+    (module docstring)."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    version = (st.st_size, st.st_mtime_ns)
+    hit = _row_counts.get(path)
+    if hit is None or hit[0] != version:
+        hit = _row_counts[path] = (version, pq.read_metadata(path).num_rows)
     return hit[1]
 
 

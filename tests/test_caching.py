@@ -12,8 +12,9 @@ from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
 
-# the queries that persist / localCheckpoint during build or execution
-# (the incremental streams read their final store back behind a barrier)
+# the queries that persist / localCheckpoint during build or execution,
+# and the two counter streams, whose state-store counts must leave no
+# cache behind either
 _CACHING_QUERIES = [
     "dedup_minhash_lsh",
     "dedup_cluster_components",

@@ -38,13 +38,13 @@ def test_trained_stack_recall_ge_label_stack(spark, sf):
 def test_trained_codes_differ_from_label_codes(spark, sf_dir):
     from bigdata_project_spark.caching import tracked_persist
     from bigdata_project_spark.operators.kmeans import _km_assign, _km_trained
-    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode
-    from bigdata_project_spark.operators.pq_residual import _res_subs, _res_unit
+    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode, _pq_unit
+    from bigdata_project_spark.operators.pq_residual import _res_subs
     from bigdata_project_spark.operators.vecmath import FLOOR, centroids
     from pyspark.sql import functions as F
 
     # label-cell residual codes
-    unit_l = _res_unit(spark, sf_dir)
+    unit_l = _pq_unit(spark, sf_dir, keep=("vec_id", "label"))
     ucent_l = tracked_persist(centroids(unit_l, ["label"], "u", FLOOR))
     subs_l = tracked_persist(_res_subs(unit_l, ucent_l))
     label_codes = {

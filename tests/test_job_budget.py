@@ -28,18 +28,20 @@ BUDGETS = {
     "multimodal_audio_dedup_keeper": 32,
     "multimodal_dhash_dedup_keeper": 32,
     "split_cluster_aware_assign": 33,
-    "stream_countmin_incremental": 18,
+    "stream_countmin_incremental": 11,
+    "stream_quantile_incremental": 17,
     "stream_tumbling_hourly": 2,
     "stream_url_frontier_dedup": 34,
     "stream_semantic_incremental_dedup": 46,
 }
-# processes started per warm run, as (fixed, per shuffle partition):
-# the measured count plus about 25%. The tumbling window's state store
-# writes its files per shuffle partition; the count-min harness's
-# writes do not grow with it.
+# processes started per warm run: the measured count plus about 25%. A
+# stream's state store writes its files per state partition, and the
+# streams size those to their state (`pipeline.state_partitions`), so
+# no budget grows with the core count.
 PROCESS_BUDGETS = {
-    "stream_countmin_incremental": (213, 0),
-    "stream_tumbling_hourly": (51, 19),
+    "stream_countmin_incremental": 183,
+    "stream_quantile_incremental": 201,
+    "stream_tumbling_hourly": 72,
 }
 # tables whose schemas a query reads; loaded once first so that a
 # budget does not depend on which test ran before it
@@ -52,6 +54,7 @@ _INPUTS = {
     "multimodal_dhash_dedup_keeper": ("documents",),
     "split_cluster_aware_assign": ("documents",),
     "stream_countmin_incremental": ("documents",),
+    "stream_quantile_incremental": ("lineitem",),
     "stream_tumbling_hourly": ("events",),
     "stream_url_frontier_dedup": ("documents",),
     "stream_semantic_incremental_dedup": ("embeddings",),
@@ -129,8 +132,7 @@ def test_stream_within_process_budget(spark, sf_dir, name):
     def run():
         all_queries()[name](spark, sf_dir).collect()
 
-    fixed, per_partition = PROCESS_BUDGETS[name]
-    budget = fixed + per_partition * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    budget = PROCESS_BUDGETS[name]
     run()  # warm: Python workers, schema cache, first-use classes
     # the best of three runs: a burst of block removals can grow the
     # block manager's thread pools by dozens of threads in one run

@@ -125,11 +125,11 @@ def test_residual_codes_differ_from_raw_codes(spark, sf_dir):
         for r in qs["sim_pq_codes"](spark, sf_dir).collect()
     }
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode
-    from bigdata_project_spark.operators.pq_residual import _res_subs, _res_unit
+    from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode, _pq_unit
+    from bigdata_project_spark.operators.pq_residual import _res_subs
     from bigdata_project_spark.operators.vecmath import FLOOR, centroids
 
-    unit = _res_unit(spark, sf_dir)
+    unit = _pq_unit(spark, sf_dir, keep=("vec_id", "label"))
     ucent = tracked_persist(centroids(unit, ["label"], "u", FLOOR))
     subs = tracked_persist(_res_subs(unit, ucent))
     codes = _pq_encode(subs, _pq_codebook(subs), ["vec_id", "label"])

@@ -22,6 +22,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.tables import load
+
 SFS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
 
@@ -45,7 +47,7 @@ def test_store_bound_and_value_containment(spark, sf_dir):
         _with_bounds,
     )
 
-    cents = _cents(spark, sf_dir)
+    cents = _cents(load(spark, sf_dir, "lineitem"))
     hist = _with_bounds(_hist_counts(cents))
     assert hist.count() <= 976
     joined = cents.select("v", F.expr(_IDX_SPARK).alias("idx")).join(
@@ -60,7 +62,7 @@ def test_store_bound_and_value_containment(spark, sf_dir):
 def test_merge_equals_one_shot(spark, sf_dir):
     from bigdata_project_spark.operators.quantile import _cents, _hist_counts
 
-    cents = _cents(spark, sf_dir)
+    cents = _cents(load(spark, sf_dir, "lineitem"))
     full = {r["idx"]: r["cnt"] for r in _hist_counts(cents).collect()}
     a = _hist_counts(cents.filter(F.col("v") % 2 == 0))
     b = _hist_counts(cents.filter(F.col("v") % 2 != 0))

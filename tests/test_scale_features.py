@@ -65,7 +65,10 @@ def test_apply_in_pandas_with_state(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    result = run_available_now(counted, "t_stateful_counts", "update")
+    from bigdata_project_spark.tables import parquet_row_count
+
+    n_events = parquet_row_count(f"{sf_dir}/events.parquet")
+    result = run_available_now(counted, "t_stateful_counts", "update", n_events)
     got = {r["user_id"]: r["n"] for r in result.collect()}
     expected = {
         r["user_id"]: r["n"]

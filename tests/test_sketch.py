@@ -78,55 +78,55 @@ def test_stream_cms_counts_cross_chunk_tokens(spark, tmp_path_factory):
     assert out["heavy"]["cms_estimate"] == 50
 
 
-def test_counter_stream_replayed_batch_merges_once(spark, sf_dir, tmp_path, monkeypatch):
-    """At-least-once redelivery under an injected fault: the driver
-    dies after the last micro-batch's store version committed but
-    before Spark's commit log recorded the batch. A rerun on the same
-    work dir replays that batch; its `_SUCCESS`-marked version must be
-    skipped, not merged a second time, and the returned store must
-    still equal the batch-built counters."""
+def test_cms_stream_restart_replays_uncommitted_batch_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Kill and restart under an injected fault: the driver dies after
+    the last micro-batch's state committed but before Spark's commit
+    log recorded the batch. A rerun on the same checkpoint replays that
+    one batch on the last committed state, so its increments are
+    counted once and the counters still equal the batch build. The
+    stream keeps the state partitions its first batch recorded, whatever
+    the session's value is at the restart."""
+    import json
     import os
-    import shutil
-
-    from pyspark.sql import functions as F
 
     from bigdata_project_spark.operators import staging
-    from bigdata_project_spark.operators.sketch import _cms_sketch, _cms_tf
+    from bigdata_project_spark.operators.sketch import (
+        _CMS_D,
+        _CMS_W,
+        _cms_increments,
+        _cms_sketch,
+        _cms_tf,
+    )
     from bigdata_project_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    init = docs.limit(0).select(
-        F.lit(0).alias("r"), F.lit(0).alias("col"), F.lit(0).cast("long").alias("c")
-    )
-    merged: list[int] = []
-
-    def delta(b):
-        merged.append(1)
-        return _cms_sketch(_cms_tf(b))
-
     batch = sorted(tuple(r) for r in _cms_sketch(_cms_tf(docs)).collect())
     work = str(tmp_path)
-    store, n_batches = staging.run_counter_stream(docs, "doc_id", 3, work, init, delta)
-    assert n_batches == 3 and len(merged) == 3
-    assert sorted(tuple(r) for r in store.collect()) == batch
+
+    def run():
+        table, n_batches = staging.count_chunk_stream(
+            docs, "doc_id", 3, work, _cms_increments, "c", _CMS_D * _CMS_W, "t_cms_restart"
+        )
+        return sorted(tuple(r) for r in table.select("r", "col", "c").collect()), n_batches
+
+    assert run() == (batch, 3)
 
     commits = os.path.join(work, "ckpt", "commits")
     last = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    for f in (str(last), f".{last}.crc"):
-        if os.path.exists(os.path.join(commits, f)):
-            os.remove(os.path.join(commits, f))
-    version = os.path.join(work, f"v_b{last}")
-    files = {f: os.stat(os.path.join(version, f)).st_mtime_ns for f in os.listdir(version)}
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
 
     # the source keeps its records across the restart, as a Kafka
     # topic would: the rerun must not re-stage the chunks
     monkeypatch.setattr(staging, "stage_chunks_one_pass", lambda *a, **k: None)
-    # only the batch-id-keyed versions are replayed state; an empty
-    # initial version (an older store layout wrote one) is not
-    shutil.rmtree(os.path.join(work, "v_init"), ignore_errors=True)
-    merged.clear()
-    store, n_batches = staging.run_counter_stream(docs, "doc_id", 3, work, init, delta)
-    assert n_batches == 1, "Spark did not replay the uncommitted batch"
-    assert not merged, "the replayed batch was merged a second time"
-    assert {f: os.stat(os.path.join(version, f)).st_mtime_ns for f in os.listdir(version)} == files
-    assert sorted(tuple(r) for r in store.collect()) == batch
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, str(int(session_value) + 3))
+    try:
+        assert run() == (batch, 1), "the uncommitted batch was not replayed exactly once"
+    finally:
+        spark.conf.set(key, session_value)
+    offsets = os.path.join(work, "ckpt", "offsets")
+    for f in (f for f in os.listdir(offsets) if f.isdigit()):
+        with open(os.path.join(offsets, f)) as fh:
+            assert json.loads(fh.read().splitlines()[1])["conf"][key] == "1", f

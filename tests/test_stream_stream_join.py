@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.streaming.pipeline import read_events_stream, run_available_now
-from bigdata_project_spark.tables import load
+from bigdata_project_spark.tables import load, parquet_row_count
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
@@ -37,7 +37,9 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts"))
     )
     joined = purchases.join(clicks, cond).select("p_id", "c_id")
-    result = run_available_now(joined, "t_ss_join", "append")
+    result = run_available_now(
+        joined, "t_ss_join", "append", parquet_row_count(f"{sf_dir}/events.parquet")
+    )
 
     bev = load(spark, sf_dir, "events")
     bp = bev.filter(F.col("event_type") == "purchase").select(

@@ -12,7 +12,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from bigdata_project_spark.streaming.pipeline import read_events_stream, run_available_now
+from bigdata_project_spark.streaming.pipeline import _events_rows, read_events_stream, run_available_now
 
 
 def test_stream_is_streaming(spark, sf_dir):
@@ -29,7 +29,7 @@ def test_tumbling_agg_matches_batch(spark, sf_dir):
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w")).agg(F.count("*").alias("n"))
     result = run_available_now(
-        agg.select(F.col("w.start").alias("ws"), "n"), "t_tumbling", "complete"
+        agg.select(F.col("w.start").alias("ws"), "n"), "t_tumbling", "complete", _events_rows(sf_dir)
     )
     assert ckpt_dirs() <= ckpts_before, "run_available_now left its checkpoint dir behind"
     batch = (
@@ -91,7 +91,7 @@ def test_foreach_batch_upsert(spark, sf_dir, tmp_path):
 def test_streaming_dedup_bounded_state(spark, sf_dir):
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     dedup = ev.dropDuplicates(["user_id"]).select("user_id")
-    result = run_available_now(dedup, "t_dedup_users", "append")
+    result = run_available_now(dedup, "t_dedup_users", "append", _events_rows(sf_dir))
     n_users = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id").distinct().count()
     assert result.count() == n_users
 
@@ -103,7 +103,10 @@ def test_session_window_stream(spark, sf_dir, mode):
         F.count("*").alias("n")
     )
     result = run_available_now(
-        agg.select("user_id", F.col("w.start").alias("ws"), "n"), "t_sessions", "append"
+        agg.select("user_id", F.col("w.start").alias("ws"), "n"),
+        "t_sessions",
+        "append",
+        _events_rows(sf_dir),
     )
     # availableNow + append emits only watermark-closed sessions; all
     # sessions older than max(ts) - 1h are closed, so nearly all rows
@@ -301,7 +304,7 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     )
     from bigdata_project_spark.streaming.pipeline import run_available_now
 
-    got = {r["ws"]: r["n"] for r in run_available_now(agg, "t_late_drop", "append").collect()}
+    got = {r["ws"]: r["n"] for r in run_available_now(agg, "t_late_drop", "append", 6).collect()}
 
     us = 1_000_000
     # the late (base - H) event arrives when the committed watermark
@@ -407,3 +410,42 @@ def test_session_checkpoint_manager_keeps_first_state_file_on_replay(spark, lost
     deltas_first, deltas_replay = lost_commit_replay["deltas"]
     assert deltas_first and deltas_replay == deltas_first
     assert len(lost_commit_replay["orphans"]) == len(deltas_first)
+
+
+def test_state_partitions_rule():
+    """One state partition per `_STATE_ROWS_PER_PARTITION` rows of
+    state bound, at least one, at most the session's shuffle
+    partitions (the core count)."""
+    from bigdata_project_spark.streaming.pipeline import _STATE_ROWS_PER_PARTITION as per
+    from bigdata_project_spark.streaming.pipeline import state_partitions
+
+    assert state_partitions(0, 4) == 1
+    assert state_partitions(per, 4) == 1
+    assert state_partitions(per + 1, 4) == 2
+    assert state_partitions(3 * per, 8) == 3
+    assert state_partitions(10 * per, 4) == 4
+    assert state_partitions(10 * per, 2) == 2
+
+
+def test_stream_state_partitions_leave_session_unchanged(spark, sf_dir, tmp_path, monkeypatch):
+    """stream_tumbling_hourly holds a few hundred rows of state: its
+    stream records one shuffle partition in the offset log, and the
+    session's own value is the same after the run as before it."""
+    import json
+
+    from bigdata_project_spark.registry import all_queries
+    from bigdata_project_spark.streaming import pipeline
+
+    run_to_memory = pipeline.run_to_memory
+
+    def keep_checkpoint(stream_df, name, output_mode, state_rows, _checkpoint):
+        return run_to_memory(stream_df, name, output_mode, state_rows, str(tmp_path / name))
+
+    monkeypatch.setattr(pipeline, "run_to_memory", keep_checkpoint)
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    assert int(session_value) > 1, "the session already runs one shuffle partition"
+    assert all_queries()["stream_tumbling_hourly"](spark, sf_dir).count() > 0
+    assert spark.conf.get(key) == session_value
+    offset0 = tmp_path / "stream_tumbling_hourly" / "offsets" / "0"
+    assert json.loads(offset0.read_text().splitlines()[1])["conf"][key] == "1"

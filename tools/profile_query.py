@@ -24,8 +24,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def _n_jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+def _newest_job(spark) -> int:
+    """Id of the newest job, -1 before the first. Job ids are dense and
+    increasing, so a difference of two reads counts the jobs between
+    them; the size of `jobsList` would stop growing at
+    `spark.ui.retainedJobs`."""
+    sc = spark.sparkContext._jsc.sc()
+    # the status store is fed asynchronously by the listener bus
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
 
 
 def profile(spark, name: str, sf_dir: str) -> dict:
@@ -35,7 +43,7 @@ def profile(spark, name: str, sf_dir: str) -> dict:
     spark.sparkContext.setJobDescription(f"profile:{name}")
     out: dict = {"query": name}
     for phase in ("warm", "timed"):
-        jobs0 = _n_jobs(spark)
+        jobs0 = _newest_job(spark)
         t0 = time.perf_counter()
         df = REGISTRY[name].fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -52,7 +60,7 @@ def profile(spark, name: str, sf_dir: str) -> dict:
                 analyze_s=round(t2 - t1, 3),
                 exec_s=round(t3 - t2, 3),
                 total_s=round(t3 - t0, 3),
-                jobs=_n_jobs(spark) - jobs0,
+                jobs=_newest_job(spark) - jobs0,
                 plan_bytes=len(plan_txt),
             )
         release_cached(spark, sweep_all=True)
