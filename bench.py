@@ -346,17 +346,15 @@ def _swap_modules(mods: dict) -> dict:
     return out
 
 
-def _load_ref_registry(ref: str):
-    """Materialize REF (git archive -> temp dir) and import its
+def _load_ref_registry(ref: str, tmp: str):
+    """Materialize REF (git archive -> `tmp`) and import its
     registry and caching modules under an isolated sys.modules
     snapshot. Returns (registry dict, release_cached, REF's modules).
     A REF query runs with REF's modules installed (`_swap_modules`), so
     an import inside a REF function resolves to REF's code."""
     import subprocess
-    import tempfile
 
     repo = str(Path(__file__).resolve().parent)
-    tmp = tempfile.mkdtemp(prefix="bench_ab_ref_")
     tar = subprocess.run(
         ["git", "archive", ref], cwd=repo, check=True, stdout=subprocess.PIPE
     ).stdout
@@ -377,8 +375,17 @@ def _load_ref_registry(ref: str):
 
 
 def main_ab(ref: str, names: list[str] | None, repeats: int) -> None:
+    """Time REF against the working tree; REF's archive lives in a
+    temporary directory removed on return, error or not."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory(prefix="bench_ab_ref_") as tmp:
+        _main_ab(ref, names, repeats, tmp)
+
+
+def _main_ab(ref: str, names: list[str] | None, repeats: int, tmp: str) -> None:
     _ensure_loaded()
-    ref_registry, ref_release, ref_modules = _load_ref_registry(ref)
+    ref_registry, ref_release, ref_modules = _load_ref_registry(ref, tmp)
     spark = get_spark("bench-ab")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -68,6 +68,7 @@ from bigdata_project_spark.operators.dedup import (
     sql_pigeonhole_hamming,
     sql_pigeonhole_verify,
 )
+from bigdata_project_spark.operators.staging import BatchStore, run_chunk_stream
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
@@ -329,59 +330,31 @@ def multimodal_audio_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _afp_probe_batch(
-    spark: SparkSession, bdf: DataFrame, bid: int, seen_store: str, out_store: str
-) -> None:
+# the stream's one store: a batch's signatures (kind 'sig') and the
+# pairs it emitted (kind 'pair'), written together
+_AFP_STORE_SCHEMA = "kind string, doc_id long, afp64 string, doc_a long, doc_b long, hamming int"
+
+
+def _afp_probe_batch(spark: SparkSession, bdf: DataFrame, bid: int, store: BatchStore) -> None:
     """One micro-batch of the incremental near-dup ingest: decode +
     fingerprint the batch, emit every <= 3-Hamming pair with >= 1
-    batch member against (store minus this batch) + batch, commit the
-    pair emission THEN the store upsert, both batch-id-keyed. Module-
-    level (not a closure) so tests/test_afp.py can redeliver batches
-    directly and pin the idempotency claims the docstring makes."""
-    import os
-
-    out_dir = os.path.join(out_store, f"b{bid}")
-    sig_dir = os.path.join(seen_store, f"b{bid}")
-    if os.path.exists(os.path.join(out_dir, "_SUCCESS")) and os.path.exists(
-        os.path.join(sig_dir, "_SUCCESS")
-    ):
-        return  # retry of a fully committed batch
+    batch member against the earlier batches' signatures + the batch,
+    and write the batch's signatures and pairs in one store write.
+    Module-level (not a closure) so tests/test_afp.py can redeliver
+    batches directly."""
     bsigs = _afp_decode(bdf).persist()
-    # read only _SUCCESS-committed store versions: a crash MID-write
-    # of a sig dir can leave a truncated part file that a recursive
-    # read would choke on (the left_anti below only excludes rows the
-    # read could parse). Local listdir matches this harness's
-    # single-process store scope; a distributed deployment lists via
-    # the Hadoop FileSystem API the same way.
-    committed = sorted(
-        os.path.join(seen_store, d)
-        for d in os.listdir(seen_store)
-        if os.path.exists(os.path.join(seen_store, d, "_SUCCESS"))
-    )
-    if committed:
-        seen = spark.read.schema("doc_id long, afp64 string").parquet(*committed)
-    else:
-        seen = spark.createDataFrame([], "doc_id long, afp64 string")
-    # exclude a committed earlier delivery of THIS batch's sigs from
-    # the match set (the overwrite below replaces it anyway, but the
-    # read may happen first)
-    seen = seen.join(
-        bsigs.select(F.col("doc_id").alias("b_did")),
-        F.col("doc_id") == F.col("b_did"),
-        "left_anti",
-    )
-    union = seen.unionByName(bsigs)
+    seen = store.read(spark, exclude=bid).filter(F.col("kind") == "sig")
+    union = seen.select("doc_id", "afp64").unionByName(bsigs)
     batch_ids = bsigs.select(F.col("doc_id").alias("m_did"))
-    pairs = pigeonhole_hamming_pairs(union, "afp64")
-    emitted = pairs.join(
+    emitted = pigeonhole_hamming_pairs(union, "afp64").join(
         F.broadcast(batch_ids),
         (F.col("doc_a") == F.col("m_did")) | (F.col("doc_b") == F.col("m_did")),
         "left_semi",
     )
-    # pairs BEFORE sigs: a crash between the writes replays against
-    # the identical store snapshot
-    emitted.write.mode("overwrite").parquet(out_dir)
-    bsigs.write.mode("overwrite").parquet(sig_dir)
+    out = bsigs.withColumn("kind", F.lit("sig")).unionByName(
+        emitted.withColumn("kind", F.lit("pair")), allowMissingColumns=True
+    )
+    store.write(out, bid)
     bsigs.unpersist()
 
 
@@ -391,8 +364,10 @@ def run_afp_ingest_stream(
     """The fingerprint near-dup in its production home: media BYTES
     arrive on a stream, and the pair relation is maintained
     incrementally — each micro-batch's clips are decoded +
-    fingerprinted in the foreachBatch, matched against the standing
-    signature store PLUS the batch itself, and the store is upserted.
+    fingerprinted in the foreachBatch, matched against the signatures
+    of earlier batches PLUS the batch itself, and the batch's
+    signatures and emitted pairs are written to the one `BatchStore`
+    in one write.
 
     Pair emission is EXACTLY-ONCE BY CONSTRUCTION and ORDER-FREE:
     every emitted pair has >= 1 member in the current batch (pairs
@@ -404,14 +379,10 @@ def run_afp_ingest_stream(
     no in-order assertion (unlike the semantic ingest stream, whose
     min-id dup_of semantics do require order).
 
-    At-least-once redelivery is handled with the r12 discipline:
-    per-batch pair emissions and store upserts are BATCH-ID-KEYED
-    directories committed by `_SUCCESS` markers — pairs are written
-    BEFORE the store upsert, so a crash between the two replays to
-    an identical pair set (the store the retry reads is the same one
-    the first attempt matched against). Pointer-free: the final
-    reader unions every committed version, so redelivery scope needs
-    no driver-side state at all.
+    Redelivery is the store's: a redelivered batch reads every
+    committed batch but its own, so it matches against the same
+    signatures as the first attempt, and its one write replaces that
+    attempt's output, whether committed or torn.
 
     Scale: per micro-batch work is two map-side Arrow stages over the
     batch's bytes plus one pigeonhole block join of the batch's
@@ -421,29 +392,16 @@ def run_afp_ingest_stream(
     import os
     import tempfile
 
-    from bigdata_project_spark.operators.staging import run_chunk_stream
-
     payloads = _afp_payloads_df(spark, sf_dir)
     with tempfile.TemporaryDirectory(prefix="afp_stream_") as work:
-        seen_store = os.path.join(work, "seen")
-        out_store = os.path.join(work, "out")
-        # schema-only inits so the final readers work on empty input
-        empty_sigs = payloads.limit(0).select("doc_id", F.lit("").alias("afp64"))
-        empty_sigs.write.parquet(os.path.join(seen_store, "b_init"))
-        empty_sigs.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        ).limit(0).write.parquet(os.path.join(out_store, "b_init"))
+        store = BatchStore(os.path.join(work, "store"), _AFP_STORE_SCHEMA)
 
         def probe(bdf: DataFrame, bid: int) -> None:
-            _afp_probe_batch(spark, bdf, bid, seen_store, out_store)
+            _afp_probe_batch(spark, bdf, bid, store)
 
         n_batches = run_chunk_stream(payloads, "doc_id", n_chunks, probe, work, ordered=False)
         res = barrier(
-            spark.read.option("recursiveFileLookup", "true")
-            .schema("doc_a long, doc_b long, hamming int")
-            .parquet(out_store),
+            store.read(spark).filter(F.col("kind") == "pair").select("doc_a", "doc_b", "hamming"),
             eager=True,
         )
     return res.orderBy("doc_a", "doc_b"), n_batches
@@ -457,12 +415,14 @@ def run_afp_ingest_stream(
 def stream_audio_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`multimodal_audio_neardup` with the pair relation built
     INCREMENTALLY over three doc_id-ranged micro-batches of raw WAV
-    bytes (see run_afp_ingest_stream). Shares the batch oracle
-    because each unordered pair is emitted exactly once — in the
-    micro-batch where its later member arrives — so the accumulated
-    emissions reassemble the batch answer; cross-batch pairs are only
-    reachable through the persisted signature store, making the value
-    match a genuine multi-batch state-carry check."""
+    bytes, each writing its signatures and emitted pairs to one
+    batch-keyed store in one write (see run_afp_ingest_stream).
+    Shares the batch oracle because each unordered pair is emitted
+    exactly once — in the micro-batch where its later member arrives
+    — so the accumulated emissions reassemble the batch answer;
+    cross-batch pairs are only reachable through the stored
+    signatures of earlier batches, making the value match a genuine
+    multi-batch state-carry check."""
     res, _ = run_afp_ingest_stream(spark, sf_dir, n_chunks=3)
     return res
 

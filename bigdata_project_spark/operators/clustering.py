@@ -184,9 +184,16 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame, max_iter: int 
     roots = e.groupBy("u").agg(F.min("v").alias("component")).selectExpr(
         "u AS id", "component"
     )
-    labels = nodes.join(roots, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
+    # materialized now, while the caller's inputs are still cached, so
+    # that the labels read barriered state only (like min-label's) and
+    # a later action never replays the build behind `nodes`
+    labels = barrier(
+        nodes.join(roots, "id", "left").select(
+            "id", F.coalesce("component", F.col("id")).alias("component")
+        ),
+        eager=True,
     )
+    free_barrier(e)
     return labels
 
 

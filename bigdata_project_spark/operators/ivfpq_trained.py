@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from bigdata_project_spark.operators.kmeans import (
     _ITERS,
-    _NPROBE,
+    _SQL_KM_QPROBE,
     _km_assign,
     _km_qprobe,
     _km_trained,
@@ -59,7 +59,6 @@ from bigdata_project_spark.operators.similarity import (
     _TOP_K,
     sim_knn_bruteforce,
 )
-from bigdata_project_spark.operators.vecmath import sql_sqdist
 from bigdata_project_spark.registry import REGISTRY, query
 
 
@@ -77,22 +76,9 @@ _SQL_TRES_BRIDGE = f"""
     )
 """
 
-_SQL_TRES_PROBE = f"""
-    qprobe AS MATERIALIZED (
-        SELECT query_id, cid AS cell FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY dist, cid) AS arn
-            FROM (SELECT un.vec_id AS query_id, c.cid,
-                         ({sql_sqdist("un.u", "c.c_arr", DIM)}) AS dist
-                  FROM unit un, cent{_ITERS} c
-                  WHERE un.vec_id IN {_QUERY_IDS})
-        ) WHERE arn <= {_NPROBE}
-    )
-"""
-
 _SQL_TRES_PRELUDE = (
     f"WITH {_sql_kmeans_prelude()},\n{_SQL_TRES_BRIDGE},\n{_SQL_RSUBS},\n"
-    f"{_SQL_TRES_PROBE},\n{_SQL_RLUT}"
+    f"{_SQL_KM_QPROBE},\n{_SQL_RLUT}"
 )
 
 

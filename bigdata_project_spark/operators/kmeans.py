@@ -132,10 +132,10 @@ def _sql_kmeans_prelude() -> str:
 
 _SQL_KM_PRELUDE = f"WITH {_sql_kmeans_prelude()}"
 
-# nprobe=2 probe of the trained centroids + exact in-cell top-5 —
-# sim_ann_ivf_nprobe2's shape on learned cells (unit-dot cosine)
-_SQL_KM_SEARCH = f"""
-    qp AS MATERIALIZED (
+# (query_id, cell): each query's _NPROBE nearest trained centroids
+# (`_km_qprobe`'s twin; ivfpq_trained probes with it too)
+_SQL_KM_QPROBE = f"""
+    qprobe AS MATERIALIZED (
         SELECT query_id, cid AS cell FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                          ORDER BY dist, cid) AS arn
@@ -144,11 +144,15 @@ _SQL_KM_SEARCH = f"""
                   FROM unit un, cent{_ITERS} c
                   WHERE un.vec_id IN {_QUERY_IDS})
         ) WHERE arn <= {_NPROBE}
-    ),
+    )"""
+
+# nprobe=2 probe of the trained centroids + exact in-cell top-5 —
+# sim_ann_ivf_nprobe2's shape on learned cells (unit-dot cosine)
+_SQL_KM_SEARCH = f"""{_SQL_KM_QPROBE},
     kcand AS (
         SELECT p.query_id, a.vec_id,
                ({sql_dot("qu.u", "nu.u", DIM)}) AS cosine
-        FROM qp p
+        FROM qprobe p
         JOIN afin a ON a.cid = p.cell AND a.vec_id <> p.query_id
         JOIN unit qu ON qu.vec_id = p.query_id
         JOIN unit nu ON nu.vec_id = a.vec_id

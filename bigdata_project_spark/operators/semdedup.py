@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructType
 
 from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.clustering import components, keep_best, sql_components
@@ -409,30 +410,30 @@ def run_semantic_ingest_stream(
     ordered); a foreachBatch stage probes each micro-batch against
     the STANDING index — centroids + derived Q +
     cell-keyed corpus cells, built once from the corpus before the
-    stream starts — and against the cross-batch SEEN store (batch
-    members from earlier micro-batches, persisted cell-keyed parquet,
-    bounded by the increment size, never the corpus). Returns
+    stream starts — and against the members of earlier micro-batches,
+    then writes its verdict rows, which carry each member's cell
+    columns, to the one `BatchStore`, once per batch. Returns
     (result, n_micro_batches).
 
     Because chunks are vec_id-ordered and the within-batch probe keys
     on e.vec_id < b.vec_id, the union of per-micro-batch results is
     EXACTLY `dedup_semantic_incremental`'s batch answer — so the
     streaming form shares its DuckDB oracle, and the chunked replay
-    (cross-batch hits only discoverable through the restored seen
-    store) is verified against it end to end.
+    (cross-batch hits only discoverable through the stored earlier
+    members) is verified against it end to end.
 
     Scale: per micro-batch work is O(batch x cell_load) — the
     broadcast centroid assign plus ONE flagged cell equi-join against
-    corpus cells union seen cells (r14: the two probes share the
-    exchange). The seen store grows with the increment, not the
-    corpus, and is cell-keyed so each probe touches only the batch's
-    cells. A production deployment swaps the staged parquet chunks
-    for the Kafka source and the seen store for the index's upsert
+    corpus cells union the earlier members' cells (the two probes
+    share the exchange). The seen read selects the cell columns back
+    out of the verdict store, so it grows with the increment, not the
+    corpus. A production deployment swaps the staged parquet chunks
+    for the Kafka source and the store for the index's upsert
     surface; the foreachBatch body is unchanged."""
     import os
     import tempfile
 
-    from bigdata_project_spark.operators.staging import AppendStore, run_chunk_stream
+    from bigdata_project_spark.operators.staging import BatchStore, run_chunk_stream
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
@@ -444,8 +445,11 @@ def run_semantic_ingest_stream(
     batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
 
     with tempfile.TemporaryDirectory(prefix="sem_ingest_") as work:
-        seen_store = AppendStore(os.path.join(work, "seen"), ccells.schema)
-        out_store = AppendStore(os.path.join(work, "out"))
+        verdicts = StructType(list(ccells.schema))
+        store = BatchStore(
+            os.path.join(work, "verdicts"),
+            verdicts.add("dup_of", LongType()).add("is_new_unique", IntegerType()),
+        )
 
         def cos(x: str, y: str):
             return dot(f"{x}.embedding", f"{y}.embedding") / (
@@ -454,15 +458,15 @@ def run_semantic_ingest_stream(
 
         max_seen_vec = [-1]  # foreachBatch runs driver-side
 
-        def probe(bdf: DataFrame, _bid: int) -> None:
+        def probe(bdf: DataFrame, bid: int) -> None:
             bcells = _sem_assign(bdf, cent, q).persist()
             b_lo, b_hi = bcells.agg(F.min("vec_id"), F.max("vec_id")).first()
             if b_lo is not None:
                 # oracle equality requires in-order delivery: every
                 # cross-batch dup_of hit assumes earlier vec_ids are
-                # already in the seen store. Fail loudly on an
+                # already in the store. Fail loudly on an
                 # out-of-order micro-batch instead of silently
-                # dropping hits (advisor r9).
+                # dropping hits.
                 if int(b_lo) <= max_seen_vec[0]:
                     raise RuntimeError(
                         f"semantic ingest stream delivered out of order: "
@@ -471,11 +475,12 @@ def run_semantic_ingest_stream(
                     )
                 max_seen_vec[0] = int(b_hi)
             # one flagged cell-keyed join per micro-batch instead of
-            # two (the dedup_semantic_incremental merged-probe shape,
-            # guide §2.4): corpus index and seen-store-plus-batch
-            # union with an is_corpus flag, min split in the aggregate
+            # two (the dedup_semantic_incremental merged-probe shape):
+            # corpus index and earlier-members-plus-batch union with
+            # an is_corpus flag, min split in the aggregate
             b = bcells.alias("b")
-            prior = seen_store.read(spark).unionByName(bcells)
+            seen = store.read(spark, exclude=bid).select(*ccells.columns)
+            prior = seen.unionByName(bcells)
             o = (
                 ccells.withColumn("is_corpus", F.lit(True))
                 .unionByName(prior.withColumn("is_corpus", F.lit(False)))
@@ -501,28 +506,24 @@ def run_semantic_ingest_stream(
                     ),
                 )
             )
-            out = (
-                bcells.select("vec_id", "cell")
-                .join(hits, "vec_id", "left")
-                .select(
-                    "vec_id",
-                    "cell",
-                    F.coalesce("dup_corpus", "dup_batch").alias("dup_of"),
-                    (F.col("dup_corpus").isNull() & F.col("dup_batch").isNull())
-                    .cast("int")
-                    .alias("is_new_unique"),
-                )
+            out = bcells.join(hits, "vec_id", "left").select(
+                *ccells.columns,
+                F.coalesce("dup_corpus", "dup_batch").alias("dup_of"),
+                (F.col("dup_corpus").isNull() & F.col("dup_batch").isNull())
+                .cast("int")
+                .alias("is_new_unique"),
             )
-            out_store.append(out)
-            # the seen-store upsert: this micro-batch's members become
-            # visible to every later one (bounded by increment size)
-            seen_store.append(bcells)
+            # the verdicts and, in the same rows, this micro-batch's
+            # members, which every later batch reads back
+            store.write(out, bid)
             bcells.unpersist()
 
         n_batches = run_chunk_stream(
             batch_members, "vec_id", n_chunks, probe, work, ordered=True
         )
-        res = barrier(out_store.read(spark), eager=True)
+        res = barrier(
+            store.read(spark).select("vec_id", "cell", "dup_of", "is_new_unique"), eager=True
+        )
     ccells.unpersist()
     cent.unpersist()
     return res, n_batches
@@ -534,14 +535,15 @@ def run_semantic_ingest_stream(
     tags=("streaming", "dedup", "llm", "semdedup", "incremental", "foreachBatch"),
 )
 def stream_semantic_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_semantic_incremental` in its natural home (round 9): a
+    """`dedup_semantic_incremental` in its natural home: a
     foreachBatch streaming ingest over three vec_id-ordered
-    micro-batches with a standing centroid/Q/corpus-cell index and a
-    cross-batch seen store — the production shape of semantic
-    ingestion dedup. Shares the batch form's oracle because the
-    chunked replay provably reassembles the batch answer (see
-    run_semantic_ingest_stream); cross-batch near-dups are only found
-    through the persisted seen state, so the oracle equality is a
-    real multi-batch state-carry check, not a one-batch degenerate."""
+    micro-batches with a standing centroid/Q/corpus-cell index and one
+    batch-keyed verdict store whose rows carry each member's cells —
+    the production shape of semantic ingestion dedup. Shares the batch
+    form's oracle because the chunked replay provably reassembles the
+    batch answer (see run_semantic_ingest_stream); cross-batch
+    near-dups are only found through the stored earlier members, so
+    the oracle equality is a real multi-batch state-carry check, not a
+    one-batch degenerate."""
     res, _ = run_semantic_ingest_stream(spark, sf_dir, n_chunks=3)
     return res

@@ -1,6 +1,7 @@
 """Chunk-replay streams: the one harness of the five incremental
 streams over a staged batch relation (count-min, quantile, URL
-frontier, semantic dedup, audio fingerprint).
+frontier, semantic dedup, audio fingerprint), and `BatchStore`, the
+one store of every foreachBatch body.
 
 `chunk_source` stages a batch relation as `n_chunks` key-ranged
 parquet chunks and replays them as a file stream, one chunk per
@@ -21,16 +22,21 @@ Delivery order is the one thing the caller declares:
 - ORDER-FREE streams (`ordered=False`) merge commutatively across
   micro-batches: counter addition (the count-min and quantile
   counts) and pair-set union (the audio-fingerprint probe emits a
-  cross-batch pair from whichever batch arrives second, and its
-  reader unions every committed version). Any delivery order gives
-  the same answer.
+  cross-batch pair from whichever batch arrives second). Any
+  delivery order gives the same answer.
 - ORDERED streams (`ordered=True`: URL frontier first-writer-wins,
   in-order semantic dedup) need ascending key order. The file source
   orders by mtime with unspecified tie order, so the harness pins
   explicitly increasing mtimes per chunk, one hour apart, and each
-  body keeps a loud out-of-order guard. On empty input an ordered
-  stream stages one schema-only file, so the stream still triggers
-  and the body's result stores exist (the empty-twin sweeps run this).
+  body keeps a loud out-of-order guard.
+
+A foreachBatch body writes its whole output for batch `bid` in ONE
+`BatchStore.write`, which overwrites `batch=<bid>`: Spark redelivers
+an uncommitted batch under the same id, so the retry replaces the
+first attempt's output, torn or whole. Reads see only committed
+(`_SUCCESS`) batch directories, and a body leaves its own batch out
+of what it reads, so a retry matches against the same state the
+first attempt did.
 """
 
 from __future__ import annotations
@@ -44,29 +50,32 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-class AppendStore:
-    """A parquet store that grows by appends and is read back with the
-    schema of the last frame appended (no schema-inference job).
+class BatchStore:
+    """A parquet store keyed by micro-batch id: `path/batch=<bid>`,
+    one directory per batch, read back with the `batch` column and
+    the schema given at construction (no schema-inference job)."""
 
-    A store given its schema at construction can be read before the
-    first append: it is then empty, with no file written for it."""
-
-    def __init__(self, path: str, schema: StructType | None = None) -> None:
+    def __init__(self, path: str, schema: StructType | str) -> None:
         self.path = path
         self.schema = schema
-        self._appended = False
 
-    def append(self, df: DataFrame) -> None:
-        self.schema = df.schema
-        self._appended = True
-        df.write.mode("append").parquet(self.path)
+    def write(self, df: DataFrame, bid: int) -> None:
+        df.write.mode("overwrite").parquet(os.path.join(self.path, f"batch={bid}"))
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        if not self._appended:
+    def read(self, spark: SparkSession, exclude: int | None = None) -> DataFrame:
+        """Every committed batch except `exclude`; before the first
+        commit, an empty relation with the store's schema."""
+        names = sorted(os.listdir(self.path)) if os.path.isdir(self.path) else []
+        dirs = [
+            os.path.join(self.path, d)
+            for d in names
+            if d != f"batch={exclude}" and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
+        ]
+        if not dirs:
             # limit(0) folds to an empty local relation, so the
             # optimizer removes a join or union against it
-            return spark.createDataFrame([], self.schema).limit(0)
-        return spark.read.schema(self.schema).parquet(self.path)
+            return spark.createDataFrame([], self.schema).withColumn("batch", F.lit(0)).limit(0)
+        return spark.read.schema(self.schema).option("basePath", self.path).parquet(*dirs)
 
 
 def stage_chunks_one_pass(
@@ -95,14 +104,10 @@ def chunk_source(df: DataFrame, key: str, n_chunks: int, work: str, ordered: boo
     computed once, by the staging job."""
     src_dir = os.path.join(work, "src")
     lo, hi = df.agg(F.min(key), F.max(key)).first()
-    empty = lo is None
-    if empty:
+    if lo is None:
         lo, hi = 0, 0
     step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-    if ordered and empty:
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, "chunk=0"))
-    else:
-        stage_chunks_one_pass(df, key, int(lo), step, src_dir)
+    stage_chunks_one_pass(df, key, int(lo), step, src_dir)
     if ordered:
         base_mtime = int(time.time()) - 3600 * n_chunks
         for i in range(n_chunks):

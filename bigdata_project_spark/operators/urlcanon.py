@@ -315,47 +315,50 @@ def run_frontier_stream(
     """The crawl frontier as it actually exists in production: a
     STREAM of raw URLs, replayed as `n_chunks` doc_id-ordered
     micro-batches (`staging.run_chunk_stream`); a foreachBatch stage
-    canonicalizes the batch, resolves each URL's keeper against (1) the cross-batch SEEN store — canonical-key ->
-    keeper rows persisted from earlier micro-batches — and (2) the
-    batch's own first-seen MIN, then appends only NEW keys to the
-    store. Returns (per-URL verdicts, n_micro_batches).
+    canonicalizes the batch and resolves each URL's keeper against
+    (1) the keepers of earlier micro-batches and (2) the batch's own
+    first-seen MIN, then writes its verdict rows to the one
+    `BatchStore`, once per batch. Returns (per-URL verdicts,
+    n_micro_batches).
 
     Because chunks are doc_id-ordered, the first batch containing a
     canonical key holds that key's global minimum doc_id — so the
     union of per-batch results is EXACTLY crawl_url_canonical_dedup's
     batch answer, and the streaming form shares its oracle (the
-    cross-batch dup verdicts are only reachable through the restored
-    seen store, so the oracle equality is a real state-carry check).
+    cross-batch dup verdicts are only reachable through the stored
+    keepers, so the oracle equality is a real state-carry check).
     The stream is ordered: the harness pins delivery order and
-    probe() asserts it per batch (the semdedup-stream discipline).
+    probe() asserts it per batch.
+
+    The seen keepers are not a second store: a key's first batch
+    writes exactly one `is_dup = 0` row, its keeper, and later
+    batches write only `is_dup = 1` rows for it, so the verdict
+    store's committed `is_dup = 0` rows, projected to (key,
+    keeper_doc), are the seen store.
 
     Scale: per micro-batch work is a pure canonicalize map + one
-    equi-join against the seen store on the canonical key — the
-    store grows with the DISTINCT frontier, is keyed for pruning,
-    and in production is the frontier table's upsert surface (the
-    foreachBatch body is unchanged under a Kafka source)."""
+    equi-join on the canonical key against that column-pruned,
+    filtered scan of the earlier batches' verdicts, which grows with
+    the stream; in production the keeper rows are the frontier
+    table's upsert surface (the foreachBatch body is unchanged under
+    a Kafka source)."""
     import os
     import tempfile
 
-    from bigdata_project_spark.operators.staging import AppendStore, run_chunk_stream
+    from bigdata_project_spark.operators.staging import BatchStore, run_chunk_stream
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     raw = docs.select("doc_id", _raw_url_col().alias("url"))
 
     with tempfile.TemporaryDirectory(prefix="frontier_stream_") as work:
-        # seen store: (key, keeper_doc)
-        seen_store = AppendStore(
-            os.path.join(work, "seen"),
-            raw.select(
-                F.md5(canonicalize_url(F.col("url"))).alias("key"),
-                F.col("doc_id").alias("keeper_doc"),
-            ).schema,
+        store = BatchStore(
+            os.path.join(work, "verdicts"),
+            "doc_id long, url string, canonical string, key string, keeper_doc long, is_dup int",
         )
-        out_store = AppendStore(os.path.join(work, "out"))
 
         max_seen_doc = [-1]  # foreachBatch runs driver-side
 
-        def probe(bdf: DataFrame, _bid: int) -> None:
+        def probe(bdf: DataFrame, bid: int) -> None:
             canon = bdf.select(
                 "doc_id", "url", canonicalize_url(F.col("url")).alias("canonical")
             ).withColumn("key", F.md5("canonical")).persist()
@@ -367,42 +370,33 @@ def run_frontier_stream(
                         f"doc_id {b_lo} <= max already seen {max_seen_doc[0]}"
                     )
                 max_seen_doc[0] = int(b_hi)
-            seen = seen_store.read(spark)
+            seen = (
+                store.read(spark, exclude=bid)
+                .filter(F.col("is_dup") == 0)
+                .select("key", F.col("keeper_doc").alias("stored_keeper"))
+            )
             batch_min = canon.groupBy("key").agg(
                 F.min("doc_id").alias("batch_keeper")
             )
-            resolved = (
+            keeper = F.coalesce("stored_keeper", "batch_keeper")
+            out = (
                 canon.join(F.broadcast(batch_min), "key")
-                .join(seen.withColumnRenamed("keeper_doc", "stored_keeper"), "key", "left")
+                .join(seen, "key", "left")
                 .select(
                     "doc_id",
                     "url",
                     "canonical",
                     "key",
-                    F.coalesce("stored_keeper", "batch_keeper").alias("keeper_doc"),
+                    keeper.alias("keeper_doc"),
+                    (F.col("doc_id") != keeper).cast("int").alias("is_dup"),
                 )
             )
-            out = resolved.select(
-                "doc_id",
-                "url",
-                "canonical",
-                "keeper_doc",
-                (F.col("doc_id") != F.col("keeper_doc")).cast("int").alias("is_dup"),
-            )
-            out_store.append(out)
-            # first-writer-wins upsert: append only the keys this batch
-            # introduced (anti-join the store)
-            new_keys = batch_min.join(seen, "key", "left_anti").select(
-                "key", F.col("batch_keeper").alias("keeper_doc")
-            )
-            seen_store.append(new_keys)
+            store.write(out, bid)
             canon.unpersist()
 
         n_batches = run_chunk_stream(raw, "doc_id", n_chunks, probe, work, ordered=True)
         res = barrier(
-            out_store.read(spark).select(
-                "doc_id", "url", "canonical", "keeper_doc", "is_dup"
-            ),
+            store.read(spark).select("doc_id", "url", "canonical", "keeper_doc", "is_dup"),
             eager=True,
         )
     return res, n_batches
@@ -416,11 +410,12 @@ def run_frontier_stream(
 def stream_url_frontier_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`crawl_url_canonical_dedup` in its production home: a
     foreachBatch streaming ingest over three doc_id-ordered
-    micro-batches with a cross-batch canonical-key seen store (see
+    micro-batches, each writing its verdicts to one batch-keyed store
+    whose keeper rows are the cross-batch seen state (see
     run_frontier_stream). Shares the batch form's oracle because the
     ordered chunked replay provably reassembles the batch answer —
     a cross-batch duplicate's keeper is only recoverable through the
-    persisted store, so the equality is a real multi-batch
+    stored keeper rows, so the equality is a real multi-batch
     state-carry check."""
     res, _ = run_frontier_stream(spark, sf_dir, n_chunks=3)
     return res

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from bigdata_project_spark.caching import barrier
 from bigdata_project_spark.exact import SQL_DSUM, dcast, dsum
-from bigdata_project_spark.operators.staging import AppendStore
+from bigdata_project_spark.operators.staging import BatchStore
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load, parquet_row_count, parquet_schema
 
@@ -457,9 +457,10 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-aggregate maintenance end-to-end: the STREAMING
     hourly tier (watermarked tumbling window, update mode) is
     materialized by foreachBatch into a parquet rollup store —
-    upsert-by-key emulated as append + last-writer-wins on batch_id,
-    the pattern any idempotent sink (Delta MERGE, key-value upsert)
-    implements — and the DAY tier is then one tiny batch
+    upsert-by-key emulated as one `BatchStore` write per micro-batch
+    + last-writer-wins on the store's `batch` column, the pattern any
+    idempotent sink (Delta MERGE, key-value upsert) implements — and
+    the DAY tier is then one tiny batch
     re-aggregation over the store. The oracle aggregates raw events
     straight to days, proving the streaming tier + upsert + rollup
     composition lossless (decimal sums re-aggregate exactly).
@@ -469,7 +470,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     CHANGED hourly rows (update mode), so maintaining the rollup
     costs O(changed windows), not O(history) — refreshing a day after
     a late event touches one hourly upsert + one day row. The final
-    dedup (max_by on batch_id per key) and day rollup run over the
+    dedup (max_by on batch per key) and day rollup run over the
     hourly store, which is orders of magnitude smaller than the
     stream."""
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
@@ -487,17 +488,14 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent upsert stand-in: append with the batch id; readers
-        # resolve each (hour, type) key to its LAST writer. A Delta /
-        # JDBC sink would MERGE here with identical semantics.
-        store.append(batch_df.withColumn("batch_id", F.lit(batch_id)))
-
     with tempfile.TemporaryDirectory(prefix="rollup_", ignore_cleanup_errors=True) as work:
-        store = AppendStore(os.path.join(work, "store"))
+        # idempotent upsert stand-in: readers resolve each (hour, type)
+        # key to its LAST writer. A Delta / JDBC sink would MERGE here
+        # with identical semantics.
+        store = BatchStore(os.path.join(work, "store"), hourly.schema)
         with sized_state(spark, _events_rows(sf_dir)):
             q = (
-                hourly.writeStream.foreachBatch(upsert)
+                hourly.writeStream.foreachBatch(store.write)
                 .outputMode("update")
                 .option("checkpointLocation", os.path.join(work, "ckpt"))
                 .trigger(availableNow=True)
@@ -507,8 +505,8 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         raw = store.read(spark)
         latest = raw.groupBy("hour_start_us", "event_type").agg(
-            F.max_by("n_events", "batch_id").alias("n_events"),
-            F.max_by("sv", "batch_id").alias("sv"),
+            F.max_by("n_events", "batch").alias("n_events"),
+            F.max_by("sv", "batch").alias("sv"),
         )
         day = (
             latest.groupBy(

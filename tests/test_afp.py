@@ -102,85 +102,62 @@ def test_stream_neardup_matches_batch_and_consumed_all_chunks(spark, sf_dir):
 
 
 def test_probe_batch_idempotent_under_redelivery(spark, sf_dir, tmp_path):
-    """The at-least-once claims, EXERCISED: deliver two batches, then
-    redeliver both (committed retries) plus a crash-retry where the
-    pair emission committed but the store upsert didn't — the final
-    pair multiset must equal the single-delivery answer with no
-    duplicates and no rollback."""
+    """The at-least-once claims, EXERCISED on the one batch store.
+    Spark redelivers only the latest batch, so each batch is
+    redelivered right after its first delivery committed (a committed
+    retry), and batch 1 once more after its write died MID-file (a
+    torn retry). The final pair set must equal the single-delivery
+    answer, with no duplicates."""
+    import os
     import shutil
 
     from pyspark.sql import functions as F
 
+    from bigdata_project_spark.caching import barrier
     from bigdata_project_spark.operators.afp import (
+        _AFP_STORE_SCHEMA,
         _afp_payloads_df,
         _afp_probe_batch,
     )
-
-    from bigdata_project_spark.caching import barrier
+    from bigdata_project_spark.operators.staging import BatchStore
 
     payloads = _afp_payloads_df(spark, sf_dir).filter(F.col("doc_id") < 16)
     # barriers register their blocks, so the suite's no-leaked-RDDs
     # invariants stay true after the next release
     b0 = barrier(payloads.filter(F.col("doc_id") < 8), eager=True)
     b1 = barrier(payloads.filter(F.col("doc_id") >= 8), eager=True)
-    seen_store, out_store = str(tmp_path / "seen"), str(tmp_path / "out")
-    empty = payloads.limit(0).select("doc_id", F.lit("").alias("afp64"))
-    empty.write.parquet(seen_store + "/b_init")
-    empty.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    ).limit(0).write.parquet(out_store + "/b_init")
+    store = BatchStore(str(tmp_path / "store"), _AFP_STORE_SCHEMA)
 
-    def read_pairs():
-        rows = (
-            spark.read.option("recursiveFileLookup", "true")
-            .schema("doc_a long, doc_b long, hamming int")
-            .parquet(out_store)
-            .collect()
-        )
+    def read(kind):
+        rows = store.read(spark).filter(F.col("kind") == kind).collect()
+        if kind == "sig":
+            return sorted((r["doc_id"], r["afp64"]) for r in rows)
         return sorted((r["doc_a"], r["doc_b"], r["hamming"]) for r in rows)
 
-    _afp_probe_batch(spark, b0, 0, seen_store, out_store)
-    _afp_probe_batch(spark, b1, 1, seen_store, out_store)
-    want = read_pairs()
+    _afp_probe_batch(spark, b0, 0, store)
+    pairs0 = read("pair")
+    _afp_probe_batch(spark, b0, 0, store)  # committed retry
+    assert read("pair") == pairs0
+    _afp_probe_batch(spark, b1, 1, store)
+    want, want_sigs = read("pair"), read("sig")
     assert want  # groups of 4 inside doc_id<16 guarantee pairs
     assert len(set(want)) == len(want)
-    # committed-retry redelivery: no-ops
-    _afp_probe_batch(spark, b0, 0, seen_store, out_store)
-    _afp_probe_batch(spark, b1, 1, seen_store, out_store)
-    assert read_pairs() == want
-    # crash-retry: batch 1's store upsert is lost after its pair
-    # emission committed; the retry must rebuild the store version
-    # without changing the emitted pairs
-    shutil.rmtree(seen_store + "/b1")
-    _afp_probe_batch(spark, b1, 1, seen_store, out_store)
-    assert read_pairs() == want
-    n_sigs = (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema("doc_id long, afp64 string")
-        .parquet(seen_store)
-        .count()
-    )
-    assert n_sigs == 16  # store restored, one row per clip
-    # torn-file crash-retry: the sig write died MID-file — the dir
-    # holds a truncated parquet part and NO _SUCCESS marker. The
-    # retry must ignore the torn dir (committed-version filter), not
-    # throw parsing it, and rebuild the store version bit-identically
-    shutil.rmtree(seen_store + "/b1")
-    import os
-
-    os.makedirs(seen_store + "/b1")
-    with open(seen_store + "/b1/part-00000.snappy.parquet", "wb") as fh:
+    assert len(want_sigs) == 16  # one row per clip
+    _afp_probe_batch(spark, b1, 1, store)  # committed retry
+    assert read("pair") == want
+    # torn-file crash-retry: batch 1's write died MID-file, so its
+    # directory holds a truncated parquet part and NO _SUCCESS marker.
+    # Reads skip the torn directory instead of throwing on it, and the
+    # retry rebuilds it bit-identically
+    torn = os.path.join(store.path, "batch=1")
+    shutil.rmtree(torn)
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-00000.snappy.parquet"), "wb") as fh:
         fh.write(b"PAR1\x00\x13torn")  # valid magic, garbage body
-    _afp_probe_batch(spark, b1, 1, seen_store, out_store)
-    assert read_pairs() == want
-    n_sigs2 = (
-        spark.read.schema("doc_id long, afp64 string")
-        .parquet(*[f"{seen_store}/{d}" for d in ("b_init", "b0", "b1")])
-        .count()
-    )
-    assert n_sigs2 == 16
+    assert read("pair") == pairs0
+    _afp_probe_batch(spark, b1, 1, store)
+    assert read("pair") == want
+    assert read("sig") == want_sigs
 
 
 def test_groups_separate(spark, sf_dir):

@@ -166,6 +166,29 @@ def test_consumers_stay_green_through_star_fallback(spark, sf_dir, name, monkeyp
         con.close()
 
 
+def test_star_fallback_labels_read_barriered_state_only(spark, sf_dir, monkeypatch):
+    """On the star fallback the labels must read only barriered state,
+    as the min-label labels do: a label join over the caller's
+    unbarriered edge endpoints would make the consumer's final action
+    replay the whole shingle/pair/Jaccard build after its caches are
+    released. Pinned on the consumer's optimized plan: the same
+    parquet relations and joins as on the min-label path."""
+    from bigdata_project_spark.operators import clustering
+    from bigdata_project_spark.registry import all_queries
+
+    def shape(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("Relation ["), plan.count("Join ")
+
+    def _refuse(nodes, edges, max_iter=None):
+        raise clustering.CCNotConverged("forced: min-label probe cap (test twin)")
+
+    name = "dedup_cluster_components"
+    min_label = shape(all_queries()[name](spark, sf_dir))
+    monkeypatch.setattr(clustering, "connected_components", _refuse)
+    assert shape(all_queries()[name](spark, sf_dir)) == min_label
+
+
 def test_auto_does_not_mask_unrelated_runtime_error(spark, monkeypatch):
     """Advisor r9: auto must catch ONLY CCNotConverged. An unrelated
     RuntimeError raised inside the min-label probe (OOM, a broken

@@ -31,8 +31,11 @@ BUDGETS = {
     "stream_countmin_incremental": 11,
     "stream_quantile_incremental": 17,
     "stream_tumbling_hourly": 2,
-    "stream_url_frontier_dedup": 34,
-    "stream_semantic_incremental_dedup": 46,
+    # the foreachBatch streams: one store write per micro-batch
+    "stream_audio_incremental_neardup": 38,
+    "stream_incremental_rollup": 6,
+    "stream_url_frontier_dedup": 26,
+    "stream_semantic_incremental_dedup": 43,
 }
 # processes started per warm run: the measured count plus about 25%. A
 # stream's state store writes its files per state partition, and the
@@ -56,6 +59,8 @@ _INPUTS = {
     "stream_countmin_incremental": ("documents",),
     "stream_quantile_incremental": ("lineitem",),
     "stream_tumbling_hourly": ("events",),
+    "stream_audio_incremental_neardup": ("documents",),
+    "stream_incremental_rollup": ("events",),
     "stream_url_frontier_dedup": ("documents",),
     "stream_semantic_incremental_dedup": ("embeddings",),
 }
