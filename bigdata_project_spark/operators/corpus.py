@@ -15,9 +15,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators import spans
 from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES,
     _SQL_SHINGLES_CAPPED,
+    SHINGLE_N,
     shingle_df_capped,
     words_col,
 )
@@ -865,155 +867,45 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_SQL_SHINGLES_CAPPED},
     bench AS (SELECT DISTINCT shingle FROM shc WHERE doc_id % {_BENCH_MOD} = 0),
     wo AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS words
+        SELECT doc_id, {spans.SQL_WORDS} AS words
         FROM documents WHERE doc_id % {_BENCH_MOD} <> 0
     ),
-    pos AS (
-        SELECT doc_id, words, unnest(range(len(words) - {{K}} + 1)) AS i
-        FROM wo WHERE len(words) >= {{K}}
-    ),
-    hit AS (
-        SELECT p.doc_id, p.i
-        FROM pos p JOIN bench b
-          ON lower(array_to_string(p.words[p.i + 1 : p.i + {{K}}], ' ')) = b.shingle
-    ),
-    flagged AS (
-        SELECT doc_id, i,
-               CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i) >= {{K}}
-                      OR LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-                    THEN 1 ELSE 0 END AS new_island
-        FROM hit
-    ),
-    isl AS (
-        SELECT doc_id, i,
-               SUM(new_island) OVER (PARTITION BY doc_id ORDER BY i) AS island
-        FROM flagged
-    ),
-    iv AS (
-        SELECT doc_id, island, MIN(i) AS s, MAX(i) + {{K}} AS e
-        FROM isl GROUP BY doc_id, island
-    ),
-    tok AS (
-        SELECT doc_id, i.p AS p, words[i.p + 1] AS token
-        FROM wo, LATERAL (SELECT unnest(range(len(words))) AS p) i
-        WHERE len(words) > 0
-    ),
-    kept AS (
-        SELECT t.doc_id, t.p, t.token FROM tok t
-        WHERE NOT EXISTS (
-            SELECT 1 FROM iv v
-            WHERE v.doc_id = t.doc_id AND t.p >= v.s AND t.p < v.e)
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(token, ' ' ORDER BY p) AS text_clean
-        FROM kept GROUP BY doc_id
-    )
-    SELECT w.doc_id,
-           CAST(COALESCE(len(w.words), 0) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(len(w.words), 0) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.text_clean, '') AS text_clean
-    FROM wo w LEFT JOIN agg a ON a.doc_id = w.doc_id
+    {spans.sql_windows(SHINGLE_N)},
+    hits AS (SELECT win.doc_id, win.i FROM win JOIN bench b ON win.w = b.shingle),
+    {spans.sql_intervals(SHINGLE_N)},
+    {spans.SQL_EXCISE}
     """,
     tags=("llm", "contamination", "rewrite"),
 )
 def contamination_decontam_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The act-on side of `contamination_ngram_overlap`: REWRITE every
+    """The act-on side of `contamination_ngram_overlap`: rewrite every
     training document with each benchmark-overlapping word-5-gram span
-    cut out (Lee-et-al-style span excision applied to decontamination
-    — the document survives, the leaked eval text does not). Dropping
+    cut out (Lee-et-al-style span excision applied to decontamination:
+    the document survives, the leaked eval text does not). Dropping
     whole documents at a ratio threshold throws away the 99% clean
     tokens around a one-line leak; span excision keeps them.
 
-    Detection is semantically IDENTICAL to the screen: the benchmark
-    set is every {_BENCH_MOD}th doc's distinct df-capped shingles
-    (`shingle_df_capped` — a boilerplate shingle with corpus df >
+    Detection is the screen's: the benchmark set is every
+    {_BENCH_MOD}th doc's distinct df-capped shingles
+    (`shingle_df_capped`: a boilerplate shingle with corpus df >
     MAX_SHINGLE_DF is not contamination evidence on either side), so
     a training doc has n_removed > 0 exactly when the screen scores
     it n_contaminated > 0 (tests/test_decontam.py pins the
-    equivalence per doc). Stride-1 windows catch the benchmark text
-    at ANY offset; overlapping hits merge via the gaps-and-islands
-    pass of `dedup_substring_rewrite`, so a length-L leak excises one
-    contiguous L-token span, not L-K+1 fragments. Original case is
-    preserved in the output; matching lowercases the window, exactly
-    like the screen's shingles.
+    equivalence per doc). The hits are the stride-1 windows whose
+    lowercased text is a benchmark shingle, and `operators/spans.py`
+    merges and cuts them, keeping the original case.
 
     Scale: the benchmark shingle set broadcasts (eval sets are
-    thousands of docs); the corpus side is one stride-1 window scan
-    with a map-side hash probe — the big side never shuffles for
-    candidate generation. The island merge is one doc_id-keyed
-    window over matched positions only (a tiny fraction of tokens),
-    and the excision is the substring-rewrite reassembly: tokens
-    travel twice (explode, sorted-struct rebuild) — the rewrite
-    floor. The df cap adds the screen's corpus-wide shingle
-    aggregate, shared machinery already bucketed for 100 TB."""
+    thousands of docs), so the corpus side is one window scan with a
+    map-side hash probe and never shuffles for candidate generation.
+    The df cap adds the screen's corpus-wide shingle aggregate."""
     from bigdata_project_spark.caching import tracked_persist
-    from bigdata_project_spark.operators.dedup import SHINGLE_N
 
     docs = load_spread(spark, sf_dir, "documents")
     sh = tracked_persist(shingle_df_capped(spark, sf_dir))
-    bench = sh.filter(F.col("doc_id") % _BENCH_MOD == 0).select("shingle").distinct()
-    words_o = F.array_remove(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), "")
+    bench = sh.filter(F.col("doc_id") % _BENCH_MOD == 0).select(F.col("shingle").alias("w")).distinct()
     base = docs.filter(F.col("doc_id") % _BENCH_MOD != 0).select(
-        "doc_id", words_o.alias("words")
+        "doc_id", spans.words(F.col("text")).alias("words")
     )
-    pos = base.filter(F.size("words") >= SHINGLE_N).select(
-        "doc_id",
-        F.posexplode(F.sequence(F.lit(0), F.size("words") - SHINGLE_N)).alias("_p", "i"),
-        F.lower(
-            F.concat_ws(" ", F.slice("words", F.col("i") + 1, SHINGLE_N))
-        ).alias("shingle"),
-    )
-    hit = pos.join(F.broadcast(bench), "shingle").select("doc_id", "i")
-    w_doc = W.partitionBy("doc_id").orderBy("i")
-    lag_i = F.lag("i").over(w_doc)
-    isl = hit.select(
-        "doc_id",
-        "i",
-        F.sum(
-            F.when(lag_i.isNull() | (F.col("i") - lag_i >= SHINGLE_N), 1).otherwise(0)
-        )
-        .over(w_doc)
-        .alias("island"),
-    )
-    intervals = isl.groupBy("doc_id", "island").agg(
-        F.min("i").alias("s"), (F.max("i") + SHINGLE_N).alias("e")
-    )
-    tokens = base.filter(F.size("words") > 0).select(
-        "doc_id", F.posexplode("words").alias("p", "token")
-    )
-    kept = tokens.join(
-        intervals,
-        (tokens.doc_id == intervals.doc_id)
-        & (tokens.p >= intervals.s)
-        & (tokens.p < intervals.e),
-        "left_anti",
-    )
-    agg = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "token"))), lambda x: x["token"]
-            ),
-        ).alias("text_clean"),
-    )
-    return (
-        base.join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_tokens"),
-            (F.size("words") - F.coalesce("n_kept", F.lit(0))).cast("long").alias("n_removed"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
-
-
-from bigdata_project_spark.operators.dedup import SHINGLE_N as _SH_N  # noqa: E402
-
-from bigdata_project_spark.registry import REGISTRY as _REG_C  # noqa: E402
-
-_REG_C["contamination_decontam_rewrite"].oracle = _REG_C[
-    "contamination_decontam_rewrite"
-].oracle.format(K=_SH_N)
+    hits = spans.windows(base, SHINGLE_N).join(F.broadcast(bench), "w").select("doc_id", "i")
+    return spans.excise(base, spans.intervals(hits, SHINGLE_N))

@@ -26,6 +26,8 @@ losslessness proof for the prefix filter.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -36,6 +38,7 @@ from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES_CAPPED,
     shingle_df_capped,
 )
+from bigdata_project_spark.operators import spans
 from bigdata_project_spark.registry import query
 
 # Jaccard threshold for the prefix-filter join, kept RATIONAL (1/2) so
@@ -420,572 +423,104 @@ _REG_DX["dedup_lsh_band_tuning"].oracle = _REG_DX["dedup_lsh_band_tuning"].oracl
 _SUB_K = 20  # minimum repeated run length, in tokens
 
 
+def _sql_spans(output: str, within_doc: bool) -> str:
+    """The oracle of a substring-span query: the `spans` twins over
+    every document, ending in `output` (SQL_COVERAGE or SQL_EXCISE)."""
+    return f"""
+    WITH wo AS (SELECT doc_id, {spans.SQL_WORDS} AS words FROM documents),
+    {spans.sql_windows(_SUB_K)},
+    {spans.sql_repeated(_SUB_K, within_doc)},
+    {spans.sql_intervals(_SUB_K)},
+    {output}
+    """
+
+
+def _spans(
+    spark: SparkSession,
+    sf_dir: str,
+    output: Callable[[DataFrame, DataFrame], DataFrame],
+    within_doc: bool,
+) -> DataFrame:
+    """`output` (spans.coverage or spans.excise) of every document over
+    the merged spans of its repeated >= K-token runs."""
+    from bigdata_project_spark.tables import load_spread
+
+    docs = load_spread(spark, sf_dir, "documents")
+    base = docs.select("doc_id", spans.words(F.col("text")).alias("words"))
+    return output(base, spans.intervals(spans.repeated(base, _SUB_K, within_doc), _SUB_K))
+
+
 @query(
     "dedup_exact_substring_spans",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS words
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, words, unnest(range(len(words) - {_SUB_K} + 1)) AS i
-        FROM w WHERE len(words) >= {_SUB_K}
-    ),
-    sh AS (
-        SELECT doc_id, i,
-               md5(array_to_string(words[i + 1 : i + {_SUB_K}], ' ')) AS h
-        FROM pos
-    ),
-    spread AS (SELECT h FROM sh GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
-    dup AS (SELECT s.doc_id, s.i FROM sh s JOIN spread USING (h)),
-    flagged AS (
-        SELECT doc_id, i,
-               CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i) >= {_SUB_K}
-                      OR LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-                    THEN 1 ELSE 0 END AS new_island
-        FROM dup
-    ),
-    isl AS (
-        SELECT doc_id, i,
-               SUM(new_island) OVER (PARTITION BY doc_id ORDER BY i) AS island
-        FROM flagged
-    ),
-    cov AS (
-        SELECT doc_id, island, MAX(i) + {_SUB_K} - MIN(i) AS covered
-        FROM isl GROUP BY doc_id, island
-    ),
-    per_doc AS (
-        SELECT doc_id, CAST(SUM(covered) AS BIGINT) AS n_dup_tokens,
-               COUNT(*) AS n_spans
-        FROM cov GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(COALESCE(len(t.words), 0) AS BIGINT) AS n_tokens,
-           COALESCE(p.n_spans, 0) AS n_spans,
-           COALESCE(p.n_dup_tokens, 0) AS n_dup_tokens,
-           CASE WHEN COALESCE(len(t.words), 0) = 0 THEN 0.0
-                ELSE CAST(COALESCE(p.n_dup_tokens, 0) AS DOUBLE) / len(t.words) END
-             AS dup_token_share
-    FROM w t LEFT JOIN per_doc p USING (doc_id)
-    """,
+    oracle=_sql_spans(spans.SQL_COVERAGE, within_doc=False),
     tags=("llm", "dedup", "substring", "rewrite"),
 )
 def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact repeated-substring detection (Lee et al. 2022,
     arXiv:2107.06499 'Deduplicating Training Data Makes Language
-    Models Better'): per document, the MERGED token spans covered by
-    any >= K-token run that appears verbatim in another document.
-    Unlike the fixed-grid passage operators (which only catch
-    ALIGNED duplication), stride-1 windows catch a repeated run at
-    any offset — this is exact substring dedup at K-token
-    granularity: every cross-doc repeat of length >= K is found
-    (a length-L repeat contributes L-K+1 overlapping windows that
-    merge back into one span via the gaps-and-islands pass).
+    Models Better'): per document, the merged token spans covered by
+    any >= K-token run that appears verbatim (case-insensitively) in
+    another document. Unlike the fixed-grid passage operators, which
+    only catch aligned duplication, stride-1 windows catch a repeated
+    run at any offset, so every cross-doc repeat of length >= K is
+    found. K is the single recall/cost knob; the cost model is
+    `operators/spans.py`'s.
 
-    Spark-native cost model, stated honestly: hashing every stride-1
-    window is O(n_tokens x K) map-side work per document — the price
-    of exactness without a distributed suffix array (the suffix-array
-    construction Lee et al. use is a specialized external-memory
-    batch job, not a relational operator). The shuffle side is
-    CHEAPER than it looks: only 128-bit window hashes move (uniform
-    keys, map-side pre-aggregated), the duplicated-position set is a
-    tiny fraction of positions, and the island merge runs on one
-    doc_id-keyed window. K is the single recall/cost knob.
-
-    Output: per doc (ALL docs), token count, merged span count,
-    covered duplicated tokens, and the share — the remove-side
-    rewrite consumes the spans; this is the detect side."""
-    from bigdata_project_spark.operators.dedup import words_col
-    from bigdata_project_spark.tables import load_spread
-
-    docs = load_spread(spark, sf_dir, "documents")
-    # coalesce BEFORE tokenizing: size(NULL array) is -1 in Spark, and
-    # this operator emits a row for EVERY doc (unlike the explode-only
-    # token queries, which just drop null docs) — without the guard a
-    # NULL text emits n_tokens = -1 and share = -0.0 (found by the
-    # null-twin check during round 8)
-    words = words_col(F.coalesce(F.col("text"), F.lit("")))
-    base = docs.select("doc_id", words.alias("words"))
-    pos = base.filter(F.size("words") >= _SUB_K).select(
-        "doc_id",
-        "words",
-        F.posexplode(F.sequence(F.lit(0), F.size("words") - _SUB_K)).alias("_p", "i"),
-    )
-    sh = pos.select(
-        "doc_id",
-        "i",
-        F.md5(F.concat_ws(" ", F.slice("words", F.col("i") + 1, _SUB_K))).alias("h"),
-    )
-    spread = sh.groupBy("h").agg(F.count_distinct("doc_id").alias("nd")).filter(
-        F.col("nd") >= 2
-    )
-    dup = sh.join(spread.select("h"), "h").select("doc_id", "i")
-    w_doc = Window.partitionBy("doc_id").orderBy("i")
-    lag_i = F.lag("i").over(w_doc)
-    flagged = dup.select(
-        "doc_id",
-        "i",
-        F.when(lag_i.isNull() | (F.col("i") - lag_i >= _SUB_K), 1).otherwise(0).alias(
-            "new_island"
-        ),
-    )
-    isl = flagged.select(
-        "doc_id", "i", F.sum("new_island").over(w_doc).alias("island")
-    )
-    cov = isl.groupBy("doc_id", "island").agg(
-        (F.max("i") + _SUB_K - F.min("i")).alias("covered")
-    )
-    per_doc = cov.groupBy("doc_id").agg(
-        F.sum("covered").alias("n_dup_tokens"), F.count("*").alias("n_spans")
-    )
-    return (
-        base.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_tokens"),
-            F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-            F.coalesce("n_dup_tokens", F.lit(0)).alias("n_dup_tokens"),
-            F.when(F.size("words") == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce("n_dup_tokens", F.lit(0)).cast("double") / F.size("words")
-            )
-            .alias("dup_token_share"),
-        )
-    )
+    Output: per doc (all docs), token count, merged span count,
+    covered duplicated tokens, and their share. This is the detect
+    side; `dedup_substring_rewrite` cuts the same spans."""
+    return _spans(spark, sf_dir, spans.coverage, within_doc=False)
 
 
 @query(
     "dedup_substring_rewrite",
-    oracle=f"""
-    WITH wo AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS words
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, words, unnest(range(len(words) - {_SUB_K} + 1)) AS i
-        FROM wo WHERE len(words) >= {_SUB_K}
-    ),
-    sh AS (
-        SELECT doc_id, i,
-               md5(lower(array_to_string(words[i + 1 : i + {_SUB_K}], ' '))) AS h
-        FROM pos
-    ),
-    spread AS (SELECT h FROM sh GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
-    dup AS (SELECT s.doc_id, s.i FROM sh s JOIN spread USING (h)),
-    flagged AS (
-        SELECT doc_id, i,
-               CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i) >= {_SUB_K}
-                      OR LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-                    THEN 1 ELSE 0 END AS new_island
-        FROM dup
-    ),
-    isl AS (
-        SELECT doc_id, i,
-               SUM(new_island) OVER (PARTITION BY doc_id ORDER BY i) AS island
-        FROM flagged
-    ),
-    iv AS (
-        SELECT doc_id, island, MIN(i) AS s, MAX(i) + {_SUB_K} AS e
-        FROM isl GROUP BY doc_id, island
-    ),
-    tok AS (
-        SELECT doc_id, i.p AS p, words[i.p + 1] AS token
-        FROM wo, LATERAL (SELECT unnest(range(len(words))) AS p) i
-        WHERE len(words) > 0
-    ),
-    kept AS (
-        SELECT t.doc_id, t.p, t.token FROM tok t
-        WHERE NOT EXISTS (
-            SELECT 1 FROM iv v
-            WHERE v.doc_id = t.doc_id AND t.p >= v.s AND t.p < v.e)
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(token, ' ' ORDER BY p) AS text_clean
-        FROM kept GROUP BY doc_id
-    )
-    SELECT w.doc_id,
-           CAST(COALESCE(len(w.words), 0) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(len(w.words), 0) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.text_clean, '') AS text_clean
-    FROM wo w LEFT JOIN agg a ON a.doc_id = w.doc_id
-    """,
+    oracle=_sql_spans(spans.SQL_EXCISE, within_doc=False),
     tags=("llm", "dedup", "substring", "rewrite"),
 )
 def dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The remove side of `dedup_exact_substring_spans`: REWRITE each
+    """The remove side of `dedup_exact_substring_spans`: rewrite each
     document with every cross-document >= K-token repeated run cut out
     (original case preserved; detection hashes the lowercased window,
     so case variants of a run are removed everywhere). This is the
     Lee et al. 2022 dedup applied as a transformation, the arbitrary-
     offset complement of `corpus_paragraph_dedup_rewrite`'s fixed
-    grid.
-
-    Scale: the detect stages are `dedup_exact_substring_spans`'s
-    (O(n x K) map-side hashing, 128-bit-hash shuffle, doc_id-keyed
-    island merge); the removal adds one doc_id-equi join from tokens
-    to the per-doc interval list (a handful of rows per doc) with the
-    range test as residual, and the same sorted-struct reassembly as
-    the passage rewrite. Tokens travel twice (explode, reassemble) —
-    the rewrite floor."""
-    from bigdata_project_spark.tables import load_spread
-
-    docs = load_spread(spark, sf_dir, "documents")
-    words_o = F.array_remove(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), "")
-    base = docs.select("doc_id", words_o.alias("words"))
-    pos = base.filter(F.size("words") >= _SUB_K).select(
-        "doc_id",
-        "words",
-        F.posexplode(F.sequence(F.lit(0), F.size("words") - _SUB_K)).alias("_p", "i"),
-    )
-    sh = pos.select(
-        "doc_id",
-        "i",
-        F.md5(F.lower(F.concat_ws(" ", F.slice("words", F.col("i") + 1, _SUB_K)))).alias("h"),
-    )
-    spread = sh.groupBy("h").agg(F.count_distinct("doc_id").alias("nd")).filter(
-        F.col("nd") >= 2
-    )
-    dup = sh.join(spread.select("h"), "h").select("doc_id", "i")
-    w_doc = Window.partitionBy("doc_id").orderBy("i")
-    lag_i = F.lag("i").over(w_doc)
-    isl = dup.select(
-        "doc_id",
-        "i",
-        F.sum(
-            F.when(lag_i.isNull() | (F.col("i") - lag_i >= _SUB_K), 1).otherwise(0)
-        )
-        .over(w_doc)
-        .alias("island"),
-    )
-    intervals = isl.groupBy("doc_id", "island").agg(
-        F.min("i").alias("s"), (F.max("i") + _SUB_K).alias("e")
-    )
-    tokens = base.filter(F.size("words") > 0).select(
-        "doc_id", F.posexplode("words").alias("p", "token")
-    )
-    kept = tokens.join(
-        intervals,
-        (tokens.doc_id == intervals.doc_id)
-        & (tokens.p >= intervals.s)
-        & (tokens.p < intervals.e),
-        "left_anti",
-    )
-    agg = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "token"))), lambda x: x["token"]
-            ),
-        ).alias("text_clean"),
-    )
-    return (
-        base.join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_tokens"),
-            (F.size("words") - F.coalesce("n_kept", F.lit(0))).cast("long").alias("n_removed"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
+    grid. Its n_removed equals the detect side's n_dup_tokens."""
+    return _spans(spark, sf_dir, spans.excise, within_doc=False)
 
 
 @query(
     "dedup_selfrepeat_substring_spans",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS words
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, words, unnest(range(len(words) - {_SUB_K} + 1)) AS i
-        FROM w WHERE len(words) >= {_SUB_K}
-    ),
-    sh AS (
-        SELECT doc_id, i,
-               md5(array_to_string(words[i + 1 : i + {_SUB_K}], ' ')) AS h
-        FROM pos
-    ),
-    per_hd AS (
-        SELECT h, doc_id, MAX(i) - MIN(i) AS pos_spread
-        FROM sh GROUP BY h, doc_id
-    ),
-    spread AS (
-        SELECT h FROM per_hd
-        GROUP BY h
-        HAVING COUNT(*) >= 2 OR MAX(pos_spread) >= {_SUB_K}
-    ),
-    dup AS (SELECT s.doc_id, s.i FROM sh s JOIN spread USING (h)),
-    flagged AS (
-        SELECT doc_id, i,
-               CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i) >= {_SUB_K}
-                      OR LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-                    THEN 1 ELSE 0 END AS new_island
-        FROM dup
-    ),
-    isl AS (
-        SELECT doc_id, i,
-               SUM(new_island) OVER (PARTITION BY doc_id ORDER BY i) AS island
-        FROM flagged
-    ),
-    cov AS (
-        SELECT doc_id, island, MAX(i) + {_SUB_K} - MIN(i) AS covered
-        FROM isl GROUP BY doc_id, island
-    ),
-    per_doc AS (
-        SELECT doc_id, CAST(SUM(covered) AS BIGINT) AS n_dup_tokens,
-               COUNT(*) AS n_spans
-        FROM cov GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(COALESCE(len(t.words), 0) AS BIGINT) AS n_tokens,
-           COALESCE(p.n_spans, 0) AS n_spans,
-           COALESCE(p.n_dup_tokens, 0) AS n_dup_tokens,
-           CASE WHEN COALESCE(len(t.words), 0) = 0 THEN 0.0
-                ELSE CAST(COALESCE(p.n_dup_tokens, 0) AS DOUBLE) / len(t.words) END
-             AS dup_token_share
-    FROM w t LEFT JOIN per_doc p USING (doc_id)
-    """,
+    oracle=_sql_spans(spans.SQL_COVERAGE, within_doc=True),
     tags=("llm", "dedup", "substring", "selfrepeat"),
 )
 def dedup_selfrepeat_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_exact_substring_spans` with WITHIN-document repeats
-    included (round 9, closing the r8 verdict's scoped-down
-    semantic): Lee et al. 2022 deduplicate a >= K-token run that
-    appears twice ANYWHERE — and real corpora hit the self-repeat
-    case first (boilerplate-heavy pages repeat their own navigation/
+    """`dedup_exact_substring_spans` with within-document repeats
+    included: Lee et al. 2022 deduplicate a >= K-token run that
+    appears twice anywhere, and real corpora hit the self-repeat case
+    first (boilerplate-heavy pages repeat their own navigation and
     footer runs), which the cross-doc operator scores 0.
 
-    A window hash qualifies when it has two NON-OVERLAPPING
-    occurrences: in two distinct documents (always non-overlapping),
-    or twice in one document at positions >= K apart. Two occurrences
-    exist at distance >= K within a doc iff MAX(i) - MIN(i) >= K for
-    that (hash, doc) group — so the qualifier is exactly the cross-doc
-    HAVING with a per-(hash, doc) position-spread aggregate added, and
-    overlapping-only self-matches (the same physical text region seen
-    through a periodic token run shorter than 2K) correctly do NOT
-    qualify: there is no second copy to remove. Every occurrence of a
-    qualifying hash is flagged, mirroring the cross-doc operator
-    (both copies count toward dup_token_share; the rewrite side keeps
-    one).
-
-    Scale: identical to the cross-doc form — O(n_tokens x K) map-side
-    window hashing, only 128-bit hashes shuffle — plus one extra
-    map-side-combinable aggregate keyed on (hash, doc) BEFORE the
-    hash-keyed qualifier, which SHRINKS the qualifier's input (one
-    row per (hash, doc), not per position). The island merge is
-    unchanged: one doc_id-keyed window."""
-    from bigdata_project_spark.operators.dedup import words_col
-    from bigdata_project_spark.tables import load_spread
-
-    docs = load_spread(spark, sf_dir, "documents")
-    # coalesce BEFORE tokenizing (size(NULL array) = -1; this operator
-    # emits a row for EVERY doc — same guard as the cross-doc form)
-    words = words_col(F.coalesce(F.col("text"), F.lit("")))
-    base = docs.select("doc_id", words.alias("words"))
-    pos = base.filter(F.size("words") >= _SUB_K).select(
-        "doc_id",
-        "words",
-        F.posexplode(F.sequence(F.lit(0), F.size("words") - _SUB_K)).alias("_p", "i"),
-    )
-    sh = pos.select(
-        "doc_id",
-        "i",
-        F.md5(F.concat_ws(" ", F.slice("words", F.col("i") + 1, _SUB_K))).alias("h"),
-    )
-    per_hd = sh.groupBy("h", "doc_id").agg(
-        (F.max("i") - F.min("i")).alias("pos_spread")
-    )
-    qual = (
-        per_hd.groupBy("h")
-        .agg(F.count("*").alias("nd"), F.max("pos_spread").alias("mx"))
-        .filter((F.col("nd") >= 2) | (F.col("mx") >= _SUB_K))
-    )
-    dup = sh.join(qual.select("h"), "h").select("doc_id", "i")
-    w_doc = Window.partitionBy("doc_id").orderBy("i")
-    lag_i = F.lag("i").over(w_doc)
-    flagged = dup.select(
-        "doc_id",
-        "i",
-        F.when(lag_i.isNull() | (F.col("i") - lag_i >= _SUB_K), 1).otherwise(0).alias(
-            "new_island"
-        ),
-    )
-    isl = flagged.select(
-        "doc_id", "i", F.sum("new_island").over(w_doc).alias("island")
-    )
-    cov = isl.groupBy("doc_id", "island").agg(
-        (F.max("i") + _SUB_K - F.min("i")).alias("covered")
-    )
-    per_doc = cov.groupBy("doc_id").agg(
-        F.sum("covered").alias("n_dup_tokens"), F.count("*").alias("n_spans")
-    )
-    return (
-        base.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_tokens"),
-            F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-            F.coalesce("n_dup_tokens", F.lit(0)).alias("n_dup_tokens"),
-            F.when(F.size("words") == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce("n_dup_tokens", F.lit(0)).cast("double") / F.size("words")
-            )
-            .alias("dup_token_share"),
-        )
-    )
+    A window qualifies when it has two non-overlapping occurrences: in
+    two distinct documents, or twice in one document at positions >= K
+    apart (`spans.repeated` with `within_doc`). Overlapping-only
+    self-matches, the same text region seen through a periodic run
+    shorter than 2K, do not qualify: there is no second copy to remove.
+    Every occurrence of a qualifying window is flagged, as in the
+    cross-doc operator (both copies count toward dup_token_share)."""
+    return _spans(spark, sf_dir, spans.coverage, within_doc=True)
 
 
 @query(
     "dedup_selfrepeat_rewrite",
-    oracle=f"""
-    WITH wo AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS words
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, words, unnest(range(len(words) - {_SUB_K} + 1)) AS i
-        FROM wo WHERE len(words) >= {_SUB_K}
-    ),
-    sh AS (
-        SELECT doc_id, i,
-               md5(lower(array_to_string(words[i + 1 : i + {_SUB_K}], ' '))) AS h
-        FROM pos
-    ),
-    per_hd AS (
-        SELECT h, doc_id, MAX(i) - MIN(i) AS pos_spread
-        FROM sh GROUP BY h, doc_id
-    ),
-    spread AS (
-        SELECT h FROM per_hd
-        GROUP BY h
-        HAVING COUNT(*) >= 2 OR MAX(pos_spread) >= {_SUB_K}
-    ),
-    dup AS (SELECT s.doc_id, s.i FROM sh s JOIN spread USING (h)),
-    flagged AS (
-        SELECT doc_id, i,
-               CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i) >= {_SUB_K}
-                      OR LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-                    THEN 1 ELSE 0 END AS new_island
-        FROM dup
-    ),
-    isl AS (
-        SELECT doc_id, i,
-               SUM(new_island) OVER (PARTITION BY doc_id ORDER BY i) AS island
-        FROM flagged
-    ),
-    iv AS (
-        SELECT doc_id, island, MIN(i) AS s, MAX(i) + {_SUB_K} AS e
-        FROM isl GROUP BY doc_id, island
-    ),
-    tok AS (
-        SELECT doc_id, i.p AS p, words[i.p + 1] AS token
-        FROM wo, LATERAL (SELECT unnest(range(len(words))) AS p) i
-        WHERE len(words) > 0
-    ),
-    kept AS (
-        SELECT t.doc_id, t.p, t.token FROM tok t
-        WHERE NOT EXISTS (
-            SELECT 1 FROM iv v
-            WHERE v.doc_id = t.doc_id AND t.p >= v.s AND t.p < v.e)
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               string_agg(token, ' ' ORDER BY p) AS text_clean
-        FROM kept GROUP BY doc_id
-    )
-    SELECT w.doc_id,
-           CAST(COALESCE(len(w.words), 0) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(len(w.words), 0) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.text_clean, '') AS text_clean
-    FROM wo w LEFT JOIN agg a ON a.doc_id = w.doc_id
-    """,
+    oracle=_sql_spans(spans.SQL_EXCISE, within_doc=True),
     tags=("llm", "dedup", "substring", "selfrepeat", "rewrite"),
 )
 def dedup_selfrepeat_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The remove side of `dedup_selfrepeat_substring_spans`,
-    completing the self-repeat pair the way `dedup_substring_rewrite`
-    completes the cross-doc pair: every >= K-token run with a second
-    non-overlapping occurrence ANYWHERE (another doc, or >= K tokens
-    away in the same doc) is cut from every document — the
-    boilerplate-navigation/footer case a real corpus hits first.
-    Case-insensitive detection, original-case output; same qualifier
-    as the detect side (per-(hash, doc) position spread feeding the
-    hash-keyed HAVING), same interval anti-join + sorted-struct
-    reassembly as the cross-doc rewrite.
-
-    Scale: identical to `dedup_substring_rewrite` plus the one
-    map-side-combinable (hash, doc) aggregate the self-repeat
-    qualifier costs; tokens still travel exactly twice (explode,
-    reassemble) — the rewrite floor."""
-    from bigdata_project_spark.tables import load_spread
-
-    docs = load_spread(spark, sf_dir, "documents")
-    words_o = F.array_remove(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), "")
-    base = docs.select("doc_id", words_o.alias("words"))
-    pos = base.filter(F.size("words") >= _SUB_K).select(
-        "doc_id",
-        "words",
-        F.posexplode(F.sequence(F.lit(0), F.size("words") - _SUB_K)).alias("_p", "i"),
-    )
-    sh = pos.select(
-        "doc_id",
-        "i",
-        F.md5(F.lower(F.concat_ws(" ", F.slice("words", F.col("i") + 1, _SUB_K)))).alias("h"),
-    )
-    per_hd = sh.groupBy("h", "doc_id").agg(
-        (F.max("i") - F.min("i")).alias("pos_spread")
-    )
-    qual = (
-        per_hd.groupBy("h")
-        .agg(F.count("*").alias("nd"), F.max("pos_spread").alias("mx"))
-        .filter((F.col("nd") >= 2) | (F.col("mx") >= _SUB_K))
-    )
-    dup = sh.join(qual.select("h"), "h").select("doc_id", "i")
-    w_doc = Window.partitionBy("doc_id").orderBy("i")
-    lag_i = F.lag("i").over(w_doc)
-    isl = dup.select(
-        "doc_id",
-        "i",
-        F.sum(
-            F.when(lag_i.isNull() | (F.col("i") - lag_i >= _SUB_K), 1).otherwise(0)
-        )
-        .over(w_doc)
-        .alias("island"),
-    )
-    intervals = isl.groupBy("doc_id", "island").agg(
-        F.min("i").alias("s"), (F.max("i") + _SUB_K).alias("e")
-    )
-    tokens = base.filter(F.size("words") > 0).select(
-        "doc_id", F.posexplode("words").alias("p", "token")
-    )
-    kept = tokens.join(
-        intervals,
-        (tokens.doc_id == intervals.doc_id)
-        & (tokens.p >= intervals.s)
-        & (tokens.p < intervals.e),
-        "left_anti",
-    )
-    agg = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "token"))), lambda x: x["token"]
-            ),
-        ).alias("text_clean"),
-    )
-    return (
-        base.join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_tokens"),
-            (F.size("words") - F.coalesce("n_kept", F.lit(0))).cast("long").alias("n_removed"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
+    """The remove side of `dedup_selfrepeat_substring_spans`, as
+    `dedup_substring_rewrite` is of the cross-doc pair: every >= K-token
+    run with a second non-overlapping occurrence anywhere (another doc,
+    or >= K tokens away in the same doc) is cut from every document,
+    the boilerplate navigation/footer case a real corpus hits first.
+    Case-insensitive detection, original-case output; n_removed equals
+    the detect side's n_dup_tokens."""
+    return _spans(spark, sf_dir, spans.excise, within_doc=True)

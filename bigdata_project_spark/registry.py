@@ -94,117 +94,18 @@ def all_oracles() -> dict[str, str]:
 
 _LOADED = False
 
-# Externally-verified-first ordering. The driver's correctness harness
-# checks the first 50 registered queries each round. Cumulative through
-# round 6 (CORRECTNESS_r01-r06.json): 236 distinct queries driver-
-# checked, 234 ever-green; the round-6 window came back 50/50 green.
-# Oracle outputs are canonicalization-gated (integer SUMs CAST AS
-# BIGINT, arrays stringified; tests/test_registry_hygiene.py) so the
-# round-5 HUGEINT defect class cannot reappear.
-#
-# Round-7 window (exactly 50): the complete never-driver-checked
-# backlog — all 37 oracled queries without a driver row, judge-
-# verified green vs DuckDB at sf0.01 in rounds 5 and 6 — followed by
-# 13 re-confirmation slots for the queries whose most recent driver
-# row is oldest (round 2, the aggregate family), guarding against
-# silent regression since then. No-oracle (rows-only) queries are
-# excluded: their correctness gate is the +/-5%-of-exact property
-# tests in tests/, not a driver hash (see COVERAGE.md).
-#
-# Round-8 window (exactly 50): never-checked debt first — the two
-# oracled audits added AFTER the r7 window froze (judge-verified green
-# at sf0.01 in r7) plus any queries newly registered THIS round — then
-# the oldest-last-checked regression sweep (vintage r2/r3 from
-# CORRECTNESS_r01-r07, registration order within vintage, trimmed from
-# the tail to keep the window at 50).
-#
-# Round-9 window (exactly 50): the 7 oracled queries registered after
-# the r8 window froze (never driver-checked, judge-replay green in r8)
-# first, any queries newly registered THIS round inserted after them
-# (tail trimmed to keep the window at 50), then oldest-last-checked:
-# the r3-vintage setop/sort/sub/window/stream re-confirms, then the
-# head of the r4 vintage (registration order within vintage).
-#
-# Round-10 window (exactly 50): round-10 additions inserted at the
-# head as they land (tail trimmed to keep 50), then oldest-last-
-# checked — the nine r4-vintage names trimmed from the r9 tail, the
-# r4 remainder in registration order, then the r5 head.
-#
-# Round-11 rotation queue: FIRST any oracled queries registered after
-# this window froze (diff all_oracles() against CORRECTNESS_r01-r10
-# row names at r11 start), then oldest-last-checked — the 16 r4
-# names trimmed from THIS window's tail during round 10 to make room
-# for the sixteen r10 additions (in original order:
-# events_gapfill_hourly, scalar_string_functions, scalar_date_functions,
-# scalar_math_guarded, scalar_null_handling, scalar_array_functions,
-# scalar_json_extraction, scalar_case_conversion, scalar_regexp_family,
-# scalar_url_parse, scalar_csv_column_codec, scalar_interval_datetime,
-# setop_union_by_name_missing, vn_listing_normalize, dedup_lsh_pair_recall,
-# chunk_documents_overlap), then the r5
-# vintage (registration order: vocab_top_terms,
-# sample_quality_weighted, graph_triangle_stats,
-# mixture_source_weights, quality_gopher_rules, lake_zorder_key,
-# multimodal_resize_plan, sim_recall_at_k, sim_ann_ivf_nprobe2,
-# sim_recall_ivf2_at_k, text_langid_confusion,
-# qa_referential_integrity, qa_column_profile, scd2_snapshot_diff,
-# agg_share_of_total, events_rollup_cascade, events_top_paths,
-# events_rfm_segments, events_interarrival_stats,
-# events_burst_detection, events_user_trend_slope,
-# join_market_basket_pairs, the tpch_q* sweep,
-# stream_incremental_rollup), then the r6 vintage.
-# Round-12 window (exactly 50): the 13 round-12 queries (from 10 new
-# operator families) first (never driver-checked), then the 11 names
-# trimmed during round 11, then the r5-vintage remainder, the
-# r6-vintage streaming re-confirms, and the 4 next-oldest by
-# last-checked round. Driver-confirmed 50/50 green in
-# CORRECTNESS_r12.json.
-# Round-13 window (exactly 50): the 13 round-13 additions first
-# (never driver-checked: audio fingerprint family incl. the
-# streaming ingest form, trained-IVF k-means family, fully-trained
-# IVF-PQ, NB calibration, nDCG@10, dup-line signals, the 3-signal
-# ensemble gate), then strict oldest-last-checked order — the 3
-# names the late r12 additions trimmed (r4/r5 vintage), the
-# r5-vintage tpch remainder, and 31 of the 49 r6-vintage names
-# (registration order; join_asof_tolerance_1h / join_asof_forward /
-# join_asof_nearest trimmed for the late r13 additions).
-# Round-14 window (exactly 50): the 11 round-14 additions first
-# (never driver-checked: full Gopher gate, graph-ANN build/beam/
-# recall, Matryoshka dim curve, isotonic calibration + calibrated
-# gate + calibrated ensemble, unigram-LM train/count/fertility),
-# then strict oldest-last-checked order — the COMPLETE r6 vintage
-# (18 names: the 3 join_asof re-confirms trimmed from the r13 tail
-# plus the 15 the r13 window could not fit), then the first 21 of
-# the 45 r7-vintage names (registration order).
-# Round-15 rotation queue: FIRST any oracled queries registered
-# after this window froze (diff all_oracles() against
-# CORRECTNESS_r01-r14 row names at r15 start), then
-# oldest-last-checked — the 24-name r7-vintage remainder
-# (registration order: agg_correlation_matrix, agg_pricing_summary,
-# agg_rollup_region_nation,
-# agg_cube_status_priority, agg_distinct_per_segment,
-# agg_conditional, agg_median_exact, agg_percentile_native,
-# agg_stats_moments, agg_collect_sorted, agg_minmaxby,
-# agg_mode_exact, agg_winsorized_mean, events_markov_transitions,
-# events_audience_overlap, events_longest_streak,
-# events_dow_seasonality, events_session_depth_histogram,
-# events_hour_profile, join_range_price_bands_binned,
-# join_copurchase_lift, events_autocorr_lag7, events_freshness_lag,
-# events_bot_flag_rules), then the r8 vintage (50 names) onward.
-# No-oracle (rows-only) entries stay excluded: the driver marks
-# them err.
-# Vector-kernel rotation: one query from each family rewired onto
-# operators/vecmath.py leads the window (PQ codes, label-cell IVF,
-# SemDeDup cells, trained k-means cells, hybrid retrieval); the five
-# names at the r7-vintage tail gave up their slots.
+# The driver's correctness harness checks the first 50 registered
+# queries. `_ensure_loaded` registers `_DRIVER_FIRST` first, in this
+# order, and every other query after it in import order. Only queries
+# with a DuckDB oracle belong here: the driver marks a rows-only query
+# err, so one would waste a slot. Which queries lead is a rotation
+# whose history is in CHANGES.md and git.
 _DRIVER_FIRST: tuple[str, ...] = (
-    # --- rewired onto operators/vecmath.py ---
     "sim_pq_codes",
     "sim_ann_ivf_probe",
     "dedup_semantic_cells",
     "sim_ivf_trained_cells",
     "retrieval_hybrid_rrf",
-    # --- never driver-checked: round-14 additions (registration
-    # order) ---
     "quality_gopher_full_rules",
     "sim_graph_knn_build",
     "sim_graph_beam_search",
@@ -216,9 +117,6 @@ _DRIVER_FIRST: tuple[str, ...] = (
     "vocab_unigram_train",
     "vocab_unigram_token_count",
     "vocab_unigram_fertility_by_lang",
-    # --- oldest-last-checked: the full r6 vintage (registration
-    # order) — the 3 join_asof names trimmed from the r13 tail plus
-    # the 15 the r13 window could not fit ---
     "join_asof_tolerance_1h",
     "join_asof_forward",
     "join_asof_nearest",
@@ -237,8 +135,6 @@ _DRIVER_FIRST: tuple[str, ...] = (
     "sub_not_in_null_aware",
     "events_changepoint_cusum",
     "events_ab_test_zflag",
-    # --- r7-vintage head (registration order; the 24-name remainder
-    # leads the r15 queue above) ---
     "dedup_prefix_filter_jaccard",
     "dedup_containment_pairs",
     "dedup_normalized_exact",

@@ -119,12 +119,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testbed table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def load_spread(spark: SparkSession, sf_dir: str, name: str, key: str = "doc_id") -> DataFrame:
     """load() + a CONDITIONAL spread for CPU-bound consumers: when the
     scan yields fewer input splits than shuffle partitions (the

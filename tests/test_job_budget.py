@@ -36,6 +36,12 @@ BUDGETS = {
     "stream_incremental_rollup": 6,
     "stream_url_frontier_dedup": 26,
     "stream_semantic_incremental_dedup": 43,
+    # the span-excision consumers (operators/spans.py)
+    "contamination_decontam_rewrite": 11,
+    "dedup_exact_substring_spans": 6,
+    "dedup_selfrepeat_rewrite": 8,
+    "dedup_selfrepeat_substring_spans": 6,
+    "dedup_substring_rewrite": 8,
 }
 # processes started per warm run: the measured count plus about 25%. A
 # stream's state store writes its files per state partition, and the
@@ -63,6 +69,11 @@ _INPUTS = {
     "stream_incremental_rollup": ("events",),
     "stream_url_frontier_dedup": ("documents",),
     "stream_semantic_incremental_dedup": ("embeddings",),
+    "contamination_decontam_rewrite": ("documents",),
+    "dedup_exact_substring_spans": ("documents",),
+    "dedup_selfrepeat_rewrite": ("documents",),
+    "dedup_selfrepeat_substring_spans": ("documents",),
+    "dedup_substring_rewrite": ("documents",),
 }
 
 

@@ -252,3 +252,28 @@ def test_components_live_only_in_clustering():
     assert not offenders, "near-dup clustering copied outside operators/clustering.py:\n" + "\n".join(
         offenders
     )
+
+
+def test_span_excision_lives_only_in_spans():
+    """operators/spans.py owns span excision: the gaps-and-islands merge
+    of window hits into spans, the interval anti-join and the sorted
+    (p, token) reassembly, with their DuckDB twins. A query that spells
+    one of them itself is a copy that can drift from the twin its
+    oracle is built from."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    markers = (
+        'F.lag("i")',
+        "new_island",
+        "LAG(i) OVER (PARTITION BY doc_id",
+        'collect_list(F.struct("p", "token"))',
+    )
+    offenders = [
+        f"{f.relative_to(pkg).as_posix()}:{i}: {line.strip()}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f.relative_to(pkg).as_posix() != "operators/spans.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if any(m in line for m in markers)
+    ]
+    assert not offenders, "span excision copied outside operators/spans.py:\n" + "\n".join(offenders)

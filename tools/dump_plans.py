@@ -53,7 +53,7 @@ SHOWCASE = [
     ("dedup_semantic_cells", "SemDeDup: broadcast centroid assignment, pairwise cosine confined to the derived (label, sub-bucket) cell equi-join, components exchange (id,label) pairs, keeper max(struct) rides the component exchange."),
     ("corpus_dsir_importance", "DSIR weights: two map-side-combined token tf aggregates, occurrence->tf join on token (no vocab broadcast), 1-row totals broadcast, integer order-free doc rollup."),
     ("silver_quarantine_split", "Quarantine gate: one codegen CASE in the scan stage; low-cardinality (type, reason) grouped count, map-side combined — no extra exchange on the silver path."),
-    ("dedup_selfrepeat_substring_spans", "Self-repeat spans: stride-1 window hashing stays map-side; the qualifier adds ONE map-side-combined (hash, doc) aggregate that SHRINKS the hash-keyed HAVING's input; island merge on a single doc_id-keyed window."),
+    ("dedup_selfrepeat_substring_spans", "Self-repeat spans (operators/spans.py): tokens are lowercased once per doc and stride-1 window hashing stays map-side; the qualifier adds ONE map-side-combined (hash, doc) aggregate that SHRINKS the hash-keyed HAVING's input; island merge on a single doc_id-keyed window."),
     ("corpus_k_anonymize_release", "k-anonymize release: three low-cardinality grouped counts broadcast back onto one pruned fact scan; the re-audit is a <=131-row broadcast — the fact table never shuffles on a high-cardinality key."),
     ("retrieval_hybrid_rrf", "Hybrid RRF: each leg collapses to TakeOrderedAndProject top-50 BEFORE any rank window (the global row_number sorts 50 rows, never the corpus); the fusion is a 50x50 full-outer join; both leg stats are 1-row broadcasts."),
     ("corpus_quality_stratified_gate", "Stratified gate: documents are never sorted — per-(lang, n_tokens) counts aggregate map-side, the cumulative threshold runs over that tiny table, and the keep bit comes back as a BroadcastHashJoin on (lang, n_tokens)."),
