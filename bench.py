@@ -327,7 +327,9 @@ def main() -> None:
 # `python bench.py --ab REF [--queries a,b,c] [--repeats N]` loads the
 # REF checkout's registry NEXT TO the working tree's inside ONE Spark
 # session and alternates warm runs per query (warm A, warm B, then
-# timed A/B pairs), so both sides see the same ambient conditions.
+# timed pairs whose first side alternates), so both sides see the same
+# ambient conditions. Sharing the session also means an A/B cannot see
+# a change to the session itself (get_spark's confs or classpath).
 # Caveat (documented, acceptable for plan-level A/Bs): Python-worker
 # functions (mapInPandas/mapInArrow bodies) are deserialized by module
 # reference on the executors, which import the working tree via
@@ -416,9 +418,10 @@ def _main_ab(ref: str, names: list[str] | None, repeats: int, tmp: str) -> None:
         run(new_fn)  # warm both sides' codegen/footers before timing
         run(old_fn, ref_modules)
         new_ts, old_ts = [], []
-        for _ in range(repeats):  # alternate so drift hits both sides
-            new_ts.append(run(new_fn))
-            old_ts.append(run(old_fn, ref_modules))
+        sides = [(new_ts, new_fn, None), (old_ts, old_fn, ref_modules)]
+        for i in range(repeats):  # alternate which side runs first
+            for ts, fn, modules in sides[:: -1 if i % 2 else 1]:
+                ts.append(run(fn, modules))
         new_m = statistics.median(new_ts)
         old_m = statistics.median(old_ts)
         results[name] = {
@@ -446,7 +449,13 @@ if __name__ == "__main__":
     import argparse
 
     parser = argparse.ArgumentParser(description=__doc__)
-    parser.add_argument("--ab", metavar="REF", help="same-session interleaved A/B vs a git ref")
+    parser.add_argument(
+        "--ab",
+        metavar="REF",
+        help="same-session interleaved A/B vs a git ref; both trees share one JVM and session, so a "
+        "session-level change (get_spark's confs, its classpath) needs perfbench on two fresh "
+        "`git archive` checkouts instead",
+    )
     parser.add_argument("--queries", help="comma-separated query names (A/B mode)")
     parser.add_argument("--repeats", type=int, default=3, help="timed pairs per query (A/B mode)")
     args = parser.parse_args()

@@ -19,29 +19,42 @@ cluster, leave the cap unset, or size it so that it binds only on
 small-file inputs (a multiple of the total cores well below a large
 table's natural split count).
 
+Every local file the JVM writes goes through the package's own Hadoop
+file system for `file:` paths: `jvm/LocalFs.java`, built into
+`jvm/localfs.jar`, which goes on the driver's class path and is named
+by `fs.file.impl`. Without the native `libhadoop`, Hadoop's stock local
+file system sets the mode of each file and directory it creates by
+running a `chmod` process: every parquet part file, `.crc` file,
+committer temp dir, `_SUCCESS` marker, checkpoint-log entry and
+state-store delta. `LocalFs` is Hadoop's checksummed `LocalFileSystem`
+over a raw file system that sets the nine rwx bits through `java.nio`,
+so files keep their modes and `.crc` files are written and verified as
+before. On 4 vCPUs, a warm `stream_countmin_incremental` run at sf0.001
+started 132 processes through the stock file system and 8 through
+`LocalFs` (tests/test_job_budget.py's count, which leaves out new JVM
+threads).
+
 Streaming checkpoints (offset, commit and source logs, the metadata
 file and the HDFS-backed state-store files) go through Spark's
 `FileSystemBasedCheckpointFileManager` instead of the default
-`FileContextBasedCheckpointFileManager`. Without the native
-`libhadoop`, Hadoop's local file system runs a shell command for
-`chmod` on every create and mkdir, and the FileContext rename path
-adds a `readlink` per `getFileLinkStatus`. On a 4-vCPU host a
-commit-log entry started 20 processes and took 16-17 ms through
-FileContext, and 4 processes and about 4 ms through FileSystem
-(median of `CommitLog.add` over 35 entries). A count-min
-micro-batch writes three such entries (offsets, WAL commit, commit
-log). Local `rename(2)` is atomic, so each log entry still commits
-exactly once; `fileChecksum` stays on.
+`FileContextBasedCheckpointFileManager`. The default manager uses
+Hadoop's `FileContext` API, whose local file system builds its own
+`RawLocalFs` and ignores `fs.file.impl`: it would still run a `chmod`
+per create and mkdir, and its rename path a `readlink` per
+`getFileLinkStatus`. Local `rename(2)` is atomic, so each log entry
+still commits exactly once; `fileChecksum` stays on.
 
 One behaviour differs on replay. When a restarted query rewrites a
 state-store version that already exists (a crash after the state
 commit but before the commit log), FileContext renames over the
-existing file, while Hadoop's local FileSystem refuses an existing
-target: the manager keeps the first file and leaves the rewrite's
-`.N.delta.<uuid>.tmp` (and the temp of its checksum file) next to
-it. Both files hold the same replayed state, so the result is the
-same (tests/test_streaming.py pins it); the package's stream
-checkpoints are temporary directories, so the orphans go with them.
+existing file, while `LocalFs` refuses an existing file target (the
+rule of Hive's `ProxyLocalFileSystem`, which the bundled hive-exec jar
+registers for `file:`): the manager keeps the first file and leaves
+the rewrite's `.N.delta.<uuid>.tmp` (and the temp of its checksum
+file) next to it. Both files hold the same replayed state, so the
+result is the same (tests/test_streaming.py pins it); the package's
+stream checkpoints are temporary directories, so the orphans go with
+them.
 
 A stateful stream keeps one state-store partition per shuffle
 partition, each writing a delta file and checksum per micro-batch,
@@ -51,9 +64,10 @@ inside `streaming.pipeline.sized_state`: one partition per
 at most the session's value, which the session's own queries keep.
 
 This factory builds `local[...]` sessions only. A cluster session
-keeps Spark's default manager: on HDFS or an object store,
-FileContext's rename-with-overwrite is the atomic commit, and the
-per-file shell-out does not arise where `libhadoop` is installed.
+keeps Spark's default manager and Hadoop's own file systems: on HDFS or
+an object store, FileContext's rename-with-overwrite is the atomic
+commit, and the per-file shell-out does not arise where `libhadoop` is
+installed.
 """
 
 from __future__ import annotations
@@ -64,6 +78,7 @@ import tempfile
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "localfs.jar")
 
 
 def get_spark(app_name: str = "bigdata_project_spark", cpus: str | None = None) -> SparkSession:
@@ -73,6 +88,8 @@ def get_spark(app_name: str = "bigdata_project_spark", cpus: str | None = None) 
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.files.maxPartitionNum", str(cpus))
+        .config("spark.driver.extraClassPath", _LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", "sparkgraft.fs.LocalFs")
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",

@@ -5,12 +5,18 @@ creeps back in — a parquet schema inference, a catalog scan, an empty
 store write — before a timing run would. A budget is the measured
 count; lower it when a change removes jobs.
 
-The stream harnesses also get a budget of OS processes started per
-run. Without the native `libhadoop`, Hadoop's local file system runs
-a shell command (`chmod`, `readlink`) for file operations, so every
-checkpoint-log entry and state-store file can cost several forks."""
+The stream harnesses and the listings ETL also get a budget of OS
+processes started per run. Hadoop's stock local file system, without
+the native `libhadoop`, runs a `chmod` process for every file and
+directory it creates. The session's own file system
+(`bigdata_project_spark/jvm/LocalFs.java`) sets those modes in the
+JVM, so a budget catches a file write that forks again, or a shell-out
+that creeps back in elsewhere."""
 
 from __future__ import annotations
+
+import os
+import stat
 
 import pytest
 
@@ -43,15 +49,18 @@ BUDGETS = {
     "dedup_selfrepeat_substring_spans": 6,
     "dedup_substring_rewrite": 8,
 }
-# processes started per warm run: the measured count plus about 25%. A
-# stream's state store writes its files per state partition, and the
-# streams size those to their state (`pipeline.state_partitions`), so
-# no budget grows with the core count.
+# processes started per warm run (`_processes`): the measured count
+# plus about 25%, at 4 and 8 cores alike. Through Hadoop's stock local
+# file system the three streams started 132, 130 and 53.
 PROCESS_BUDGETS = {
-    "stream_countmin_incremental": 183,
-    "stream_quantile_incremental": 201,
-    "stream_tumbling_hourly": 72,
+    "stream_countmin_incremental": 10,
+    "stream_quantile_incremental": 8,
+    "stream_tumbling_hourly": 4,
 }
+# one write_lake_with_quarantine pass over _ETL_FILES landing files:
+# measured 0, and 62 through the stock file system
+_ETL_FILES = 40
+ETL_PROCESS_BUDGET = 2
 # tables whose schemas a query reads; loaded once first so that a
 # budget does not depend on which test ran before it
 _INPUTS = {
@@ -97,10 +106,14 @@ def _jobs(spark, action) -> int:
 
 
 def _processes(spark, action) -> int:
-    """Processes started while `action()` ran, from the `processes`
-    line of /proc/stat. The counter is machine-wide: it counts every
-    fork and thread creation on the machine, by any program, so the
-    JVM's new pool threads and Spark's Python workers count too."""
+    """Processes started while `action()` ran: the `processes` line of
+    /proc/stat, which counts every fork and thread creation on the
+    machine, less the driver JVM's threads that were born during the
+    run and are still alive after it. Those are Spark's pool threads
+    (the block manager's cached pools grow by dozens in a burst), not
+    processes; a `chmod` or any other child process has exited by then
+    and stays counted."""
+    jvm_tasks = f"/proc/{spark._jvm.java.lang.ProcessHandle.current().pid()}/task"
 
     def forks() -> int:
         try:
@@ -109,9 +122,11 @@ def _processes(spark, action) -> int:
         except (OSError, StopIteration):
             pytest.skip("/proc/stat has no readable processes counter")
 
+    before_threads = set(os.listdir(jvm_tasks))
     before = forks()
     action()
-    return forks() - before
+    started = forks() - before
+    return started - len(set(os.listdir(jvm_tasks)) - before_threads)
 
 
 def _stages(spark, action) -> list[tuple[int, int]]:
@@ -150,8 +165,8 @@ def test_stream_within_process_budget(spark, sf_dir, name):
 
     budget = PROCESS_BUDGETS[name]
     run()  # warm: Python workers, schema cache, first-use classes
-    # the best of three runs: a burst of block removals can grow the
-    # block manager's thread pools by dozens of threads in one run
+    # the best of three runs: a thread that starts and ends inside one
+    # run still counts
     n = min(_processes(spark, run) for _ in range(3))
     assert n <= budget, f"{name} started {n} processes, budget {budget}"
 
@@ -185,3 +200,55 @@ def test_listings_etl_scans_landing_once_in_core_count_tasks(spark, tmp_path):
     scans = [(tasks, rows) for tasks, rows in stages if rows > tasks]
     assert sum(rows for _, rows in scans) == n_files, scans
     assert sum(tasks for tasks, _ in scans) <= cores, scans
+
+
+def test_listings_etl_within_process_budget(spark, tmp_path):
+    bronze = read_listings_json(spark, write_landing(tmp_path / "landing", _ETL_FILES))
+
+    def run():
+        write_lake_with_quarantine(bronze, str(tmp_path / "lake"), str(tmp_path / "quarantine"), mode="overwrite")
+
+    run()  # warm, as for the streams; the best of three, as for them
+    n = min(_processes(spark, run) for _ in range(3))
+    assert n <= ETL_PROCESS_BUDGET, f"listings ETL started {n} processes, budget {ETL_PROCESS_BUDGET}"
+
+
+def _local_fs(spark):
+    """The session's Hadoop FileSystem for `file:` paths."""
+    jvm = spark._jvm
+    return jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+
+
+def test_session_local_file_system_is_the_packaged_one(spark):
+    assert _local_fs(spark).getClass().getName() == "sparkgraft.fs.LocalFs"
+
+
+def _modes(root) -> dict[str, int]:
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(d, name)
+            out[os.path.relpath(path, root)] = stat.S_IMODE(os.stat(path).st_mode)
+    return out
+
+
+def test_partitioned_parquet_write_keeps_stock_modes_and_checksums(spark, tmp_path):
+    """A partitionBy write through the session's file system leaves the
+    tree that Hadoop's stock LocalFileSystem writes: the same names,
+    `.crc` siblings included, and the same modes. The stock tree is a
+    copy through `FileUtil.copy`, which makes each directory and file
+    (and its checksum) anew with the stock create and mkdirs."""
+    ours = tmp_path / "ours"
+    spark.range(40).selectExpr("id", "id % 3 AS part").repartition(2).write.partitionBy("part").parquet(str(ours))
+    hadoop, conf = spark._jvm.org.apache.hadoop, spark._jsc.hadoopConfiguration()
+    stock = hadoop.fs.LocalFileSystem()
+    stock.initialize(spark._jvm.java.net.URI("file:///"), conf)
+    src, dst = hadoop.fs.Path(f"file://{ours}"), hadoop.fs.Path(f"file://{tmp_path / 'stock'}")
+    hadoop.fs.FileUtil.copy(_local_fs(spark), src, stock, dst, False, conf)
+    got, want = _modes(ours), _modes(tmp_path / "stock")
+    assert got == want
+    assert "._SUCCESS.crc" in got
+    parts = [p for p in got if p.endswith(".parquet")]
+    assert len(parts) >= 3 and all(os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") in got for p in parts)
+    assert {m for p, m in got.items() if (ours / p).is_dir()} == {0o755}
+    assert {m for p, m in got.items() if (ours / p).is_file()} == {0o644}

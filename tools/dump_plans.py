@@ -3,16 +3,17 @@
 plan shape IS the scale argument. Run from the repo root:
 
     python tools/dump_plans.py [sf_dir]
-    python tools/dump_plans.py sf_dir --normalized DIR
+    python tools/dump_plans.py sf_dir --normalized DIR [QUERY ...]
 
 Each section pairs the executed plan (AQE final) with the one-line
 claim tests/test_plans.py asserts about it, so the document cannot
 drift silently from the code: re-running the script re-reads both.
 
-`--normalized DIR` writes, instead of PLANS.md, each showcase query's
-optimized logical plan (`<query>.optimized.txt`) and AQE-final plan
-(`<query>.final.txt`) through `normalize`, which removes what moves
-between runs of the same code. Two commits' directories are then
+`--normalized DIR` writes, instead of PLANS.md, each named registered
+query's (by default each showcase query's) optimized logical plan
+(`<query>.optimized.txt`) and AQE-final plan (`<query>.final.txt`)
+through `normalize`, which removes what moves between runs of the same
+code. Two commits' directories are then
 compared with `diff -r`.
 """
 
@@ -165,25 +166,26 @@ def normalize(plan: str, sf_dir: str) -> str:
     return "\n".join(_canonical_expand(lines)) + "\n"
 
 
-def dump_normalized(spark, sf_dir: str, out_dir: str) -> None:
+def dump_normalized(spark, sf_dir: str, out_dir: str, names: list[str]) -> None:
     from bigdata_project_spark.caching import release_cached
     from bigdata_project_spark.registry import REGISTRY
 
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    for name, _claim in SHOWCASE:
+    for name in names:
         df = REGISTRY[name].fn(spark, sf_dir)
         df.collect()  # AQE finalizes the executed plan
         qe = df._jdf.queryExecution()
         for kind, plan in (("optimized", qe.optimizedPlan()), ("final", qe.executedPlan())):
             (out / f"{name}.{kind}.txt").write_text(normalize(plan.toString(), sf_dir))
         release_cached(spark, sweep_all=True)
-    print(f"{out_dir}: {len(SHOWCASE)} queries, optimized and final plans")
+    print(f"{out_dir}: {len(names)} queries, optimized and final plans")
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    normalized = sys.argv[3] if sys.argv[2:3] == ["--normalized"] and len(sys.argv) == 4 else None
+    normalized = sys.argv[3] if sys.argv[2:3] == ["--normalized"] and len(sys.argv) >= 4 else None
+    names = sys.argv[4:] or [name for name, _claim in SHOWCASE]
     from bigdata_project_spark.caching import release_cached
     from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
     from bigdata_project_spark.session import get_spark
@@ -192,7 +194,7 @@ def main() -> None:
     spark = get_spark("plans", cpus="8")
     spark.sparkContext.setLogLevel("ERROR")
     if normalized:
-        dump_normalized(spark, sf_dir, normalized)
+        dump_normalized(spark, sf_dir, normalized, names)
         spark.stop()
         return
 
