@@ -35,55 +35,37 @@ from bigdata_project_spark.operators.dedup import (
     words_col,
 )
 from bigdata_project_spark.operators.corpus import _SQL_SPLIT_CTE_BODY
+from bigdata_project_spark.operators.nearpairs import jaccard, overlap, sql_jaccard, sql_overlap
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
 _JACCARD_MIN = 0.05  # candidate-pair edge threshold over word-5-gram Jaccard
 
-# (doc_a, doc_b) edges: shingle-sharing pairs with Jaccard >= threshold.
-# Candidate generation joins the df-CAPPED shingle set (shc): the edge
-# builder feeds the end-to-end corpus dedup, so it must not inherit the
-# unbounded hot-shingle self-join (one boilerplate shingle in df docs
-# would produce an O(df²) bucket at corpus scale).
-_SQL_EDGES = f"""
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    edges AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN cap_counts ca ON ca.doc_id = doc_a
-        JOIN cap_counts cb ON cb.doc_id = doc_b
-        WHERE CAST(n_common AS DOUBLE) / (ca.n_sh + cb.n_sh - n_common) >= {_JACCARD_MIN}
-    )
-"""
+# (doc_a, doc_b) edges: shingle-sharing pairs with Jaccard >= threshold,
+# the twin of `near_dup_edges`. Candidate generation joins the
+# df-CAPPED shingle set (shc): the edge builder feeds the end-to-end
+# corpus dedup, so it must not inherit the unbounded hot-shingle
+# self-join (one boilerplate shingle in df docs would produce an
+# O(df²) bucket at corpus scale).
+SQL_EDGES = f"""{sql_overlap("shc")},
+    {sql_jaccard("cap_counts")},
+    edges AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= {_JACCARD_MIN})"""
 
 
-def _edges_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Returns (edges, persisted_shingles). The caller materializes
-    edges during the label-propagation loop and must unpersist the
-    shingle cache afterwards (its only consumer is the edge build)."""
-    sh = shingle_df_capped(spark, sf_dir).persist()
+def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the near-dup graph, every pair of
+    documents whose df-capped word-5-gram Jaccard is at least
+    _JACCARD_MIN.
+
+    The build reads its capped shingles three times (both self-join
+    sides and the per-doc counts), so it caches them with
+    tracked_persist; caching.release_cached frees them with the
+    query's other caches once the result is collected. Callers never
+    unpersist them. The edges themselves are lazy: a caller that reads
+    them more than once caches them, or what it derives from them."""
+    sh = tracked_persist(shingle_df_capped(spark, sf_dir))
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca, cb = counts.alias("ca"), counts.alias("cb")
-    edges = (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .filter(
-            F.col("n_common").cast("double") / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_common"))
-            >= _JACCARD_MIN
-        )
-        .select("doc_a", "doc_b")
-    )
-    return edges, sh
+    return jaccard(overlap(sh), counts).filter(F.col("jaccard") >= _JACCARD_MIN).select("doc_a", "doc_b")
 
 
 class CCNotConverged(RuntimeError):
@@ -351,7 +333,7 @@ def keep_best(j: DataFrame, id_col: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     {sql_components("documents", "doc_id")}
     SELECT doc_id, component, component_reach FROM comp
     """,
@@ -363,10 +345,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     component = min doc_id reachable (the canonical keeper id);
     component_reach = cluster size seen from each doc."""
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    edges, sh = _edges_df(spark, sf_dir)
-    comp = components(docs, edges)
-    # the shingle cache only feeds the edge build
-    sh.unpersist()
+    comp = components(docs, near_dup_edges(spark, sf_dir))
     return with_reach(comp).select(F.col("id").alias("doc_id"), "component", "component_reach")
 
 
@@ -375,7 +354,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     {sql_components("documents", "doc_id")},
     quality AS (
         SELECT doc_id,
@@ -447,7 +426,7 @@ def _sql_pagerank_iter(i: int) -> str:
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     und AS (
         SELECT doc_a AS src, doc_b AS dst FROM edges
         UNION ALL SELECT doc_b, doc_a FROM edges
@@ -478,8 +457,7 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
       in any order, so both engines produce identical ranks.
     """
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    edges_lazy, sh = _edges_df(spark, sf_dir)
-    edges = tracked_persist(edges_lazy)
+    edges = tracked_persist(near_dup_edges(spark, sf_dir))
     und = tracked_persist(
         edges.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
             edges.selectExpr("doc_b AS src", "doc_a AS dst")
@@ -503,10 +481,6 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (base + F.expr("(85 * coalesce(in_sum, 0)) div 100")).alias("rank_s"),
             )
         )
-    # sh persists via _edges_df's internal .persist(); its only
-    # consumer is the edge build, which the persisted `edges` now
-    # caches, so it can be dropped as soon as the plan is assembled
-    sh.unpersist()
     return rank.select(F.col("node").alias("doc_id"), F.col("rank_s").cast("long").alias("rank_scaled"))
 
 
@@ -515,7 +489,7 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     und AS (
         SELECT doc_a AS src, doc_b AS dst FROM edges
         UNION ALL SELECT doc_b, doc_a FROM edges
@@ -553,11 +527,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maximum degree and therefore the join fan-out. Wedge counts
     are exact integer arithmetic; the coefficient is one double
     division (engine-identical)."""
-    from bigdata_project_spark.caching import tracked_persist
-
-    edges_lazy, sh = _edges_df(spark, sf_dir)
-    edges = tracked_persist(edges_lazy)
-    tracked_persist(sh)
+    edges = tracked_persist(near_dup_edges(spark, sf_dir))
     und = edges.select(F.col("doc_a").alias("src")).unionAll(
         edges.select(F.col("doc_b").alias("src"))
     )
@@ -599,7 +569,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     {sql_components("documents", "doc_id")},
     sp AS ({_SQL_SPLIT_CTE_BODY})
     SELECT c.doc_id, c.component,
@@ -630,9 +600,7 @@ def split_cluster_aware_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_project_spark.operators.corpus import _split_bucket, _TRAIN_LT, _VAL_LT
 
     docs = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-    edges, sh = _edges_df(spark, sf_dir)
-    comp = components(docs, edges)
-    sh.unpersist()
+    comp = components(docs, near_dup_edges(spark, sf_dir))
 
     def split_expr(col: str):
         bucket = F.expr(_split_bucket("STRING", col=col))

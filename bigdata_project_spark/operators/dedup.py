@@ -22,6 +22,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.caching import tracked_persist
+from bigdata_project_spark.operators.nearpairs import (
+    candidates,
+    jaccard,
+    overlap,
+    sql_candidates,
+    sql_jaccard,
+    sql_overlap,
+    sql_verify,
+    verify,
+)
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load, load_spread
 
@@ -154,16 +164,9 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b, n_common,
-           CAST(n_common AS DOUBLE) / (ca.n_sh + cb.n_sh - n_common) AS jaccard
-    FROM inter
-    JOIN cap_counts ca ON ca.doc_id = doc_a
-    JOIN cap_counts cb ON cb.doc_id = doc_b
+    {sql_overlap("shc")},
+    {sql_jaccard("cap_counts")}
+    SELECT doc_a, doc_b, n_common, jaccard FROM pairs
     """,
     tags=("dedup", "llm"),
 )
@@ -178,27 +181,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     even the capped candidate set is too large."""
     sh = shingle_df_capped(spark, sf_dir)
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    return (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            (F.col("n_common").cast("double") / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_common"))).alias(
-                "jaccard"
-            ),
-        )
-    )
+    return jaccard(overlap(sh), counts).select("doc_a", "doc_b", "n_common", "jaccard")
 
 
 _N_HASHES = 8
@@ -234,29 +217,36 @@ _SQL_BANDS = " UNION ALL ".join(
 )
 
 
+def _minhash_lsh(spark: SparkSession, sf_dir: str, aggs: list[Column], band_key) -> DataFrame:
+    """The MinHash-LSH pipeline both variants run: the 8-hash
+    signature `aggs` (h0..h7) -> 4 bands of 2, each keyed by
+    band_key(h2k, h2k+1) -> bucket-join candidates -> exact Jaccard of
+    the candidates only.
+
+    The shingles feed both the signatures and the verification join,
+    and the signatures feed the bands and the count lookup, so both
+    are persisted once (tracked_persist: they feed the returned lazy
+    plan, so caching.release_cached frees them after it is collected).
+    The band keys come out of one posexplode over sigs, not a 4-way
+    union that would re-read sigs once per band."""
+    sh = tracked_persist(shingle_df(spark, sf_dir))
+    sigs = tracked_persist(sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"), *aggs))
+    keys = [band_key(F.col(f"h{2 * k}"), F.col(f"h{2 * k + 1}")) for k in range(_N_HASHES // _BAND_SIZE)]
+    bands = sigs.select("doc_id", F.posexplode(F.array(*keys)).alias("band", "band_key"))
+    pairs = jaccard(verify(candidates(bands), sh), sigs.select("doc_id", "n_sh"))
+    return pairs.select("doc_a", "doc_b", "jaccard")
+
+
 @query(
     "dedup_minhash_lsh",
     oracle=f"""
     WITH {_SQL_SHINGLES},
     sigs AS (SELECT doc_id, {_SQL_SIGS} FROM sh GROUP BY doc_id),
     bands AS ({_SQL_BANDS}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.doc_a
-        JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-        GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_common AS DOUBLE) / (ca.n_sh + cb.n_sh - i.n_common) AS jaccard
-    FROM inter i
-    JOIN doc_counts ca ON ca.doc_id = i.doc_a
-    JOIN doc_counts cb ON cb.doc_id = i.doc_b
+    {sql_candidates("bands")},
+    {sql_verify("sh")},
+    {sql_jaccard("doc_counts")}
+    SELECT doc_a, doc_b, jaccard FROM pairs
     """,
     tags=("dedup", "llm", "lsh"),
 )
@@ -267,70 +257,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the 100 TB shape: the only wide operation is an equi-join
     on (band, band_key) whose buckets are near-dup clusters, instead
-    of joining on raw shingles (whose hot keys explode). Deterministic
-    seeded hashing via md5(seed || shingle) — reproducible across
-    engines and runs, no RNG state.
+    of joining on raw shingles (whose hot keys explode). The eight
+    hashes are 8-hex-char slices of two digests, md5(shingle) and
+    md5(shingle || '#'), and a band key concatenates two of them: no
+    RNG state, and the same strings in both engines.
     """
-    # one pass computes the signature AND the shingle count; shingles
-    # are persisted because they feed both the signatures and the
-    # candidate verification join (otherwise Spark re-derives the
-    # explode for every consumer)
-    # tracked_persist: both feed the returned lazy plan, so release
-    # happens in caching.release_cached() after materialization
-    sh = tracked_persist(shingle_df(spark, sf_dir))
-    # sigs feeds 4 band branches + the count lookup — persist or the
-    # signature aggregation re-runs per consumer
-    sigs = tracked_persist(sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"), *_minhash_aggs()))
-    counts = sigs.select("doc_id", "n_sh")
-    # one pass over sigs: posexplode the band keys instead of a
-    # 4-way union (which re-reads sigs once per band)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"h{2 * k}"), F.col(f"h{2 * k + 1}"))
-                    for k in range(_N_HASHES // _BAND_SIZE)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # verify candidates ONLY: intersections are computed per candidate
-    # pair (LSH's whole point — the shingle join is restricted to the
-    # bucket-collision pairs, not all pairs sharing a shingle)
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    inter = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("doc_b")) & (F.col("sb.shingle") == F.col("sa.shingle")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    return (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_common").cast("double") / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_common"))).alias(
-                "jaccard"
-            ),
-        )
-    )
+    return _minhash_lsh(spark, sf_dir, _minhash_aggs(), F.concat)
 
 
 _HEX = "0123456789abcdef"
@@ -588,9 +520,9 @@ def dedup_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_fast_aggs() -> list[Column]:
     """8 MinHash functions from seeded xxhash64 — the production hash
     path (SCALE.md): one 64-bit JVM hash per (shingle, seed) with no
-    hex-string materialization, ~an order of magnitude cheaper than
-    md5. min over signed longs is a valid MinHash order (any total
-    order works as long as it is consistent, which a fixed hash is)."""
+    hex-string materialization. min over signed longs is a valid
+    MinHash order (any total order works as long as it is consistent,
+    which a fixed hash is)."""
     return [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(_N_HASHES)]
 
 
@@ -610,61 +542,15 @@ def _minhash_fast_aggs() -> list[Column]:
 def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding with seeded xxhash64 signatures — same
     shingle -> signature -> band bucket join -> verify-candidates
-    pipeline and output schema as dedup_minhash_lsh, with the hashing
-    cost an order of magnitude lower (no md5, no hex substrings; the
-    band key is one more xxhash64 over the two row hashes instead of
-    a string concat). At 100 TB signature computation dominates the
-    map side, so this is the variant a production corpus build runs
-    once cross-engine verification is no longer in the loop."""
-    sh = tracked_persist(shingle_df(spark, sf_dir))
-    sigs = tracked_persist(
-        sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"), *_minhash_fast_aggs())
-    )
-    counts = sigs.select("doc_id", "n_sh")
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(F.col(f"h{2 * k}"), F.col(f"h{2 * k + 1}"))
-                    for k in range(_N_HASHES // _BAND_SIZE)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    inter = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, (F.col("sb.doc_id") == F.col("doc_b")) & (F.col("sb.shingle") == F.col("sa.shingle")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    return (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_common").cast("double") / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_common"))).alias(
-                "jaccard"
-            ),
-        )
-    )
+    pipeline and output schema as dedup_minhash_lsh, without md5 or
+    hex substrings: a hash is one xxhash64 per (shingle, seed) and the
+    band key is one more xxhash64 over its two row hashes instead of a
+    string concat. The signature aggregate runs 2.7x faster than the
+    md5 one (SCALE.md, dedup family). At 100 TB signature computation
+    dominates the map side, so this is the variant a production corpus
+    build runs once cross-engine verification is no longer in the
+    loop."""
+    return _minhash_lsh(spark, sf_dir, _minhash_fast_aggs(), F.xxhash64)
 
 
 @query(

@@ -26,6 +26,7 @@ losslessness proof for the prefix filter.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +37,18 @@ from bigdata_project_spark.caching import tracked_persist
 from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES,
     _SQL_SHINGLES_CAPPED,
+    _SQL_SIGS,
+    _minhash_aggs,
+    dedup_ngram_jaccard,
+    shingle_df,
     shingle_df_capped,
+)
+from bigdata_project_spark.operators.nearpairs import (
+    candidates,
+    overlap,
+    sql_candidates,
+    sql_jaccard,
+    sql_overlap,
 )
 from bigdata_project_spark.operators import spans
 from bigdata_project_spark.registry import query
@@ -49,23 +61,29 @@ _PF_NUM, _PF_DEN = 1, 2
 # Containment threshold 4/5 — same rational-arithmetic discipline.
 _CT_NUM, _CT_DEN = 4, 5
 
+# The LSH tuning sweep's band/row configurations of the 8-hash
+# signature: each band concatenates the signature columns it lists.
+_BAND_CONFIGS = {
+    "8x1": [[i] for i in range(8)],
+    "4x2": [[0, 1], [2, 3], [4, 5], [6, 7]],
+    "2x4": [[0, 1, 2, 3], [4, 5, 6, 7]],
+}
+_SQL_TUNING_BANDS = " UNION ALL ".join(
+    f"SELECT '{config}' AS config, doc_id, {k} AS band, {' || '.join(f'h{i}' for i in g)} AS band_key FROM sigs"
+    for config, groups in _BAND_CONFIGS.items()
+    for k, g in enumerate(groups)
+)
+
 
 @query(
     "dedup_prefix_filter_jaccard",
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b, n_common,
-           CAST(n_common AS DOUBLE) / (ca.n_sh + cb.n_sh - n_common) AS jaccard
-    FROM inter
-    JOIN cap_counts ca ON ca.doc_id = doc_a
-    JOIN cap_counts cb ON cb.doc_id = doc_b
-    WHERE ({_PF_DEN} + {_PF_NUM}) * n_common >= {_PF_NUM} * (ca.n_sh + cb.n_sh)
+    {sql_overlap("shc")},
+    {sql_jaccard("cap_counts")}
+    SELECT doc_a, doc_b, n_common, jaccard FROM pairs
+    WHERE ({_PF_DEN} + {_PF_NUM}) * n_common >= {_PF_NUM} * (n_union + n_common)
     """,
     tags=("dedup", "llm", "similarity-join", "prefix-filter"),
 )
@@ -168,17 +186,12 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    inter AS (
-        SELECT a.doc_id AS contained_doc, b.doc_id AS container_doc,
-               COUNT(*) AS n_common
-        FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT contained_doc, container_doc, n_common,
+    {sql_overlap("shc", directed=True)}
+    SELECT doc_a AS contained_doc, doc_b AS container_doc, n_common,
            ca.n_sh AS n_sh_contained,
            CAST(n_common AS DOUBLE) / ca.n_sh AS containment
     FROM inter
-    JOIN cap_counts ca ON ca.doc_id = contained_doc
+    JOIN cap_counts ca ON ca.doc_id = doc_a
     WHERE {_CT_DEN} * n_common >= {_CT_NUM} * ca.n_sh
     """,
     tags=("dedup", "llm", "containment"),
@@ -203,18 +216,13 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — no new shuffle shapes beyond the Jaccard query."""
     sh = shingle_df_capped(spark, sf_dir)
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("contained_doc"), F.col("b.doc_id").alias("container_doc"))
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        inter.join(counts.withColumnRenamed("doc_id", "contained_doc"), "contained_doc")
+        overlap(sh, directed=True)
+        .join(counts.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .filter(_CT_DEN * F.col("n_common") >= _CT_NUM * F.col("n_sh"))
         .select(
-            "contained_doc",
-            "container_doc",
+            F.col("doc_a").alias("contained_doc"),
+            F.col("doc_b").alias("container_doc"),
             "n_common",
             F.col("n_sh").alias("n_sh_contained"),
             (F.col("n_common").cast("double") / F.col("n_sh")).alias("containment"),
@@ -275,14 +283,15 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_lsh_band_tuning",
-    oracle="""
-    WITH cand AS (
-        SELECT DISTINCT a.config AS config, a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM ({BANDS}) a JOIN ({BANDS}) b
-          ON a.config = b.config AND a.band = b.band
-         AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    truth AS (SELECT doc_a, doc_b FROM ({TRUE}) WHERE jaccard >= 0.5),
+    oracle=f"""
+    WITH {_SQL_SHINGLES},
+    {_SQL_SHINGLES_CAPPED},
+    sigs AS (SELECT doc_id, {_SQL_SIGS} FROM sh GROUP BY doc_id),
+    bands AS ({_SQL_TUNING_BANDS}),
+    {sql_candidates("bands", "config")},
+    {sql_overlap("shc")},
+    {sql_jaccard("cap_counts")},
+    truth AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
     tt AS (SELECT COUNT(*) AS n_true_pairs FROM truth)
     SELECT c.config,
            COUNT(*) AS n_candidates,
@@ -324,8 +333,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     configs); each config's candidate join is the standard banded
     equi-join — the whole sweep costs ~3 LSH candidate passes over
     signature rows, never touching document text."""
-    from bigdata_project_spark.operators.dedup import _minhash_aggs, shingle_df
-
     sigs = tracked_persist(
         shingle_df(spark, sf_dir).groupBy("doc_id").agg(*_minhash_aggs())
     )
@@ -344,25 +351,8 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.array(*entries)).alias("bk"),
         ).select("config", "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
-    bands = (
-        bands_for("8x1", [[i] for i in range(8)])
-        .unionAll(bands_for("4x2", [[0, 1], [2, 3], [4, 5], [6, 7]]))
-        .unionAll(bands_for("2x4", [[0, 1, 2, 3], [4, 5, 6, 7]]))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.config") == F.col("b.config"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.config", F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    from bigdata_project_spark.operators.dedup import dedup_ngram_jaccard
-
+    bands = functools.reduce(DataFrame.unionAll, (bands_for(c, g) for c, g in _BAND_CONFIGS.items()))
+    cand = candidates(bands, "config")
     truth = (
         dedup_ngram_jaccard(spark, sf_dir)
         .filter(F.col("jaccard") >= 0.5)
@@ -389,33 +379,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("recall"),
         (F.col("n_hits").cast("double") / F.col("n_candidates")).alias("precision"),
     )
-
-
-from bigdata_project_spark.registry import REGISTRY as _REG_DX  # noqa: E402
-from bigdata_project_spark.operators.dedup import _SQL_SHINGLES as _SH  # noqa: E402
-from bigdata_project_spark.operators.dedup import _SQL_SIGS as _SIGS  # noqa: E402
-
-_BANDS_SQL = f"""
-    WITH {_SH},
-    sigs AS (SELECT doc_id, {_SIGS} FROM sh GROUP BY doc_id)
-    SELECT '8x1' AS config, doc_id, b.k AS band,
-           CASE b.k WHEN 0 THEN h0 WHEN 1 THEN h1 WHEN 2 THEN h2 WHEN 3 THEN h3
-                    WHEN 4 THEN h4 WHEN 5 THEN h5 WHEN 6 THEN h6 ELSE h7 END AS band_key
-    FROM sigs, (SELECT unnest(range(8)) AS k) b
-    UNION ALL
-    SELECT '4x2', doc_id, b.k,
-           CASE b.k WHEN 0 THEN h0 || h1 WHEN 1 THEN h2 || h3
-                    WHEN 2 THEN h4 || h5 ELSE h6 || h7 END
-    FROM sigs, (SELECT unnest(range(4)) AS k) b
-    UNION ALL
-    SELECT '2x4', doc_id, b.k,
-           CASE b.k WHEN 0 THEN h0 || h1 || h2 || h3 ELSE h4 || h5 || h6 || h7 END
-    FROM sigs, (SELECT unnest(range(2)) AS k) b
-"""
-
-_REG_DX["dedup_lsh_band_tuning"].oracle = _REG_DX["dedup_lsh_band_tuning"].oracle.format(
-    BANDS=_BANDS_SQL, TRUE=_REG_DX["dedup_ngram_jaccard"].oracle
-)
 
 
 # --------------------------- exact substring spans (Lee et al. 2022)

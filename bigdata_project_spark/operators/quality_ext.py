@@ -42,9 +42,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata_project_spark.operators.clustering import (
-    _SQL_EDGES,
+    SQL_EDGES,
     dedup_cluster_components,
     keep_best,
+    near_dup_edges,
     sql_components,
 )
 from bigdata_project_spark.operators.dedup import (
@@ -56,6 +57,7 @@ from bigdata_project_spark.operators.dedup import (
     words_col,
 )
 from bigdata_project_spark.caching import tracked_persist
+from bigdata_project_spark.operators.nearpairs import jaccard, overlap, sql_jaccard, sql_overlap
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load, load_spread
 
@@ -222,6 +224,8 @@ def quality_duplicate_passage_share(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 _EST_SCALE = 1_000_000  # fixed-point micros for both Jaccard forms
+# the number of signature components two docs `sa`, `sb` agree on
+_SQL_K_EQUAL = " + ".join(f"(CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END)" for i in range(8))
 
 
 @query(
@@ -230,50 +234,20 @@ _EST_SCALE = 1_000_000  # fixed-point micros for both Jaccard forms
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
     sigs AS (SELECT doc_id, {_SQL_SIGS} FROM shc GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b, n_common,
-               ca.n_sh + cb.n_sh - n_common AS n_union
-        FROM inter
-        JOIN cap_counts ca ON ca.doc_id = doc_a
-        JOIN cap_counts cb ON cb.doc_id = doc_b
+    {sql_overlap("shc")},
+    {sql_jaccard("cap_counts")},
+    est AS (
+        SELECT p.doc_a, p.doc_b, p.n_common, p.n_union,
+               CAST({_SQL_K_EQUAL} AS BIGINT) AS k_equal
+        FROM pairs p
+        JOIN sigs sa ON sa.doc_id = p.doc_a
+        JOIN sigs sb ON sb.doc_id = p.doc_b
     )
-    SELECT p.doc_a, p.doc_b,
-           CAST((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END) AS BIGINT) AS k_equal,
-           CAST((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END)
-              + (CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END) AS BIGINT)
-             * {_EST_SCALE} // 8 AS est_jaccard_micros,
-           p.n_common * {_EST_SCALE} // p.n_union AS exact_jaccard_micros,
-           abs(CAST((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END)
-                  + (CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END) AS BIGINT)
-                 * {_EST_SCALE} // 8
-               - p.n_common * {_EST_SCALE} // p.n_union) AS abs_err_micros
-    FROM pairs p
-    JOIN sigs sa ON sa.doc_id = p.doc_a
-    JOIN sigs sb ON sb.doc_id = p.doc_b
+    SELECT doc_a, doc_b, k_equal,
+           k_equal * {_EST_SCALE} // 8 AS est_jaccard_micros,
+           n_common * {_EST_SCALE} // n_union AS exact_jaccard_micros,
+           abs(k_equal * {_EST_SCALE} // 8 - n_common * {_EST_SCALE} // n_union) AS abs_err_micros
+    FROM est
     """,
     tags=("dedup", "llm", "evaluation", "minhash"),
 )
@@ -307,22 +281,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = tracked_persist(
         sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"), *_minhash_aggs())
     )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = sigs.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"))
-    cb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"))
-    pairs = (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select(
-            "doc_a", "doc_b", "n_common",
-            (F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")).alias("n_union"),
-        )
-    )
+    pairs = jaccard(overlap(sh), sigs.select("doc_id", "n_sh"))
     sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(8)])
     sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(8)])
     k_equal = sum(
@@ -351,7 +310,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     {sql_components("documents", "doc_id")},
     quality AS (
         SELECT doc_id,
@@ -585,7 +544,7 @@ _REG_QX["corpus_quality_gate"].oracle = f"""
     oracle=f"""
     WITH {_SQL_SHINGLES},
     {_SQL_SHINGLES_CAPPED},
-    {_SQL_EDGES},
+    {SQL_EDGES},
     sp AS ({_SQL_SPLIT_CTE_BODY})
     SELECT e.doc_a, e.doc_b, sa.split AS split_a, sb.split AS split_b,
            CAST(sa.split <> sb.split AS INT) AS is_leak
@@ -598,7 +557,7 @@ _REG_QX["corpus_quality_gate"].oracle = f"""
 def qa_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval LEAKAGE audit: every near-duplicate pair (the same
     df-capped Jaccard >= 0.05 edge set the clustering family uses,
-    `clustering._edges_df`) tagged with both endpoints' hash-split
+    `clustering.near_dup_edges`) tagged with both endpoints' hash-split
     assignment (`split_train_val_test`'s md5-bucket thresholds) and
     an is_leak bit for pairs that straddle splits. A near-dup of a
     training document sitting in val/test inflates eval scores — the
@@ -612,12 +571,9 @@ def qa_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the shingle df cap); the split tags are two doc_id-keyed
     equi-joins against a scan-side codegen expression — no new wide
     operator beyond the edge build itself."""
-    from bigdata_project_spark.operators.clustering import _edges_df
     from bigdata_project_spark.operators.corpus import _split_bucket, _TRAIN_LT, _VAL_LT
 
-    edges_lazy, sh = _edges_df(spark, sf_dir)
-    edges = tracked_persist(edges_lazy)
-    tracked_persist(sh)
+    edges = near_dup_edges(spark, sf_dir)
     bucket = F.expr(_split_bucket("STRING"))
     sp = load(spark, sf_dir, "documents").select(
         "doc_id",

@@ -34,6 +34,15 @@ BUDGETS = {
     "multimodal_audio_dedup_keeper": 32,
     "multimodal_dhash_dedup_keeper": 32,
     "split_cluster_aware_assign": 33,
+    # the other near-dup pair consumers (operators/nearpairs.py)
+    "dedup_containment_pairs": 7,
+    "dedup_lsh_band_tuning": 21,
+    "dedup_minhash_estimate_error": 16,
+    "dedup_minhash_lsh": 12,
+    "dedup_minhash_lsh_fast": 12,
+    "dedup_ngram_jaccard": 7,
+    "graph_triangle_stats": 25,
+    "qa_split_leakage": 12,
     "stream_countmin_incremental": 11,
     "stream_quantile_incremental": 17,
     "stream_tumbling_hourly": 2,
@@ -71,6 +80,14 @@ _INPUTS = {
     "multimodal_audio_dedup_keeper": ("documents",),
     "multimodal_dhash_dedup_keeper": ("documents",),
     "split_cluster_aware_assign": ("documents",),
+    "dedup_containment_pairs": ("documents",),
+    "dedup_lsh_band_tuning": ("documents",),
+    "dedup_minhash_estimate_error": ("documents",),
+    "dedup_minhash_lsh": ("documents",),
+    "dedup_minhash_lsh_fast": ("documents",),
+    "dedup_ngram_jaccard": ("documents",),
+    "graph_triangle_stats": ("documents",),
+    "qa_split_leakage": ("documents",),
     "stream_countmin_incremental": ("documents",),
     "stream_quantile_incremental": ("lineitem",),
     "stream_tumbling_hourly": ("events",),

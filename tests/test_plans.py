@@ -618,7 +618,8 @@ def test_normalized_plan_ignores_broadcast_build_side(spark, sf_dir):
 
 def test_normalized_plan_orders_expand_groups():
     """The distinct groups of an Expand, and the gid each gets, follow
-    expression-id hashes; the normalized plan puts them in one order."""
+    expression-id hashes; the normalized plan puts them in one order,
+    also when a group column is a struct with commas inside."""
     first = (
         "Aggregate [count(a#1) FILTER (WHERE (gid#5 = 1)) AS na#7L, count(b#2) FILTER (WHERE (gid#5 = 2)) AS nb#8L]\n"
         "+- Aggregate [a#3, b#4, gid#5], [a#3, b#4, gid#5]\n"
@@ -629,5 +630,7 @@ def test_normalized_plan_orders_expand_groups():
         "+- Aggregate [b#4, a#3, gid#5], [b#4, a#3, gid#5]\n"
         "   +- Expand [[b#2, null, 1], [null, a#1, 2]], [b#4, a#3, gid#5]"
     )
-    assert normalize(first, "/data") == normalize(swapped, "/data")
-    assert normalize(first, "/data") != normalize(first.replace("count(b#2)", "sum(b#2)"), "/data")
+    for a_in, a_out in (("a#1", "a#3"), ("struct(p, p#1, q, q#9)", "struct(p, q)#3")):
+        x, y = (plan.replace("a#1", a_in).replace("a#3", a_out) for plan in (first, swapped))
+        assert normalize(x, "/data") == normalize(y, "/data")
+        assert normalize(x, "/data") != normalize(x.replace("count(b#2)", "sum(b#2)"), "/data")

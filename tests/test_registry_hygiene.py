@@ -277,3 +277,44 @@ def test_span_excision_lives_only_in_spans():
         if any(m in line for m in markers)
     ]
     assert not offenders, "span excision copied outside operators/spans.py:\n" + "\n".join(offenders)
+
+
+def test_near_dup_pairs_live_only_in_nearpairs():
+    """operators/nearpairs.py owns the pair step of near-dup detection:
+    the shingle self-join with its per-pair count, the MinHash band
+    self-join and the candidate verify, with their DuckDB twins. A
+    query that spells one of these joins itself is a copy that can
+    drift from the twin its oracle is built from. The prefix-filter
+    join is a different algorithm (rarest-shingle prefixes, a size
+    filter, no per-pair count) and is allowed by name."""
+    import pathlib
+
+    allowed = {("operators/dedup_ext.py", "dedup_prefix_filter_jaccard")}
+    markers = (
+        'F.col("a.shingle") == F.col("b.shingle")',
+        'F.col("a.band_key")',
+        "a.shingle = b.shingle",
+        "a.band_key = b.band_key",
+    )
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    offenders: list[str] = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "operators/nearpairs.py":
+            continue
+        src = f.read_text()
+        defs = [n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)]
+        for i, line in enumerate(src.splitlines(), 1):
+            if not any(m in line for m in markers):
+                continue
+            # the innermost function around the line
+            owner = min(
+                (d for d in defs if d.lineno <= i <= d.end_lineno),
+                key=lambda d: d.end_lineno - d.lineno,
+                default=None,
+            )
+            if (rel, getattr(owner, "name", "<module>")) not in allowed:
+                offenders.append(f"{rel}:{i}: {line.strip()}")
+    assert not offenders, "near-dup pair joins copied outside operators/nearpairs.py:\n" + "\n".join(
+        offenders
+    )

@@ -101,6 +101,18 @@ _BROADCAST = re.compile(r"BroadcastQueryStage N$|BroadcastExchange ")
 _EXPAND = re.compile(r"^(.*\bExpand )(\[\[.*\]\]), (\[[^\[\]]*\])$")
 
 
+def _items(s: str) -> list[str]:
+    """The comma-separated items of a plan list, splitting only outside
+    parentheses: a struct(a, b) column is one item."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        depth += {"(": 1, ")": -1}.get(c, 0)
+        if depth == 0 and s.startswith(", ", i):
+            items.append(s[start:i])
+            start = i + 2
+    return items + [s[start:]]
+
+
 def _canonical_expand(lines: list[str]) -> list[str]:
     """Put a distinct-aggregate Expand into one order. Its distinct
     groups follow expression-id hashes, so their order, and the `gid`
@@ -113,8 +125,8 @@ def _canonical_expand(lines: list[str]) -> list[str]:
     if len({m.group(2, 3) for m in expands.values()}) != 1:
         return lines
     m = next(iter(expands.values()))
-    projections = [p.split(", ") for p in re.findall(r"\[([^\[\]]*)\]", m.group(2))]
-    output = m.group(3)[1:-1].split(", ")
+    projections = [_items(p) for p in re.findall(r"\[([^\[\]]*)\]", m.group(2))]
+    output = _items(m.group(3)[1:-1])
     k = next((j for j, c in enumerate(output) if c.startswith("gid#")), None)
     if k is None or any(len(p) != len(output) for p in projections):
         return lines

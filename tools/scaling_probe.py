@@ -39,6 +39,7 @@ from bigdata_project_spark.operators.dedup import (
     _SQL_SHINGLES_CAPPED,
     _SQL_SIGS,
 )
+from bigdata_project_spark.operators.nearpairs import sql_candidates, sql_overlap
 from bigdata_project_spark.operators.similarity import _SQL_NORMED, _SQL_PARAMS
 from bigdata_project_spark.operators.similarity import _sql_band_bucket, _N_BANDS, planes_per_band
 from bigdata_project_spark.operators.semdedup import _SQL_SEM_CELLS, subcell_planes
@@ -58,19 +59,15 @@ def probe(sf_dir: str) -> dict:
     r["minhash_cand"] = con.sql(f"""
         WITH {_SQL_SHINGLES},
         sigs AS (SELECT doc_id, {_SQL_SIGS} FROM sh GROUP BY doc_id),
-        bands AS ({_SQL_BANDS})
-        SELECT COUNT(*) FROM (
-            SELECT DISTINCT a.doc_id, b.doc_id AS b_id
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
+        bands AS ({_SQL_BANDS}),
+        {sql_candidates("bands")}
+        SELECT COUNT(*) FROM cand
     """).fetchone()[0]
 
     # share-a-shingle pairs, df-capped (what exact n-gram Jaccard joins)
     r["shingle_cand_capped"] = con.sql(f"""
-        WITH {_SQL_SHINGLES}, {_SQL_SHINGLES_CAPPED}
-        SELECT COUNT(*) FROM (
-            SELECT DISTINCT a.doc_id, b.doc_id AS b_id
-            FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id)
+        WITH {_SQL_SHINGLES}, {_SQL_SHINGLES_CAPPED}, {sql_overlap("shc")}
+        SELECT COUNT(*) FROM inter
     """).fetchone()[0]
 
     # prefix-filter candidates (rarity prefix at J>=1/2, before verify)
