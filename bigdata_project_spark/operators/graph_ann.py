@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from bigdata_project_spark.caching import barrier, tracked_persist
-from bigdata_project_spark.operators.pq import _recall_join
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
@@ -344,7 +344,7 @@ def _sql_beam_hops() -> str:
 @query(
     "sim_graph_beam_search",
     oracle=f"""
-    WITH g AS MATERIALIZED ({{GRAPH}}),
+    WITH g AS MATERIALIZED ({REGISTRY["sim_graph_knn_build"].oracle}),
     {_sql_beam_hops()}
     SELECT query_id, vec_id AS neighbor_id, cosine, CAST(rn AS INT) AS rank
     FROM (
@@ -456,15 +456,11 @@ def _beam_walk(emb: DataFrame, g: DataFrame) -> DataFrame:
 
 @query(
     "sim_recall_graph_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{BEAM}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_graph_beam_search"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "graph", "ann", "eval"),
 )
 def sim_recall_graph_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,29 +468,12 @@ def sim_recall_graph_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth, per query — the shipping gate for the graph index,
     computed in-engine with both component oracles nested.
 
-    r15: ground truth, graph build, and beam walk all read ONE
-    persisted normed corpus (_banked_emb) — the truth side previously
-    re-scanned and re-normed the embeddings behind its own plan; the
-    shared scan drops a full corpus pass from the gate at any scale.
-    Values are the nested queries' own (same expressions, same
-    tiebreaks), which the shared nested oracle re-verifies."""
+    Ground truth, graph build, and beam walk all read ONE persisted
+    normed corpus (_banked_emb), so the truth side does not re-scan
+    and re-norm the embeddings behind its own plan. Values are the
+    nested queries' own (same expressions, same tiebreaks), which the
+    shared nested oracle re-verifies."""
     from bigdata_project_spark.operators.similarity import _bruteforce_from
 
     emb = _banked_emb(spark, sf_dir)
-    g = _beam_graph(emb)
-    bf = _bruteforce_from(emb).select("query_id", "vec_id")
-    bm = _beam_walk(emb, g).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, bm)
-
-
-REGISTRY["sim_graph_beam_search"].oracle = REGISTRY[
-    "sim_graph_beam_search"
-].oracle.format(GRAPH=REGISTRY["sim_graph_knn_build"].oracle)
-REGISTRY["sim_recall_graph_at_k"].oracle = REGISTRY[
-    "sim_recall_graph_at_k"
-].oracle.format(
-    BF=REGISTRY["sim_knn_bruteforce"].oracle,
-    BEAM=REGISTRY["sim_graph_beam_search"].oracle,
-)
+    return at_k(_bruteforce_from(emb), _beam_walk(emb, _beam_graph(emb)), _TOP_K)

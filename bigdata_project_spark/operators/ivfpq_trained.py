@@ -46,13 +46,14 @@ from bigdata_project_spark.operators.kmeans import (
     _km_trained,
     _sql_kmeans_prelude,
 )
-from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode, _recall_join
+from bigdata_project_spark.operators.pq import _pq_codebook, _pq_encode
 from bigdata_project_spark.operators.pq_residual import (
     _SQL_RLUT,
     _SQL_RSUBS,
     _res_search_tail,
     _res_subs,
 )
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
@@ -125,15 +126,11 @@ def sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivfpq_trained_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_trained"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf", "kmeans", "residual"),
 )
 def sim_recall_ivfpq_trained_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,16 +146,4 @@ def sim_recall_ivfpq_trained_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
     sim_recall_ivf_trained_at_k) cannot survive 4-byte code noise;
     the production fix is the refine stage, whose label-cell variant
     (sim_ivfpq_residual_rerank) already demonstrates the recovery."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    tr = sim_ivfpq_trained(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, tr)
-
-
-REGISTRY["sim_recall_ivfpq_trained_at_k"].oracle = REGISTRY[
-    "sim_recall_ivfpq_trained_at_k"
-].oracle.format(
-    BF=REGISTRY["sim_knn_bruteforce"].oracle,
-    PQ=REGISTRY["sim_ivfpq_trained"].oracle,
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_trained(spark, sf_dir), _TOP_K)

@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from bigdata_project_spark.operators.pq import _pq_unit, _recall_join, _sql_unit
+from bigdata_project_spark.operators.pq import _pq_unit, _sql_unit
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
@@ -282,15 +283,11 @@ def sim_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivf_trained_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.vec_id) AS INT) AS n_hits,
-           COUNT(i.vec_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{KM}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        f"SELECT query_id, vec_id AS neighbor_id FROM ({REGISTRY['sim_ivf_trained_search'].oracle})",
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "ivf", "kmeans"),
 )
 def sim_recall_ivf_trained_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,16 +297,5 @@ def sim_recall_ivf_trained_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     buys over partitioning by corpus metadata.
     tests/test_kmeans.py pins trained >= label in aggregate at two
     SFs."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    km = sim_ivf_trained_search(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("vec_id").alias("i_vid")
-    )
-    return _recall_join(bf, km)
-
-
-REGISTRY["sim_recall_ivf_trained_at_k"].oracle = REGISTRY[
-    "sim_recall_ivf_trained_at_k"
-].oracle.format(
-    BF=REGISTRY["sim_knn_bruteforce"].oracle,
-    KM=REGISTRY["sim_ivf_trained_search"].oracle,
-)
+    km = sim_ivf_trained_search(spark, sf_dir).withColumnRenamed("vec_id", "neighbor_id")
+    return at_k(sim_knn_bruteforce(spark, sf_dir), km, _TOP_K)

@@ -1,4 +1,4 @@
-"""Truncated-dimension (Matryoshka) ANN recall curve (round 14).
+"""Truncated-dimension (Matryoshka) ANN recall curve.
 
 Matryoshka representation learning (Kusupati et al. 2022,
 arXiv:2205.13147) trains embeddings whose PREFIXES are themselves
@@ -10,16 +10,16 @@ the same way it answers the nprobe question
 at each dimension budget against the full-dimension brute-force
 truth, then read the curve before committing the cheaper scan.
 
-`sim_truncated_dim_recall` (operators/similarity.py, round 6)
-measures the single 16-dim truncation point; this operator is the
-full dial — the CURVE a pipeline reads to pick its budget, plus an
-in-band exactness self-check at the full dimension.
+`sim_recall_dim_curve` is the full dial — the CURVE a pipeline reads
+to pick its budget, plus an in-band exactness self-check at the full
+dimension. `sim_truncated_dim_recall` is its dim = 16 row, the single
+truncation point read on its own.
 
 This operator computes exact cosine top-k over the prefix slices
 dims {16, 32, 64} in ONE corpus pass (the three prefix dot chains
 share the scan; Catalyst subexpression elimination shares the common
 prefix terms), ranks per (dim, query), and joins the per-dim top-10
-against `sim_knn_bruteforce`'s 64-dim truth. dim=64 reproduces the
+against `sim_knn_bruteforce`'s 64-dim truth through `recall.at_k`. dim=64 reproduces the
 truth metric bit-for-bit, so its recall row is exactly 1.0 — an
 in-band self-check the driver hashes every round.
 
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     _QUERY_IDS,
     _TOP_K,
@@ -96,17 +97,10 @@ _SQL_DIM_RANKED = " UNION ALL ".join(
         WHERE q.vec_id IN {_QUERY_IDS}
     ),
     topd AS (
-        SELECT dim, query_id, vec_id FROM ({_SQL_DIM_RANKED})
+        SELECT dim, query_id, vec_id AS neighbor_id FROM ({_SQL_DIM_RANKED})
         WHERE rank <= {_TOP_K}
     )
-    SELECT d.dim, b.query_id,
-           CAST(COUNT(i.vec_id) AS INT) AS n_hits,
-           COUNT(i.vec_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    CROSS JOIN (VALUES (16), (32), (64)) d(dim)
-    LEFT JOIN topd i
-      ON i.dim = d.dim AND i.query_id = b.query_id AND i.vec_id = b.vec_id
-    GROUP BY d.dim, b.query_id
+    {sql_at_k(REGISTRY["sim_knn_bruteforce"].oracle, "SELECT * FROM topd", _TOP_K, ("dim", _DIMS))}
     """,
     tags=("similarity", "llm", "eval", "matryoshka"),
 )
@@ -117,25 +111,31 @@ def sim_recall_dim_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     row reads exactly 1.0 (driver-hashed self-check). Module
     docstring has the one-scan plan and the 100 TB bytes/vector
     story."""
+    return _dim_recall(spark, sf_dir, _DIMS)
+
+
+def _dim_recall(spark: SparkSession, sf_dir: str, dims: tuple[int, ...]) -> DataFrame:
+    """(dim, query_id, n_hits, recall) at each prefix budget in `dims`,
+    from one scan."""
     emb = load(spark, sf_dir, "embeddings")
     pn = emb.select(
         "vec_id",
         "embedding",
         *[
             dot(F.slice("embedding", 1, d), F.slice("embedding", 1, d)).alias(f"n{d}")
-            for d in _DIMS
+            for d in dims
         ],
     )
     q = pn.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_embedding"),
-        *[F.col(f"n{d}").alias(f"qn{d}") for d in _DIMS],
+        *[F.col(f"n{d}").alias(f"qn{d}") for d in dims],
     )
     pairs = pn.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     # zero-norm prefix guard (cosine defined as 0.0): an all-zero
     # 16-dim prefix is plausible even when the full vector isn't, and
     # an unguarded /0 diverges cross-engine (Spark NULL vs DuckDB
-    # inf) — the sim_truncated_dim_recall CASE form
+    # inf)
     per_dim = F.array(
         *[
             F.struct(
@@ -148,7 +148,7 @@ def sim_recall_dim_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.lit(0.0))
                 .alias("cos"),
             )
-            for d in _DIMS
+            for d in dims
         ]
     )
     scored = pairs.select(
@@ -158,25 +158,30 @@ def sim_recall_dim_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     topd = (
         scored.select("dim", "query_id", "vec_id", F.row_number().over(w).alias("rank"))
         .filter(F.col("rank") <= _TOP_K)
-        .select(F.col("dim").alias("i_dim"), F.col("query_id").alias("i_qid"), F.col("vec_id").alias("i_vid"))
+        .select("dim", "query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    dims = bf.select(
-        "query_id", "vec_id", F.explode(F.array(*[F.lit(d) for d in _DIMS])).alias("dim")
-    )
-    joined = dims.join(
-        topd,
-        (F.col("dim") == F.col("i_dim"))
-        & (F.col("query_id") == F.col("i_qid"))
-        & (F.col("vec_id") == F.col("i_vid")),
-        "left_outer",
-    )
-    return joined.groupBy("dim", "query_id").agg(
-        F.count("i_vid").cast("int").alias("n_hits"),
-        (F.count("i_vid") / float(_TOP_K)).alias("recall"),
-    )
+    return at_k(sim_knn_bruteforce(spark, sf_dir), topd, _TOP_K, ("dim", dims))
 
 
-REGISTRY["sim_recall_dim_curve"].oracle = REGISTRY[
-    "sim_recall_dim_curve"
-].oracle.format(BF=REGISTRY["sim_knn_bruteforce"].oracle)
+_TRUNC_DIM = 16
+
+
+@query(
+    "sim_truncated_dim_recall",
+    oracle=f"""
+    SELECT query_id, n_hits, recall
+    FROM ({REGISTRY["sim_recall_dim_curve"].oracle}) WHERE dim = {_TRUNC_DIM}
+    """,
+    tags=("similarity", "llm", "eval", "matryoshka"),
+)
+def sim_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@10 of cosine search over only the FIRST 16 of the 64
+    dimensions against the full-dimension brute-force truth, per
+    query: the dim = 16 row of sim_recall_dim_curve, computed by the
+    curve's scan with that one budget. Truncated-prefix retrieval is
+    the standard cheap first stage (a 16-dim scan moves a quarter of
+    the bytes and flops at 100 TB), and this is what the truncation
+    costs. On generic embeddings the prefix is not information-dense,
+    so recall is expected to be mediocre; with MRL-trained vectors the
+    same query is the shipping gate."""
+    return _dim_recall(spark, sf_dir, (_TRUNC_DIM,)).select("query_id", "n_hits", "recall")

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
@@ -69,7 +70,7 @@ from bigdata_project_spark.operators.vecmath import (
     sql_sqdist,
     sqdist,
 )
-from bigdata_project_spark.registry import query
+from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
 _PQ_M = 4  # subspaces
@@ -372,43 +373,6 @@ def sim_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_SHORTLIST = 100
 
 
-@query(
-    "sim_knn_pq_rerank",
-    oracle=f"""
-    {_SQL_PQ_PRELUDE},
-    short AS (
-        SELECT query_id, neighbor_id FROM adc_ranked
-        WHERE rnk <= {_PQ_SHORTLIST}
-    ),
-    rr AS (
-        SELECT s.query_id, s.neighbor_id,
-               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
-        FROM short s
-        JOIN unit uq ON uq.vec_id = s.query_id
-        JOIN unit un ON un.vec_id = s.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rnk
-        FROM rr
-    ) WHERE rnk <= {_TOP_K}
-    """,
-    tags=("similarity", "llm", "ann", "pq", "rerank", "topk"),
-)
-def sim_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production PQ search: ADC over the 64x-compressed codes
-    produces a shortlist (top-100 per query), then ONLY the shortlist
-    rows are exact-rescored against the raw (unit) vectors — the
-    candidate-generation/refine split every large-scale vector system
-    uses (FAISS IVFPQ + refine). Compressed scan touches the whole
-    corpus at 4 B/vector; full-precision vectors are fetched for
-    0.1-2% of it (an equi-join on neighbor_id — at scale, a point
-    lookup into the vector store). Recall vs brute force roughly
-    triples the raw-ADC figure on the testbed; both are measured, not
-    assumed."""
-    return _rerank_from(spark, sf_dir, _pq_adc_ranked(spark, sf_dir))
-
-
 def _rerank_from(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFrame:
     """The refine stage shared by every PQ family: the top-100 rows
     of an ADC-ranked relation (query_id, neighbor_id, rnk) exactly
@@ -430,17 +394,57 @@ def _rerank_from(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFra
     )
 
 
+def sql_rerank(ranked: str) -> str:
+    """The twin of `_rerank_from`, to follow the CTEs of an oracle's
+    WITH: CTEs `short` and `rr` over a ranked CTE named `ranked`
+    (query_id, neighbor_id, rnk) and the `unit` CTE, then the top-k
+    SELECT (query_id, neighbor_id, cosine, rnk)."""
+    return f"""
+    short AS MATERIALIZED (
+        SELECT query_id, neighbor_id FROM {ranked}
+        WHERE rnk <= {_PQ_SHORTLIST}
+    ),
+    rr AS MATERIALIZED (
+        SELECT s.query_id, s.neighbor_id,
+               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
+        FROM short s
+        JOIN unit uq ON uq.vec_id = s.query_id
+        JOIN unit un ON un.vec_id = s.neighbor_id
+    )
+    SELECT query_id, neighbor_id, cosine, rnk FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                     ORDER BY cosine DESC, neighbor_id) AS rnk
+        FROM rr
+    ) WHERE rnk <= {_TOP_K}
+    """
+
+
+@query(
+    "sim_knn_pq_rerank",
+    oracle=f"{_SQL_PQ_PRELUDE},{sql_rerank('adc_ranked')}",
+    tags=("similarity", "llm", "ann", "pq", "rerank", "topk"),
+)
+def sim_knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production PQ search: ADC over the 64x-compressed codes
+    produces a shortlist (top-100 per query), then ONLY the shortlist
+    rows are exact-rescored against the raw (unit) vectors — the
+    candidate-generation/refine split every large-scale vector system
+    uses (FAISS IVFPQ + refine). Compressed scan touches the whole
+    corpus at 4 B/vector; full-precision vectors are fetched for
+    0.1-2% of it (an equi-join on neighbor_id — at scale, a point
+    lookup into the vector store). Recall vs brute force roughly
+    triples the raw-ADC figure on the testbed; both are measured, not
+    assumed."""
+    return _rerank_from(spark, sf_dir, _pq_adc_ranked(spark, sf_dir))
+
+
 @query(
     "sim_recall_pq_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_knn_pq_adc"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq"),
 )
 def sim_recall_pq_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,36 +453,16 @@ def sim_recall_pq_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     64x-compressed index alone, computed in-engine exactly like
     sim_recall_at_k (the oracle nests both component oracles, so the
     eval is verified end-to-end)."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    pq = sim_knn_pq_adc(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, pq)
-
-
-def _recall_join(bf: DataFrame, approx: DataFrame) -> DataFrame:
-    joined = bf.join(
-        approx,
-        (F.col("query_id") == F.col("i_qid")) & (F.col("vec_id") == F.col("i_vid")),
-        "left_outer",
-    )
-    return joined.groupBy("query_id").agg(
-        F.count("i_vid").cast("int").alias("n_hits"),
-        (F.count("i_vid") / float(_TOP_K)).alias("recall"),
-    )
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_knn_pq_adc(spark, sf_dir), _TOP_K)
 
 
 @query(
     "sim_recall_pq_rerank_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_knn_pq_rerank"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "rerank"),
 )
 def sim_recall_pq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,23 +471,7 @@ def sim_recall_pq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     production two-stage search actually returns, and the gap to
     sim_recall_pq_at_k quantifies exactly what the refine stage buys
     for its extra point lookups."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    rr = sim_knn_pq_rerank(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, rr)
-
-
-# splice the component oracles (full WITH...SELECT statements nest as
-# parenthesized subqueries — the sim_recall_at_k pattern)
-from bigdata_project_spark.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["sim_recall_pq_at_k"].oracle = _REG["sim_recall_pq_at_k"].oracle.format(
-    BF=_REG["sim_knn_bruteforce"].oracle, PQ=_REG["sim_knn_pq_adc"].oracle
-)
-_REG["sim_recall_pq_rerank_at_k"].oracle = _REG["sim_recall_pq_rerank_at_k"].oracle.format(
-    BF=_REG["sim_knn_bruteforce"].oracle, PQ=_REG["sim_knn_pq_rerank"].oracle
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_knn_pq_rerank(spark, sf_dir), _TOP_K)
 
 
 # --------------------------------------------- IVF + PQ, composed
@@ -642,25 +610,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_ivfpq_rerank",
-    oracle=f"""
-    {_SQL_IVFPQ_PRELUDE},
-    short AS (
-        SELECT query_id, neighbor_id FROM ivfpq_ranked
-        WHERE rnk <= {_PQ_SHORTLIST}
-    ),
-    rr AS (
-        SELECT s.query_id, s.neighbor_id,
-               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
-        FROM short s
-        JOIN unit uq ON uq.vec_id = s.query_id
-        JOIN unit un ON un.vec_id = s.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rnk
-        FROM rr
-    ) WHERE rnk <= {_TOP_K}
-    """,
+    oracle=f"{_SQL_IVFPQ_PRELUDE},{sql_rerank('ivfpq_ranked')}",
     tags=("similarity", "llm", "ann", "pq", "ivf", "rerank", "topk"),
 )
 def sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,15 +635,11 @@ def _ivfpq_reranked(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
 
 @query(
     "sim_recall_ivfpq_rerank_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_rerank"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf", "rerank"),
 )
 def sim_recall_ivfpq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -702,24 +648,16 @@ def sim_recall_ivfpq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     this equals the cell stage's recall ceiling, so the gap to
     sim_recall_ivfpq_at_k is exactly the quantization loss the refine
     stage refunds."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    rr = sim_ivfpq_rerank(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, rr)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_rerank(spark, sf_dir), _TOP_K)
 
 
 @query(
     "sim_recall_ivfpq_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_search"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf"),
 )
 def sim_recall_ivfpq_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -728,26 +666,14 @@ def sim_recall_ivfpq_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PQ alone): the composed figure decomposes into the two stages'
     losses, which is how a production index gets TUNED (raise nprobe
     vs raise codebook bits)."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    iv = sim_ivfpq_search(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, iv)
-
-
-_REG["sim_recall_ivfpq_at_k"].oracle = _REG["sim_recall_ivfpq_at_k"].oracle.format(
-    BF=_REG["sim_knn_bruteforce"].oracle, PQ=_REG["sim_ivfpq_search"].oracle
-)
-_REG["sim_recall_ivfpq_rerank_at_k"].oracle = _REG["sim_recall_ivfpq_rerank_at_k"].oracle.format(
-    BF=_REG["sim_knn_bruteforce"].oracle, PQ=_REG["sim_ivfpq_rerank"].oracle
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_search(spark, sf_dir), _TOP_K)
 
 
 # ------------------------------------------ IVF-PQ, nprobe = 2
 
-# Round 10 PROVED (tests/test_pq.py: cell-ceiling equality) that the
-# composed search's residual recall loss lives entirely in the coarse
-# cell stage — the refine stage refunds the PQ half. nprobe is the
+# The composed search's residual recall loss lives entirely in the
+# coarse cell stage (tests/test_pq.py pins the cell-ceiling equality):
+# the refine stage refunds the PQ half. nprobe is the
 # dial for the cell half: probe the 2 nearest cells, run the SAME
 # shared ADC-ranked CTE over the doubled candidate pool, refine the
 # shortlist. Scan fraction doubles (2/#cells x 4 bytes/vector) and
@@ -761,30 +687,12 @@ _SQL_IVFPQ2_PRELUDE = (
 
 @query(
     "sim_ivfpq_nprobe2",
-    oracle=f"""
-    {_SQL_IVFPQ2_PRELUDE},
-    short AS (
-        SELECT query_id, neighbor_id FROM ivfpq_ranked
-        WHERE rnk <= {_PQ_SHORTLIST}
-    ),
-    rr AS (
-        SELECT s.query_id, s.neighbor_id,
-               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
-        FROM short s
-        JOIN unit uq ON uq.vec_id = s.query_id
-        JOIN unit un ON un.vec_id = s.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rnk
-        FROM rr
-    ) WHERE rnk <= {_TOP_K}
-    """,
+    oracle=f"{_SQL_IVFPQ2_PRELUDE},{sql_rerank('ivfpq_ranked')}",
     tags=("similarity", "llm", "ann", "pq", "ivf", "nprobe", "rerank", "topk"),
 )
 def sim_ivfpq_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with multi-cell probing (nprobe=2) + refine — turning
-    the one dial the r10 decomposition left pinned: the coarse stage
+    the one dial the cell/PQ decomposition left pinned: the coarse stage
     keeps the TWO nearest centroids per query, the shared ADC path
     scores both cells' 4-byte codes against the same per-query LUT,
     and the shortlist is exact-rescored. Every corpus vector still
@@ -797,15 +705,11 @@ def sim_ivfpq_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivfpq_nprobe2_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_nprobe2"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf", "nprobe", "rerank"),
 )
 def sim_recall_ivfpq_nprobe2_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -814,13 +718,4 @@ def sim_recall_ivfpq_nprobe2_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
     refined): the delta is pure cell-stage recovery — the second
     probed cell's ground-truth members — since the refine stage
     already refunds quantization loss at both settings."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    rr = sim_ivfpq_nprobe2(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, rr)
-
-
-_REG["sim_recall_ivfpq_nprobe2_at_k"].oracle = _REG["sim_recall_ivfpq_nprobe2_at_k"].oracle.format(
-    BF=_REG["sim_knn_bruteforce"].oracle, PQ=_REG["sim_ivfpq_nprobe2"].oracle
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_nprobe2(spark, sf_dir), _TOP_K)

@@ -71,11 +71,12 @@ from bigdata_project_spark.operators.pq import (
     _pq_lut,
     _pq_subs,
     _pq_unit,
-    _recall_join,
     _rerank_from,
     _sql_ivf_cells,
     _sql_unit,
+    sql_rerank,
 )
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.similarity import (
     DIM,
     _QUERY_IDS,
@@ -334,15 +335,11 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivfpq_residual_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_residual"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf", "residual"),
 )
 def sim_recall_ivfpq_residual_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,42 +348,12 @@ def sim_recall_ivfpq_residual_at_k(spark: SparkSession, sf_dir: str) -> DataFram
     nprobe=2 and byte budget: the delta is what residual encoding
     buys — codewords spent on within-cell detail instead of cell
     geometry the coarse stage already explained."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    rr = sim_ivfpq_residual(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, rr)
-
-
-REGISTRY["sim_recall_ivfpq_residual_at_k"].oracle = REGISTRY[
-    "sim_recall_ivfpq_residual_at_k"
-].oracle.format(
-    BF=REGISTRY["sim_knn_bruteforce"].oracle,
-    PQ=REGISTRY["sim_ivfpq_residual"].oracle,
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_residual(spark, sf_dir), _TOP_K)
 
 
 @query(
     "sim_ivfpq_residual_rerank",
-    oracle=f"""
-    {_SQL_RES_PRELUDE},
-    short AS MATERIALIZED (
-        SELECT query_id, neighbor_id FROM rranked
-        WHERE rnk <= {_PQ_SHORTLIST}
-    ),
-    rr AS MATERIALIZED (
-        SELECT s.query_id, s.neighbor_id,
-               ({sql_dot("uq.u", "un.u", DIM)}) AS cosine
-        FROM short s
-        JOIN unit uq ON uq.vec_id = s.query_id
-        JOIN unit un ON un.vec_id = s.neighbor_id
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rnk
-        FROM rr
-    ) WHERE rnk <= {_TOP_K}
-    """,
+    oracle=f"{_SQL_RES_PRELUDE},{sql_rerank('rranked')}",
     tags=("similarity", "llm", "ann", "pq", "ivf", "residual", "rerank", "topk"),
 )
 def sim_ivfpq_residual_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,15 +370,11 @@ def sim_ivfpq_residual_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivfpq_residual_rerank_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.neighbor_id) AS INT) AS n_hits,
-           COUNT(i.neighbor_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{PQ}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.neighbor_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        REGISTRY["sim_ivfpq_residual_rerank"].oracle,
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval", "pq", "ivf", "residual", "rerank"),
 )
 def sim_recall_ivfpq_residual_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -423,19 +386,7 @@ def sim_recall_ivfpq_residual_rerank_at_k(spark: SparkSession, sf_dir: str) -> D
     test pins — the residual advantage lives in the PRE-refine ADC
     ranking (sim_recall_ivfpq_residual_at_k), exactly where FAISS
     banks it."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    rr = sim_ivfpq_residual_rerank(spark, sf_dir).select(
-        F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid")
-    )
-    return _recall_join(bf, rr)
-
-
-REGISTRY["sim_recall_ivfpq_residual_rerank_at_k"].oracle = REGISTRY[
-    "sim_recall_ivfpq_residual_rerank_at_k"
-].oracle.format(
-    BF=REGISTRY["sim_knn_bruteforce"].oracle,
-    PQ=REGISTRY["sim_ivfpq_residual_rerank"].oracle,
-)
+    return at_k(sim_knn_bruteforce(spark, sf_dir), sim_ivfpq_residual_rerank(spark, sf_dir), _TOP_K)
 
 
 # ------------------------------------------------------------------
@@ -492,17 +443,10 @@ _SQL_NPS = "[" + ", ".join(str(n) for n in _CURVE_NPS) + "]"
                                          ORDER BY cosine DESC, neighbor_id) AS rrk
             FROM rr
         ) WHERE rrk <= {_TOP_K}
-    )
-    SELECT n2.np AS nprobe, b.query_id,
-           CAST(COUNT(t.neighbor_id) AS INT) AS n_hits,
-           COUNT(t.neighbor_id) / {_TOP_K}.0 AS recall_at_10,
-           CAST(MAX(nc.n_candidates) AS BIGINT) AS n_candidates
-    FROM ({{BF}}) b
-    CROSS JOIN nps n2
-    LEFT JOIN topk t ON t.np = n2.np AND t.query_id = b.query_id
-                     AND t.neighbor_id = b.vec_id
-    JOIN ncand nc ON nc.np = n2.np AND nc.query_id = b.query_id
-    GROUP BY n2.np, b.query_id
+    ),
+    rec AS ({sql_at_k(REGISTRY["sim_knn_bruteforce"].oracle, "SELECT * FROM topk", _TOP_K, ("np", _CURVE_NPS))})
+    SELECT r.np AS nprobe, r.query_id, r.n_hits, r.recall AS recall_at_10, nc.n_candidates
+    FROM rec r JOIN ncand nc ON nc.np = r.np AND nc.query_id = r.query_id
     """,
     tags=("similarity", "llm", "eval", "pq", "ivf", "nprobe", "tuning"),
 )
@@ -562,26 +506,9 @@ def sim_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = (
         rr.select("*", F.row_number().over(wk).alias("rrk"))
         .filter(F.col("rrk") <= _TOP_K)
-        .select(
-            F.col("np").alias("t_np"),
-            F.col("query_id").alias("t_qid"),
-            F.col("neighbor_id").alias("t_vid"),
-        )
     )
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    base = bf.crossJoin(F.broadcast(nps))
-    hit = base.join(
-        topk,
-        (F.col("np") == F.col("t_np"))
-        & (F.col("query_id") == F.col("t_qid"))
-        & (F.col("vec_id") == F.col("t_vid")),
-        "left_outer",
-    )
-    agg = hit.groupBy("np", "query_id").agg(
-        F.count("t_vid").cast("int").alias("n_hits"),
-        (F.count("t_vid") / float(_TOP_K)).alias("recall_at_10"),
-    )
-    return agg.join(
+    rec = at_k(sim_knn_bruteforce(spark, sf_dir), topk, _TOP_K, ("np", _CURVE_NPS))
+    return rec.join(
         F.broadcast(
             ncand.select(
                 F.col("np").alias("c_np"),
@@ -594,11 +521,7 @@ def sim_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("np").alias("nprobe"),
         "query_id",
         "n_hits",
-        "recall_at_10",
+        F.col("recall").alias("recall_at_10"),
         "n_candidates",
     )
 
-
-REGISTRY["sim_ivfpq_nprobe_curve"].oracle = REGISTRY[
-    "sim_ivfpq_nprobe_curve"
-].oracle.format(BF=REGISTRY["sim_knn_bruteforce"].oracle)

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.vecmath import (
     ROUND,
     centroids,
@@ -29,7 +30,7 @@ from bigdata_project_spark.operators.vecmath import (
     sql_qsum,
     SQL_QN,
 )
-from bigdata_project_spark.registry import query
+from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
 DIM = 64
@@ -551,23 +552,13 @@ def sim_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_of(name: str) -> str:
-    from bigdata_project_spark.registry import REGISTRY
-
-    return REGISTRY[name].oracle
-
-
 @query(
     "sim_recall_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.vec_id) AS INT) AS n_hits,
-           COUNT(i.vec_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{IVF}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        f"SELECT query_id, vec_id AS neighbor_id FROM ({REGISTRY['sim_ann_ivf_probe'].oracle})",
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval"),
 )
 def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,35 +573,13 @@ def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     k x #queries row sets — negligible. The oracle nests both
     queries' full oracle SQL as subqueries, so the eval is verified
     end-to-end, not against a re-derivation."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    ivf = (
-        sim_ann_ivf_probe(spark, sf_dir)
-        .select(F.col("query_id").alias("i_qid"), F.col("vec_id").alias("i_vid"))
-    )
-    joined = bf.join(
-        ivf,
-        (F.col("query_id") == F.col("i_qid")) & (F.col("vec_id") == F.col("i_vid")),
-        "left_outer",
-    )
-    return joined.groupBy("query_id").agg(
-        F.count("i_vid").cast("int").alias("n_hits"),
-        (F.count("i_vid") / float(_TOP_K)).alias("recall"),
-    )
-
-
-# splice the component oracles into the recall oracle (they are full
-# WITH...SELECT statements; DuckDB accepts them as parenthesized
-# subqueries)
-from bigdata_project_spark.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["sim_recall_at_k"].oracle = _REG["sim_recall_at_k"].oracle.format(
-    BF=_oracle_of("sim_knn_bruteforce"), IVF=_oracle_of("sim_ann_ivf_probe")
-)
+    ivf = sim_ann_ivf_probe(spark, sf_dir).withColumnRenamed("vec_id", "neighbor_id")
+    return at_k(sim_knn_bruteforce(spark, sf_dir), ivf, _TOP_K)
 
 
 @query(
     "sim_ann_ivf_nprobe2",
-    oracle=_REG["sim_ann_ivf_probe"].oracle.replace(
+    oracle=REGISTRY["sim_ann_ivf_probe"].oracle.replace(
         "FROM assign WHERE rn = 1", "FROM assign WHERE rn <= 2"
     ),
     tags=("similarity", "llm", "ann", "ivf"),
@@ -630,15 +599,11 @@ def sim_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_recall_ivf2_at_k",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(i.vec_id) AS INT) AS n_hits,
-           COUNT(i.vec_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN ({{IVF2}}) i
-      ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-    GROUP BY b.query_id
-    """,
+    oracle=sql_at_k(
+        REGISTRY["sim_knn_bruteforce"].oracle,
+        f"SELECT query_id, vec_id AS neighbor_id FROM ({REGISTRY['sim_ann_ivf_nprobe2'].oracle})",
+        _TOP_K,
+    ),
     tags=("similarity", "llm", "eval"),
 )
 def sim_recall_ivf2_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,125 +611,8 @@ def sim_recall_ivf2_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_recall_at_k (nprobe=1) this quantifies the recall/cost curve
     in-engine: the tuning loop (evaluate -> widen probes ->
     re-evaluate) without leaving the warehouse."""
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    ivf2 = (
-        sim_ann_ivf_nprobe2(spark, sf_dir)
-        .select(F.col("query_id").alias("i_qid"), F.col("vec_id").alias("i_vid"))
-    )
-    joined = bf.join(
-        ivf2,
-        (F.col("query_id") == F.col("i_qid")) & (F.col("vec_id") == F.col("i_vid")),
-        "left_outer",
-    )
-    return joined.groupBy("query_id").agg(
-        F.count("i_vid").cast("int").alias("n_hits"),
-        (F.count("i_vid") / float(_TOP_K)).alias("recall"),
-    )
-
-
-_REG["sim_recall_ivf2_at_k"].oracle = _REG["sim_recall_ivf2_at_k"].oracle.format(
-    BF=_oracle_of("sim_knn_bruteforce"), IVF2=_oracle_of("sim_ann_ivf_nprobe2")
-)
-
-
-# ------------------------------ truncated-dimension (Matryoshka) eval
-
-_TRUNC_DIM = 16
-
-
-@query(
-    "sim_truncated_dim_recall",
-    oracle=f"""
-    SELECT b.query_id,
-           CAST(COUNT(t.vec_id) AS INT) AS n_hits,
-           COUNT(t.vec_id) / {_TOP_K}.0 AS recall
-    FROM ({{BF}}) b
-    LEFT JOIN (
-        WITH pnormed AS (
-            SELECT vec_id, embedding,
-                   {sql_dot('embedding', 'embedding', _TRUNC_DIM)} AS p_norm_sq
-            FROM embeddings
-        ),
-        ppairs AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                   CASE WHEN q.p_norm_sq > 0 AND c.p_norm_sq > 0 THEN
-                        ({sql_dot('q.embedding', 'c.embedding', _TRUNC_DIM)})
-                          / (SQRT(q.p_norm_sq) * SQRT(c.p_norm_sq))
-                        ELSE 0.0 END AS cosine
-            FROM pnormed q JOIN pnormed c ON c.vec_id <> q.vec_id
-            WHERE q.vec_id IN {_QUERY_IDS}
-        )
-        SELECT query_id, vec_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id) AS rank
-            FROM ppairs
-        ) WHERE rank <= {_TOP_K}
-    ) t ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY b.query_id
-    """,
-    tags=("similarity", "llm", "eval", "matryoshka"),
-)
-def sim_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dimension-truncation retrieval eval (the Matryoshka-embedding
-    question): how much of the exact full-{DIM}-dim top-k does cosine
-    search over only the FIRST {_TRUNC_DIM} dimensions recover?
-    Truncated-prefix retrieval is the standard cheap first stage —
-    a {_TRUNC_DIM}-dim scan moves {_TRUNC_DIM}/{DIM} of the bytes and flops of the
-    full vectors at 100 TB — and this query measures exactly what
-    that truncation costs in recall@k, per query point, entirely
-    in-engine. (On generic embeddings the prefix is NOT
-    information-dense, so recall is expected to be mediocre — that
-    measurement, not a flattering number, is the operator's output;
-    with MRL-trained vectors the same query becomes the shipping
-    gate.) A zero-norm prefix scores cosine 0.0 in both engines —
-    the same guarded definition sim_maxsim_multivector uses.
-
-    Exactness: both sides are exact brute-force scans (the truncated
-    one over a sliced prefix), with the same left-associated
-    double-chain dot products and (cosine DESC, vec_id) tiebreak as
-    sim_knn_bruteforce; the oracle nests the ground-truth oracle
-    verbatim. Scale: two broadcast-query passes over the corpus, the
-    final comparison joins two k x #queries row sets."""
-    emb = load(spark, sf_dir, "embeddings").withColumn(
-        "p_emb", F.slice("embedding", 1, _TRUNC_DIM)
-    )
-    emb = emb.withColumn("p_norm_sq", dot("p_emb", "p_emb"))
-    q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("p_emb").alias("q_p_emb"),
-        F.col("p_norm_sq").alias("q_p_norm_sq"),
-    )
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    # zero-norm guard (cosine defined as 0.0): an all-zero 16-dim
-    # prefix is far more likely than an all-zero full vector, and an
-    # unguarded /0 diverges cross-engine (Spark NULL vs DuckDB inf) —
-    # same CASE form as the MaxSim sub-vector guard below
-    cosine = F.when(
-        (F.col("q_p_norm_sq") > 0) & (F.col("p_norm_sq") > 0),
-        dot("q_p_emb", "p_emb") / (F.sqrt("q_p_norm_sq") * F.sqrt("p_norm_sq")),
-    ).otherwise(F.lit(0.0))
-    scored = pairs.select("query_id", "vec_id", cosine.alias("cosine"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    trunc_topk = (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(F.col("query_id").alias("t_qid"), F.col("vec_id").alias("t_vid"))
-    )
-    bf = sim_knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    joined = bf.join(
-        trunc_topk,
-        (F.col("query_id") == F.col("t_qid")) & (F.col("vec_id") == F.col("t_vid")),
-        "left_outer",
-    )
-    return joined.groupBy("query_id").agg(
-        F.count("t_vid").cast("int").alias("n_hits"),
-        (F.count("t_vid") / float(_TOP_K)).alias("recall"),
-    )
-
-
-_REG["sim_truncated_dim_recall"].oracle = _REG["sim_truncated_dim_recall"].oracle.format(
-    BF=_oracle_of("sim_knn_bruteforce")
-)
+    ivf2 = sim_ann_ivf_nprobe2(spark, sf_dir).withColumnRenamed("vec_id", "neighbor_id")
+    return at_k(sim_knn_bruteforce(spark, sf_dir), ivf2, _TOP_K)
 
 
 # ------------------------------------------------ MaxSim late interaction
@@ -1012,27 +860,28 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
 
 
+_SQL_LSH_FOUND = f"""
+    SELECT 0 AS multi, vec_id AS query_id, neighbor_id
+    FROM ({REGISTRY["sim_ann_lsh_banded"].oracle})
+    UNION ALL
+    SELECT 1 AS multi, vec_id AS query_id, neighbor_id
+    FROM ({REGISTRY["sim_ann_lsh_multiprobe"].oracle})
+"""
+
+
 @query(
     "sim_recall_multiprobe",
     oracle=f"""
     WITH truth AS (
-        SELECT query_id, vec_id FROM ({{BF}}) WHERE rank <= 5
+        SELECT query_id, vec_id FROM ({REGISTRY["sim_knn_bruteforce"].oracle}) WHERE rank <= 5
     ),
-    single AS (
-        SELECT vec_id AS s_qid, neighbor_id AS s_vid FROM ({{BANDED}})
-    ),
-    multi AS (
-        SELECT vec_id AS m_qid, neighbor_id AS m_vid FROM ({{MULTI}})
-    )
-    SELECT t.query_id,
-           CAST(COUNT(s.s_vid) AS INT) AS n_hits_single,
-           CAST(COUNT(m.m_vid) AS INT) AS n_hits_multi,
-           COUNT(s.s_vid) / 5.0 AS recall_single,
-           COUNT(m.m_vid) / 5.0 AS recall_multi
-    FROM truth t
-    LEFT JOIN single s ON t.query_id = s.s_qid AND t.vec_id = s.s_vid
-    LEFT JOIN multi m ON t.query_id = m.m_qid AND t.vec_id = m.m_vid
-    GROUP BY t.query_id
+    r AS ({sql_at_k("SELECT * FROM truth", _SQL_LSH_FOUND, 5, ("multi", (0, 1)))})
+    SELECT query_id,
+           MAX(CASE WHEN multi = 0 THEN n_hits END) AS n_hits_single,
+           MAX(CASE WHEN multi = 1 THEN n_hits END) AS n_hits_multi,
+           MAX(CASE WHEN multi = 0 THEN recall END) AS recall_single,
+           MAX(CASE WHEN multi = 1 THEN recall END) AS recall_multi
+    FROM r GROUP BY query_id
     """,
     tags=("similarity", "llm", "eval", "multiprobe"),
 )
@@ -1045,39 +894,27 @@ def sim_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the two ANN queries are the scale-shaped plans themselves;
     the comparison joins 5 x #queries row sets — negligible."""
-    truth = (
-        sim_knn_bruteforce(spark, sf_dir)
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id")
-    )
-    single = sim_ann_lsh_banded(spark, sf_dir).select(
-        F.col("vec_id").alias("s_qid"), F.col("neighbor_id").alias("s_vid")
-    )
-    multi = sim_ann_lsh_multiprobe(spark, sf_dir).select(
-        F.col("vec_id").alias("m_qid"), F.col("neighbor_id").alias("m_vid")
-    )
-    joined = (
-        truth.join(
-            single,
-            (F.col("query_id") == F.col("s_qid")) & (F.col("vec_id") == F.col("s_vid")),
-            "left_outer",
+    truth = sim_knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= 5)
+    # both searches as two levels of one recall join, pivoted per query:
+    # two recall joins over the same truth plan it twice (31 jobs, not 26)
+    found = (
+        sim_ann_lsh_banded(spark, sf_dir)
+        .select(F.lit(0).alias("multi"), "vec_id", "neighbor_id")
+        .unionByName(
+            sim_ann_lsh_multiprobe(spark, sf_dir).select(
+                F.lit(1).alias("multi"), "vec_id", "neighbor_id"
+            )
         )
-        .join(
-            multi,
-            (F.col("query_id") == F.col("m_qid")) & (F.col("vec_id") == F.col("m_vid")),
-            "left_outer",
-        )
+        .withColumnRenamed("vec_id", "query_id")
     )
-    return joined.groupBy("query_id").agg(
-        F.count("s_vid").cast("int").alias("n_hits_single"),
-        F.count("m_vid").cast("int").alias("n_hits_multi"),
-        (F.count("s_vid") / 5.0).alias("recall_single"),
-        (F.count("m_vid") / 5.0).alias("recall_multi"),
+    r = at_k(truth, found, 5, ("multi", (0, 1)))
+
+    def side(col: str, multi: int):
+        return F.max(F.when(F.col("multi") == multi, F.col(col)))
+
+    return r.groupBy("query_id").agg(
+        side("n_hits", 0).alias("n_hits_single"),
+        side("n_hits", 1).alias("n_hits_multi"),
+        side("recall", 0).alias("recall_single"),
+        side("recall", 1).alias("recall_multi"),
     )
-
-
-_REG["sim_recall_multiprobe"].oracle = _REG["sim_recall_multiprobe"].oracle.format(
-    BF=_oracle_of("sim_knn_bruteforce"),
-    BANDED=_oracle_of("sim_ann_lsh_banded"),
-    MULTI=_oracle_of("sim_ann_lsh_multiprobe"),
-)

@@ -57,6 +57,23 @@ BUDGETS = {
     "dedup_selfrepeat_rewrite": 8,
     "dedup_selfrepeat_substring_spans": 6,
     "dedup_substring_rewrite": 8,
+    # the recall@k consumers (operators/recall.py); sim_truncated_dim_recall
+    # has no budget, as one commit runs it in 6 or 8 jobs
+    "sim_ivfpq_nprobe_curve": 30,
+    "sim_recall_at_k": 12,
+    "sim_recall_dim_curve": 8,
+    "sim_recall_graph_at_k": 75,
+    "sim_recall_ivf2_at_k": 12,
+    "sim_recall_ivf_trained_at_k": 38,
+    "sim_recall_ivfpq_at_k": 24,
+    "sim_recall_ivfpq_nprobe2_at_k": 27,
+    "sim_recall_ivfpq_rerank_at_k": 27,
+    "sim_recall_ivfpq_residual_at_k": 28,
+    "sim_recall_ivfpq_residual_rerank_at_k": 33,
+    "sim_recall_ivfpq_trained_at_k": 52,
+    "sim_recall_multiprobe": 26,
+    "sim_recall_pq_at_k": 18,
+    "sim_recall_pq_rerank_at_k": 21,
 }
 # processes started per warm run (`_processes`): the measured count
 # plus about 25%, at 4 and 8 cores alike. Through Hadoop's stock local
@@ -100,6 +117,21 @@ _INPUTS = {
     "dedup_selfrepeat_rewrite": ("documents",),
     "dedup_selfrepeat_substring_spans": ("documents",),
     "dedup_substring_rewrite": ("documents",),
+    "sim_ivfpq_nprobe_curve": ("embeddings",),
+    "sim_recall_at_k": ("embeddings",),
+    "sim_recall_dim_curve": ("embeddings",),
+    "sim_recall_graph_at_k": ("embeddings",),
+    "sim_recall_ivf2_at_k": ("embeddings",),
+    "sim_recall_ivf_trained_at_k": ("embeddings",),
+    "sim_recall_ivfpq_at_k": ("embeddings",),
+    "sim_recall_ivfpq_nprobe2_at_k": ("embeddings",),
+    "sim_recall_ivfpq_rerank_at_k": ("embeddings",),
+    "sim_recall_ivfpq_residual_at_k": ("embeddings",),
+    "sim_recall_ivfpq_residual_rerank_at_k": ("embeddings",),
+    "sim_recall_ivfpq_trained_at_k": ("embeddings",),
+    "sim_recall_multiprobe": ("embeddings",),
+    "sim_recall_pq_at_k": ("embeddings",),
+    "sim_recall_pq_rerank_at_k": ("embeddings",),
 }
 
 

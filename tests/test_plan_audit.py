@@ -85,7 +85,7 @@ BNLJ_WHITELIST: dict[str, str] = {
     "corpus_nb_quality_classifier": "1-row class-prior + absence-constant broadcasts",
     "corpus_nb_lm_agreement": "nested NB prior/absence + LM vocab 1-row broadcasts",
     "sim_knn_bruteforce": "fixed 5-vector query set broadcast (non-equi by design)",
-    "sim_truncated_dim_recall": "fixed tiny query set broadcast in both exact passes",
+    "sim_truncated_dim_recall": "the dim curve's fixed 3-query set broadcast (its dim = 16 row) + nested brute-force truth",
     "sim_recall_dim_curve": "fixed 3-query set broadcast (non-equi by design) shared by the three prefix dims + nested brute-force truth",
     # (sim_graph_beam_search's entry-seed non-equi broadcast happens
     # before a localCheckpoint, so its FINAL plan carries no BNLJ and

@@ -42,18 +42,14 @@ def _hits(df):
 
 @pytest.mark.parametrize("sf", SFS)
 def test_residual_recall_dominates_raw_at_same_bytes(spark, sf):
-    from bigdata_project_spark.operators.pq import _ivfpq_adc_ranked, _recall_join
+    from bigdata_project_spark.operators.pq import _ivfpq_adc_ranked
     from bigdata_project_spark.operators.pq_residual import _RES_NPROBE
+    from bigdata_project_spark.operators.recall import at_k
     from bigdata_project_spark.operators.similarity import _TOP_K, sim_knn_bruteforce
     from bigdata_project_spark.registry import all_queries
 
-    bf = sim_knn_bruteforce(spark, sf).select("query_id", "vec_id")
-    raw = (
-        _ivfpq_adc_ranked(spark, sf, nprobe=_RES_NPROBE)
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(F.col("query_id").alias("i_qid"), F.col("neighbor_id").alias("i_vid"))
-    )
-    raw_hits = _hits(_recall_join(bf, raw))
+    raw = _ivfpq_adc_ranked(spark, sf, nprobe=_RES_NPROBE).filter(F.col("rnk") <= _TOP_K)
+    raw_hits = _hits(at_k(sim_knn_bruteforce(spark, sf), raw, _TOP_K))
     res_hits = _hits(
         all_queries()["sim_recall_ivfpq_residual_at_k"](spark, sf)
     )

@@ -318,3 +318,43 @@ def test_near_dup_pairs_live_only_in_nearpairs():
     assert not offenders, "near-dup pair joins copied outside operators/nearpairs.py:\n" + "\n".join(
         offenders
     )
+
+
+def test_recall_lives_only_in_recall():
+    """operators/recall.py owns recall@k: the left join from the
+    ground-truth top-k to a search's top-k and the per-query hit
+    count, with its DuckDB twin. A query that counts its own n_hits is
+    a copy that can drift from the twin its oracle is built from. The
+    pair recall of the LSH evaluations in dedup.py and dedup_ext.py is
+    a different metric (found pairs over true pairs, counted globally)
+    and is allowed by name. An oracle is built when its query is
+    registered, from oracles already registered, so no similarity
+    query's oracle is reassigned afterwards."""
+    import pathlib
+
+    allowed = {"operators/recall.py", "operators/dedup.py", "operators/dedup_ext.py"}
+    marker = re.compile(r"""alias\(\s*["']n_hits["']\s*\)|\bAS\s+n_hits\b""", re.IGNORECASE)
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    offenders: list[str] = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        src = f.read_text()
+        if rel not in allowed:
+            offenders += [
+                f"{rel}:{i}: {line.strip()}"
+                for i, line in enumerate(src.splitlines(), 1)
+                if marker.search(line)
+            ]
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Assign):
+                continue
+            for t in node.targets:
+                if (
+                    isinstance(t, ast.Attribute)
+                    and t.attr == "oracle"
+                    and isinstance(t.value, ast.Subscript)
+                    and isinstance(t.value.slice, ast.Constant)
+                    and str(t.value.slice.value).startswith("sim_")
+                ):
+                    offenders.append(f"{rel}:{node.lineno}: {t.value.slice.value}.oracle rebound")
+    assert not offenders, "recall@k copied outside operators/recall.py:\n" + "\n".join(offenders)
