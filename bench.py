@@ -40,9 +40,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SECONDARY_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SECONDARY", "/root/testdata/sf0.01")
 
 # headline set: one per operator family, weighted toward shuffle-heavy
-# work. Only scale-safe ANN shapes qualify (banded LSH + IVF);
-# sim_ann_lsh_bucketed is the didactic fixed-16-bucket baseline and is
-# deliberately excluded — its candidate set grows ~n²/16.
+# work. Only scale-safe ANN shapes qualify (banded LSH + IVF).
 HEADLINE = [
     "agg_pricing_summary",
     "agg_rollup_region_nation",

@@ -1,4 +1,4 @@
-"""SemDeDup-style embedding-cluster dedup (round 8).
+"""SemDeDup-style embedding-cluster dedup.
 
 The text-side near-dup family (MinHash/SimHash/Jaccard) catches
 lexical copies; SemDeDup (Abbas et al. 2023, arXiv:2303.09540)
@@ -42,16 +42,8 @@ from pyspark.sql.types import IntegerType, LongType, StructType
 from bigdata_project_spark.caching import barrier, tracked_persist
 from bigdata_project_spark.operators.clustering import components, keep_best, sql_components
 from bigdata_project_spark.operators.dedup import words_col
-from bigdata_project_spark.operators.similarity import (
-    DIM,
-    _band_signs,
-    _N_BANDS,
-    _sign_bit,
-    _sign_row,
-    _sql_band_bucket,
-    _SQL_NORMED,
-    with_norm,
-)
+from bigdata_project_spark.operators.hyperplane import BAND_STRIDE, bucket, planes, sql_bucket, sql_planes
+from bigdata_project_spark.operators.similarity import DIM, _N_BANDS, _SQL_NORMED, with_norm
 from bigdata_project_spark.operators.vecmath import (
     ROUND,
     SQL_QN,
@@ -63,62 +55,21 @@ from bigdata_project_spark.operators.vecmath import (
     sql_qsum,
 )
 from bigdata_project_spark.registry import query
-from bigdata_project_spark.tables import load
+from bigdata_project_spark.tables import load, parquet_row_count
 
 SEMDEDUP_TAU = 0.35
 
-# Data-aware sub-cells (the SemDeDup "#cells grows with the corpus"
-# recipe, same derivation pattern as similarity.planes_per_band): each
-# label cell is sub-split by the first Q bits of an LSH hyperplane
-# bucket, Q = clamp(ceil(log2(n)) - LOAD, 0, MAX), so the expected
-# per-cell load stays ~2^LOAD / n_labels vectors as n grows and the
-# within-cell quadratic stays bounded. tests/test_semdedup.py pins the
-# drop-rate flatness sf0.01 -> sf0.1 (a FIXED cell set measured 0.14
-# -> 0.49 there — the quadratic leaking through). The hyperplane rows
-# come from band index _N_BANDS of the md5 plane family — fresh
-# deterministic planes, disjoint from the 3 banded-LSH bands.
+# Sub-cells follow the corpus (SemDeDup's "#cells grows with the
+# corpus"): each label cell is split by the first Q bits of a
+# hyperplane bucket, with the sizing (load_log2, lo, hi) = (9, 0, 16),
+# so the expected per-cell load stays ~2^9 / n_labels vectors as n
+# grows and the within-cell quadratic stays bounded.
+# tests/test_semdedup.py pins the drop-rate flatness sf0.01 -> sf0.1
+# (a fixed cell set measured 0.14 -> 0.49 there). The planes are band
+# _N_BANDS of the hyperplane family, disjoint from the 3 banded-LSH
+# bands.
 _SEM_BAND = _N_BANDS
-_CELL_LOAD_LOG2 = 9
-# _band_signs yields _MAX_PLANES_PER_BAND rows per band (env-tunable);
-# the sub-cell prefix can never use more bits than the band provides,
-# or a low SPARK_GRAFT_MAX_PLANES_PER_BAND would silently truncate Q
-# in both engines and quietly unbound per-cell load.
-from bigdata_project_spark.operators.similarity import _MAX_PLANES_PER_BAND
-
-_MAX_SUBCELL_PLANES = min(16, _MAX_PLANES_PER_BAND)
-
-
-def subcell_planes(n_vectors: int) -> int:
-    """Q = clamp(ceil(log2(n)) - {_CELL_LOAD_LOG2}, 0, {_MAX_SUBCELL_PLANES}) —
-    mirrored exactly by the oracle's params CTE."""
-    import math
-
-    return max(
-        0,
-        min(
-            _MAX_SUBCELL_PLANES,
-            math.ceil(math.log2(max(n_vectors, 2))) - _CELL_LOAD_LOG2,
-        ),
-    )
-
-
-_SQL_SEM_PARAMS = f"""
-    params AS (
-        SELECT GREATEST(0, LEAST({_MAX_SUBCELL_PLANES},
-                                 CAST(CEIL(LOG2(GREATEST(COUNT(*), 2))) AS INT)
-                                   - {_CELL_LOAD_LOG2})) AS q
-        FROM embeddings
-    )
-"""
-
-
-def _subcell_col(q: int):
-    """First-q-bits LSH bucket string (same fold as the banded-LSH
-    bucket builder; '' when q = 0 so small corpora keep label cells)."""
-    if q == 0:
-        return F.lit("")
-    signs2d = F.array(*[_sign_row(row) for row in _band_signs(_SEM_BAND)[:q]])
-    return F.array_join(F.transform(signs2d, _sign_bit), "")
+_SUBCELL_SIZING = (9, 0, BAND_STRIDE)
 
 
 # the cell-assignment fragment, reusable (tools/scaling_probe.py
@@ -129,7 +80,7 @@ def _subcell_col(q: int):
 # assignment scoring three times and blow memory). cell =
 # nearest-centroid label + first-q-bits LSH sub-bucket.
 _SQL_SEM_CELLS = f"""
-    {_SQL_SEM_PARAMS},
+    params AS ({sql_planes('embeddings', *_SUBCELL_SIZING, 'q')}),
     cdim AS (
         SELECT label, i.r AS pos,
                {sql_qsum('embedding[i.r + 1]', ROUND)}
@@ -148,7 +99,7 @@ _SQL_SEM_CELLS = f"""
     cells AS MATERIALIZED (
         SELECT vec_id, embedding, norm_sq,
                CAST(c_label AS VARCHAR) || ':'
-                 || substr({_sql_band_bucket(_SEM_BAND)}, 1, q) AS cell
+                 || {sql_bucket('embedding', _SEM_BAND, 'q')} AS cell
         FROM assign, params WHERE rn = 1
     )
 """
@@ -201,9 +152,8 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; the keeper election is the same max(struct) aggregate as
     corpus_keep_best_per_cluster, riding the component exchange."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    # plan-build sizing count — derives the same Q the oracle's params
-    # CTE computes from COUNT(*) (the banded-LSH cheap-count pattern)
-    q = subcell_planes(emb.count())
+    # the footer count is the oracle's COUNT(*) over the same table
+    q = planes(parquet_row_count(f"{sf_dir}/embeddings.parquet"), *_SUBCELL_SIZING)
     cells = tracked_persist(_sem_assign(emb, _sem_centroids(emb), q))
 
     a, b = cells.alias("a"), cells.alias("b")
@@ -262,19 +212,14 @@ def _sem_assign(emb: DataFrame, cent: DataFrame, q: int) -> DataFrame:
         "vec_id",
         "embedding",
         "norm_sq",
-        F.concat(F.col("c_label").cast("string"), F.lit(":"), _subcell_col(q)).alias("cell"),
+        F.concat(F.col("c_label").cast("string"), F.lit(":"), bucket("embedding", _SEM_BAND, q)).alias("cell"),
     )
 
 
 _SQL_INCREMENTAL_ORACLE = f"""
     WITH {_SQL_NORMED},
     corpus AS (SELECT * FROM normed WHERE vec_id % {_SEM_BATCH_MOD} <> {_SEM_BATCH_MOD - 1}),
-    params AS (
-        SELECT GREATEST(0, LEAST({_MAX_SUBCELL_PLANES},
-                                 CAST(CEIL(LOG2(GREATEST(COUNT(*), 2))) AS INT)
-                                   - {_CELL_LOAD_LOG2})) AS q
-        FROM corpus
-    ),
+    params AS ({sql_planes('corpus', *_SUBCELL_SIZING, 'q')}),
     cdim AS (
         SELECT label, i.r AS pos,
                {sql_qsum('embedding[i.r + 1]', ROUND)}
@@ -293,7 +238,7 @@ _SQL_INCREMENTAL_ORACLE = f"""
     cells AS MATERIALIZED (
         SELECT vec_id, embedding, norm_sq,
                CAST(c_label AS VARCHAR) || ':'
-                 || substr({_sql_band_bucket(_SEM_BAND)}, 1, q) AS cell
+                 || {sql_bucket('embedding', _SEM_BAND, 'q')} AS cell
         FROM assign_all, params WHERE rn = 1
     ),
     bcells AS (SELECT * FROM cells WHERE vec_id % {_SEM_BATCH_MOD} = {_SEM_BATCH_MOD - 1}),
@@ -350,7 +295,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
     corpus = emb.filter(~is_batch)
-    q = subcell_planes(corpus.count())
+    q = planes(corpus.count(), *_SUBCELL_SIZING)
     cent = _sem_centroids(corpus)
     cells = tracked_persist(_sem_assign(emb, cent, q))
     bcells = cells.filter(is_batch)
@@ -361,13 +306,12 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(F.col(f"{a}.norm_sq")) * F.sqrt(F.col(f"{b}.norm_sq"))
         )
 
-    # r14 optimization (guide §2.4 "share one exchange"): the corpus
-    # probe and the within-batch probe are BOTH cell equi-joins of
-    # the same batch side, so they run as ONE join against the
-    # flagged union of the two match sets and split back in the
-    # aggregate (min over corpus hits / min over earlier-batch hits)
-    # — one cell-keyed join + one aggregate instead of two of each,
-    # same dup_corpus/dup_batch values row for row.
+    # the corpus probe and the within-batch probe are BOTH cell
+    # equi-joins of the same batch side, so they run as ONE join
+    # against the flagged union of the two match sets and split back
+    # in the aggregate (min over corpus hits / min over earlier-batch
+    # hits) — one cell-keyed join + one aggregate instead of two of
+    # each, same dup_corpus/dup_batch values row for row.
     b = bcells.alias("b")
     o = (
         ccells.withColumn("is_corpus", F.lit(True))
@@ -438,7 +382,7 @@ def run_semantic_ingest_stream(
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
     corpus = emb.filter(~is_batch)
-    q = subcell_planes(corpus.count())
+    q = planes(corpus.count(), *_SUBCELL_SIZING)
     cent = tracked_persist(_sem_centroids(corpus))
     ccells = tracked_persist(_sem_assign(corpus, cent, q))
     ccells.count()  # materialize the standing index before the stream

@@ -6,18 +6,25 @@ signatures turn the O(n^2) cross join into an equi-join on bucket).
 
 Determinism: every dot product and centroid is a `vecmath.py`
 kernel (the exactness contract is stated there), identical in the
-Spark plan and the DuckDB oracle. Hyperplane signs come from Python
-hashlib md5 (hard-coded constants at plan build, not RNG state).
+Spark plan and the DuckDB oracle. Hyperplane buckets and their sizing
+are `hyperplane.py`'s.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from bigdata_project_spark.operators.hyperplane import (
+    BAND_STRIDE,
+    DIM,
+    band_buckets,
+    bucket,
+    planes,
+    sql_bucket,
+    sql_planes,
+)
 from bigdata_project_spark.operators.recall import at_k, sql_at_k
 from bigdata_project_spark.operators.vecmath import (
     ROUND,
@@ -31,9 +38,8 @@ from bigdata_project_spark.operators.vecmath import (
     SQL_QN,
 )
 from bigdata_project_spark.registry import REGISTRY, query
-from bigdata_project_spark.tables import load
+from bigdata_project_spark.tables import load, parquet_row_count
 
-DIM = 64
 _QUERY_IDS = (0, 1, 2)
 _TOP_K = 10
 
@@ -102,109 +108,12 @@ def _bruteforce_from(emb: DataFrame) -> DataFrame:
 _N_PLANES = 4
 
 
-def _plane_signs() -> list[list[int]]:
-    """Deterministic pseudo-random hyperplane signs from md5 — build-
-    time constants, identical in the Spark plan and the oracle SQL."""
-    signs = []
-    for j in range(_N_PLANES):
-        row = []
-        for i in range(DIM):
-            h = hashlib.md5(f"plane:{j}:{i}".encode()).hexdigest()
-            row.append(-1 if int(h[0], 16) < 8 else 1)
-        signs.append(row)
-    return signs
-
-
-_SIGNS = _plane_signs()
-
-
-def _sign_row(signs: list[int]) -> Column:
-    """One hyperplane's signs as a literal double array."""
-    return F.array(*[F.lit(float(s)) for s in signs])
-
-
-def _sign_bit(signs: Column) -> Column:
-    """'1' if the embedding projects non-negatively onto the
-    hyperplane with this literal sign row, else '0'."""
-    return (dot("embedding", signs) >= 0).cast("int").cast("string")
-
-
-def _sql_sign_bit(signs: list[int]) -> str:
-    proj = " + ".join(
-        f"CAST(embedding[{i + 1}] AS DOUBLE) * ({float(signs[i])})" for i in range(DIM)
-    )
-    return f"CAST(CAST({proj} >= 0 AS INT) AS VARCHAR)"
-
-
-_SQL_BUCKET = " || ".join(_sql_sign_bit(_SIGNS[j]) for j in range(_N_PLANES))
-
-
-# Retired from the product registry in round 4 (judge ask #3): the
-# fixed 4-plane bucketing makes the within-bucket join ~n²/16 —
-# quadratic, just 16x deferred — so it must not sit on the `queries()`
-# surface where a user could run it at scale. The function and its
-# oracle stay as the didactic baseline, gated by a unit test
-# (tests/test_ml_lsh.py::test_bucketed_lsh_didactic_matches_oracle).
-BUCKETED_LSH_ORACLE_SQL = f"""
-    WITH {_SQL_NORMED},
-    bucketed AS (
-        SELECT vec_id, embedding, norm_sq, {_SQL_BUCKET} AS bucket
-        FROM normed
-    ),
-    pairs AS (
-        SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-               ({sql_dot('a.embedding', 'b.embedding', DIM)})
-                 / (SQRT(a.norm_sq) * SQRT(b.norm_sq)) AS cosine
-        FROM bucketed a JOIN bucketed b
-          ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    )
-    SELECT vec_id, neighbor_id, cosine, rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM pairs
-    ) WHERE rank <= 5
-    """
-
-
-def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate nearest neighbors via random-hyperplane LSH:
-    4-bit signature buckets -> cosine only within buckets -> top-5
-    per vector.
-
-    DIDACTIC BASELINE — do not use at scale, NOT on the `queries()`
-    surface. The plane count is FIXED at 4, so there are only 16
-    buckets and the within-bucket join grows ~n²/16: quadratic, just
-    16x deferred. It exists to make the bucketing mechanics
-    oracle-checkable in isolation (the static oracle SQL embeds the 4
-    projection chains, which is why the count cannot track n). The
-    production shapes are `sim_ann_lsh_banded` (bands x planes,
-    OR-amplified, plan-asserted no-cartesian, scales with n via bucket
-    granularity) and `sim_ann_ivf_probe` (cell-partitioned)."""
-    emb = with_norm(load(spark, sf_dir, "embeddings"))
-    bucket = F.concat_ws("", *[_sign_bit(_sign_row(_SIGNS[j])) for j in range(_N_PLANES)])
-    bucketed = emb.withColumn("bucket", bucket)
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") != F.col("b.vec_id"))
-    ).select(
-        F.col("a.vec_id").alias("vec_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-        (
-            dot("a.embedding", "b.embedding")
-            / (F.sqrt(F.col("a.norm_sq")) * F.sqrt(F.col("b.norm_sq")))
-        ).alias("cosine"),
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return pairs.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
-
-
 @query(
     "dedup_embedding_cosine",
     oracle=f"""
     WITH {_SQL_NORMED},
     bucketed AS (
-        SELECT vec_id, embedding, norm_sq, {_SQL_BUCKET} AS bucket
+        SELECT vec_id, embedding, norm_sq, {sql_bucket('embedding', 0, _N_PLANES)} AS bucket
         FROM normed
     )
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -228,11 +137,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_project_spark.caching import tracked_persist
 
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    bucket = F.concat_ws("", *[_sign_bit(_sign_row(_SIGNS[j])) for j in range(_N_PLANES)])
     # persisted for the same reason as the banded variant: the
     # self-join gets no ReusedExchange under AQE, so both sides would
     # recompute the projections and norms
-    bucketed = tracked_persist(emb.withColumn("bucket", bucket))
+    bucketed = tracked_persist(emb.withColumn("bucket", bucket("embedding", 0, _N_PLANES)))
     a = bucketed.alias("a")
     b = bucketed.alias("b")
     cosine = dot("a.embedding", "b.embedding") / (
@@ -250,107 +158,62 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _N_BANDS = 3
-# Data-aware planes-per-band (round-7, judge ask #3): candidate pairs
-# in one band grow ~n^2/2^P, so a FIXED P means per-vector candidate
-# volume grows linearly with the corpus — the round-6 scaling probe
-# measured exactly that (4x vectors -> ~15x pairs at P=8). Deriving
-# P = clamp(ceil(log2(n)) - LOAD, MIN, MAX) pins the expected bucket
-# load at ~2^LOAD vectors, which makes per-vector candidates ~flat as
-# the corpus scales (tools/scaling_probe.py measures this). Both
-# engines derive P from the SAME count over the SAME table — Spark
-# from a plan-build sizing count (the cheap-count pattern AQE itself
-# uses), the oracle from an inline COUNT(*) params CTE — so buckets
-# stay bit-identical. MAX bounds the sign-matrix literal we ship in
-# the plan; it is a CONFIG, not an edit (round 8):
-# $SPARK_GRAFT_MAX_PLANES_PER_BAND, default 16 — at genuine 100 TB
-# scale set it to ~ceil(log2(n)) - LOAD (e.g. 35 for 1e11 vectors) and
-# the derivation keeps sizing automatically. Both engines read the
-# same constant at plan build, so buckets stay bit-identical under any
-# setting; tests/test_lsh_sizing.py proves the derived P holds the
-# ~2^LOAD mean bucket load on a generator-built 4x corpus.
-import os as _os
-
-_MIN_PLANES_PER_BAND = 8
-_MAX_PLANES_PER_BAND = int(_os.environ.get("SPARK_GRAFT_MAX_PLANES_PER_BAND", "16"))
-_BUCKET_LOAD_LOG2 = 2  # target mean bucket load = 2^2 = 4 vectors
-
-
-def planes_per_band(n_vectors: int) -> int:
-    """P = clamp(ceil(log2(n)) - {_BUCKET_LOAD_LOG2}, {_MIN_PLANES_PER_BAND}, {_MAX_PLANES_PER_BAND}) — mirrored exactly by
-    `_SQL_PARAMS` so Spark and the oracle always agree. The max(n, 2)
-    guard keeps log2 defined on empty/singleton corpora (the zero-row
-    twin sweep exercises this)."""
-    import math
-
-    return max(
-        _MIN_PLANES_PER_BAND,
-        min(_MAX_PLANES_PER_BAND, math.ceil(math.log2(max(n_vectors, 2))) - _BUCKET_LOAD_LOG2),
-    )
-
-
-_SQL_PARAMS = f"""
-    params AS (
-        SELECT GREATEST({_MIN_PLANES_PER_BAND},
-                        LEAST({_MAX_PLANES_PER_BAND},
-                              CAST(CEIL(LOG2(GREATEST(COUNT(*), 2))) AS INT) - {_BUCKET_LOAD_LOG2})) AS p
-        FROM embeddings
-    )
-"""
-
-
-def _band_signs(band: int) -> list[list[int]]:
-    """Hyperplane signs for one band — same md5 construction as
-    `_plane_signs`. Plane index strides by _MAX_PLANES_PER_BAND (not
-    the derived P) so each band's sign rows are a STABLE prefix as P
-    varies with corpus size: the P-plane bucket equals the first P
-    characters of the max-width bucket, which is what the oracle's
-    substr() relies on."""
-    signs = []
-    for p in range(_MAX_PLANES_PER_BAND):
-        j = band * _MAX_PLANES_PER_BAND + p
-        row = []
-        for i in range(DIM):
-            h = hashlib.md5(f"plane:{j}:{i}".encode()).hexdigest()
-            row.append(-1 if int(h[0], 16) < 8 else 1)
-        signs.append(row)
-    return signs
-
-
-def _all_band_buckets_col(planes: int) -> Column:
-    """All band bucket keys as ONE nested higher-order expression:
-    array(bucket_0, ..., bucket_{bands-1}).
-
-    Equivalent to concatenating per-plane sign bits band by band, but
-    the fold logic appears once in the plan instead of once per plane:
-    unrolling bands x planes separate 64-term aggregate chains made
-    Catalyst analysis + codegen the dominant cost of the whole query
-    (~2-4 s, scale-invariant, measured at sf0.01 vs sf0.1). The sign
-    matrix is a single 2D literal holding only the `planes` derived
-    rows per band; each plane's projection is the same sequential
-    left-fold as before, so results are bit-identical to the oracle's
-    substr() over its max-width explicit chains."""
-    signs2d = F.array(
-        *[_sign_row(row) for b in range(_N_BANDS) for row in _band_signs(b)[:planes]]
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(_N_BANDS - 1)),
-        lambda b: F.array_join(
-            F.transform(F.slice(signs2d, b * planes + 1, planes), _sign_bit), ""
-        ),
-    )
-
-
-def _sql_band_bucket(band: int) -> str:
-    """Max-width ({_MAX_PLANES_PER_BAND}-plane) bucket string for one
-    band; the bands CTE substr()s it down to the derived P."""
-    return " || ".join(_sql_sign_bit(row) for row in _band_signs(band))
-
-
+# Planes per band follow the corpus: candidate pairs in one band grow
+# ~n^2/2^P, so a fixed P makes per-vector candidates grow linearly
+# with n (4x vectors gave ~15x pairs at P=8). The sizing (load_log2,
+# lo, hi) = (2, 8, 16) pins the mean bucket load at ~4 vectors
+# (tools/scaling_probe.py, tests/test_lsh_sizing.py). Spark sizes P
+# from the embeddings file's footer count, the oracle from COUNT(*)
+# over the same table, so the buckets agree.
+_PLANE_SIZING = (2, 8, BAND_STRIDE)
+_SQL_PARAMS = f"params AS ({sql_planes('embeddings', *_PLANE_SIZING, 'p')})"
 _SQL_BANDS = "\nUNION ALL\n".join(
     f"SELECT vec_id, embedding, norm_sq, {b} AS band,"
-    f" substr({_sql_band_bucket(b)}, 1, p) AS bucket FROM normed, params"
+    f" {sql_bucket('embedding', b, 'p')} AS bucket FROM normed, params"
     for b in range(_N_BANDS)
 )
+
+
+def _band_keys(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
+    """(emb, keys, P): the persisted normed embeddings, their persisted
+    keys-only (vec_id, band, bucket) explode, and the planes per band.
+    emb is read by both join-backs of `_top5`, keys by both sides of
+    the bucket join; without the caches the bands x P projection folds
+    per row, the query's dominant map cost, would recompute per
+    consumer. Each cache is filled by one noop write: under AQE every
+    distinct scan of a cache that is still empty runs its own job
+    (sim_recall_multiprobe scans emb seven times and keys three)."""
+    from bigdata_project_spark.caching import tracked_persist
+
+    def filled(df: DataFrame) -> DataFrame:
+        tracked_persist(df).write.format("noop").mode("overwrite").save()
+        return df
+
+    emb = filled(with_norm(load(spark, sf_dir, "embeddings")))
+    p = planes(parquet_row_count(f"{sf_dir}/embeddings.parquet"), *_PLANE_SIZING)
+    keys = filled(
+        emb.select("vec_id", F.posexplode(band_buckets("embedding", _N_BANDS, p)).alias("band", "bucket"))
+    )
+    return emb, keys, p
+
+
+def _top5(emb: DataFrame, cand: DataFrame) -> DataFrame:
+    """The 5 candidates of highest cosine per vec_id, ties to the lower
+    neighbor_id, from DISTINCT (vec_id, neighbor_id) candidate pairs:
+    both vectors are joined back from emb, so each pair's cosine runs
+    once and vectors never ride the candidate explode."""
+    qa = emb.select("vec_id", F.col("embedding").alias("a_emb"), F.col("norm_sq").alias("a_norm"))
+    qb = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("b_emb"),
+        F.col("norm_sq").alias("b_norm"),
+    )
+    cosine = dot("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
+    scored = cand.join(qa, "vec_id").join(qb, "neighbor_id").select(
+        "vec_id", "neighbor_id", cosine.alias("cosine")
+    )
+    w = W.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
+    return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
 
 
 @query(
@@ -378,46 +241,32 @@ _SQL_BANDS = "\nUNION ALL\n".join(
     tags=("similarity", "llm", "lsh", "ann", "banded"),
 )
 def sim_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OR-amplified LSH ANN: {_N_BANDS} bands x P planes, with P
-    DERIVED from the corpus size at plan build (`planes_per_band`:
-    clamp(ceil(log2(n)) - {_BUCKET_LOAD_LOG2}, {_MIN_PLANES_PER_BAND},
-    {_MAX_PLANES_PER_BAND})). Narrow 2^P-bucket bands keep each
-    equi-join's per-bucket candidate count (and thus the quadratic
-    pair blow-up) small; OR-ing several independent bands restores the
-    recall a single narrow band loses — the same banding trade-off as
-    MinHash-LSH document dedup. This is the shape that survives 100x
-    corpus growth: candidate pairs grow ~n^2/2^P per band, and because
-    P tracks log2(n) the expected bucket load — and with it per-vector
-    candidate volume — stays ~flat as the corpus scales (measured,
-    tools/scaling_probe.py); bands pin recall. The oracle derives the
-    same P from an inline COUNT(*) (params CTE) and substr()s a
-    max-width bucket, bit-identical to the Spark prefix.
+    """OR-amplified LSH ANN: 3 bands x P planes, with P derived from
+    the corpus size at plan build (`hyperplane.planes` with
+    `_PLANE_SIZING`: clamp(ceil(log2 n) - 2, 8, 16)). Narrow
+    2^P-bucket bands keep each equi-join's per-bucket candidate count
+    (and thus the quadratic pair blow-up) small; OR-ing several
+    independent bands restores the recall a single narrow band loses
+    — the same banding trade-off as MinHash-LSH document dedup. This
+    is the shape that survives 100x corpus growth: candidate pairs
+    grow ~n^2/2^P per band, and because P tracks log2(n) the expected
+    bucket load — and with it per-vector candidate volume — stays
+    ~flat as the corpus scales (measured, tools/scaling_probe.py);
+    bands pin recall. The oracle derives the same P from an inline
+    COUNT(*) (params CTE) and takes that prefix of each band's planes.
 
     Shape: keys-only posexplode to (vec_id, band, bucket) -> single
     self-equi-join on (band, bucket) -> DISTINCT collapses multi-band
     duplicate pairs -> embeddings joined back onto the small pair
     list -> one cosine per pair -> row_number top-5. The candidate
-    exchange carries 24-byte key rows, not the {DIM}-float vectors
+    exchange carries 24-byte key rows, not the 64-float vectors
     (~10x less shuffle traffic than letting vectors ride the
-    {_N_BANDS}x explode); the two join-backs are cheap vec_id hash
+    3x explode); the two join-backs are cheap vec_id hash
     joins against the persisted embeddings. Measured at sf0.1: the
     keys-only form is bit-identical to the ride-along form and no
     slower locally (2.03 s vs 2.15 s median-of-3) while shuffling a
     tenth of the bytes — the margin that decides at 100 TB."""
-    from bigdata_project_spark.caching import tracked_persist
-
-    # persisted: both the probe and index aliases of the self-join
-    # read it (no ReusedExchange under AQE — one side broadcasts), and
-    # the cosine stage re-joins it twice; without the cache the 24
-    # projection folds per row — the query's dominant map cost —
-    # recompute per consumer. Same pattern as dedup_minhash_lsh's sigs.
-    emb = tracked_persist(with_norm(load(spark, sf_dir, "embeddings")))
-    # plan-build sizing count (also warms the persist): derives the
-    # same P the oracle's params CTE computes from COUNT(*)
-    p = planes_per_band(emb.count())
-    keys = tracked_persist(
-        emb.select("vec_id", F.posexplode(_all_band_buckets_col(p)).alias("band", "bucket"))
-    )
+    emb, keys, _ = _band_keys(spark, sf_dir)
     a = keys.alias("a")
     b = keys.alias("b")
     cand = (
@@ -433,18 +282,7 @@ def sim_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    qa = emb.select("vec_id", F.col("embedding").alias("a_emb"), F.col("norm_sq").alias("a_norm"))
-    qb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("b_emb"),
-        F.col("norm_sq").alias("b_norm"),
-    )
-    cosine = dot("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
-    scored = cand.join(qa, "vec_id").join(qb, "neighbor_id").select(
-        "vec_id", "neighbor_id", cosine.alias("cosine")
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
+    return _top5(emb, cand)
 
 
 @query(
@@ -787,9 +625,9 @@ _SQL_PROBES = """
     tags=("similarity", "llm", "lsh", "ann", "multiprobe"),
 )
 def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH ANN (Lv et al., VLDB'07): same {_N_BANDS}-band
+    """Multi-probe LSH ANN (Lv et al., VLDB'07): same 3-band
     x P-plane index as `sim_ann_lsh_banded` (P derived from corpus
-    size, see `planes_per_band`), but each lookup also probes every
+    size, see `_PLANE_SIZING`), but each lookup also probes every
     bucket at Hamming distance 1 from its own band key — where a
     near-miss neighbor (one plane's sign flipped) landed. Recall
     rises without touching the INDEX side: banding buys recall with
@@ -805,23 +643,13 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_quality_ext.py, measured in sim_recall_multiprobe).
 
     Scale: candidates come from the same bounded (band, bucket)
-    equi-join — expected bucket load pinned at ~2^{_BUCKET_LOAD_LOG2}
+    equi-join — expected bucket load pinned at ~2^2
     by the derived P, probe fan-out (P+1)x on the key-only side; pairs
     are DISTINCT-ed BEFORE embeddings are joined back (two vec_id
     equi-joins), so each survivor pair's cosine chain runs exactly
     once and full vectors never ride the bands x (P+1) explode."""
-    from bigdata_project_spark.caching import tracked_persist
-
-    emb = tracked_persist(with_norm(load(spark, sf_dir, "embeddings")))
-    # plan-build sizing count — must match the banded index's P so
-    # the multiprobe candidate set stays a superset of the banded one
-    p = planes_per_band(emb.count())
-    # keys-only explode: (vec_id, band, bucket) — the bands x P
-    # projection folds per vector run once here, then both the probe
-    # and index sides reuse the persisted result
-    keys = tracked_persist(
-        emb.select("vec_id", F.posexplode(_all_band_buckets_col(p)).alias("band", "bucket"))
-    )
+    # the same index as the banded query, so its candidates are a superset
+    emb, keys, p = _band_keys(spark, sf_dir)
     flips = F.expr(
         f"""transform(sequence(-1, {p - 1}), i ->
             CASE WHEN i = -1 THEN bucket
@@ -844,20 +672,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "neighbor_id")
         .distinct()
     )
-    qa = emb.select(
-        F.col("vec_id"), F.col("embedding").alias("a_emb"), F.col("norm_sq").alias("a_norm")
-    )
-    qb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("b_emb"),
-        F.col("norm_sq").alias("b_norm"),
-    )
-    cosine = dot("a_emb", "b_emb") / (F.sqrt("a_norm") * F.sqrt("b_norm"))
-    scored = cand.join(qa, "vec_id").join(qb, "neighbor_id").select(
-        "vec_id", "neighbor_id", cosine.alias("cosine")
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(F.col("rank") <= 5)
+    return _top5(emb, cand)
 
 
 _SQL_LSH_FOUND = f"""
@@ -896,7 +711,7 @@ def sim_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the comparison joins 5 x #queries row sets — negligible."""
     truth = sim_knn_bruteforce(spark, sf_dir).filter(F.col("rank") <= 5)
     # both searches as two levels of one recall join, pivoted per query:
-    # two recall joins over the same truth plan it twice (31 jobs, not 26)
+    # two recall joins over the same truth would plan it twice
     found = (
         sim_ann_lsh_banded(spark, sf_dir)
         .select(F.lit(0).alias("multi"), "vec_id", "neighbor_id")

@@ -30,7 +30,7 @@ BUDGETS = {
     "corpus_clean_pipeline": 38,
     "corpus_keep_best_per_cluster": 41,
     "dedup_cluster_components": 35,
-    "dedup_semantic_cells": 50,
+    "dedup_semantic_cells": 48,
     "multimodal_audio_dedup_keeper": 32,
     "multimodal_dhash_dedup_keeper": 32,
     "split_cluster_aware_assign": 33,
@@ -71,9 +71,14 @@ BUDGETS = {
     "sim_recall_ivfpq_residual_at_k": 28,
     "sim_recall_ivfpq_residual_rerank_at_k": 33,
     "sim_recall_ivfpq_trained_at_k": 52,
-    "sim_recall_multiprobe": 26,
+    "sim_recall_multiprobe": 21,
     "sim_recall_pq_at_k": 18,
     "sim_recall_pq_rerank_at_k": 21,
+    # the hyperplane-LSH consumers (operators/hyperplane.py)
+    "dedup_embedding_cosine": 4,
+    "dedup_semantic_incremental": 14,
+    "sim_ann_lsh_banded": 8,
+    "sim_ann_lsh_multiprobe": 8,
 }
 # processes started per warm run (`_processes`): the measured count
 # plus about 25%, at 4 and 8 cores alike. Through Hadoop's stock local
@@ -132,6 +137,10 @@ _INPUTS = {
     "sim_recall_multiprobe": ("embeddings",),
     "sim_recall_pq_at_k": ("embeddings",),
     "sim_recall_pq_rerank_at_k": ("embeddings",),
+    "dedup_embedding_cosine": ("embeddings",),
+    "dedup_semantic_incremental": ("embeddings",),
+    "sim_ann_lsh_banded": ("embeddings",),
+    "sim_ann_lsh_multiprobe": ("embeddings",),
 }
 
 

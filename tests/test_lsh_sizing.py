@@ -1,12 +1,15 @@
-"""Data-aware LSH sizing (similarity.planes_per_band) under growth.
+"""Data-aware LSH sizing (`hyperplane.planes` with
+similarity._PLANE_SIZING) under growth.
 
-The 100 TB claim is that the DERIVED planes-per-band P holds the mean
-band-bucket load at ~2^_BUCKET_LOAD_LOG2 vectors as the corpus grows —
-so within-bucket candidate pairs stay ~constant per vector and the
+The 100 TB claim is that the derived planes-per-band P holds the mean
+band-bucket load at ~2^load_log2 vectors as the corpus grows — so
+within-bucket candidate pairs stay ~constant per vector and the
 banded join never goes quadratic. The testbed tops out at 2,000
-vectors (P clamps to the 8-plane minimum at every shipped scale), so
-this is proved on a GENERATOR-BUILT corpus 4x the sf0.1 vector count,
-where P genuinely derives above the clamp (r7 verdict ask #7).
+vectors (P clamps to the 8-plane minimum at sf0.001 and sf0.01), so
+this is proved on a generator-built corpus 4x and 16x the sf0.1
+vector count, where P derives above the clamp. The sizing rule is
+also pinned, with the SemDeDup sub-cell sizing, in
+tests/test_hyperplane.py.
 """
 
 from __future__ import annotations
@@ -17,38 +20,39 @@ import duckdb
 import numpy as np
 import pytest
 
-from bigdata_project_spark.operators.similarity import (
-    _BUCKET_LOAD_LOG2,
-    _MAX_PLANES_PER_BAND,
-    _MIN_PLANES_PER_BAND,
-    _sql_band_bucket,
-    planes_per_band,
-)
+from bigdata_project_spark.operators.hyperplane import planes, sql_bucket
+from bigdata_project_spark.operators.similarity import _PLANE_SIZING
+
+_LOAD_LOG2, _MIN_PLANES, _MAX_PLANES = _PLANE_SIZING
 
 
 def test_planes_per_band_formula():
     """Clamp + derivation behavior across the regime boundaries."""
-    assert planes_per_band(0) == _MIN_PLANES_PER_BAND  # empty twin safe
-    assert planes_per_band(500) == _MIN_PLANES_PER_BAND  # sf0.001/0.01 clamp
-    assert planes_per_band(2_000) == 11 - _BUCKET_LOAD_LOG2  # sf0.1 derives
-    assert planes_per_band(8_000) == 13 - _BUCKET_LOAD_LOG2  # ceil(log2 8000)=13
-    assert planes_per_band(10**9) == _MAX_PLANES_PER_BAND  # cap
+
+    def p(n: int) -> int:
+        return planes(n, *_PLANE_SIZING)
+
+    assert p(0) == _MIN_PLANES  # empty twin safe
+    assert p(500) == _MIN_PLANES  # sf0.001/0.01 clamp
+    assert p(2_000) == 11 - _LOAD_LOG2  # sf0.1 derives
+    assert p(8_000) == 13 - _LOAD_LOG2  # ceil(log2 8000)=13
+    assert p(10**9) == _MAX_PLANES  # cap
     # monotone non-decreasing in n
-    vals = [planes_per_band(n) for n in (2, 10, 100, 10_000, 10**6, 10**9)]
+    vals = [p(n) for n in (2, 10, 100, 10_000, 10**6, 10**9)]
     assert vals == sorted(vals)
 
 
 @pytest.mark.parametrize("n_vectors", [8_000, 32_000])
 def test_derived_planes_hold_bucket_load_on_4x_corpus(tmp_path, n_vectors):
     """Generator-built corpus at 4x and 16x the sf0.1 vector count:
-    with P = planes_per_band(n), the mean load of band-0 buckets must
-    stay within a small factor of the 2^LOAD target (random
-    hyperplanes on near-isotropic data split close to evenly), i.e.
-    per-vector candidate volume does NOT grow with n."""
+    with P = planes(n, *_PLANE_SIZING), the mean load of band-0
+    buckets must stay within a small factor of the 2^LOAD target
+    (random hyperplanes on near-isotropic data split close to evenly),
+    i.e. per-vector candidate volume does NOT grow with n."""
     rng = np.random.default_rng(8)  # deterministic test corpus
     emb = rng.standard_normal((n_vectors, 64)).astype(np.float32)
-    p = planes_per_band(n_vectors)
-    assert p > _MIN_PLANES_PER_BAND  # genuinely derived, not clamped
+    p = planes(n_vectors, *_PLANE_SIZING)
+    assert p > _MIN_PLANES  # genuinely derived, not clamped
 
     con = duckdb.connect()
     try:
@@ -59,7 +63,7 @@ def test_derived_planes_hold_bucket_load_on_4x_corpus(tmp_path, n_vectors):
         )
         mean_load, max_load = con.sql(f"""
             WITH b AS (
-                SELECT substr({_sql_band_bucket(0)}, 1, {p}) AS bucket
+                SELECT {sql_bucket('embedding', 0, p)} AS bucket
                 FROM embeddings
             ),
             loads AS (SELECT bucket, COUNT(*) AS c FROM b GROUP BY bucket)
@@ -68,11 +72,11 @@ def test_derived_planes_hold_bucket_load_on_4x_corpus(tmp_path, n_vectors):
     finally:
         con.close()
 
-    target = 2**_BUCKET_LOAD_LOG2
+    target = 2**_LOAD_LOG2
     # mean load ~target regardless of n: the whole point of deriving P
     assert mean_load <= 4 * target, (n_vectors, p, mean_load)
     # and the load did not grow linearly with the corpus (a FIXED
     # 8-plane P would give mean load ~n/256 = 31 and 125 here)
-    assert mean_load < n_vectors / 2**_MIN_PLANES_PER_BAND / 2, (n_vectors, p, mean_load)
+    assert mean_load < n_vectors / 2**_MIN_PLANES / 2, (n_vectors, p, mean_load)
     assert max_load < 50 * target, "pathologically hot bucket"
-    assert math.ceil(math.log2(n_vectors)) - _BUCKET_LOAD_LOG2 == p
+    assert math.ceil(math.log2(n_vectors)) - _LOAD_LOG2 == p

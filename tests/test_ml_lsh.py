@@ -53,60 +53,40 @@ def test_minhash_lsh_similarity_join(spark, sf_dir):
     assert n >= 0  # shape check; exact-variant parity is covered by dedup_ngram_jaccard's oracle
 
 
-def test_bucketed_lsh_didactic_matches_oracle(spark, sf_dir):
-    """The retired didactic baseline still matches its DuckDB oracle —
-    off the product surface (quadratic n²/16 join) but kept as the
-    reference implementation the banded/IVF shapes are validated
-    against conceptually."""
-    from bigdata_project_spark.operators.similarity import (
-        BUCKETED_LSH_ORACLE_SQL,
-        sim_ann_lsh_bucketed,
-    )
-    from tests.oracle import compare, duckdb_con
-
-    df = sim_ann_lsh_bucketed(spark, sf_dir)
-    con = duckdb_con(sf_dir)
-    try:
-        res = compare("sim_ann_lsh_bucketed", df, con, BUCKETED_LSH_ORACLE_SQL)
-        assert res.ok, res.detail
-        assert res.spark_rows > 0
-    finally:
-        con.close()
-
-
 def test_planes_per_band_formula():
-    """Data-aware planes-per-band (round 7): P = clamp(ceil(log2 n) -
-    load, min, max). Pins the sizing rule both engines derive from the
-    same COUNT so a drift in the constants is caught here, not by an
-    oracle mismatch at some future corpus size."""
-    from bigdata_project_spark.operators.similarity import (
-        _BUCKET_LOAD_LOG2,
-        _MAX_PLANES_PER_BAND,
-        _MIN_PLANES_PER_BAND,
-        planes_per_band,
-    )
+    """Data-aware planes-per-band: P = clamp(ceil(log2 n) - load, min,
+    max). Pins the sizing rule both engines derive from the same COUNT
+    so a drift in the constants is caught here, not by an oracle
+    mismatch at some future corpus size."""
+    from bigdata_project_spark.operators.hyperplane import planes
+    from bigdata_project_spark.operators.similarity import _PLANE_SIZING
+
+    _, lo, hi = _PLANE_SIZING
+
+    def p(n: int) -> int:
+        return planes(n, *_PLANE_SIZING)
 
     # clamp floor: small/degenerate corpora (zero-row twin hits n=0)
-    assert planes_per_band(0) == _MIN_PLANES_PER_BAND
-    assert planes_per_band(1) == _MIN_PLANES_PER_BAND
-    assert planes_per_band(500) == 8  # testbed sf0.001/0.01
-    assert planes_per_band(2000) == 9  # testbed sf0.1
+    assert p(0) == lo
+    assert p(1) == lo
+    assert p(500) == 8  # testbed sf0.001/0.01
+    assert p(2000) == 9  # testbed sf0.1
     # +1 plane per corpus doubling keeps expected bucket load ~2^load
-    assert planes_per_band(4000) == 10
-    assert planes_per_band(8000) == 11
+    assert p(4000) == 10
+    assert p(8000) == 11
     # clamp ceiling bounds the sign-matrix literal we ship in the plan
-    assert planes_per_band(10**9) == _MAX_PLANES_PER_BAND
-    assert _MIN_PLANES_PER_BAND <= _MAX_PLANES_PER_BAND
-    assert _BUCKET_LOAD_LOG2 >= 0
+    assert p(10**9) == hi
+    assert lo <= hi
 
 
 def test_planes_per_band_oracle_agreement(sf_dir):
     """The oracle's params CTE computes the SAME P as the Python
-    formula from the same table — the invariant the substr()-prefix
-    bucket construction relies on."""
+    formula from the same table — the invariant the oracle's
+    plane-prefix bucket relies on."""
     import duckdb
 
-    from bigdata_project_spark.operators.similarity import _SQL_PARAMS, planes_per_band
+    from bigdata_project_spark.operators.hyperplane import planes
+    from bigdata_project_spark.operators.similarity import _PLANE_SIZING, _SQL_PARAMS
 
     con = duckdb.connect()
     try:
@@ -117,4 +97,4 @@ def test_planes_per_band_oracle_agreement(sf_dir):
         p_sql = con.sql(f"WITH {_SQL_PARAMS} SELECT p FROM params").fetchone()[0]
     finally:
         con.close()
-    assert p_sql == planes_per_band(n)
+    assert p_sql == planes(n, *_PLANE_SIZING)

@@ -358,3 +358,23 @@ def test_recall_lives_only_in_recall():
                 ):
                     offenders.append(f"{rel}:{node.lineno}: {t.value.slice.value}.oracle rebound")
     assert not offenders, "recall@k copied outside operators/recall.py:\n" + "\n".join(offenders)
+
+
+def test_hyperplane_lsh_lives_only_in_hyperplane():
+    """operators/hyperplane.py owns random-hyperplane LSH: the md5 sign
+    rows, the bucket fold and the clamp(ceil(log2 n) - load, lo, hi)
+    sizing rule, with their DuckDB twins. A module that seeds its own
+    `plane:` rows or spells the sizing rule is a copy that can drift
+    from the twin its oracle is built from."""
+    import pathlib
+
+    markers = ('"plane:', "LOG2(GREATEST(COUNT(*)", "math.log2(max(")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    offenders = [
+        f"{f.relative_to(pkg).as_posix()}:{i}: {line.strip()}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f.relative_to(pkg).as_posix() != "operators/hyperplane.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if any(m in line for m in markers)
+    ]
+    assert not offenders, "hyperplane LSH copied outside operators/hyperplane.py:\n" + "\n".join(offenders)

@@ -162,13 +162,11 @@ def test_derived_subcells_hold_cell_load_on_8x_corpus(n_vectors):
     import numpy as np
     import pandas as pd
 
-    from bigdata_project_spark.operators.semdedup import (
-        _SQL_SEM_CELLS,
-        subcell_planes,
-    )
+    from bigdata_project_spark.operators.hyperplane import planes
+    from bigdata_project_spark.operators.semdedup import _SQL_SEM_CELLS, _SUBCELL_SIZING
     from bigdata_project_spark.operators.similarity import _SQL_NORMED
 
-    assert subcell_planes(n_vectors) == 5  # derived, not clamped
+    assert planes(n_vectors, *_SUBCELL_SIZING) == 5  # derived, not clamped
 
     def cell_loads(n):
         rng = np.random.default_rng(9)

@@ -40,9 +40,10 @@ from bigdata_project_spark.operators.dedup import (
     _SQL_SIGS,
 )
 from bigdata_project_spark.operators.nearpairs import sql_candidates, sql_overlap
-from bigdata_project_spark.operators.similarity import _SQL_NORMED, _SQL_PARAMS
-from bigdata_project_spark.operators.similarity import _sql_band_bucket, _N_BANDS, planes_per_band
-from bigdata_project_spark.operators.semdedup import _SQL_SEM_CELLS, subcell_planes
+from bigdata_project_spark.operators.hyperplane import planes
+from bigdata_project_spark.operators.semdedup import _SQL_SEM_CELLS, _SUBCELL_SIZING
+from bigdata_project_spark.operators.similarity import _PLANE_SIZING, _SQL_NORMED, _SQL_PARAMS
+from bigdata_project_spark.operators.similarity import _SQL_BANDS as _SQL_ANN_BANDS
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -89,28 +90,23 @@ def probe(sf_dir: str) -> dict:
              AND 2 * b.n_sh >= a.n_sh AND 2 * a.n_sh >= b.n_sh)
     """).fetchone()[0]
 
-    # banded ANN (3 bands x DERIVED planes, round-7): distinct
-    # bucket-join pairs under the data-aware P — the same substr(p)
-    # construction the oracle uses, so this measures the shipped plan
-    band_rows = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band, substr({_sql_band_bucket(b)}, 1, p) AS bucket"
-        f" FROM normed, params"
-        for b in range(_N_BANDS)
-    )
-    r["ann_planes"] = planes_per_band(r["n_vecs"])
+    # banded ANN (3 bands x derived planes): distinct bucket-join
+    # pairs under the data-aware P — the oracle's own bands, so this
+    # measures the shipped plan
+    r["ann_planes"] = planes(r["n_vecs"], *_PLANE_SIZING)
     r["ann_cand"] = con.sql(f"""
-        WITH {_SQL_NORMED}, {_SQL_PARAMS}, bands AS ({band_rows})
+        WITH {_SQL_NORMED}, {_SQL_PARAMS}, bands AS ({_SQL_ANN_BANDS})
         SELECT COUNT(*) FROM (
             SELECT DISTINCT a.vec_id, b.vec_id AS b_id
             FROM bands a JOIN bands b
               ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
     """).fetchone()[0]
 
-    # SemDeDup within-cell pairs (round 8): the quadratic stage is
+    # SemDeDup within-cell pairs: the quadratic stage is
     # confined to (nearest-centroid, derived-Q LSH sub-bucket) cells —
     # the same cells CTE the oracle runs; per-vector volume must stay
     # ~flat as the corpus grows
-    r["sem_q"] = subcell_planes(r["n_vecs"])
+    r["sem_q"] = planes(r["n_vecs"], *_SUBCELL_SIZING)
     r["sem_cand"] = con.sql(f"""
         WITH {_SQL_NORMED}, {_SQL_SEM_CELLS}
         SELECT COUNT(*) FROM cells a JOIN cells b
